@@ -32,9 +32,9 @@ trait Monoid[B] extends Serializable {
   * execution the reference hand-rolls as its chunk loop. New monoids
   * (sketches, top-k, ...) get partial/merge/spill handling for free.
   *
-  * Extensibility path; the vector-heavy hot-path monoids remain native
-  * `TypedImperativeAggregate`s ([[LogWeightedVecAgg]], [[VecWeightedSumAgg]])
-  * to skip the per-row encoder. */
+  * Extensibility path; the hot-path monoids remain native
+  * aggregates ([[LogWeightedVecAgg]], [[VecWeightedSumAgg]],
+  * [[LogSumExpDecl]], [[ArgMaxPertAgg]]) to skip the per-row encoder. */
 object FoldAggregator {
   def apply[IN, B, OUT](m: Monoid[B], lift: IN => B, project: B => OUT)(
       implicit be: Encoder[B], oe: Encoder[OUT]): Aggregator[IN, B, OUT] =
@@ -246,13 +246,14 @@ class MgAgg(m: Int) extends Aggregator[String, MgBuf, Map[String, Long]] {
   def outputEncoder: Encoder[Map[String, Long]] = inner.outputEncoder
 }
 
-/** DataFrame-callable registrations. The scalar logsumexp stays a
-  * `udaf(Aggregator)` (lowers to `ScalaAggregator`, a
-  * `TypedImperativeAggregate`; the per-row encoder cost on a bare Double is
-  * negligible). The vector-valued monoids are native
-  * `TypedImperativeAggregate`s in [[NativeAggs]] — the round-1 Aggregator
-  * form paid a ~35× per-row encoder round-trip on the value array
-  * (VERDICT.md round 1, "What's wrong" #2). */
+/** DataFrame-callable registrations. The scalar monoids (logsumexp, its
+  * softmax-mean form, the sampler's argmax) are `DeclarativeAggregate`s
+  * with primitive buffer slots, so a pair fold that uses only them plans
+  * as `HashAggregateExec` inside the pair stream's codegen stage. The
+  * vector-valued monoids are native `TypedImperativeAggregate`s in
+  * [[NativeAggs]] — the round-1 Aggregator form paid a ~35× per-row
+  * encoder round-trip on the value array (VERDICT.md round 1, "What's
+  * wrong" #2). */
 object GraftAggs {
   import org.apache.spark.sql.Column
 
@@ -263,6 +264,14 @@ object GraftAggs {
   def logSumExp(score: Column): Column =
     NativeExprs.toCol(
       LogSumExpDecl(NativeExprs.toExpr(score)).toAggregateExpression())
+
+  /** logSumExpMean(scoreCol, valueCol) -> struct(z, v): z = logsumexp of
+    * the scores, v = the softmax-weighted mean of a scalar value — the
+    * entropy monoid, one [[LogSumExpDecl]] with a third buffer slot. */
+  def logSumExpMean(score: Column, value: Column): Column =
+    NativeExprs.toCol(
+      LogSumExpDecl(NativeExprs.toExpr(score), Some(NativeExprs.toExpr(value)))
+        .toAggregateExpression())
 
   /** the Aggregator form, for users extending via [[FoldAggregator]]. */
   val logSumExpUdaf: UserDefinedFunction =
@@ -313,9 +322,9 @@ object GraftAggs {
         .toAggregateExpression())
 
   /** argMaxPert(pert, sc, kId) -> struct<pert,sc,k_id>: the Gumbel-max
-    * sampler monoid as a native aggregate — bit-identical to
-    * `max(struct(pert, sc, k_id))` but ObjectHashAggregate-eligible
-    * (see [[ArgMaxPertAgg]]'s plan rationale). */
+    * sampler monoid — bit-identical to `max(struct(pert, sc, k_id))`, but
+    * with primitive buffer slots, so it keeps the sampler's fold in
+    * `HashAggregateExec` (see [[ArgMaxPertAgg]]). */
   def argMaxPert(pert: Column, sc: Column, kId: Column): Column =
     NativeExprs.toCol(
       ArgMaxPertAgg(NativeExprs.toExpr(pert), NativeExprs.toExpr(sc),

@@ -4,8 +4,9 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.dsl.expressions._
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Coalesce, CreateNamedStruct, EqualNullSafe, Expression, If, IsNotNull, IsNull, Literal, Not}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -18,8 +19,8 @@ private[functions] object NativeAggChecks {
     }
 }
 
-/** Native `TypedImperativeAggregate` forms of the reference monoids
-  * (reference core.py:15-64: `zero`=`init`, `update`=`proj_fold`,
+/** Native `TypedImperativeAggregate` forms of the vector-valued reference
+  * monoids (reference core.py:15-64: `zero`=`init`, `update`=`proj_fold`,
   * `merge`=`binary_reduce`). These replace the round-1 `udaf(Aggregator)`
   * wrappers, whose per-row `ExpressionEncoder` round-trip of the
   * `(score, Seq[Double])` input was ~35× of the attention runtime: here the
@@ -30,7 +31,10 @@ private[functions] object NativeAggChecks {
   * The buffer lives as a JVM object inside `ObjectHashAggregateExec`'s hash
   * map; `serialize`/`deserialize` (plain ByteBuffer layout) run only on
   * spill and on the partial→final exchange, which is exactly the reference's
-  * chunk-boundary `binary_reduce` granularity.
+  * chunk-boundary `binary_reduce` granularity. The value width is unknown
+  * at plan time, so these cannot have primitive buffer slots. The scalar
+  * monoids can: [[LogSumExpDecl]] and [[ArgMaxPertAgg]] are declarative
+  * and fold inside whole-stage codegen.
   */
 
 /** Mutable buffer: z = running logsumexp of scores; v = softmax-weighted
@@ -38,10 +42,12 @@ private[functions] object NativeAggChecks {
   * identity `(-inf, ·)` of reference attention.py:43). */
 final class LWVBuf(var z: Double, var v: Array[Double]) extends Serializable
 
-/** The attention/entropy monoid (reference attention.py:31-44,
-  * entropy.py:18-23): `(z_a,v_a) ⊕ (z_b,v_b) = (logaddexp(z_a,z_b),
-  * v_a·e^{z_a−z'} + v_b·e^{z_b−z'})` — numerically-stable streaming softmax
-  * (never a raw `sum(exp)`, SURVEY.md §2.4.1). Output struct (z, v). */
+/** The attention monoid (reference attention.py:31-44):
+  * `(z_a,v_a) ⊕ (z_b,v_b) = (logaddexp(z_a,z_b), v_a·e^{z_a−z'} +
+  * v_b·e^{z_b−z'})` — numerically-stable streaming softmax (never a raw
+  * `sum(exp)`, SURVEY.md §2.4.1). Output struct (z, v). Its scalar case,
+  * the entropy monoid (entropy.py:18-23), is [[LogSumExpDecl]] with a
+  * value. */
 case class LogWeightedVecAgg(
     score: Expression,
     value: Expression,
@@ -224,32 +230,20 @@ case class VecWeightedSumAgg(
     copy(weight = newChildren(0), value = newChildren(1))
 }
 
-/** Mutable buffer for [[ArgMaxPertAgg]]: the lexicographic max of
-  * (pert, sc, k_id) seen so far; `set` = false is the monoid identity. */
-final class ArgMaxBuf(var pert: Double, var sc: Double, var kId: Long,
-                      var set: Boolean) extends Serializable
-
 /** The Gumbel-max sampler monoid (reference sampling.py:5-48, via the
-  * exact-argmax reformulation of SURVEY §2.4.3) as a native
-  * `TypedImperativeAggregate`: lexicographic max over
-  * (pert, sc, k_id) — EXACTLY `max(struct(pert, sc, k_id))`'s ordering,
-  * so results are bit-identical to the declarative form it replaces.
-  *
-  * Why it exists (r13): a declarative `max` over a STRUCT has a
-  * non-primitive buffer, which disqualifies `HashAggregateExec`; mixed
-  * with the codegen'd logsumexp the whole sampler aggregation fell to
-  * `SortAggregate`, sorting the full M×N pair stream in every mode —
-  * measured as sampler's kernel_ratio floor and ~0.2 s of its wall.
-  * A TypedImperativeAggregate in the mix flips the plan to
-  * `ObjectHashAggregateExec`: per-row hash update into M buffers, no
-  * pair-stream sort. */
-case class ArgMaxPertAgg(
-    pert: Expression,
-    sc: Expression,
-    kId: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArgMaxBuf] {
+  * exact-argmax reformulation of SURVEY §2.4.3): the lexicographic max of
+  * (pert, sc, k_id) — `max(struct(pert, sc, k_id))`'s ordering, nulls
+  * lowest — as a `DeclarativeAggregate` over four primitive buffer slots
+  * (pert, sc, k_id, set), so it folds inside whole-stage codegen next to
+  * [[LogSumExpDecl]] in one `HashAggregateExec`. A max over a struct
+  * column would carry a non-primitive buffer, which rules out
+  * `HashAggregateExec` for the whole `.agg(...)` and sorts the pair
+  * stream. The comparisons are Catalyst's `>` and `<=>` on doubles,
+  * which order NaN largest and treat ±0.0 as equal, exactly as struct
+  * ordering does, so the result is bit-identical to the struct max.
+  * `set` = false is the monoid identity; an empty group yields null. */
+case class ArgMaxPertAgg(pert: Expression, sc: Expression, kId: Expression)
+  extends DeclarativeAggregate {
 
   override def children: Seq[Expression] = Seq(pert, sc, kId)
   override def checkInputDataTypes(): TypeCheckResult =
@@ -259,77 +253,44 @@ case class ArgMaxPertAgg(
       case (p, s, k) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (double, double, bigint), got ($p, $s, $k)")
     }
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("pert", DoubleType, nullable = false),
-    StructField("sc", DoubleType, nullable = false),
-    StructField("k_id", LongType, nullable = false)))
+  override def nullable: Boolean = true
+  override def dataType: DataType = StructType(keys.map(k => StructField(k.name, k.dataType)))
   override def prettyName: String = "graft_argmax_pert"
 
-  override def createAggregationBuffer(): ArgMaxBuf =
-    new ArgMaxBuf(Double.NegativeInfinity, Double.NegativeInfinity,
-      Long.MinValue, set = false)
+  private lazy val keys = Seq(
+    AttributeReference("pert", DoubleType)(),
+    AttributeReference("sc", DoubleType)(),
+    AttributeReference("k_id", LongType)())
+  private lazy val set = AttributeReference("set", BooleanType, nullable = false)()
 
-  override def update(b: ArgMaxBuf, input: InternalRow): ArgMaxBuf = {
-    val p = pert.eval(input)
-    val s = sc.eval(input)
-    val k = kId.eval(input)
-    if (p == null || s == null || k == null) return b
-    maybeTake(b, p.asInstanceOf[Double], s.asInstanceOf[Double],
-      k.asInstanceOf[Long])
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = keys :+ set
+  override lazy val initialValues: Seq[Expression] =
+    keys.map(k => Literal(null, k.dataType)) :+ Literal(false)
+
+  /** a > b in struct ordering: first unequal field decides, null lowest. */
+  private def greater(a: Seq[Expression], b: Seq[Expression]): Expression = {
+    def gt(x: Expression, y: Expression): Expression =
+      Coalesce(Seq(x > y, IsNotNull(x) && IsNull(y)))
+    a.zip(b).init.foldRight(gt(a.last, b.last)) { case ((x, y), rest) =>
+      gt(x, y) || (EqualNullSafe(x, y) && rest)
+    }
   }
 
-  override def merge(a: ArgMaxBuf, o: ArgMaxBuf): ArgMaxBuf =
-    if (!o.set) a else maybeTake(a, o.pert, o.sc, o.kId)
-
-  /** Lexicographic (pert, sc, k_id) — identical to struct ordering,
-    * INCLUDING NaN semantics (ADVICE r13 #5): Spark's struct max orders
-    * doubles with nanSafeCompareDoubles (NaN ranks largest and equals
-    * itself; ±0.0 compare equal via `==`), whereas primitive `>`/`==`
-    * would make NaN never win and never tie. [[nanSafeCmp]] reproduces
-    * that ordering exactly, so the bit-identical claim holds on NaN
-    * perts/scores too. */
-  private def nanSafeCmp(x: Double, y: Double): Int = {
-    val xn = java.lang.Double.isNaN(x)
-    val yn = java.lang.Double.isNaN(y)
-    if ((xn && yn) || (x == y)) 0
-    else if (xn) 1
-    else if (yn) -1
-    else if (x > y) 1
-    else -1
+  override lazy val updateExpressions: Seq[Expression] = {
+    val take = Not(set) || greater(children, keys)
+    keys.zip(children).map { case (k, c) => If(take, c, k) } :+ Literal(true)
   }
 
-  private def maybeTake(b: ArgMaxBuf, p: Double, s: Double,
-                        k: Long): ArgMaxBuf = {
-    val cp = nanSafeCmp(p, b.pert)
-    val greater = !b.set || cp > 0 || (cp == 0 && {
-      val cs = nanSafeCmp(s, b.sc)
-      cs > 0 || (cs == 0 && k > b.kId)
-    })
-    if (greater) { b.pert = p; b.sc = s; b.kId = k; b.set = true }
-    b
+  override lazy val mergeExpressions: Seq[Expression] = {
+    val take = set.right &&
+      (Not(set.left) || greater(keys.map(_.right), keys.map(_.left)))
+    keys.map(k => If(take, k.right, k.left)) :+ (set.left || set.right)
   }
 
-  override def eval(b: ArgMaxBuf): Any = InternalRow(b.pert, b.sc, b.kId)
+  override lazy val evaluateExpression: Expression =
+    If(set, CreateNamedStruct(keys.flatMap(k => Seq(Literal(k.name), k))),
+      Literal(null, dataType))
 
-  override def serialize(b: ArgMaxBuf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(25)
-    bb.putDouble(b.pert)
-    bb.putDouble(b.sc)
-    bb.putLong(b.kId)
-    bb.put(if (b.set) 1.toByte else 0.toByte)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArgMaxBuf = {
-    val bb = ByteBuffer.wrap(bytes)
-    new ArgMaxBuf(bb.getDouble, bb.getDouble, bb.getLong, bb.get() == 1)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ArgMaxPertAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ArgMaxPertAgg =
-    copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ArgMaxPertAgg =
     copy(pert = newChildren(0), sc = newChildren(1), kId = newChildren(2))

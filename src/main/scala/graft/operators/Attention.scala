@@ -11,9 +11,13 @@ import graft.functions.{GraftAggs, VecOps}
   * `out_q = softmax(q·Kᵀ [/ sqrt(F)]) · V`, computed in ONE pass:
   * pair-scoring join -> per-q_id log-weighted-mean monoid aggregate. The
   * M×N score matrix is never materialized — pair rows stream from the join
-  * straight into the partial hash-aggregate inside one whole-stage-codegen
-  * stage, the Spark analog of the reference's "never realize the full
-  * intermediate" tiling (README.md:19-21).
+  * straight into the partial aggregate, the Spark analog of the
+  * reference's "never realize the full intermediate" tiling
+  * (README.md:19-21). The join and the dot run in whole-stage codegen, but
+  * the vector monoid ([[graft.functions.LogWeightedVecAgg]]) has an object
+  * buffer, so its partial aggregate is an `ObjectHashAggregateExec` that
+  * copies each pair row out of the codegen stage (unlike the scalar
+  * kernels xentropy, entropy and the sampler, whose folds are codegen'd).
   *
   * Distribution: the query side is broadcast (the reference keeps the query
   * chunk resident while streaming KV — gemm_map_reduce_attention.cpp:97-124);

@@ -9,10 +9,11 @@ import graft.functions.{GraftAggs, VecOps}
   * entropy.py:5-12,18-41): `H_m = logsumexp_n(logit) − E_softmax[logit]`.
   *
   * The reference's monoid `(p = logsumexp, n = mass-weighted mean logit)`
-  * (entropy.py:18-23) is the scalar (D=1) case of the attention monoid —
-  * we reuse [[graft.functions.LogWeightedVecAgg]] with the logit itself
-  * as the 1-element value vector, exactly as SURVEY.md §2.2 predicted one
-  * Aggregator covers both ops.
+  * (entropy.py:18-23) is the scalar (D=1) case of the attention monoid.
+  * It folds as [[graft.functions.LogSumExpDecl]] with the logit itself as
+  * the value: three primitive buffer slots, so the fold plans as a
+  * `HashAggregateExec` inside the pair stream's codegen stage instead of
+  * copying every pair row into an `ObjectHashAggregateExec`.
   */
 object Entropy {
 
@@ -23,8 +24,8 @@ object Entropy {
     PairPlan.cross(trg, pred, mode)
       .select(col("m_id"), sc.as("sc"))
       .groupBy("m_id")
-      .agg(GraftAggs.logWeightedVec(col("sc"), array(col("sc"))).as("lw"))
-      .select(col("m_id"), (col("lw.z") - col("lw.v").getItem(0)).as("h"))
+      .agg(GraftAggs.logSumExpMean(col("sc"), col("sc")).as("lw"))
+      .select(col("m_id"), (col("lw.z") - col("lw.v")).as("h"))
   }
 
   /** BACKWARD dPred of entropy — the adjoint the reference STUBS
@@ -47,9 +48,8 @@ object Entropy {
     val fwd = PairPlan.cross(trg, pred, mode)
       .select(col("m_id"), sc.as("sc"))
       .groupBy("m_id")
-      .agg(GraftAggs.logWeightedVec(col("sc"), array(col("sc"))).as("lw"))
-      .select(col("m_id"), col("lw.z").as("z"),
-        col("lw.v").getItem(0).as("sbar"))
+      .agg(GraftAggs.logSumExpMean(col("sc"), col("sc")).as("lw"))
+      .select(col("m_id"), col("lw.z").as("z"), col("lw.v").as("sbar"))
     val wt = col("gm") * exp(sc - col("z")) * (col("sbar") - sc)
     PairPlan.cross(trg, pred, mode)
       .join(PairPlan.hintBoundedLike(fwd, pred, mode), "m_id")

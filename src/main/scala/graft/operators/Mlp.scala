@@ -11,7 +11,7 @@ import graft.functions.{GraftAggs, VecOps}
   * The reference folds over the hidden dimension K with a plain `+` monoid
   * (mlp.py:18-21) — in Spark that is the built-in `sum`, so no custom
   * Aggregator is needed: hidden activations stream from the pair-scoring
-  * join straight into a codegen'd partial sum, and only `M × D` partial
+  * join straight into a partial vector sum, and only `M × D` partial
   * sums cross the shuffle. The B×K hidden matrix is never materialized,
   * mirroring the reference's per-chunk fold.
   *

@@ -40,12 +40,13 @@ object Sampler {
       .select(col("m_id"), col("k_id"), col("sc"),
         (col("sc") + noise).as("pert"))
       .groupBy("m_id")
-      // the argmax is the NATIVE lexicographic-max aggregate, not
+      // the argmax is the declarative lexicographic-max aggregate, not
       // max(struct): a struct buffer disqualifies HashAggregate and
       // dragged the whole aggregation (logsumexp included) down to
       // SortAggregate — sorting the full M×N pair stream (r13 plan
-      // read; sampler's kernel_ratio floor). The TypedImperative form
-      // flips the plan to ObjectHashAggregate: M buffers, no sort.
+      // read). Both folds have primitive buffer slots, so the pair
+      // stream folds in one codegen'd HashAggregate: M buffers, no
+      // sort, no per-row copy out of the join's codegen stage.
       .agg(
         GraftAggs.argMaxPert(col("pert"), col("sc"), col("k_id")).as("top"),
         GraftAggs.logSumExp(col("sc")).as("tz"))

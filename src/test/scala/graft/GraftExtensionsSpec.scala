@@ -95,18 +95,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"blocked plan must not broadcast:\n$plan")
   }
 
-  test("sampler plan shape: ObjectHashAggregate, never a pair-stream SortAggregate") {
-    // the Gumbel-max argmax is a native TypedImperativeAggregate (r13):
-    // a declarative max(struct) buffer dragged the whole aggregation to
-    // SortAggregate, sorting the full M×N pair stream in both modes
+  test("sampler plan shape: HashAggregate, never a pair-stream SortAggregate") {
+    // the Gumbel-max argmax is a declarative aggregate over primitive
+    // buffer slots: a max(struct) buffer dragged the whole aggregation to
+    // SortAggregate, sorting the full M×N pair stream in both modes (r13),
+    // and an object buffer copies every pair row into ObjectHashAggregate
     val emb = (0 until 64).map(i => (i.toLong, Array.fill(8)(i * 0.1)))
       .toDF("id", "vec")
     val plan = physicalPlan(Sampler.sampler(
       emb.select(col("id").as("m_id"), col("vec").as("mvec")),
       emb.select(col("id").as("k_id"), col("vec").as("kvec")),
       seed = "spec"))
-    assert(plan.contains("ObjectHashAggregate"),
-      s"expected ObjectHashAggregate in:\n$plan")
+    assert(plan.contains("HashAggregate") && !plan.contains("ObjectHashAggregate"),
+      s"expected HashAggregate in:\n$plan")
     assert(!plan.contains("SortAggregate"),
       s"sampler aggregation fell back to SortAggregate:\n$plan")
   }

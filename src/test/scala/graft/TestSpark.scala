@@ -16,6 +16,11 @@ object TestSpark {
       // them (measured 2.3x of dedup_clusters' warm process CPU at 32
       // partitions). Values are unchanged.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // same local-shuffle tuning as Bench (see Bench.scala): one spill file
+      // per map task instead of `shuffle.partitions` files, and hash-based
+      // object aggregation up to 256k groups instead of the 128-key default
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
