@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
 
 /** Per-round benchmark: runs every query in [[SparkEntry.benchQueries]] on
@@ -60,8 +60,9 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *    candidate cannot recur;
   *  - the suite SELF-HEALS one bad run (VERDICT r11 "Next" #2): each query
   *    whose median wall exceeds 2× its committed `bench_latest.json` value
-  *    (floor 0.75 s) is re-measured once — both measurements land in the
-  *    artifact (`remeasured` carries the first wall), the re-measured
+  *    (floor 0.75 s; only a record with this run's `cores`, the `local[N]`
+  *    width, is a reference) is re-measured once — both measurements land
+  *    in the artifact (`remeasured` carries the first wall), the re-measured
   *    value is official. Biased-rerun concerns don't apply: the trigger
   *    threshold, the first measurement, and the re-measurement are all
   *    recorded, so a genuine regression shows up as BOTH walls high.
@@ -205,14 +206,16 @@ object Bench {
 
   /** Per-query committed walls from the repo's bench_latest.json (the quiet
     * record this run's medians are sanity-checked against for the one-shot
-    * re-measure). The file is our own controlled format — the `"queries"`
-    * object is flat `"name":number` pairs — so a regex parse is exact. */
-  private def committedWalls(): Map[String, Double] =
+    * re-measure) — empty when the record ran at another `local[N]` width
+    * than `cpus`, whose walls are no reference. The file is our own
+    * controlled format — the `"queries"` object is flat `"name":number`
+    * pairs — so a regex parse is exact. */
+  private def committedWalls(cpus: Int): Map[String, Double] =
     try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("bench_latest.json")), "UTF-8")
       val start = txt.indexOf("\"queries\":{")
-      if (start < 0) Map.empty
+      if (start < 0 || !txt.contains(s"\"cores\":$cpus,")) Map.empty
       else {
         val body = txt.substring(start + 11, txt.indexOf('}', start))
         raw""""([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
@@ -238,36 +241,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // tmpfs shuffle scratch + fork-free local FS (see Scratch.tuneLocalFs)
-    val spark = graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce INSIDE cached plans (off by default): without it a
-      // cached tiny table materializes all 32 configured shuffle partitions
-      // and every downstream stage pays 32-64 per-task fixed costs -- measured
-      // 2.3x of dedup_clusters' warm process CPU. Values are unchanged; at
-      // scale AQE still targets its normal partition sizes.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // never take the bypass-merge shuffle writer: it creates+deletes
-      // `shuffle.partitions` files PER MAP TASK, and on this container's
-      // overlay FS each open/delete costs ~2-4 ms — profiled this round at
-      // ~90% of a 32-task stage's CPU for a 2000-row aggregate (VERDICT r9
-      // #2). The serialized-sort writer emits ONE spill+index per map task.
-      // Local-bench tuning only: a real cluster with >200 reduce partitions
-      // never bypasses anyway, and large local shuffles sort fine.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      // keep TypedImperativeAggregate partials HASH-based up to 256k groups:
-      // the 128-key default flips every >128-group monoid partial (attention's
-      // 256 q_ids, any per-doc sketch) into per-task UnsafeExternalSorter
-      // setup + spill-sort — profiled as the other half of VERDICT r9 #2's
-      // fixed per-task cost. Our object-agg states are bounded (vectors /
-      // capped sketches), so 256k states stay well inside executor memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(JobStats)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -293,7 +268,7 @@ object Bench {
     val ratios = scala.collection.mutable
       .LinkedHashMap[String, (Double, Double, Double, Double, Int)]()
     val stat0 = procStat()
-    val committed = committedWalls()
+    val committed = committedWalls(cpus)
 
     /** 1 warmup + [[Runs]] timed runs of `f`; per-run (wall, cpu,
       * machine-busy fraction, io-stall fraction, JIT-ms delta, GC-time
@@ -530,7 +505,7 @@ object Bench {
       // bench_latest.json so the next driver run reads n_unguarded: 0
       val nUnguarded = results.keys.count(k => !committed.contains(k))
       val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":${Runtime.getRuntime.availableProcessors},"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":$cpus,"sf":"$sfDir"}"""
       println(line)
       Console.out.flush()
       System.err.println(line) // second channel in case stdout tail is clipped

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Decontaminate, Dedup, Similarity, TextOps}
@@ -49,28 +49,7 @@ object ScaleSmoke {
     // single outlier ratio without paying the full ~10-minute suite)
     val only = args.drop(2).toSet
     def keep(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce INSIDE cached plans (off by default): without it a
-      // cached tiny table materializes all 32 configured shuffle partitions
-      // and every downstream stage pays 32-64 per-task fixed costs -- measured
-      // 2.3x of dedup_clusters' warm process CPU. Values are unchanged; at
-      // scale AQE still targets its normal partition sizes.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // same local-bench session tuning as Bench (see Bench.scala for the
-      // profiling rationale): never the bypass-merge shuffle writer (its
-      // per-map-task file create/delete dominates small stages on this
-      // container's overlay FS), and hash-based object-agg partials up to
-      // 256k groups — without these a stage's measured ratio reflects
-      // per-task filesystem fixed costs, not the plan's cost curve
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val base = Tables.documents(spark, sfDir)

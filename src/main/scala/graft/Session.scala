@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local session builder. The aggregation strategy every graft
+  * monoid runs under (hash vs sort partials, the shuffle writer, AQE
+  * inside cached plans) is decided by these settings, so they are part of
+  * the engine and live here only; every main and the test suite call
+  * [[local]]. */
+object Session {
+
+  /** `local[N]` width from `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions on the tmpfs
+    * scratch and fork-free local FS of [[graft.sources.Scratch.tuneLocalFs]]. */
+  def local(cpus: Int): SparkSession =
+    graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // let AQE coalesce INSIDE cached plans (off by default): without it a
+      // cached tiny table materializes all 32 configured shuffle partitions
+      // and every downstream stage pays 32-64 per-task fixed costs -- measured
+      // 2.3x of dedup_clusters' warm process CPU. Values are unchanged; at
+      // scale AQE still targets its normal partition sizes.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // never take the bypass-merge shuffle writer: it creates+deletes
+      // `shuffle.partitions` files PER MAP TASK, and on an overlay FS each
+      // open/delete costs ~2-4 ms — profiled at ~90% of a 32-task stage's
+      // CPU for a 2000-row aggregate (VERDICT r9 #2). The serialized-sort
+      // writer emits ONE spill+index per map task.
+      // Local-bench tuning only: a real cluster with >200 reduce partitions
+      // never bypasses anyway, and large local shuffles sort fine.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+      // keep TypedImperativeAggregate partials HASH-based up to 256k groups:
+      // the 128-key default flips every >128-group monoid partial (attention's
+      // 256 q_ids, any per-doc sketch) into per-task UnsafeExternalSorter
+      // setup + spill-sort — profiled as the other half of VERDICT r9 #2's
+      // fixed per-task cost. Our object-agg states are bounded (vectors /
+      // capped sketches), so 256k states stay well inside executor memory.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+}

@@ -9,26 +9,7 @@ object Verify {
     // extra args = dev-loop query-name filter (driver always passes two)
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // tmpfs shuffle scratch + fork-free local FS (see Scratch.tuneLocalFs)
-    val spark = graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce INSIDE cached plans (off by default): without it a
-      // cached tiny table materializes all 32 configured shuffle partitions
-      // and every downstream stage pays 32-64 per-task fixed costs -- measured
-      // 2.3x of dedup_clusters' warm process CPU. Values are unchanged; at
-      // scale AQE still targets its normal partition sizes.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // same local-shuffle tuning as Bench (see Bench.scala): one spill file
-      // per map task instead of `shuffle.partitions` files, and hash-based
-      // object aggregation up to 256k groups instead of the 128-key default
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val failures = run(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) })

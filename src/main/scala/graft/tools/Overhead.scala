@@ -1,23 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch micro-benchmark of per-action driver overhead under the
-  * exact session config Bench uses. Dev tooling only. */
+  * [[graft.Session]] config. Dev tooling only. */
 object Overhead {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("GRAFT_SET").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-loop job-level profiler: runs a named SparkEntry query (warmup +
@@ -12,17 +11,7 @@ object QueryJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // dev-loop A/B knob: GRAFT_SET="conf=v;conf=v" applied to the session
     sys.env.get("GRAFT_SET").foreach(_.split(";").filter(_.contains("="))
