@@ -551,12 +551,9 @@ object ScaleSmoke {
       // scale observable wall can't attribute — O(log diameter) means the
       // replicated corpus must converge in the SAME few rounds
       "components" -> { li =>
-        val it = li.select(col("l_orderkey").as("g"), col("l_partkey").as("p"))
-        val e = it.as("a").join(it.as("b"),
-            col("a.g") === col("b.g") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("doc_a"), col("b.p").as("doc_b"))
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select(col("doc_a"), col("doc_b"))
+        val e = graft.operators.Triangles.strongEdges(
+          li, "l_orderkey", "l_partkey")
+          .select(col("a").as("doc_a"), col("b").as("doc_b"))
         val (labels, rounds) = Dedup.connectedComponentsWithRounds(e)
         ccRounds = rounds
         labels.groupBy(col("label")).agg(count(lit(1)).as("comp_size"))
@@ -579,42 +576,26 @@ object ScaleSmoke {
       // synchronous LPA (the graded parts_lpa shape): a FIXED 3 rounds by
       // construction, so the probe grades pure per-round linearity — the
       // edge⋈label join and the two-level argmax aggregate
-      "lpa" -> { li =>
-        val it = li.select(col("l_orderkey").as("g"), col("l_partkey").as("p"))
-        val e = it.as("a").join(it.as("b"),
-            col("a.g") === col("b.g") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("a"), col("b.p").as("b"))
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select(col("a"), col("b"))
-        graft.operators.Triangles.labelPropagation(e, 3).count()
-      },
+      "lpa" -> (li => graft.operators.Triangles.labelPropagation(
+        graft.operators.Triangles.strongEdges(li, "l_orderkey", "l_partkey"),
+        3).count()),
       // association rules (the graded parts_assoc shape): the basket
-      // self-join fan-out is basket-size-bounded and DISJOINT replication
+      // pair fan-out is basket-size-bounded and DISJOINT replication
       // keeps basket sizes constant, so pairs grow R-linearly
       "assoc" -> (li => graft.operators.Assoc.pairRules(li).count()),
       // common-neighbor link prediction on the strong-tie graph: under
       // DISJOINT replication each replica's wedge set is identical, so
       // candidates grow R-linearly and the top-k cut stays bounded
-      "linkpred" -> { li =>
-        val it = li.select(col("l_orderkey").as("g"), col("l_partkey").as("p"))
-        val e = it.as("a").join(it.as("b"),
-            col("a.g") === col("b.g") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("a"), col("b.p").as("b"))
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select(col("a"), col("b"))
-        graft.operators.Triangles.linkPredict(e, 20).count()
-      },
+      "linkpred" -> (li => graft.operators.Triangles.linkPredict(
+        graft.operators.Triangles.strongEdges(li, "l_orderkey", "l_partkey"),
+        20).count()),
       // multi-source BFS: per-round work is O(|E|) and DISJOINT replicas
       // run identical cascades, so the HOP structure must stay flat while
       // per-round volume grows R-linearly (seeds: a fixed node-id slice,
       // replica-independent by construction)
       "bfs" -> { li =>
-        val it = li.select(col("l_orderkey").as("g"), col("l_partkey").as("p"))
-        val e = it.as("a").join(it.as("b"),
-            col("a.g") === col("b.g") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("a"), col("b.p").as("b"))
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select(col("a"), col("b"))
+        val e = graft.operators.Triangles.strongEdges(
+          li, "l_orderkey", "l_partkey")
         val seeds = e.select(col("a").as("node"))
           .filter(col("node") % 97 === 0).distinct()
         graft.operators.Triangles.bfsHops(e, seeds, 4)

@@ -17,11 +17,9 @@ import org.apache.spark.sql.functions._
   * "everything correlates" carts), a pair count, and two broadcast
   * joins against the item-support table (parts ≪ orders, always
   * broadcastable). The min-support filter runs BEFORE the item joins,
-  * so rule-side work tracks frequent pairs only. (The collect_set basket
-  * form had measured SLOWER than the join pre-r15 — that reading was
-  * the 100-entry codegen-cache era; re-measured r16 the array form wins,
-  * 2.09 → 1.49 s at sf0.1, and it is the same §2.4 shape as the
-  * coEdges/strongEdges builds.)
+  * so rule-side work tracks frequent pairs only. The within-order pairs
+  * come from [[Triangles.groupPairs]], the builder the co-purchase edge
+  * builds share.
   *
   * Exactness: all ratios are exact integer micro-units by floor
   * division of BIGINT counts (conf = ⌊10⁶·n_ab/n_a⌋, lift =
@@ -37,39 +35,19 @@ object Assoc {
 
   /** One row per unordered frequent pair (a < b): pair support count,
     * both directed confidences, lift and support in micro-units. */
-  def pairRules(lineitem: DataFrame, minSup: Long = MinSupport,
-                arrayFormMaxRows: Long = Triangles.ArrayFormMaxRows): DataFrame = {
+  def pairRules(lineitem: DataFrame, minSup: Long = MinSupport): DataFrame = {
     // one exchange keyed on the order id serves BOTH the dedup aggregate
     // (hash(ok) co-locates every (ok, pk), so the distinct needs no
-    // second exchange) and the within-order self-join (both sides cached
-    // with the same partitioning — the join is exchange-free)
+    // second exchange) and the per-order pair window (partitioned by ok,
+    // so it needs no exchange either)
     val baskets = Caching.eager(lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .repartition(col("ok"))
       .distinct())
     val items = baskets.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
     val nOrders = baskets.agg(countDistinct(col("ok")).as("n_orders"))
-    // Small baskets: array form (guide §2.4, the coEdges lesson) —
-    // baskets is already hash(ok)-partitioned, so the per-basket collect
-    // is exchange-free and the within-order self-join becomes a map-side
-    // pair generator. Past Triangles.ArrayFormMaxRows the interpreted
-    // pair generator costs more than it saves (measured 4.3 vs 1.5 s at
-    // sf1 on the same cached input, PairBuildAb) and the cached
-    // self-join arm takes over; the eager cache makes the gating count
-    // free.
-    val pairStream =
-      if (baskets.count() <= arrayFormMaxRows)
-        baskets.groupBy(col("ok"))
-          .agg(sort_array(collect_set(col("pk"))).as("ps"))
-          .select(explode(Triangles.sortedPairs(col("ps"))).as("e"))
-          .select(col("e.a").as("part_a"), col("e.b").as("part_b"))
-      else
-        baskets.select(col("ok"), col("pk").as("part_a"))
-          .join(baskets.select(col("ok"), col("pk").as("part_b")), "ok")
-          .where(col("part_a") < col("part_b"))
-          .select(col("part_a"), col("part_b"))
-    val pairs = pairStream
-      .groupBy(col("part_a"), col("part_b"))
+    val pairs = Triangles.groupPairs(baskets, "ok", "pk")
+      .groupBy(col("a").as("part_a"), col("b").as("part_b"))
       .agg(count(lit(1)).as("pair_n"))
       .filter(col("pair_n") >= minSup)
     pairs

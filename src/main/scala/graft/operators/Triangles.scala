@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** TRIANGLE COUNTING over the part co-purchase graph — the canonical
@@ -27,56 +28,37 @@ import org.apache.spark.sql.functions._
   * join could further bucket edges by (a, b) for reuse across analyses. */
 object Triangles {
 
-  /** All strictly-increasing pairs (x < y) of a SORTED array, as
-    * `array<struct<a, b>>` — the BPE array-form lesson (r15) applied to
-    * the co-membership builds: `groupBy(g) + explode(pairs)` generates
-    * the same pair stream as the per-group self-join while the input
-    * crosses ONE exchange (hash g) instead of feeding two join sides,
-    * and no join runs at all. The strict `y > x` filter reproduces the
-    * join's `a < b` semantics exactly, INCLUDING duplicate group members
-    * (a member appearing k times yields k copies of each of its pairs —
-    * the self-join's multiplicity, which the support counts grade). */
-  private[graft] def sortedPairs(xs: Column): Column =
-    flatten(transform(xs, (x, i) =>
-      transform(filter(slice(xs, i + 2, size(xs)), y => y > x),
-        y => struct(x.as("a"), y.as("b")))))
-
-  /** Input-row ceiling for the ARRAY-FORM pair build (r16, measured with
-    * graft.tools.PairBuildAb at sf0.1 and sf1, noop sink, interleaved
-    * arms): the array form saves one exchange of the input — a FIXED
-    * ~0.5-1 s of shuffle/scheduling cost at local scale — while its
-    * higher-order pair generator (transform/filter/slice are interpreted
-    * expressions, not whole-stage codegen) costs ~2.5× the self-join's
-    * codegen'd pair stream PER ROW. So the array form wins while the
-    * input is small (sf0.1, 600k rows: co 1.9 vs 2.3 s, strong 2.0 vs
-    * 2.6 s) and loses once compute dominates (sf1, 6M rows: co 5.2 vs
-    * 2.0 s, strong 5.3 vs 2.2 s). The gate follows bytes, not a deploy
-    * constant (guide §2.2): one metadata-cheap count decides per input,
-    * both arms produce the identical edge multiset (TrianglesSpec). */
-  val ArrayFormMaxRows = 2L * 1000 * 1000
+  /** The within-group pair MULTISET of `items`: one (a, b) row, a < b,
+    * for every two rows that share a non-null `grp` — exactly the rows of
+    * the self-join `x.grp = y.grp AND x.item < y.item`, duplicates kept (a
+    * member appearing k times yields k copies of each of its pairs; the
+    * support counts grade that multiplicity). Every row carries its
+    * group's item list (one whole-group window frame, collected once per
+    * group) and the explode keeps the strictly larger items: one exchange,
+    * sort, window and generate — no join and no collect aggregate.
+    * Callers pick `distinct` or a count. Strong-edge build over lineitem
+    * at local[4] on a 4-vCPU VM, noop sink, medians of interleaved runs:
+    * sf0.1 1.46 s (the former HOF array form 2.05 s, self-join 2.55 s);
+    * sf1, 6M rows, 8.49 s (self-join 8.97 s). A per-row
+    * `rowsBetween(1, unboundedFollowing)` frame re-collects the tail for
+    * every row and read 9.70 s at sf1, slower than the self-join. */
+  def groupPairs(items: DataFrame, grp: String, item: String): DataFrame =
+    items.where(col(grp).isNotNull)
+      .select(col(item).as("a"),
+        collect_list(col(item)).over(Window.partitionBy(col(grp))).as("ps"))
+      .select(col("a"), explode(col("ps")).as("b")).where(col("b") > col("a"))
 
   /** Distinct undirected co-membership edges (a < b): items sharing a
-    * group key — parts co-purchased in one order. Small inputs take the
-    * array form (guide §2.4 remove shuffles outright): one exchange of
-    * (g, item) rows into the per-group collect, a map-side pair
-    * generator, then the distinct — the per-group self-join shuffled the
-    * table twice and ran a join to produce the identical pair stream.
-    * Past [[ArrayFormMaxRows]] the interpreted pair generator costs more
-    * than the exchange it saves and the self-join arm takes over. */
-  def coEdges(items: DataFrame, grp: String, item: String,
-              arrayFormMaxRows: Long = ArrayFormMaxRows): DataFrame = {
-    val kv = items.select(col(grp).as("g"), col(item).as("p"))
-    if (kv.count() <= arrayFormMaxRows)
-      kv.groupBy(col("g"))
-        .agg(sort_array(collect_set(col("p"))).as("ps"))
-        .select(explode(sortedPairs(col("ps"))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b")).distinct()
-    else
-      kv.select(col("g"), col("p").as("a"))
-        .join(kv.select(col("g"), col("p").as("b")), "g")
-        .where(col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-  }
+    * group key — parts co-purchased in one order. */
+  def coEdges(items: DataFrame, grp: String, item: String): DataFrame =
+    groupPairs(items, grp, item).distinct()
+
+  /** The STRONG-TIE co-membership edges (a < b): pairs that share at least
+    * two groups, counted with the self-join's multiplicity. */
+  def strongEdges(items: DataFrame, grp: String, item: String): DataFrame =
+    groupPairs(items, grp, item).groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
+      .select(col("a"), col("b"))
 
   /** Edge-count ceiling for broadcasting the closing-join side: ~50 B per
     * hashed (long, long) row puts 4M edges around 200 MB — comfortably
@@ -367,7 +349,6 @@ object Triangles {
     * center v, and the top-k is a TakeOrderedAndProject, never a global
     * sort. */
   def linkPredict(edges: DataFrame, topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = edges.localCheckpoint(true) // read by the wedge join (twice) + anti-join
     val adj = e.select(col("a").as("v"), col("b").as("w"))
       .union(e.select(col("b").as("v"), col("a").as("w")))

@@ -967,43 +967,16 @@ object RelationalQueries {
     * orders) — the support-filtered graph `parts_lpa`/`parts_components`
     * already analyze, and the wedge-volume mitigation `parts_linkpred`
     * depends on (raw-graph wedges measured 1.5·10⁸ at sf0.1; strong-tie
-    * wedges ~10³). One self-join + one map-combined pair count. */
-  /** Support≥2 co-purchase edges, built ONCE per session: five graded
-    * graph queries (`parts_components`/`_lpa`/`_linkpred`/`_bfs` and the
-    * histogram rollups) consume the identical strong-tie edge set — the
-    * wedge self-join is the expensive pass, the per-analysis work is
-    * edge-linear (Caching.sessionMemo; the edge table is the persisted
-    * graph artifact a production pipeline reads anyway). */
+    * wedges ~10³). Built ONCE per session: five graded graph queries
+    * (`parts_components`/`_lpa`/`_linkpred`/`_bfs` and the histogram
+    * rollups) consume the identical edge set — the pair build is the
+    * expensive pass, the per-analysis work is edge-linear
+    * (Caching.sessionMemo; the edge table is the persisted graph artifact
+    * a production pipeline reads anyway). */
   private def strongEdges(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Caching.sessionMemo(s, s"strong_edges:$dir") {
-      // Small inputs: array form (guide §2.4, the coEdges/BPE lesson) —
-      // one exchange of (order, part) rows into the per-order collect,
-      // map-side pair generation, one map-combined pair count; the
-      // self-join shuffles lineitem twice to produce the same pair
-      // stream. collect_list (NOT collect_set): the support count grades
-      // the self-join's multiplicity, so duplicate parts within an order
-      // must keep contributing duplicate pairs. Past
-      // Triangles.ArrayFormMaxRows the interpreted pair generator costs
-      // more than the exchange it saves (measured 5.3 vs 2.2 s at sf1,
-      // PairBuildAb) and the self-join arm takes over — the gate follows
-      // bytes, not a deploy constant (guide §2.2).
-      val kv = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("g"), col("l_partkey").as("p"))
-      val pairs =
-        if (kv.count() <= graft.operators.Triangles.ArrayFormMaxRows)
-          kv.groupBy(col("g"))
-            .agg(sort_array(collect_list(col("p"))).as("ps"))
-            .select(explode(
-              graft.operators.Triangles.sortedPairs(col("ps"))).as("e"))
-            .select(col("e.a").as("a"), col("e.b").as("b"))
-        else
-          kv.as("x").join(kv.as("y"),
-              col("x.g") === col("y.g") && col("x.p") < col("y.p"))
-            .select(col("x.p").as("a"), col("y.p").as("b"))
-      pairs.groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select(col("a"), col("b"))
-    }
+    graft.operators.Caching.sessionMemo(s, s"strong_edges:$dir")(
+      graft.operators.Triangles.strongEdges(
+        Tables.lineitem(s, dir), "l_orderkey", "l_partkey"))
 
   /** Distinct (support≥1) co-purchase edges for triangles/k-core — the
     * same one-build-per-session stance as [[strongEdges]]. */

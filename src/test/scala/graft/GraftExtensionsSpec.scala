@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Attention, Sampler}
+import graft.operators.{Assoc, Attention, Sampler, Triangles}
 
 /** SQL registration of the native functions + physical-plan-shape
   * regression tests (the plan properties the 100 TB design depends on). */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -145,6 +150,33 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val plan = physicalPlan(df)
     assert(plan.contains("BroadcastExchange"), s"expected broadcast eval side in:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "train side must not shuffle for the join")
+  }
+
+  test("co-membership pair plan shape: a Window feeds a Generate, no " +
+       "shuffled join, no ObjectHashAggregate (pairRules, strongEdges)") {
+    // the within-group pairs are generated inside one window pass: no
+    // self-join of the basket/lineitem side and no collect aggregate
+    val li = (0 until 2000).map(i => (i / 4L, (i * 7919L) % 300))
+      .toDF("l_orderkey", "l_partkey")
+    for (df <- Seq(Assoc.pairRules(li),
+        Triangles.strongEdges(li, "l_orderkey", "l_partkey"))) {
+      df.collect() // the final adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val gens = collect(plan) { case g: GenerateExec => g }
+      assert(gens.nonEmpty, s"no Generate in:\n$plan")
+      gens.foreach { g =>
+        var c = g.child
+        while (c.isInstanceOf[ProjectExec] || c.isInstanceOf[FilterExec] ||
+            c.isInstanceOf[InputAdapter]) c = c.children.head
+        assert(c.isInstanceOf[WindowExec], s"Generate not fed by a Window:\n$plan")
+      }
+      assert(collect(plan) {
+        case j: SortMergeJoinExec => j
+        case j: ShuffledHashJoinExec => j
+      }.isEmpty, s"shuffled join in the pair build:\n$plan")
+      assert(collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty,
+        s"ObjectHashAggregate in the pair build:\n$plan")
+    }
   }
 
   test("supplier_waiting plan shape: decorrelated — ONE lineitem scan, no self-join") {

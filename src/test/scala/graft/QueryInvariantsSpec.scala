@@ -609,19 +609,15 @@ class QueryInvariantsSpec extends AnyFunSuite {
     val li = Seq((10L, 1L), (10L, 2L), (20L, 1L), (20L, 2L),
       (30L, 1L), (30L, 3L), (40L, 2L))
       .toDF("l_orderkey", "l_partkey")
-    // both pair-generation arms of the r16 scale gate must agree row-wise
-    for (arrayMax <- Seq(Long.MaxValue, -1L)) {
-      val got = graft.operators.Assoc.pairRules(
-        li, arrayFormMaxRows = arrayMax).collect()
-      assert(got.length == 1)
-      val r = got.head
-      assert(r.getAs[Long]("part_a") == 1L && r.getAs[Long]("part_b") == 2L)
-      assert(r.getAs[Long]("pair_n") == 2L)
-      assert(r.getAs[Long]("conf_ab_micro") == 666666L)
-      assert(r.getAs[Long]("conf_ba_micro") == 666666L)
-      assert(r.getAs[Long]("lift_micro") == 888888L)
-      assert(r.getAs[Long]("support_micro") == 500000L)
-    }
+    val got = graft.operators.Assoc.pairRules(li).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert(r.getAs[Long]("part_a") == 1L && r.getAs[Long]("part_b") == 2L)
+    assert(r.getAs[Long]("pair_n") == 2L)
+    assert(r.getAs[Long]("conf_ab_micro") == 666666L)
+    assert(r.getAs[Long]("conf_ba_micro") == 666666L)
+    assert(r.getAs[Long]("lift_micro") == 888888L)
+    assert(r.getAs[Long]("support_micro") == 500000L)
   }
 
   test("mine_bitext: mutual-best injectivity, margins above tau, the " +

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -33,25 +35,61 @@ class TrianglesSpec extends AnyFunSuite {
       (9L, 5L))
   }
 
+  // the reference every pair build is held to: the a < b self-join of
+  // the rows sharing a group key, as a multiset
+  private def selfJoinPairs(items: DataFrame): Map[(Long, Long), Int] =
+    multiset(items.as("x").join(items.as("y"),
+        col("x.g") === col("y.g") && col("x.item") < col("y.item"))
+      .select(col("x.item"), col("y.item")))
+
+  private def multiset(pairs: DataFrame): Map[(Long, Long), Int] =
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(identity).view.mapValues(_.length).toMap
+
   test("sortedPairs reproduces the self-join's pair MULTISET, duplicate " +
        "members included (the strongEdges support-count contract, r16)") {
     // group [10, 10, 20, 30]: the a < b self-join yields (10,20)×2,
     // (10,30)×2, (20,30)×1 — equal-value pairs (10,10) never emit
     val items = Seq((1L, 10L), (1L, 10L), (1L, 20L), (1L, 30L))
       .toDF("g", "item")
-    val viaGen = items.groupBy(col("g"))
-      .agg(sort_array(collect_list(col("item"))).as("ps"))
-      .select(explode(Triangles.sortedPairs(col("ps"))).as("e"))
-      .select(col("e.a"), col("e.b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(identity).view.mapValues(_.length).toMap
-    val viaJoin = items.as("x").join(items.as("y"),
-        col("x.g") === col("y.g") && col("x.item") < col("y.item"))
-      .select(col("x.item"), col("y.item")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(identity).view.mapValues(_.length).toMap
-    assert(viaGen == viaJoin)
+    val viaGen = multiset(Triangles.groupPairs(items, "g", "item"))
+    assert(viaGen == selfJoinPairs(items))
     assert(viaGen == Map((10L, 20L) -> 2, (10L, 30L) -> 2, (20L, 30L) -> 1))
+  }
+
+  test("groupPairs equals the self-join multiset on random groups with " +
+       "duplicates, singletons, negative ids and null keys, at 1 and 7 " +
+       "partitions") {
+    val row = for {
+      g <- Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+        8 -> Gen.choose(-3L, 5L).map(Option(_)))
+      item <- Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+        10 -> Gen.choose(-4L, 6L).map(Option(_)))
+    } yield (g, item)
+    val prop = Prop.forAll(Gen.listOf(row)) { rows =>
+      val items = rows.toDF("g", "item")
+      val want = selfJoinPairs(items)
+      Seq(1, 7).forall(n =>
+        multiset(Triangles.groupPairs(items.repartition(n), "g", "item")) == want)
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("null group keys pair nothing: coEdges and strongEdges match the " +
+       "self-join") {
+    // (null,30) and (null,40) share no group — a groupBy would pair them,
+    // twice over, making (30,40) a strong edge too
+    val items = Seq[(Option[Long], Long)]((None, 30L), (None, 40L),
+      (None, 30L), (Some(1L), 10L), (Some(1L), 20L), (Some(2L), 10L),
+      (Some(2L), 20L), (Some(2L), 30L)).toDF("g", "item")
+    val want = selfJoinPairs(items)
+    assert(multiset(Triangles.coEdges(items, "g", "item")).keySet ==
+      want.keySet)
+    assert(multiset(Triangles.strongEdges(items, "g", "item")).keySet ==
+      want.filter(_._2 >= 2).keySet)
+    assert(want.keySet == Set((10L, 20L), (10L, 30L), (20L, 30L)))
   }
 
   test("coEdges builds distinct normalized co-membership pairs") {
@@ -66,13 +104,10 @@ class TrianglesSpec extends AnyFunSuite {
        "identical edge set (the r16 scale gate)") {
     val items = Seq((1L, 10L), (1L, 20L), (1L, 30L), (2L, 10L), (2L, 20L),
       (2L, 20L), (3L, 40L)).toDF("g", "item")
-    val small = Triangles.coEdges(items, "g", "item")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // arrayFormMaxRows = -1 forces every input onto the self-join arm
-    val big = Triangles.coEdges(items, "g", "item", arrayFormMaxRows = -1L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(big == small)
-    assert(big == Set((10L, 20L), (10L, 30L), (20L, 30L)))
+    val e = multiset(Triangles.coEdges(items, "g", "item"))
+    assert(e.values.forall(_ == 1), s"coEdges emitted a duplicate edge: $e")
+    assert(e.keySet == selfJoinPairs(items).keySet)
+    assert(e.keySet == Set((10L, 20L), (10L, 30L), (20L, 30L)))
   }
 
   test("the closing join is broadcast: no exchange above the wedge join") {
