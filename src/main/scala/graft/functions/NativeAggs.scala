@@ -17,6 +17,12 @@ private[functions] object NativeAggChecks {
       case (s, v) => TypeCheckResult.TypeCheckFailure(
         s"$name requires (double, array<double>), got ($s, $v)")
     }
+
+  /** A vector monoid's value width is fixed by its first row; a row of
+    * another width would read past the shorter buffer or drop elements. */
+  def sameWidth(name: String, width: Int, got: Int): Unit =
+    if (got != width) throw new IllegalArgumentException(
+      s"$name: vector width $got differs from $width")
 }
 
 /** Native `TypedImperativeAggregate` forms of the vector-valued reference
@@ -32,9 +38,15 @@ private[functions] object NativeAggChecks {
   * map; `serialize`/`deserialize` (plain ByteBuffer layout) run only on
   * spill and on the partial→final exchange, which is exactly the reference's
   * chunk-boundary `binary_reduce` granularity. The value width is unknown
-  * at plan time, so these cannot have primitive buffer slots. The scalar
-  * monoids can: [[LogSumExpDecl]] and [[ArgMaxPertAgg]] are declarative
-  * and fold inside whole-stage codegen.
+  * at plan time, so these cannot have primitive buffer slots, and each
+  * input row is copied out of the codegen stage into the hash map. The
+  * forward attention and mlp therefore feed them one partial value per
+  * (query row, tile) from the codegen'd tile folds ([[AttentionTileFold]],
+  * [[MlpTileFold]]), never one row per pair; a partial value is itself a
+  * monoid element, so `update` merges it unchanged. The scalar monoids
+  * have primitive slots: [[LogSumExpDecl]] and [[ArgMaxPertAgg]] are
+  * declarative and fold inside whole-stage codegen. The first row fixes a
+  * group's value width; a row or partial of another width throws.
   */
 
 /** Mutable buffer: z = running logsumexp of scores; v = softmax-weighted
@@ -81,13 +93,19 @@ case class LogWeightedVecAgg(
       b.z = zb
       b.v = v
       b
-    } else combineInto(b, zb, arr.getDouble)
+    } else {
+      NativeAggChecks.sameWidth(prettyName, b.v.length, arr.numElements())
+      combineInto(b, zb, arr.getDouble)
+    }
   }
 
   override def merge(a: LWVBuf, o: LWVBuf): LWVBuf =
     if (o.v == null) a
     else if (a.v == null) { a.z = o.z; a.v = o.v; a }
-    else combineInto(a, o.z, o.v)
+    else {
+      NativeAggChecks.sameWidth(prettyName, a.v.length, o.v.length)
+      combineInto(a, o.z, o.v)
+    }
 
   /** a ⊕ (zb, vb), mutating a in place (a owns its array). */
   private def combineInto(a: LWVBuf, zb: Double, vb: Int => Double): LWVBuf = {
@@ -180,6 +198,7 @@ case class VecWeightedSumAgg(
     if (arr == null) return b
     val wd = w.asInstanceOf[Double]
     if (b.v == null) b.v = new Array[Double](arr.numElements())
+    else NativeAggChecks.sameWidth(prettyName, b.v.length, arr.numElements())
     val v = b.v
     val n = v.length
     var i = 0
@@ -190,6 +209,7 @@ case class VecWeightedSumAgg(
   override def merge(a: VecSumBuf, o: VecSumBuf): VecSumBuf = {
     if (o.v == null) return a
     if (a.v == null) { a.v = o.v; return a }
+    NativeAggChecks.sameWidth(prettyName, a.v.length, o.v.length)
     val v = a.v
     val n = v.length
     var i = 0

@@ -4,13 +4,15 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 
 /** Codegen'd fused multiply-accumulate over two `array<double>` columns —
   * the GEMM inner loop of every reference operator (reference attention.py:6,
@@ -65,6 +67,309 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** One packed tile of `PairPlan.tiles` (`__tile: array<struct>`) decoded
+  * into flat primitive arrays: per row an optional id, a dot-product
+  * vector (ragged widths allowed, as in [[DotProduct]]) and a value vector
+  * (one width per tile). A fold decodes a tile when its id differs from
+  * the last one and scores every query row against the flat arrays: the
+  * Broadcast arm streams each chunk's rows consecutively, and a Blocked
+  * task holds one tile whenever the grid fits the shuffle partitions
+  * (beyond that a task's tiles interleave and a tile is decoded again
+  * when its id comes back).
+  *
+  * The cache is keyed on the tile id `__tid`, never on the identity of the
+  * `ArrayData` or its buffer: the projections that produce the tile rows
+  * reuse their output buffer, so two different tiles of one task can
+  * arrive in the same memory. One instance lives per task (a mutable state
+  * of the generated code), so it needs no synchronisation. */
+final class TileCache {
+  private var tid = 0L
+  private var loaded = false
+  var n = 0
+  /** value width of the tile, -1 when every value vector is null */
+  var width = -1
+  var ids = new Array[Long](0)
+  var idNull = new Array[Boolean](0)
+  var dotOff = new Array[Int](1)
+  var dotNull = new Array[Boolean](0)
+  var dot = new Array[Double](0)
+  var valNull = new Array[Boolean](0)
+  var value = new Array[Double](0)
+  private var q = new Array[Double](0)
+
+  def load(t: ArrayData, id: Long, nFields: Int, idOrd: Int, dotOrd: Int,
+           valOrd: Int): Unit = if (!loaded || id != tid) {
+    loaded = false
+    n = t.numElements()
+    if (ids.length < n) {
+      val cap = math.max(n, 2 * ids.length)
+      ids = new Array[Long](cap)
+      idNull = new Array[Boolean](cap)
+      dotOff = new Array[Int](cap + 1)
+      dotNull = new Array[Boolean](cap)
+      valNull = new Array[Boolean](cap)
+    }
+    width = -1
+    var j = 0
+    while (j < n) {
+      val row = if (t.isNullAt(j)) null else t.getStruct(j, nFields)
+      idNull(j) = idOrd < 0 || row == null || row.isNullAt(idOrd)
+      if (!idNull(j)) ids(j) = row.getLong(idOrd)
+      val a = if (row == null || row.isNullAt(dotOrd)) null else row.getArray(dotOrd)
+      dotNull(j) = a == null
+      val off = dotOff(j)
+      val len = if (a == null) 0 else a.numElements()
+      if (dot.length < off + len)
+        dot = java.util.Arrays.copyOf(dot, math.max(off + len, 2 * dot.length))
+      var i = 0
+      while (i < len) { dot(off + i) = a.getDouble(i); i += 1 }
+      dotOff(j + 1) = off + len
+      val v = if (row == null || row.isNullAt(valOrd)) null else row.getArray(valOrd)
+      valNull(j) = v == null
+      if (v != null) {
+        val w = v.numElements()
+        if (width < 0) {
+          width = w
+          if (value.length < n * w) value = new Array[Double](n * w)
+        } else if (w != width) throw new IllegalArgumentException(
+          s"tile $id: value vector width $w differs from $width")
+        i = 0
+        while (i < w) { value(j * w + i) = v.getDouble(i); i += 1 }
+      }
+      j += 1
+    }
+    tid = id
+    loaded = true
+  }
+
+  /** The query vector as a primitive array (a reused scratch buffer). */
+  def query(v: ArrayData): Array[Double] = {
+    val n = if (v == null) 0 else v.numElements()
+    if (q.length < n) q = new Array[Double](n)
+    var i = 0
+    while (i < n) { q(i) = v.getDouble(i); i += 1 }
+    q
+  }
+
+  /** [[DotProduct]] of the query vector (first `qn` of `qv`) and row j's
+    * dot vector: the same sequential left fold over min(len). */
+  def score(qv: Array[Double], qn: Int, j: Int): Double = {
+    val off = dotOff(j)
+    val len = math.min(qn, dotOff(j + 1) - off)
+    var s = 0.0
+    var i = 0
+    while (i < len) { s += qv(i) * dot(off + i); i += 1 }
+    s
+  }
+}
+
+/** The plumbing the two tile folds share. Children: the query row's
+  * vector, the packed tile (`array<struct>` of the big side's columns),
+  * the tile id, then any further query-row inputs. `fold` turns one
+  * (query row, tile) into one monoid value, or null for a tile without
+  * pairs. Generated code calls `fold` on this expression object with a
+  * per-task [[TileCache]], so the fold runs inside whole-stage codegen. */
+abstract class TileFold extends Expression {
+  def tile: Expression
+  override def nullable: Boolean = true
+
+  protected lazy val fields: StructType =
+    tile.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+  protected def checkTile(vecs: Seq[String], ids: Seq[String]): TypeCheckResult = {
+    def has(st: StructType, f: String, ok: DataType => Boolean) =
+      st.fields.exists(x => x.name == f && ok(x.dataType))
+    val doubles: DataType => Boolean = {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }
+    (children.head.dataType, tile.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(st: StructType, _))
+          if vecs.forall(has(st, _, doubles)) &&
+            ids.forall(has(st, _, _ == LongType)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (q, t) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an array<double> query vector and a tile " +
+          s"array<struct> with array<double> ${vecs.mkString(", ")} and " +
+          s"bigint ${ids.mkString(", ")}, got ($q, $t)")
+    }
+  }
+
+  /** Java argument list for `fold` after the cache, from the children's code. */
+  protected def foldArgs(cs: Seq[ExprCode]): Seq[String]
+
+  override def eval(input: InternalRow): Any = {
+    val in = children.map(_.eval(input))
+    if (in(1) == null) null else foldEval(new TileCache, in)
+  }
+
+  protected def foldEval(c: TileCache, in: Seq[Any]): Any
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("tileFold", this)
+    val cacheCls = classOf[TileCache].getName
+    val cache = ctx.addMutableState(cacheCls, "tileCache",
+      v => s"$v = new $cacheCls();")
+    val cs = children.map(_.genCode(ctx))
+    val tileCode = cs(1)
+    val jt = CodeGenerator.javaType(dataType)
+    ev.copy(code = cs.map(_.code).reduce(_ + _) + code"""
+      |$jt ${ev.value} = ${tileCode.isNull} ? null :
+      |  $self.fold($cache, ${foldArgs(cs).mkString(", ")});
+      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+}
+
+/** `graft_attention_tile(qvec, tile, tid, q_id)`: one query row against
+  * one KV tile (fields `kvec`, `vvec`, and `k_id` when causal) as the
+  * attention monoid value struct(z, v) of [[LogWeightedVecAgg]], by online
+  * softmax: a running max m, a running sum l of e^(s−m) and an
+  * accumulator rescaled whenever m rises, giving z = m + ln l and
+  * v = acc / l. The score is [[DotProduct]]'s fold, ÷ sqrt(size(qvec))
+  * when `scale`; `causal` skips rows with k_id > q_id before scoring.
+  * A tile without pairs gives null. Pairs with a null score or value are
+  * skipped, as the aggregate skips them: a tile of only such pairs gives
+  * (−∞, null), which the aggregate skips too, and a tile whose every
+  * score is −∞ gives (−∞, its first value), the aggregate's first row. */
+case class AttentionTileFold(qvec: Expression, tile: Expression,
+    tid: Expression, qId: Expression, scale: Boolean, causal: Boolean)
+    extends TileFold {
+
+  override def children: Seq[Expression] = Seq(qvec, tile, tid, qId)
+  override def prettyName: String = "graft_attention_tile"
+  override def dataType: DataType = StructType(Seq(
+    StructField("z", DoubleType, nullable = false),
+    StructField("v", ArrayType(DoubleType, containsNull = false))))
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (tid.dataType != LongType || qId.dataType != LongType)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires bigint tid and q_id")
+    else checkTile(Seq("kvec", "vvec"), if (causal) Seq("k_id") else Nil)
+
+  private lazy val idOrd = if (causal) fields.fieldIndex("k_id") else -1
+  private lazy val kOrd = fields.fieldIndex("kvec")
+  private lazy val vOrd = fields.fieldIndex("vvec")
+
+  override protected def foldArgs(cs: Seq[ExprCode]): Seq[String] = Seq(
+    s"${cs(0).isNull} ? null : ${cs(0).value}", s"${cs(1).value}",
+    s"${cs(2).value}", s"${cs(3).isNull}", s"${cs(3).value}")
+
+  override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
+    fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      in(2).asInstanceOf[Long], in(3) == null,
+      if (in(3) == null) 0L else in(3).asInstanceOf[Long])
+
+  def fold(c: TileCache, q: ArrayData, t: ArrayData, tid: Long,
+           qIdNull: Boolean, qId: Long): InternalRow = {
+    c.load(t, tid, fields.length, idOrd, kOrd, vOrd)
+    val qn = if (q == null) 0 else q.numElements()
+    val qv = c.query(q)
+    val sq = math.sqrt(qn.toDouble)
+    val d = c.width
+    var pairs = false
+    var first = -1
+    var m = Double.NegativeInfinity
+    var l = 0.0
+    var acc: Array[Double] = null
+    var j = 0
+    while (j < c.n) {
+      if (!causal || (!qIdNull && !c.idNull(j) && c.ids(j) <= qId)) {
+        pairs = true
+        if (q != null && !c.dotNull(j) && !c.valNull(j)) {
+          var s = c.score(qv, qn, j)
+          if (scale) s = s / sq
+          if (first < 0) first = j
+          val vo = j * d
+          var i = 0
+          if (s == Double.NegativeInfinity) {
+            // weight 0: the monoid identity
+          } else if (acc == null) {
+            acc = java.util.Arrays.copyOfRange(c.value, vo, vo + d)
+            l = 1.0
+            m = s
+          } else if (s > m) {
+            val r = math.exp(m - s)
+            while (i < d) { acc(i) = acc(i) * r + c.value(vo + i); i += 1 }
+            l = l * r + 1.0
+            m = s
+          } else {
+            val w = math.exp(s - m)
+            while (i < d) { acc(i) += w * c.value(vo + i); i += 1 }
+            l += w
+          }
+        }
+      }
+      j += 1
+    }
+    if (!pairs) null
+    else if (first < 0) InternalRow(Double.NegativeInfinity, null)
+    else if (acc == null) InternalRow(Double.NegativeInfinity, new GenericArrayData(
+      java.util.Arrays.copyOfRange(c.value, first * d, first * d + d)))
+    else {
+      var i = 0
+      while (i < d) { acc(i) /= l; i += 1 }
+      InternalRow(m + math.log(l), new GenericArrayData(acc))
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): AttentionTileFold =
+    copy(qvec = c(0), tile = c(1), tid = c(2), qId = c(3))
+}
+
+/** `graft_mlp_tile(xvec, tile, tid)`: one input row against one tile of
+  * hidden units (fields `pvec`, `qvec`) as Σ_k h_k·qvec_k with
+  * h_k = greatest(xvec·pvec_k, 0.0) — the [[VecWeightedSumAgg]] value of
+  * the tile's pairs. Like `greatest`, a NaN dot stays NaN and a null dot
+  * gives 0.0. A tile without pairs, or whose every qvec is null, gives
+  * null. */
+case class MlpTileFold(xvec: Expression, tile: Expression, tid: Expression)
+    extends TileFold {
+
+  override def children: Seq[Expression] = Seq(xvec, tile, tid)
+  override def prettyName: String = "graft_mlp_tile"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (tid.dataType != LongType)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a bigint tid")
+    else checkTile(Seq("pvec", "qvec"), Nil)
+
+  private lazy val pOrd = fields.fieldIndex("pvec")
+  private lazy val qOrd = fields.fieldIndex("qvec")
+
+  override protected def foldArgs(cs: Seq[ExprCode]): Seq[String] = Seq(
+    s"${cs(0).isNull} ? null : ${cs(0).value}", s"${cs(1).value}",
+    s"${cs(2).value}")
+
+  override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
+    fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      in(2).asInstanceOf[Long])
+
+  def fold(c: TileCache, x: ArrayData, t: ArrayData, tid: Long): ArrayData = {
+    c.load(t, tid, fields.length, -1, pOrd, qOrd)
+    val d = c.width
+    if (d < 0) return null
+    val xn = if (x == null) 0 else x.numElements()
+    val xv = c.query(x)
+    val acc = new Array[Double](d)
+    var j = 0
+    while (j < c.n) {
+      if (!c.valNull(j)) {
+        val s = if (x == null || c.dotNull(j)) 0.0 else c.score(xv, xn, j)
+        val h = if (s < 0.0) 0.0 else s
+        val vo = j * d
+        var i = 0
+        while (i < d) { acc(i) += h * c.value(vo + i); i += 1 }
+      }
+      j += 1
+    }
+    new GenericArrayData(acc)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): MlpTileFold =
+    copy(xvec = c(0), tile = c(1), tid = c(2))
 }
 
 /** JVM-static kernel for the 256-bit sign sketch: the hyperplane matrix is
@@ -640,6 +945,16 @@ object NativeExprs {
 
   /** `dot(a, b)` over two array<double> columns, codegen'd. */
   def dot(a: Column, b: Column): Column = toCol(DotProduct(toExpr(a), toExpr(b)))
+
+  /** [[AttentionTileFold]]: one (query row, KV tile) as struct(z, v). */
+  def attentionTile(qvec: Column, tile: Column, tid: Column, qId: Column,
+                    scale: Boolean, causal: Boolean): Column =
+    toCol(AttentionTileFold(toExpr(qvec), toExpr(tile), toExpr(tid),
+      toExpr(qId), scale, causal))
+
+  /** [[MlpTileFold]]: one (input row, hidden-unit tile) as Σ h·qvec. */
+  def mlpTile(xvec: Column, tile: Column, tid: Column): Column =
+    toCol(MlpTileFold(toExpr(xvec), toExpr(tile), toExpr(tid)))
 
   /** float32 `dot(a, b)` over two array<float> columns, codegen'd. */
   def dotF32(a: Column, b: Column): Column =

@@ -3,21 +3,22 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftAggs, VecOps}
+import graft.functions.{GraftAggs, NativeExprs, VecOps}
 
 /** Attention as a relational plan (reference attention.py:5-9,31-57;
   * scaled variant custom_attention.cpp:26-29).
   *
-  * `out_q = softmax(q·Kᵀ [/ sqrt(F)]) · V`, computed in ONE pass:
-  * pair-scoring join -> per-q_id log-weighted-mean monoid aggregate. The
-  * M×N score matrix is never materialized — pair rows stream from the join
-  * straight into the partial aggregate, the Spark analog of the
-  * reference's "never realize the full intermediate" tiling
-  * (README.md:19-21). The join and the dot run in whole-stage codegen, but
-  * the vector monoid ([[graft.functions.LogWeightedVecAgg]]) has an object
-  * buffer, so its partial aggregate is an `ObjectHashAggregateExec` that
-  * copies each pair row out of the codegen stage (unlike the scalar
-  * kernels xentropy, entropy and the sampler, whose folds are codegen'd).
+  * `out_q = softmax(q·Kᵀ [/ sqrt(F)]) · V`, computed in ONE pass, the
+  * reference's chunk-then-fold contract (README.md:10-21): the KV side is
+  * packed into tiles ([[PairPlan.tiles]]), one fold per (query row, tile)
+  * ([[graft.functions.AttentionTileFold]], an online softmax inside the
+  * join's whole-stage codegen stage) maps the tile's pairs to ONE monoid
+  * value (z, v), and the per-q_id log-weighted-mean aggregate
+  * ([[graft.functions.LogWeightedVecAgg]]) merges the M × tiles partial
+  * values. Neither the M×N score matrix nor the M×N pair stream is ever
+  * materialized as rows; the aggregate's object buffer is an
+  * `ObjectHashAggregateExec`, but it reads one row per (query row, tile),
+  * not one per pair.
   *
   * Distribution: the query side is broadcast (the reference keeps the query
   * chunk resident while streaming KV — gemm_map_reduce_attention.cpp:97-124);
@@ -34,7 +35,7 @@ object Attention {
     * 2-D grid from the query side's size estimate. */
   def attention(q: DataFrame, kv: DataFrame, scale: Boolean = false,
                 mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
-    plan(PairPlan.cross(kv, q, mode), scale)
+    fold(q, kv, scale, causal = false, mode)
 
   /** BACKWARD dQ of attention (reference attention.py:11-29
     * `proj_fold_bwd`, the `z @ key` row) — the one stretch member of the
@@ -100,24 +101,24 @@ object Attention {
   /** CAUSAL (masked) attention — the autoregressive-TRAINING variant (the
     * brief's "beyond the reference" mandate: a causal LM's SDPA masks
     * future positions; the reference kernel is unmasked). Each query
-    * attends to keys with k_id ≤ q_id only. Relationally the mask is a
-    * pair-stream FILTER ahead of the monoid fold — no new machinery, and
-    * it prunes ~half the M×N pair stream BEFORE any score is computed
-    * (at 100 TB the mask is free work-avoidance, not a post-hoc −∞
-    * add the way dense kernels implement it). */
+    * attends to keys with k_id ≤ q_id only. The tile fold skips masked
+    * pairs BEFORE any score is computed, so the mask prunes ~half the
+    * M×N pair work (at 100 TB it is free work-avoidance, not a post-hoc
+    * −∞ add the way dense kernels implement it); a query row with no
+    * unmasked key gets no row, as if its pairs were filtered out. */
   def attentionCausal(q: DataFrame, kv: DataFrame, scale: Boolean = false,
                       mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
-    plan(PairPlan.cross(kv, q, mode).filter(col("k_id") <= col("q_id")), scale)
+    fold(q, kv, scale, causal = true, mode)
 
   /** Blocked 2-D path for LARGE M, where broadcasting the query side is
     * impossible (the round-1 gap: every plan assumed q fits a broadcast).
     * [[PairPlan.Blocked]]'s tile-keyed `SHUFFLE_HASH` equi-join builds the
     * (q-tile × kv-tile) task grid that IS the reference's 2-D chunk loop
     * (gemm_map_reduce_attention.cpp:97-124) — each task streams one
-    * kv-block against one hashed q-block inside whole-stage codegen, and
-    * partial aggregation reduces its pairs to per-q monoid buffers before
-    * the only remaining shuffle (O(M × kv-tiles) buffers, never the M×N
-    * score matrix). */
+    * q-block against one packed kv-tile inside whole-stage codegen, folds
+    * each (q row, kv-tile) to one monoid value, and partial aggregation
+    * reduces those to per-q monoid buffers before the only remaining
+    * shuffle (O(M × kv-tiles) buffers, never the M×N score matrix). */
   def attentionBlocked(q: DataFrame, kv: DataFrame, scale: Boolean = false): DataFrame =
     attention(q, kv, scale, PairPlan.Blocked)
 
@@ -145,13 +146,24 @@ object Attention {
         col("lw.z").as("z"), col("lw.v").as("out"))
   }
 
-  private def plan(pairs: DataFrame, scale: Boolean): DataFrame = {
-    val raw = VecOps.dot(col("qvec"), col("kvec"))
-    val sc = if (scale) raw / sqrt(size(col("qvec")).cast("double")) else raw
-    pairs
-      .select(col("q_id"), sc.as("sc"), col("vvec"))
+  /** One attention monoid value per (query row, KV tile), merged per
+    * q_id. A partial (z, v) is itself a monoid element, so the pair
+    * aggregate merges partials unchanged. Only a causal fold returns null
+    * (a tile whose every key is masked; [[PairPlan.tiles]] emits no empty
+    * tile), and a query row with only null partials must get no row, as
+    * it had no pair: `n` counts its non-null partials. It is counted in
+    * the aggregate rather than filtered before it, because a filter on
+    * the fold's output is pushed below the projection that computes it
+    * (into the join condition) and runs the fold twice. */
+  private def fold(q: DataFrame, kv: DataFrame, scale: Boolean,
+                   causal: Boolean, mode: PairPlan.Mode): DataFrame = {
+    val byQuery = PairPlan.tiles(kv, q, mode)
+      .select(col("q_id"), NativeExprs.attentionTile(col("qvec"),
+        col("__tile"), col("__tid"), col("q_id"), scale, causal).as("p"))
       .groupBy("q_id")
-      .agg(GraftAggs.logWeightedVec(col("sc"), col("vvec")).as("lw"))
+    val lw = GraftAggs.logWeightedVec(col("p.z"), col("p.v")).as("lw")
+    (if (causal) byQuery.agg(lw, count(col("p")).as("n")).filter(col("n") > 0)
+     else byQuery.agg(lw))
       .select(col("q_id"), col("lw.z").as("z"), col("lw.v").as("out"))
   }
 }

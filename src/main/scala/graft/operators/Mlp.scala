@@ -3,17 +3,19 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftAggs, VecOps}
+import graft.functions.{GraftAggs, NativeExprs, VecOps}
 
 /** Two-layer MLP `out = relu(X·Pᵀ)·Q` as a relational plan (reference
   * mlp.py:6-7,18-44; fused single-op variant relu_matmul.cpp:9-21).
   *
   * The reference folds over the hidden dimension K with a plain `+` monoid
-  * (mlp.py:18-21) — in Spark that is the built-in `sum`, so no custom
-  * Aggregator is needed: hidden activations stream from the pair-scoring
-  * join straight into a partial vector sum, and only `M × D` partial
-  * sums cross the shuffle. The B×K hidden matrix is never materialized,
-  * mirroring the reference's per-chunk fold.
+  * (mlp.py:18-21). Here the hidden units are packed into tiles
+  * ([[PairPlan.tiles]]); one codegen'd fold per (input row, tile)
+  * ([[graft.functions.MlpTileFold]]) sums the tile's `relu(x·p)·q` into
+  * one vector, and [[graft.functions.VecWeightedSumAgg]] adds those
+  * M × tiles partial vectors, so only `M × D` partial sums cross the
+  * shuffle. Neither the B×K hidden matrix nor the pair stream is ever
+  * materialized, mirroring the reference's per-chunk fold.
   *
   * Distribution: X (the output-axis side, M rows) is broadcast; the hidden
   * axis (p/q rows) is the one that scales and streams partition-parallel
@@ -24,21 +26,20 @@ object Mlp {
   /** x: (b_id, xvec F); pq: (k_id, pvec F, qvec D) — row k of both layer
     * matrices. Returns (b_id, d, v) = COO of relu(X·Pᵀ)·Q.
     *
-    * The hidden fold is ONE vector-valued aggregate (`Σ h·qvec` via
-    * [[graft.functions.VecWeightedSumAgg]]): the pair stream is never
-    * exploded per element — only the M×D *result* is (round 1 exploded
-    * BEFORE the aggregate, pushing ×D rows through an interpreted
-    * Generate; VERDICT.md "What's wrong" #3). */
+    * The hidden fold is ONE vector-valued aggregate (`Σ h·qvec`, merged
+    * per tile as `Σ 1·partial` by [[graft.functions.VecWeightedSumAgg]]):
+    * nothing is exploded per element but the M×D *result* (round 1
+    * exploded BEFORE the aggregate, pushing ×D rows through an
+    * interpreted Generate; VERDICT.md "What's wrong" #3). */
   def mlp(x: DataFrame, pq: DataFrame,
-          mode: PairPlan.Mode = PairPlan.Auto): DataFrame = {
-    val h = greatest(VecOps.dot(col("xvec"), col("pvec")), lit(0.0))
-    PairPlan.cross(pq, x, mode)
-      .select(col("b_id"), h.as("h"), col("qvec"))
+          mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
+    PairPlan.tiles(pq, x, mode)
+      .select(col("b_id"),
+        NativeExprs.mlpTile(col("xvec"), col("__tile"), col("__tid")).as("p"))
       .groupBy(col("b_id"))
-      .agg(GraftAggs.vecWeightedSum(col("h"), col("qvec")).as("out"))
+      .agg(GraftAggs.vecWeightedSum(lit(1.0), col("p")).as("out"))
       .select(col("b_id"), posexplode(col("out")))
       .select(col("b_id"), col("pos").cast("long").as("d"), col("col").as("v"))
-  }
 
   /** BACKWARD of the MLP (reference mlp.py:9-16 `proj_fold_bwd`) —
     * unlike attention's, the MLP backward needs NO forward aggregate

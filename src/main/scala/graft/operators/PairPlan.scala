@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{broadcast, col, collect_list, element_at, explode, inline, lit, pmod, sequence, struct, xxhash64}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.{broadcast, col, collect_list, element_at, explode, inline, lit, pmod, sequence, size, struct, xxhash64}
 
 /** The shared distribution switch for every pair-scoring kernel (attention,
   * mlp, relu_matmul, xentropy, entropy, sampler, cosine top-k): all of them
@@ -29,6 +31,11 @@ import org.apache.spark.sql.functions.{broadcast, col, collect_list, element_at,
   *    of the query side vs `spark.sql.autoBroadcastJoinThreshold` — the
   *    same signal AQE uses for join strategy, so a dims-sized side
   *    broadcasts and a table-sized side tiles without the caller choosing.
+  *
+  * [[cross]] emits the pairs as rows; [[tiles]] emits them packed, one
+  * big-side chunk per row, for the folds whose monoid value is a vector
+  * (attention, mlp): an object-buffer aggregate then reads one row per
+  * (query row, tile) instead of one per pair.
   */
 object PairPlan {
 
@@ -41,167 +48,240 @@ object PairPlan {
     * bounded `small` side under the given distribution mode. */
   def cross(big: DataFrame, small: DataFrame, mode: Mode = Auto): DataFrame =
     mode match {
-      // fanOut the streaming side PROPORTIONATE to the estimated pair
-      // volume: a single-split big side (local fixture, compacted table)
-      // would otherwise run the whole M×N pair stream AND its partial
-      // aggregation in one task — serial, and maximally exposed to
-      // co-tenant contention (VERDICT r8: sampler 8.7 s wall under a busy
-      // machine; its blocked sibling parallelized). But an UNCONDITIONAL
-      // fan-out to all cores taxed every tiny kernel with a fixed
-      // ~0.2 CPU-s per task (VERDICT r9 #2; profiled this round: ~90% of
-      // it was BypassMergeSortShuffleWriter creating+deleting
-      // `shuffle.partitions` files PER MAP TASK for the partial-agg
-      // output — 32×32 file syscalls to aggregate 2 000 rows). So the
-      // task count follows the work: pairs/1e6 tasks, capped at cores,
-      // skipped entirely (zero extra exchange, zero df.rdd call) when the
-      // whole grid is under a million pairs. Row counts come from
-      // Catalyst's size-only stats (sizeInBytes / schema width), which
-      // OVERESTIMATE a filtered side — an overestimate only fans out a
-      // kernel early, never serializes a big one. On a multi-split
-      // cluster input fanOut remains a no-op either way.
-      case Broadcast =>
-        val target = (BigInt(estRows(big)) * BigInt(estRows(small)) /
-          PairsPerTask)
-          .min(BigInt(big.sparkSession.sparkContext.defaultParallelism)).toInt
-        if (target <= 1) big.crossJoin(broadcast(small))
-        else fanOut(big, target).crossJoin(broadcast(small))
+      case Broadcast => broadcastFanOut(big, small).crossJoin(broadcast(small))
       case Blocked =>
-        // The 2-D tile grid as a TILE-KEYED EQUI-JOIN: each side is
-        // content-hashed into its axis's tile id and replicated across
-        // the OTHER axis's tile count, so the (tb, ts) key holds exactly
-        // one tile pair and a SHUFFLE_HASH join streams each big tile
-        // against its hashed small tile -- the reference's 2-D chunk loop
-        // (gemm_map_reduce_attention.cpp:97-124) with tile counts
-        // proportional to each axis's length.
-        //
-        // Why not CartesianProductExec (`SHUFFLE_REPLICATE_NL`, the
-        // pre-r13 form): it is excluded from whole-stage codegen, so
-        // every pair paid an interpreted JoinedRow iteration comparable
-        // to the dot-product kernel itself -- measured as the
-        // kernel_ratio(xentropy) 1.34 drift (VERDICT r12 #4; blocked
-        // 0.91 s vs broadcast 0.54 s on identical inputs at sf0.1). The
-        // tile-keyed ShuffledHashJoin keeps join + kernel in ONE codegen
-        // stage, and the partial aggregation too when its buffers are
-        // primitive (xentropy, entropy, sampler; attention's and mlp's
-        // vector folds copy each pair row into an ObjectHashAggregate
-        // instead). Replication I/O equals the cartesian grid's tile
-        // re-fetch volume (the big side is written n_small times instead
-        // of fetched n_small times).
-        //
-        // Grid shape follows the WORK: total tiles =
-        // min(pairs/PairsPerTask, cores) split so n_big/n_small ~
-        // rows_big/rows_small (square-ish tiles in PAIR AREA) -- a
-        // 256-row query axis gets ONE tile, and per-task memory stays
-        // bounded by the small-side tile (rows_small/n_small), the same
-        // contract as the cartesian grid: at any scale the build side of
-        // one task is one small tile, never the whole query side -- the
-        // property that lets Blocked handle a query side too big to
-        // broadcast.
-        //
-        // The cores cap alone is NOT enough for that contract (ADVICE
-        // r13 #1): ShuffledHashJoin builds an in-memory HashedRelation
-        // per task with no spill, so a query side of S bytes split into
-        // at most `cores` tiles puts S/cores bytes in one task's build
-        // map -- linear in the query side, an OOM at exactly the
-        // too-big-to-broadcast scale Blocked exists for. So n_small is
-        // FLOORED at ceil(bytes_small / MaxBuildBytesPerTask): the build
-        // tile stays bounded in absolute size and any extra tiles just
-        // queue behind the core count (task count is a throughput knob;
-        // build size is a correctness-of-memory knob).
-        val cores = big.sparkSession.sparkContext.defaultParallelism
-        val rb = math.max(estRows(big), 1L)
-        val rs = math.max(estRows(small), 1L)
-        val tasks = (BigInt(rb) * BigInt(rs) / PairsPerTask)
-          .min(BigInt(cores)).max(BigInt(1)).toInt
-        val nBig = math.min(tasks.toLong, math.max(1L,
-          math.round(math.sqrt(tasks.toDouble * rb / rs)))).toInt
-        val buildFloor =
-          ((estBytes(small) + MaxBuildBytesPerTask - 1) / MaxBuildBytesPerTask)
-            .min(BigInt(1 << 20)).max(BigInt(1)).toInt
-        val nSmall = math.max(math.max(1, tasks / nBig), buildFloor)
-        def rep(n: Int) =
-          if (n == 1) lit(0L) else explode(sequence(lit(0L), lit(n - 1L)))
-        // always a content hash, even for a 1-tile axis (where it is
-        // constantly 0): a literal tile id is FOLDABLE, and once both
-        // join keys fold the equi-join degenerates to a hint-less cross
-        // (observed: "Hint (strategy=shuffle_hash) is not supported ...
-        // no equi-join keys" → a serial BroadcastNestedLoopJoin on the
-        // exact path that exists to avoid one)
-        def tileId(df: DataFrame, n: Int) =
-          pmod(xxhash64(df.columns.map(col): _*), lit(n.toLong))
-        // Each small tile is PACKED into ONE array-of-structs row before
-        // the join and re-inlined after it (r14). With the tile's rows as
-        // 256 duplicate-key build entries, every streamed pair paid a
-        // HashedRelation CHAIN step — a pointer chase per pair that read
-        // as a flat ~1.3-1.6x kernel_ratio on the cheap kernels at the
-        // 10M-pair measurement shape. One fat row per tile key makes the
-        // probe O(1) per streamed row, and `inline` iterates the tile as
-        // a codegen'd array walk — the same inner loop the Broadcast
-        // arm's BroadcastNestedLoopJoin runs (task-time SUM measured
-        // lower than the broadcast arm's at 10M pairs). Tile order inside
-        // the array is collect_list's (nondeterministic), which only
-        // feeds order-insensitive folds / set-shaped pair outputs.
-        //
-        // The (tb, ts) pair is collapsed to ONE tile key drawn from
-        // [[distinctBucketIds]] (r14): with raw 0..n-1 keys, murmur3 piles
-        // 2-3 of the ~30 tiles into one shuffle partition while others
-        // stay empty, and the doubled task IS the stage wall — profiled
-        // as the whole flat ~1.5x kernel_ratio (task-time sum was LOWER
-        // than broadcast while the max task ran 3x the median). Keys
-        // pre-imaged to distinct buckets make tile->task assignment exact
-        // — the same even spread the Broadcast arm gets from round-robin.
-        val parts = big.sparkSession.sessionState.conf.numShufflePartitions
-        val lut: Array[Long] =
-          if (nBig.toLong * nSmall <= parts)
-            distinctBucketIds(nBig * nSmall, parts)
-          else null
-        def tk(tb: Column, ts: Column): Column = {
-          val idx = tb * lit(nSmall.toLong) + ts
-          if (lut != null) element_at(lit(lut), (idx + lit(1)).cast("int"))
-          else idx
-        }
-        // Same single-split guard as the Broadcast arm (r14): a one-file
-        // local input would run the explode-replication + tile hash +
-        // nSmall x shuffle write of the WHOLE big side in one task,
-        // serializing a map stage the grid then waits on (profiled: the
-        // stage's 576 ms straggler under an otherwise even grid). No-op
-        // on any multi-split cluster read.
-        // The tile exchanges are EXPLICIT repartitions (REPARTITION_BY_NUM)
-        // rather than the join's ENSURE_REQUIREMENTS exchanges (r14): AQE
-        // coalesces requirement-exchanges by BYTE size, and a pair grid is
-        // maximally compute-dense per byte — profiled: the 30-tile join
-        // stage read back as 6 one-MB partitions, 5 tiles serialized per
-        // task. A user repartition pins the partition count, the LUT keys
-        // land one tile per partition, and the join reuses the exchanges
-        // (both sides already hash-cluster on __tk).
-        val bigSrc = fanOut(big, cores)
-        val bigT = bigSrc.withColumn("__tb", tileId(bigSrc, nBig))
-          .withColumn("__ts", rep(nSmall))
-          .withColumn("__tk", tk(col("__tb"), col("__ts")))
-          .drop("__tb", "__ts")
-          .repartition(parts, col("__tk"))
-        // Pack AFTER the tile exchange, not before it (r14): raw small
-        // rows (replicated ×nBig) ride the ONE pinned repartition, and
-        // the collect_list then groups IN PLACE — the repartition's
-        // HashPartitioning(__tk, parts) already satisfies the aggregate's
-        // and the join's clustering, so neither adds an exchange. The
-        // previous form shuffled the small side twice (raw rows into the
-        // pack groupBy, then the fat array rows into the join's
-        // clustering) — pure serialization CPU that read as the residual
-        // kernel_ratio drift on the cheapest kernel (xentropy: the least
-        // per-pair work, so the largest relative share of fixed cost).
-        val packed = small.withColumn("__ts", tileId(small, nSmall))
-          .withColumn("__tb", rep(nBig))
-          .withColumn("__tk", tk(col("__tb"), col("__ts")))
-          .repartition(parts, col("__tk"))
-          .groupBy(col("__tk"))
-          .agg(collect_list(struct(small.columns.map(col): _*)).as("__tile"))
-        bigT.join(packed.hint("SHUFFLE_HASH"), Seq("__tk"))
+        tileJoin(big, small)
           .select(big.columns.map(col) :+ inline(col("__tile")): _*)
       case Auto =>
         if (fitsBroadcast(small)) cross(big, small, Broadcast)
         else cross(big, small, Blocked)
     }
+
+  /** The pairs of [[cross]] in packed form: each `small` row next to one
+    * chunk of `big` rows (`__tile: array<struct<big's columns>>`) and that
+    * chunk's id (`__tid: long`); every (small row, big row) pair lies in
+    * exactly one output row. A fold over the tile then turns one
+    * (small row, tile) into one monoid value, so the M×N pair stream never
+    * exists as rows: attention and mlp merge M × tiles partial values
+    * instead of copying M×N pair rows into an `ObjectHashAggregateExec`.
+    *
+    *  - [[Broadcast]]: the big side (after [[cross]]'s pair-budget
+    *    fan-out) is chunked inside its own partitions, with no exchange,
+    *    into arrays of at most [[ChunkRows]] rows, `__tid` = partition id
+    *    << 32 | chunk index; then `crossJoin(broadcast(small))`.
+    *  - [[Blocked]]: [[cross]]'s tile-keyed join with the roles swapped:
+    *    the small side streams and the big side is the packed build side,
+    *    so one tile is bounded by [[MaxBuildBytesPerTask]]; `__tid` is the
+    *    tile key.
+    *  - [[Auto]]: [[fitsBroadcast]] of the small side, as in [[cross]].
+    *
+    * A `__tid` names one tile within a task; a fold may cache its decoded
+    * tile on it (never on the identity of the array, which the row
+    * projections reuse). */
+  def tiles(big: DataFrame, small: DataFrame, mode: Mode = Auto): DataFrame = {
+    val out = small.columns.map(col) ++ Seq(col("__tile"), col("__tid"))
+    mode match {
+      case Broadcast =>
+        chunks(broadcastFanOut(big, small)).crossJoin(broadcast(small))
+          .select(out: _*)
+      case Blocked =>
+        tileJoin(small, big).withColumnRenamed("__tk", "__tid").select(out: _*)
+      case Auto =>
+        if (fitsBroadcast(small)) tiles(big, small, Broadcast)
+        else tiles(big, small, Blocked)
+    }
+  }
+
+  /** The Broadcast arm's streaming side: `big` fanned out PROPORTIONATE to
+    * the estimated pair volume. A single-split big side (local fixture,
+    * compacted table) would otherwise run the whole M×N pair stream AND
+    * its partial aggregation in one task — serial, and maximally exposed
+    * to co-tenant contention (VERDICT r8: sampler 8.7 s wall under a busy
+    * machine; its blocked sibling parallelized). But an UNCONDITIONAL
+    * fan-out to all cores taxed every tiny kernel with a fixed ~0.2 CPU-s
+    * per task (VERDICT r9 #2; profiled: ~90% of it was
+    * BypassMergeSortShuffleWriter creating+deleting `shuffle.partitions`
+    * files PER MAP TASK for the partial-agg output — 32×32 file syscalls
+    * to aggregate 2 000 rows). So the task count follows the work:
+    * pairs/1e6 tasks, capped at cores, skipped entirely (zero extra
+    * exchange, zero df.rdd call) when the whole grid is under a million
+    * pairs. Row counts come from Catalyst's size-only stats (sizeInBytes /
+    * schema width), which OVERESTIMATE a filtered side — an overestimate
+    * only fans out a kernel early, never serializes a big one. On a
+    * multi-split cluster input fanOut remains a no-op either way. */
+  private def broadcastFanOut(big: DataFrame, small: DataFrame): DataFrame = {
+    val target = (BigInt(estRows(big)) * BigInt(estRows(small)) /
+      PairsPerTask)
+      .min(BigInt(big.sparkSession.sparkContext.defaultParallelism)).toInt
+    if (target <= 1) big else fanOut(big, target)
+  }
+
+  /** Rows per Broadcast-arm tile of [[tiles]]. Measured on the forced
+    * broadcast arms of attention and mlp (`graftbench` traced pair_fold,
+    * 15 360 query rows × 2 000 KV rows in 4 partitions of ~500, local[4]):
+    * attention 1.53 / 1.60 / 1.61 s and mlp 1.29 / 1.20 / 1.27 s at 128 /
+    * 256 / 512 rows (one traced run each, median of two arm pairs): flat
+    * within run-to-run spread. 512 keeps the partial values per query row
+    * few and one decoded tile (512 × (F + D) doubles, ~300 KB at F = 64,
+    * D = 8) inside a core's L2. */
+  private val ChunkRows = 512
+
+  /** Each partition of `df` cut in place into arrays of at most
+    * [[ChunkRows]] rows: (`__tile`, `__tid` = partition id << 32 | chunk
+    * index).
+    *
+    * The `size > 0` filter is always true, and it is what keeps the
+    * broadcast join cheap: whole-stage codegen defers a column's
+    * serializer code to its first use, and a nested-loop join's first use
+    * of a streamed column is inside its loop over the broadcast rows, so
+    * without a consumer in between every chunk was re-serialized from its
+    * `Row`s once per PAIR row (measured: forced broadcast arms of attention
+    * and mlp 13.3 s and 10.7 s vs 2.0 s and 1.6 s blocked). A filter
+    * evaluates the columns it reads once per chunk row. */
+  private def chunks(df: DataFrame): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("__tile", ArrayType(df.schema, containsNull = false),
+        nullable = false),
+      StructField("__tid", LongType, nullable = false)))
+    val n = ChunkRows
+    df.mapPartitions { rows =>
+      val part = TaskContext.getPartitionId().toLong << 32
+      rows.grouped(n).zipWithIndex.map { case (c, i) => Row(c, part | i) }
+    }(Encoders.row(schema)).filter(size(col("__tile")) > 0)
+  }
+
+  /** The Blocked arm's tile grid: `stream` rows joined to PACKED tiles of
+    * `build` rows (`__tile`), on the tile key `__tk`. Returns `stream`'s
+    * columns, `__tk` and `__tile`.
+    *
+    * The 2-D tile grid as a TILE-KEYED EQUI-JOIN: each side is
+    * content-hashed into its axis's tile id and replicated across the
+    * OTHER axis's tile count, so the (stream tile, build tile) key holds
+    * exactly one tile pair and a SHUFFLE_HASH join streams each stream
+    * tile against its hashed build tile -- the reference's 2-D chunk loop
+    * (gemm_map_reduce_attention.cpp:97-124) with tile counts proportional
+    * to each axis's length.
+    *
+    * Why not CartesianProductExec (`SHUFFLE_REPLICATE_NL`, the pre-r13
+    * form): it is excluded from whole-stage codegen, so every pair paid an
+    * interpreted JoinedRow iteration comparable to the dot-product kernel
+    * itself -- measured as the kernel_ratio(xentropy) 1.34 drift (VERDICT
+    * r12 #4; blocked 0.91 s vs broadcast 0.54 s on identical inputs at
+    * sf0.1). The tile-keyed ShuffledHashJoin keeps join + kernel in ONE
+    * codegen stage, and the partial aggregation too when its buffers are
+    * primitive (xentropy, entropy, sampler; attention and mlp fold whole
+    * tiles through [[tiles]] instead). Replication I/O equals the
+    * cartesian grid's tile re-fetch volume (the stream side is written
+    * n_build times instead of fetched n_build times).
+    *
+    * Grid shape follows the WORK: total tiles = min(pairs/PairsPerTask,
+    * cores) split so n_stream/n_build ~ rows_stream/rows_build
+    * (square-ish tiles in PAIR AREA) -- a 256-row build axis gets ONE
+    * tile, and per-task memory stays bounded by the build-side tile
+    * (rows_build/n_build), the same contract as the cartesian grid: at
+    * any scale the build side of one task is one tile, never the whole
+    * build side -- the property that lets Blocked handle a side too big
+    * to broadcast.
+    *
+    * The cores cap alone is NOT enough for that contract (ADVICE r13 #1):
+    * ShuffledHashJoin builds an in-memory HashedRelation per task with no
+    * spill, so a build side of S bytes split into at most `cores` tiles
+    * puts S/cores bytes in one task's build map -- linear in the build
+    * side, an OOM at exactly the too-big-to-broadcast scale Blocked
+    * exists for. So n_build is FLOORED at ceil(bytes_build /
+    * MaxBuildBytesPerTask): the build tile stays bounded in absolute size
+    * and any extra tiles just queue behind the core count (task count is
+    * a throughput knob; build size is a correctness-of-memory knob). */
+  private def tileJoin(stream: DataFrame, build: DataFrame): DataFrame = {
+    val cores = stream.sparkSession.sparkContext.defaultParallelism
+    val rs = math.max(estRows(stream), 1L)
+    val rb = math.max(estRows(build), 1L)
+    val tasks = (BigInt(rs) * BigInt(rb) / PairsPerTask)
+      .min(BigInt(cores)).max(BigInt(1)).toInt
+    val nStream = math.min(tasks.toLong, math.max(1L,
+      math.round(math.sqrt(tasks.toDouble * rs / rb)))).toInt
+    val buildFloor =
+      ((estBytes(build) + MaxBuildBytesPerTask - 1) / MaxBuildBytesPerTask)
+        .min(BigInt(1 << 20)).max(BigInt(1)).toInt
+    val nBuild = math.max(math.max(1, tasks / nStream), buildFloor)
+    def rep(n: Int) =
+      if (n == 1) lit(0L) else explode(sequence(lit(0L), lit(n - 1L)))
+    // always a content hash, even for a 1-tile axis (where it is
+    // constantly 0): a literal tile id is FOLDABLE, and once both join
+    // keys fold the equi-join degenerates to a hint-less cross (observed:
+    // "Hint (strategy=shuffle_hash) is not supported ... no equi-join
+    // keys" → a serial BroadcastNestedLoopJoin on the exact path that
+    // exists to avoid one)
+    def tileId(df: DataFrame, n: Int) =
+      pmod(xxhash64(df.columns.map(col): _*), lit(n.toLong))
+    // Each build tile is PACKED into ONE array-of-structs row before the
+    // join (r14). With the tile's rows as 256 duplicate-key build entries,
+    // every streamed pair paid a HashedRelation CHAIN step — a pointer
+    // chase per pair that read as a flat ~1.3-1.6x kernel_ratio on the
+    // cheap kernels at the 10M-pair measurement shape. One fat row per
+    // tile key makes the probe O(1) per streamed row, and `inline`
+    // iterates the tile as a codegen'd array walk — the same inner loop
+    // the Broadcast arm's BroadcastNestedLoopJoin runs (task-time SUM
+    // measured lower than the broadcast arm's at 10M pairs). Tile order
+    // inside the array is collect_list's (nondeterministic), which only
+    // feeds order-insensitive folds / set-shaped pair outputs.
+    //
+    // The (stream tile, build tile) pair is collapsed to ONE tile key
+    // drawn from [[distinctBucketIds]] (r14): with raw 0..n-1 keys,
+    // murmur3 piles 2-3 of the ~30 tiles into one shuffle partition while
+    // others stay empty, and the doubled task IS the stage wall —
+    // profiled as the whole flat ~1.5x kernel_ratio (task-time sum was
+    // LOWER than broadcast while the max task ran 3x the median). Keys
+    // pre-imaged to distinct buckets make tile->task assignment exact —
+    // the same even spread the Broadcast arm gets from round-robin.
+    val parts = stream.sparkSession.sessionState.conf.numShufflePartitions
+    val lut: Array[Long] =
+      if (nStream.toLong * nBuild <= parts)
+        distinctBucketIds(nStream * nBuild, parts)
+      else null
+    def tk(tb: Column, ts: Column): Column = {
+      val idx = tb * lit(nBuild.toLong) + ts
+      if (lut != null) element_at(lit(lut), (idx + lit(1)).cast("int"))
+      else idx
+    }
+    // Same single-split guard as the Broadcast arm (r14): a one-file
+    // local input would run the explode-replication + tile hash +
+    // n_build x shuffle write of the WHOLE stream side in one task,
+    // serializing a map stage the grid then waits on (profiled: the
+    // stage's 576 ms straggler under an otherwise even grid). No-op on
+    // any multi-split cluster read.
+    // The tile exchanges are EXPLICIT repartitions (REPARTITION_BY_NUM)
+    // rather than the join's ENSURE_REQUIREMENTS exchanges (r14): AQE
+    // coalesces requirement-exchanges by BYTE size, and a pair grid is
+    // maximally compute-dense per byte — profiled: the 30-tile join stage
+    // read back as 6 one-MB partitions, 5 tiles serialized per task. A
+    // user repartition pins the partition count, the LUT keys land one
+    // tile per partition, and the join reuses the exchanges (both sides
+    // already hash-cluster on __tk).
+    val streamSrc = fanOut(stream, cores)
+    val streamT = streamSrc.withColumn("__tb", tileId(streamSrc, nStream))
+      .withColumn("__ts", rep(nBuild))
+      .withColumn("__tk", tk(col("__tb"), col("__ts")))
+      .drop("__tb", "__ts")
+      .repartition(parts, col("__tk"))
+    // Pack AFTER the tile exchange, not before it (r14): raw build rows
+    // (replicated ×n_stream) ride the ONE pinned repartition, and the
+    // collect_list then groups IN PLACE — the repartition's
+    // HashPartitioning(__tk, parts) already satisfies the aggregate's and
+    // the join's clustering, so neither adds an exchange. The previous
+    // form shuffled the build side twice (raw rows into the pack groupBy,
+    // then the fat array rows into the join's clustering) — pure
+    // serialization CPU that read as the residual kernel_ratio drift on
+    // the cheapest kernel (xentropy: the least per-pair work, so the
+    // largest relative share of fixed cost).
+    val packed = build.withColumn("__ts", tileId(build, nBuild))
+      .withColumn("__tb", rep(nStream))
+      .withColumn("__tk", tk(col("__tb"), col("__ts")))
+      .repartition(parts, col("__tk"))
+      .groupBy(col("__tk"))
+      .agg(collect_list(struct(build.columns.map(col): _*)).as("__tile"))
+    streamT.join(packed.hint("SHUFFLE_HASH"), Seq("__tk"))
+  }
 
   /** Fan a small scan out to at least `target` partitions before a
     * CPU-bound kernel: local fixtures are single parquet splits, so

@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Assoc, Attention, Sampler, Triangles}
+import graft.functions.TileFold
+import graft.operators.{Assoc, Attention, Mlp, PairPlan, Sampler, Triangles}
 
 /** SQL registration of the native functions + physical-plan-shape
   * regression tests (the plan properties the 100 TB design depends on). */
@@ -98,6 +101,61 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"expected ShuffledHashJoin tile grid in:\n$plan")
     assert(!plan.contains("BroadcastExchange"),
       s"blocked plan must not broadcast:\n$plan")
+  }
+
+  /** Attention and mlp over a KV side of `kvParts` range partitions (no
+    * exchange of its own), executed under `mode`; the final plans. */
+  private def tileFoldPlans(mode: PairPlan.Mode, kvParts: Int): Seq[SparkPlan] = {
+    val kv = spark.range(0L, 64L, 1L, kvParts).select(col("id").as("k_id"),
+      array_repeat(col("id") * 0.1, 8).as("kvec"),
+      array_repeat(col("id") * 0.2, 4).as("vvec"))
+    val q = (0 until 16).map(i => (i.toLong, Array.fill(8)(i * 0.1)))
+      .toDF("q_id", "qvec")
+    val dfs = Seq(Attention.attention(q, kv, scale = true, mode),
+      Mlp.mlp(q.select(col("q_id").as("b_id"), col("qvec").as("xvec")),
+        kv.select(col("k_id"), col("kvec").as("pvec"), col("vvec").as("qvec")), mode))
+    dfs.map { df => df.collect(); df.queryExecution.executedPlan }
+  }
+
+  test("attention and mlp plan shape: no Generate, and the only " +
+       "ObjectHashAggregate over pairs reads the tile fold's output") {
+    for (mode <- Seq(PairPlan.Broadcast, PairPlan.Blocked);
+         plan <- tileFoldPlans(mode, 1)) {
+      // the partial fold merge sits on the projection that calls the fold
+      // (the Blocked arm's tile packing, grouped by __tk, is the other
+      // ObjectHashAggregate); nothing aggregates raw pair rows
+      val merges = collect(plan) {
+        case a: ObjectHashAggregateExec
+            if !a.groupingExpressions.exists(_.references.exists(_.name == "__tk")) => a
+      }
+      assert(merges.nonEmpty, s"$mode: no fold merge in\n$plan")
+      // no pair stream is generated: the only Generate left is mlp's
+      // posexplode of its M×D result, above the merge (a 1×1 tile grid at
+      // this size, so the Blocked arm replicates no tile either)
+      merges.foreach(m => assert(collect(m) { case g: GenerateExec => g }.isEmpty,
+        s"$mode: Generate below the fold merge in\n$plan"))
+      merges.filter(_.aggregateExpressions.exists(_.mode == Partial)).foreach { a =>
+        var c = a.child
+        while (c.isInstanceOf[InputAdapter] || c.isInstanceOf[WholeStageCodegenExec] ||
+            c.isInstanceOf[FilterExec]) c = c.children.head
+        assert(c match {
+          case p: ProjectExec => p.projectList.exists(_.find(_.isInstanceOf[TileFold]).isDefined)
+          case _ => false
+        }, s"$mode: partial merge not fed by the tile fold:\n$plan")
+      }
+    }
+  }
+
+  test("attention and mlp broadcast arm: a KV side with >= defaultParallelism " +
+       "partitions is chunked in place, with no exchange on the KV side") {
+    for (plan <- tileFoldPlans(PairPlan.Broadcast,
+        spark.sparkContext.defaultParallelism)) {
+      val joins = collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+      assert(joins.length == 1, s"expected one broadcast join in\n$plan")
+      val kvSide = joins.head.left
+      assert(collect(kvSide) { case e: Exchange => e }.isEmpty,
+        s"exchange on the KV side:\n$plan")
+    }
   }
 
   test("sampler plan shape: HashAggregate, never a pair-stream SortAggregate") {

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -67,5 +69,71 @@ class PairPlanSpec extends AnyFunSuite {
       assert(blocked.keySet == bcast.keySet)
       for ((k, v) <- blocked) assert(math.abs(v - bcast(k)) < 1e-9)
     } finally spark.conf.set(key, old)
+  }
+
+  // ---- PairPlan.tiles: cross's pairs, packed one big-side chunk a row ----
+
+  private val modes = Seq(PairPlan.Broadcast, PairPlan.Blocked, PairPlan.Auto)
+
+  private def multiset(rows: Array[Row]): Map[Seq[Any], Int] =
+    rows.map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  private def crossPairs(big: DataFrame, small: DataFrame, mode: PairPlan.Mode) =
+    multiset(PairPlan.cross(big, small, mode)
+      .select((small.columns ++ big.columns).map(col): _*).collect())
+
+  /** The pairs inside `tiles`' output, its row count, and whether every
+    * tile is non-empty and every tile id names one tile within its task. */
+  private def tilePairs(big: DataFrame, small: DataFrame, mode: PairPlan.Mode) = {
+    val t = PairPlan.tiles(big, small, mode)
+    val pairs = multiset(t.select(small.columns.map(col) :+ explode(col("__tile")).as("b"): _*)
+      .select(small.columns.map(col) :+ col("b.*"): _*).collect())
+    val rows = t.select(spark_partition_id(), col("__tid"), col("__tile")).collect()
+    val perTask = rows.groupBy(r => (r.getInt(0), r.getLong(1))).values
+    (pairs, rows.length, rows.forall(_.getSeq[Row](2).nonEmpty) &&
+      perTask.forall(_.map(_.getSeq[Row](2)).distinct.length == 1))
+  }
+
+  test("tiles holds cross's pair multiset under all three modes, on random " +
+      "sides with duplicates and empty sides, at 1 and 7 partitions; a tile " +
+      "id never names two tiles within a task") {
+    val row = for {
+      id <- Gen.choose(-3L, 40L)
+      v <- Gen.choose(-2, 2).map(_ * 0.5)
+    } yield (id, v)
+    val prop = Prop.forAll(Gen.listOf(row), Gen.listOf(row)) { (bs, ss) =>
+      val small = ss.take(12).toDF("q_id", "qv")
+      (Seq(1, 7).forall { n =>
+        val big = bs.toDF("k_id", "kv").repartition(n)
+        val want = crossPairs(big, small, PairPlan.Broadcast)
+        modes.forall { m =>
+          val (got, tileRows, wellFormed) = tilePairs(big, small, m)
+          got == want && wellFormed &&
+            (!(bs.isEmpty || ss.isEmpty) || tileRows == 0)
+        }
+      })
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("tiles over multi-tile grids: a broadcast fan-out into chunks and a " +
+      "blocked grid of several packed big-side tiles") {
+    // 30 real rows behind a 1e6-row plan-time estimate (a filtered range):
+    // the pair budget fans the broadcast arm out and splits the blocked
+    // arm's big side into one tile per core
+    val big = spark.range(0L, 3000000L, 1L, 1).filter(col("id") % 100000 === 0)
+      .select(col("id").as("k_id"), (col("id") / 1e5).as("kv"))
+    val small = (0L until 20L).map(i => (i, i * 0.25)).toDF("q_id", "qv")
+    val want = crossPairs(big, small, PairPlan.Blocked)
+    assert(want.values.sum == 600)
+    for (m <- modes) {
+      val (got, _, wellFormed) = tilePairs(big, small, m)
+      assert(got == want, s"$m")
+      assert(wellFormed, s"$m: an empty tile, or a tile id naming two tiles in one task")
+      val ids = PairPlan.tiles(big, small, m).select("__tid").distinct().count()
+      assert(ids > 1, s"$m: expected several tiles, got $ids")
+    }
   }
 }
