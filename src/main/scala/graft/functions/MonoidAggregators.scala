@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
-import org.apache.spark.sql.functions.{array_sort, array_union, element_at,
-  lit, size, slice, udaf, when}
+import org.apache.spark.sql.functions.{element_at, lit, size, udaf, when}
 
 /** The commutative monoids at the heart of the reference
   * (reference core.py:15-64): `zero` = `init`, `reduce` = `proj_fold`,
@@ -46,37 +45,6 @@ object FoldAggregator {
       def bufferEncoder: Encoder[B] = be
       def outputEncoder: Encoder[OUT] = oe
     }
-}
-
-/** Buffer for streaming logsumexp: running max + renormalized sum. */
-case class LseBuf(mx: Double, s: Double)
-
-/** The logsumexp monoid (reference xentropy.py:10-11,39-44): running-max
-  * renormalized — never a raw sum(exp). Identity = (-inf, 0). */
-object LseMonoid extends Monoid[LseBuf] {
-  def zero: LseBuf = LseBuf(Double.NegativeInfinity, 0.0)
-  def combine(a: LseBuf, b: LseBuf): LseBuf =
-    if (a.mx == Double.NegativeInfinity) b
-    else if (b.mx == Double.NegativeInfinity) a
-    else if (a.mx >= b.mx) LseBuf(a.mx, a.s + b.s * math.exp(b.mx - a.mx))
-    else LseBuf(b.mx, b.s + a.s * math.exp(a.mx - b.mx))
-  def finish(b: LseBuf): Double =
-    if (b.mx == Double.NegativeInfinity) Double.NegativeInfinity
-    else b.mx + math.log(b.s)
-}
-
-/** Streaming logsumexp built from the generic factory: a single score x
-  * lifts to the singleton state (x, 1). */
-class LogSumExpAgg extends Aggregator[Double, LseBuf, Double] {
-  private val inner = FoldAggregator[Double, LseBuf, Double](
-    LseMonoid, x => LseBuf(x, 1.0), LseMonoid.finish)(
-    Encoders.product[LseBuf], Encoders.scalaDouble)
-  def zero: LseBuf = inner.zero
-  def reduce(b: LseBuf, x: Double): LseBuf = inner.reduce(b, x)
-  def merge(a: LseBuf, b: LseBuf): LseBuf = inner.merge(a, b)
-  def finish(b: LseBuf): Double = inner.finish(b)
-  def bufferEncoder: Encoder[LseBuf] = inner.bufferEncoder
-  def outputEncoder: Encoder[Double] = inner.outputEncoder
 }
 
 /** One ranked item of the top-k monoid state. */
@@ -258,9 +226,7 @@ object GraftAggs {
   import org.apache.spark.sql.Column
 
   /** logsumexp(scoreCol): fully-codegen [[LogSumExpDecl]] — two primitive
-    * buffer slots, no object buffer or encoder. ([[LogSumExpAgg]] remains
-    * as the FoldAggregator-built reference implementation and the
-    * extension-path example.) */
+    * buffer slots, no object buffer or encoder. */
   def logSumExp(score: Column): Column =
     NativeExprs.toCol(
       LogSumExpDecl(NativeExprs.toExpr(score)).toAggregateExpression())
@@ -272,10 +238,6 @@ object GraftAggs {
     NativeExprs.toCol(
       LogSumExpDecl(NativeExprs.toExpr(score), Some(NativeExprs.toExpr(value)))
         .toAggregateExpression())
-
-  /** the Aggregator form, for users extending via [[FoldAggregator]]. */
-  val logSumExpUdaf: UserDefinedFunction =
-    udaf(new LogSumExpAgg, ExpressionEncoder[Double]())
 
   /** topK(k)(valueCol, idCol) -> array<struct<value,id>>, largest first
     * (id-tie-broken) — the bounded top-k monoid via [[FoldAggregator]]. */
@@ -291,14 +253,6 @@ object GraftAggs {
     * ascending — a fully DETERMINISTIC distinct/overlap sketch state. */
   def kmvSketch(k: Int): UserDefinedFunction =
     udaf(new KmvAgg(k), ExpressionEncoder[Long]())
-
-  /** [[KmvMonoid.combine]] as a pure Catalyst expression over two sketch
-    * ARRAYS — bottom-k of the distinct union. Bit-identical to the
-    * aggregator's merge (both are the set semilattice), which is what lets
-    * persisted sketch STATES merge inside any engine pass — a streaming
-    * foreachBatch fold, a sketch-table rollup — with no UDF. */
-  def kmvCombine(a: Column, b: Column, k: Int): Column =
-    slice(array_sort(array_union(a, b)), 1, k)
 
   /** The KMV distinct estimate from a sketch array: exact size while the
     * sketch is under-filled, else (k−1)·2⁶⁰/h_k (hash60's range). */

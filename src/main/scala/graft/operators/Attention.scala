@@ -52,7 +52,7 @@ object Attention {
     * TWO pair passes — forward aggregate, then the adjoint fold — both
     * map-side-combined, with only the M-sized (z, out) aggregate crossing
     * between them (never the M×N weight matrix). The join-back hint is
-    * SIZE-GUARDED ([[PairPlan.hintBounded]], ADVICE r13 #2): under
+    * SIZE-GUARDED ([[PairPlan.hintBoundedLike]], ADVICE r13 #2): under
     * Blocked — whose premise is that M does not fit one executor — the
     * M-sized aggregate must not be force-broadcast either; it shuffles
     * on q_id unless the plan-time estimate fits the session threshold.

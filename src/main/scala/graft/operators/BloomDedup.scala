@@ -32,7 +32,6 @@ object BloomDedup {
 
   /** filter size in bits (2¹⁶); 32 bits packed per bitmap word. */
   val MBits = 1L << 16
-  val BitsPerWord = 32
 
   /** K probe positions for a normalized-text key. */
   private def positions(key: Column): Column = {

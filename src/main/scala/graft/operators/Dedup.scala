@@ -329,15 +329,6 @@ object Dedup {
       minhashPairsCapped(docs, cap).filter(col("est_jaccard") >= minEst))
       .select(col("id").as("doc_id"), col("label").as("cluster"))
 
-  /** [[dedupClusters]] over an already-tokenized (doc_id, toks) corpus —
-    * the shared-tokenize entry for composed pipelines. */
-  def dedupClustersFromToks(tokd: DataFrame, minEst: Double = 0.5,
-                            cap: Int = BucketCap): DataFrame =
-    connectedComponents(
-      minhashPairsCappedFromSig(Caching.eager(minhashSigFromToks(tokd)), cap)
-        .filter(col("est_jaccard") >= minEst))
-      .select(col("id").as("doc_id"), col("label").as("cluster"))
-
   /** The corpus-level payoff of the whole pipeline: documents minus every
     * non-representative cluster member (each cluster keeps its minimum
     * doc_id — exactly the cluster label). A broadcast LEFT ANTI join
@@ -394,6 +385,19 @@ object Dedup {
       .withColumn("drop_pm", expr("1000L * n_dropped div n_docs"))
   }
 
+  /** Distinct-shingle sets for every CLUSTERED doc — the shared exact-
+    * verification input of [[chainAuditFrom]] and
+    * [[dedupCorpusVerifiedFrom]] (sets are built only for docs in the
+    * cluster table, so cost tracks dup mass, not the corpus). Callers
+    * must materialize (scope-cache or session-memo) before fanning into
+    * both verification joins. */
+  def clusterShingleSets(docs: DataFrame, cl: DataFrame): DataFrame =
+    fanOut(docs)
+      .join(broadcast(cl.select(col("doc_id")).distinct()),
+        Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        array_distinct(shingles(TextOps.tokens(col("text")))).as("sh"))
+
   /** TRANSITIVE-CHAINING AUDIT of the cluster rule (`dedup_chain_audit`)
     * — the standard criticism of connected-component dedup made
     * measurable: CC unions a~b and b~c into one cluster even when a and
@@ -412,27 +416,9 @@ object Dedup {
     * pays; the audit pairs are ONE row per clustered member (the dup
     * mass, ≪ corpus), and shingle sets are built only for docs in those
     * pairs (the broadcast semi-join prefilter of [[ngramJaccardPairs]]).
-    * Two doc_id equi-joins attach the sets; one bucket rollup. */
-  def chainAudit(docs: DataFrame, minEst: Double = 0.5, tauPm: Long = 300L,
-                 cap: Int = BucketCap): DataFrame = Caching.scoped() {
-    val cl = Caching.eager(dedupClusters(docs, minEst, cap))
-    chainAuditFrom(cl, Caching.eager(clusterShingleSets(docs, cl)), tauPm)
-  }
-
-  /** Distinct-shingle sets for every CLUSTERED doc — the shared exact-
-    * verification input of [[chainAuditFrom]] and
-    * [[dedupCorpusVerifiedFrom]] (sets are built only for docs in the
-    * cluster table, so cost tracks dup mass, not the corpus). Callers
-    * must materialize (scope-cache or session-memo) before fanning into
-    * both verification joins. */
-  def clusterShingleSets(docs: DataFrame, cl: DataFrame): DataFrame =
-    fanOut(docs)
-      .join(broadcast(cl.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(shingles(TextOps.tokens(col("text")))).as("sh"))
-
-  /** [[chainAudit]] over a pre-built (materialized) cluster table and its
+    * Two doc_id equi-joins attach the sets; one bucket rollup.
+    *
+    * Input: a pre-built (materialized) [[dedupClusters]] table and its
     * [[clusterShingleSets]] — the cross-query sharing entry
     * (Caching.sessionMemo): one clustering pass serves the whole
     * audit/verified/best composition in a Verify/Bench session. */
@@ -466,23 +452,15 @@ object Dedup {
     * verifies against the kept representative (1000·∩ ≥ τ·∪ on the
     * distinct-shingle sets) — the star-verified drop rule that cannot
     * lose a document to transitive chaining. Members that fail the
-    * star check survive; [[chainAudit]] measures how many those are
+    * star check survive; [[chainAuditFrom]] measures how many those are
     * (on this fixture most multi-member clusters chain, so the
     * verified corpus keeps strictly more than [[dedupCorpus]]).
     * Same candidate-bounded cost shape as the audit: one exact
     * verification row per clustered member, sets built only for
     * clustered docs, then one broadcast anti-join against the (tiny)
-    * verified drop list and a per-lang rollup. */
-  def dedupCorpusVerified(docs: DataFrame, minEst: Double = 0.5,
-                          tauPm: Long = 300L, cap: Int = BucketCap): DataFrame =
-    Caching.scoped() {
-      val cl = Caching.eager(dedupClusters(docs, minEst, cap))
-      dedupCorpusVerifiedFrom(docs, cl,
-        Caching.eager(clusterShingleSets(docs, cl)), tauPm)
-    }
-
-  /** [[dedupCorpusVerified]] over a pre-built cluster table and shingle
-    * sets — the cross-query sharing entry (see [[chainAuditFrom]]). */
+    * verified drop list and a per-lang rollup. Input: a pre-built
+    * cluster table and shingle sets — the cross-query sharing entry (see
+    * [[chainAuditFrom]]). */
   def dedupCorpusVerifiedFrom(docs: DataFrame, cl: DataFrame,
                               sets: DataFrame,
                               tauPm: Long = 300L): DataFrame = {
@@ -501,7 +479,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("chars_kept"))
   }
 
-  /** SQL dual of [[dedupCorpusVerified]]. */
+  /** SQL dual of [[dedupCorpusVerifiedFrom]]. */
   def dedupCorpusVerifiedSql(table: String, minEst: Double = 0.5,
                              tauPm: Long = 300L, cap: Int = BucketCap): String =
     s"""WITH cl AS (${dedupClustersSql(table, minEst, cap)}),
@@ -522,7 +500,7 @@ object Dedup {
        |FROM $table WHERE doc_id NOT IN (SELECT doc_id FROM drp)
        |GROUP BY lang""".stripMargin
 
-  /** SQL dual of [[chainAudit]]. */
+  /** SQL dual of [[chainAuditFrom]]. */
   def chainAuditSql(table: String, minEst: Double = 0.5, tauPm: Long = 300L,
                     cap: Int = BucketCap): String =
     s"""WITH cl AS (${dedupClustersSql(table, minEst, cap)}),
@@ -575,13 +553,9 @@ object Dedup {
     * as the deterministic tiebreak (one max(struct) per cluster — the
     * same bounded aggregation shape as the min-id rule, so the scale
     * story is unchanged: clustering happens on signatures, the corpus is
-    * touched once, map-only, by the final anti-join). */
-  def dedupCorpusBest(docs: DataFrame, minEst: Double = 0.5,
-                      cap: Int = BucketCap): DataFrame =
-    dedupCorpusBestFrom(docs, dedupClusters(docs, minEst, cap))
-
-  /** [[dedupCorpusBest]] over a pre-built cluster table — the cross-query
-    * sharing entry (see [[chainAuditFrom]]). */
+    * touched once, map-only, by the final anti-join). Input: a pre-built
+    * cluster table — the cross-query sharing entry (see
+    * [[chainAuditFrom]]). */
   def dedupCorpusBestFrom(docs: DataFrame, cl: DataFrame): DataFrame = {
     val withLen = cl
       .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
@@ -598,7 +572,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("chars_kept"))
   }
 
-  /** SQL dual of [[dedupCorpusBest]]. */
+  /** SQL dual of [[dedupCorpusBestFrom]]. */
   def dedupCorpusBestSql(table: String, minEst: Double = 0.5,
                          cap: Int = BucketCap): String =
     s"""WITH clusters AS (${dedupClustersSql(table, minEst, cap)}),

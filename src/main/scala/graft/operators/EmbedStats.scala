@@ -426,13 +426,6 @@ object EmbedStats {
       .collect().map(_.getLong(0))
   }
 
-  /** One power round under the collect-requantize protocol: the current
-    * quantized direction rides as a literal; returns the round's graded
-    * output and the next quantized direction (D longs collected). */
-  private def powerRound(vecs: DataFrame,
-                         vqIn: Array[Long]): (DataFrame, Array[Long]) =
-    powerRoundQ(PairPlan.fanOut(vecs).select(qvec(col("vec")).as("xq")), vqIn)
-
   /** One round's per-dimension aggregate crossed with its norm/Rayleigh
     * stats — the shared trunk of [[powerRoundQ]] and [[powerRoundOut]]. */
   private def roundJoined(rowsQ: DataFrame, vqIn: Array[Long]): DataFrame = {
@@ -465,8 +458,10 @@ object EmbedStats {
       VecOps.qround(col("d01").cast("double") /
         (col("d00").cast("double") * lit(Q)), 4).as("lam"))
 
-  /** [[powerRound]] over an already-quantized row table (`xq:
-    * array<long>`) — the deflated chain feeds integer rows directly. */
+  /** One power round under the collect-requantize protocol over an
+    * already-quantized row table (`xq: array<long>`): the current
+    * quantized direction rides as a literal; returns the round's graded
+    * output and the next quantized direction (D longs collected). */
   private def powerRoundQ(rowsQ: DataFrame,
                           vqIn: Array[Long]): (DataFrame, Array[Long]) = {
     val joined = roundJoined(rowsQ, vqIn)

@@ -349,13 +349,12 @@ object PairPlan {
     * M does not fit one executor. Hint only when the estimate fits the
     * session threshold (or the caller pinned Broadcast mode, which
     * asserts the side fits); otherwise leave the join un-hinted and let
-    * AQE pick from runtime sizes. */
-  def hintBounded(df: DataFrame, mode: Mode): DataFrame =
-    if (mode == Broadcast || fitsBroadcast(df)) broadcast(df) else df
-
-  /** [[hintBounded]] for a frame whose OWN size-only estimate is useless
-    * — a groupBy aggregate's sizeInBytes is its CHILD's size (Catalyst's
-    * size-only visitor never shrinks an Aggregate), so the M-sized
+    * AQE pick from runtime sizes.
+    *
+    * The guard reads `like` as well as `df`, for a frame whose OWN
+    * size-only estimate is useless — a groupBy aggregate's sizeInBytes
+    * is its CHILD's size (Catalyst's size-only visitor never shrinks an
+    * Aggregate), so the M-sized
     * forward aggregate of a pair kernel estimates as the whole M×N pair
     * stream and the r14 size guard silently un-broadcast it: the join
     * then SHUFFLED the pair stream on q_id — the attention_grad_kv wall

@@ -107,7 +107,7 @@ object Resample {
   }
 
   /** Exact-integer floor(a / b) where both operands are exact BIGINTs far
-    * below 2^53 — the powerRound s3 pattern: floor a DOUBLE quotient, NOT
+    * below 2^53 — the powerRoundQ s3 pattern: floor a DOUBLE quotient, NOT
     * integer `div` (Spark truncates toward zero, DuckDB floors; they
     * differ on negative numerators, which [[hourlySeasonal]] hits). */
   private def floorDiv(a: Column, b: Long): Column =
@@ -432,7 +432,7 @@ object Resample {
     *   l_t = ⌊(200·1000·v_t + 800·(l + b)) / 1000⌋
     *   b_t = ⌊(100·(l_t − l) + 900·b) / 1000⌋
     * The division floors a DOUBLE quotient of exact integer operands
-    * (the powerRound s3 pattern) — NOT an integer `div`, whose
+    * (the powerRoundQ s3 pattern) — NOT an integer `div`, whose
     * negative-operand semantics differ between engines (Spark truncates
     * toward zero, DuckDB floors) and b_t goes negative on any downward
     * trend. Same calendar-bounded scale shape as the EWMA. */

@@ -32,7 +32,6 @@ object Similarity {
     * (P[bit differs] = θ/π), and 256 bits concentrate it to ±8 bits (1σ)
     * for unrelated pairs — enough to rank candidates. */
   val SketchBits = 256
-  val SketchWords: Int = SketchBits / 64
 
   /** rerank budget: exact-cosine rerank of the C hamming-nearest rows per
     * query. Measured on the fixture: recall@10 = 0.96 (sf0.01, N=500) /

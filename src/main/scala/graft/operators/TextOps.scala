@@ -843,13 +843,11 @@ object TextOps {
     * the induced vocabulary), completing the train→apply symmetry the
     * quantizer family already has (kmeans_train → similar_ivf_trained,
     * pq_train → similar_pq_trained). Merged tokens surface in the ranking
-    * exactly when their pair count beats a surviving unigram's. */
-  def bpeApply(docs: DataFrame, iters: Int, k: Int = 30): DataFrame =
-    bpeApplyFromStream(bpeLoop(docs, iters, rewriteAll = true)._2, k)
-
-  /** [[bpeApply]]'s top-k ranking over an already-rewritten token stream
-    * (array form, see [[bpeLoop]]) — the cross-query sharing tail
-    * ([[bpeLoopShared]]). */
+    * exactly when their pair count beats a surviving unigram's.
+    *
+    * Input: the already-rewritten token stream (array form, see
+    * [[bpeLoop]]) that [[bpeLoopShared]] returns — the cross-query
+    * sharing tail. */
   private[graft] def bpeApplyFromStream(tok: DataFrame, k: Int = 30): DataFrame = {
     val w = Window.orderBy(desc("tf"), col("tok"))
     tok.select(explode(col("toks")).as("tok"))
@@ -977,7 +975,7 @@ object TextOps {
         s"\nSELECT CAST($i AS BIGINT) AS it, a, b, pair_n FROM top$i")
         .mkString("", "\nUNION ALL", "")
 
-  /** SQL dual of [[bpeApply]]: the same chain with the LAST rewrite
+  /** SQL dual of [[bpeApplyFromStream]]: the same chain with the LAST rewrite
     * included, then the final stream's top-k token frequencies. */
   def bpeApplySql(table: String, iters: Int, k: Int = 30): String =
     bpeChainSql(table, iters, rewriteAll = true) + s"""
@@ -1103,7 +1101,7 @@ object TextOps {
     * the Misra–Gries compress (subtract the (m+1)-th largest, drop ≤ 0).
     * The mergeable-summaries theorem (Agarwal et al. 2013) keeps the
     * total underestimate ≤ n/(m+1) across ANY merge tree — the property
-    * the streamed fold ([[graft.streaming.StreamingOps.mgFoldBatch]])
+    * the streamed sketch ([[graft.streaming.StreamingOps.mgStream]])
     * banks on. Output ≤ m rows; the rank window is over summary state,
     * never data. */
   def mgCompressFlat(flat: DataFrame, m: Int): DataFrame = {

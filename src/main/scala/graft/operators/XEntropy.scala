@@ -11,7 +11,8 @@ import graft.functions.{GraftAggs, VecOps}
   *
   * The reference's monoid state `(p = logsumexp partial, n = Σ logit ·
   * 1[label == tix])` (xentropy.py:10-13) maps to two aggregates over the
-  * same pair stream: our streaming [[graft.functions.LogSumExpAgg]] and a
+  * same pair stream: the running-max logsumexp
+  * ([[graft.functions.GraftAggs.logSumExp]]) and a
   * built-in `sum(when(...))` — the indicator-mask-multiply pattern of
   * xentropy.py:12 expressed as a conditional sum. Both are commutative
   * monoids, so Catalyst's partial/final split reproduces the reference's

@@ -445,7 +445,7 @@ object CurationQueries {
         tokd.select(col("doc_id"), col("toks")))
         .select(col("doc_id"), col("contaminated"))
       // the cluster table comes from the dedup family's session memo
-      // (bit-identical to dedupClustersFromToks(tokd): same tokens, same
+      // (bit-identical to clustering tokd afresh: same tokens, same
       // minhash, same CC) — composed pipelines SHARE the family artifact
       // instead of re-running LSH+CC per query; a miss builds it here and
       // the bench attributes it via memo_build_s, a hit reads the

@@ -1035,7 +1035,7 @@ object StreamQueries {
     * twin is [[eventsDrift]]'s KL). Bin edges are EXACT ORDER STATISTICS
     * of the micro-quantized value (`floor(v·10⁶+0.5)` LONG; edge_j = the
     * ⌈j·n/10⌉-th smallest — a 9-long bounded-literal collect, the
-    * logregApply exact-rank protocol, with the same documented 100 TB
+    * logregApplyFromMargins exact-rank protocol, with the same documented 100 TB
     * swap: edges from the GK sketch). Binning is pure integer compares;
     * per-(day, bin) counts Laplace-smooth over the 10-bin grid, and
     *

@@ -1823,6 +1823,30 @@ object TextQueries {
       .toDF("dim", "w_micro", "w")
   }
 
+  /** Per-doc margins under the trained weights — the shared front half of
+    * [[logregApplyGk]] (sketch cut; the exact-rank cut
+    * [[logregApplyFromMargins]] reads the shared memo instead):
+    * an eager'd (doc_id, margin_micro) table of exact LONG dot products.
+    * Callers must run inside [[graft.operators.Caching.scoped]]. */
+  private def trainedMargins(d: DataFrame, iters: Int): DataFrame =
+    graft.operators.Caching.eager(
+      trainedMarginsFrom(d, logregTrain(d, iters)))
+
+  /** [[trainedMargins]] under an explicit (already-trained) weight table
+    * — the cross-query sharing entry (Caching.sessionMemo at the query
+    * layer: `quality_logreg` / `_apply` / `_apply_gk` /
+    * `quality_distill_audit` all consume the same trained model).
+    * Returns the LAZY margins plan; callers materialize (eager or memo
+    * checkpoint) before fanning out. */
+  private def trainedMarginsFrom(d: DataFrame, weights: DataFrame): DataFrame = {
+    val w = weights.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val wlit = array((0 until HashDim.toInt).map(i => lit(w(i.toLong))): _*)
+    val term = element_at(wlit, (col("dim") + 1).cast("int")) * col("val")
+    hashVec(d).groupBy(col("doc_id"))
+      .agg(sum(term).as("margin_micro"))
+  }
+
   /** The trained classifier APPLIED to the corpus (the bpe_train →
     * bpe_apply pattern): per-doc margin under the final weights — an
     * exact LONG dot product — thresholded at the corpus MEDIAN margin,
@@ -1845,37 +1869,10 @@ object TextQueries {
     * both engines compare identical integers; strict > keeps ~half. The
     * rank pass runs on the doc-count-sized margin table; at 100 TB the
     * threshold would come from the GK sketch (events_quantiles_sketch)
-    * instead of the exact rank. */
-  /** Per-doc margins under the trained weights — the shared front half of
-    * [[logregApply]] (exact-rank cut) and [[logregApplyGk]] (sketch cut):
-    * an eager'd (doc_id, margin_micro) table of exact LONG dot products.
-    * Callers must run inside [[graft.operators.Caching.scoped]]. */
-  private def trainedMargins(d: DataFrame, iters: Int): DataFrame =
-    graft.operators.Caching.eager(
-      trainedMarginsFrom(d, logregTrain(d, iters)))
-
-  /** [[trainedMargins]] under an explicit (already-trained) weight table
-    * — the cross-query sharing entry (Caching.sessionMemo at the query
-    * layer: `quality_logreg` / `_apply` / `_apply_gk` /
-    * `quality_distill_audit` all consume the same trained model).
-    * Returns the LAZY margins plan; callers materialize (eager or memo
-    * checkpoint) before fanning out. */
-  private def trainedMarginsFrom(d: DataFrame, weights: DataFrame): DataFrame = {
-    val w = weights.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wlit = array((0 until HashDim.toInt).map(i => lit(w(i.toLong))): _*)
-    val term = element_at(wlit, (col("dim") + 1).cast("int")) * col("val")
-    hashVec(d).groupBy(col("doc_id"))
-      .agg(sum(term).as("margin_micro"))
-  }
-
-  private def logregApply(d: DataFrame, iters: Int): DataFrame =
-    graft.operators.Caching.scoped() {
-      logregApplyFromMargins(trainedMargins(d, iters))
-    }
-
-  /** [[logregApply]]'s exact-middle-rank cut over a pre-materialized
-    * margins table — the cross-query sharing entry. */
+    * instead of the exact rank.
+    *
+    * Input: a pre-materialized margins table — the cross-query sharing
+    * entry. */
   private def logregApplyFromMargins(margins: DataFrame): DataFrame = {
     val n = margins.count()
     val kLo = ((n + 1) / 2).toInt // 1-based lower middle rank
@@ -2119,7 +2116,7 @@ object TextQueries {
     * sweep the cut, read the curve. Ranking is exact cross-engine
     * (integer margins, doc_id tiebreak); the rung test is the integer
     * cross-multiplication `1000·rank ≤ p·n`; precision/recall are exact
-    * integer permille. The rank pass shares [[logregApply]]'s exact-rank
+    * integer permille. The rank pass shares [[logregApplyFromMargins]]'s exact-rank
     * protocol (and its documented 100 TB swap: thresholds from the GK
     * sketch exactly as [[logregApplyGk]]).
     *
@@ -2176,8 +2173,8 @@ object TextQueries {
   /** GK rank-error budget of the sketch-cut variant below. */
   private val GkApplyEps = 0.01
 
-  /** THE 100 TB PATH OF [[logregApply]], MADE REAL AND GRADED:
-    * [[logregApply]]'s exact two-middle-order-statistics threshold runs an
+  /** THE 100 TB PATH OF [[logregApplyFromMargins]], MADE REAL AND GRADED:
+    * [[logregApplyFromMargins]]'s exact two-middle-order-statistics threshold runs an
     * UNPARTITIONED `Window.orderBy` rank pass — a single-partition sort of
     * the doc-count-sized margin table, the one scale-shaped compromise in
     * the quality family (flagged on the judge's scale-killer watchlist
@@ -2233,7 +2230,7 @@ object TextQueries {
     * family's train→apply loop: confusion counts between the rule-based
     * keep ([[TextOps.textQuality]], the teacher every distilled
     * classifier bootstraps from) and the trained scorer's median-cut
-    * keep ([[logregApply]]). All four cells are exact LONG counts plus
+    * keep ([[logregApplyFromMargins]]). All four cells are exact LONG counts plus
     * an agreement ratio; a pipeline reads this table before swapping the
     * rules out for the model. One join of two per-doc boolean tables —
     * each side is its own graded query, so this audit costs one extra
@@ -2314,7 +2311,7 @@ object TextQueries {
             " / greatest(count(*), 1)::DOUBLE", 4)} AS agreement
        |FROM rk JOIN mk USING (doc_id)""".stripMargin
 
-  /** Oracle of [[logregApply]]: re-derive the trained weights (the oracle
+  /** Oracle of [[logregApplyFromMargins]]: re-derive the trained weights (the oracle
     * is self-contained — strip [[logregOracle]]'s final SELECT), then one
     * margin pass over the feature table.
     *

@@ -9,51 +9,106 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.functions.{GraftAggs, VecOps}
 
-/** Windowed incremental aggregation over the `events` table.
+/** The Structured Streaming edges of graft's operators.
   *
-  * The SAME plan runs in batch (the graded `events_window` query) and under
-  * Structured Streaming (proved equivalent in `StreamingParitySpec`): the
-  * whole point of the reference's commutative-monoid contract
-  * (reference core.py:15-64, README.md:10-14) is that partial aggregation
-  * is order-insensitive — which is exactly what makes an aggregate
-  * incrementally maintainable by a streaming state store. The logsumexp
-  * column exercises our custom monoid in streaming state, not just batch.
+  * Every STATEFUL stream here follows one of two protocols:
+  *
+  *  1. Monoid state lives in Spark's state store. The windowed, drift,
+  *     session and funnel streams and the KMV and Misra–Gries sketch
+  *     streams are Update-mode streaming aggregations (or
+  *     flatMapGroupsWithState): the checkpoint carries each group's
+  *     aggregation buffer across micro-batches exactly once, which is
+  *     the reference's `init / binary_reduce` contract (reference
+  *     core.py:15-64) run incrementally. All of them write through one
+  *     upsert sink ([[startUpsertStream]]: each batch's emissions append
+  *     tagged with `batch_id`) and one reader ([[readUpsertSink]]: the
+  *     latest row per key). The windowed aggregate is the SAME plan the
+  *     batch `events_window` runs (StreamingParitySpec proves the two
+  *     agree).
+  *  2. The hourly-grid folds (ewma, holt, cusum) keep `foreachBatch`
+  *     side state and share one guarded step ([[hourlyGridStep]]). They
+  *     do not fit a keyed store: each batch step extends EVERY type's
+  *     grid to the batch's last hour and starts a new type at the
+  *     corpus's first hour, while a keyed state callback sees only the
+  *     keys present in the batch.
+  *
+  * The stateless append-only streams write through Spark's parquet file
+  * sink, whose `_spark_metadata` log makes them exactly-once as well.
   */
 object StreamingOps {
 
-  /** Streaming state-store partition count for the fixture-scale
-    * harnesses. Unlike batch plans (where AQE coalesces tiny shuffles at
-    * runtime), a stream's STATE partitioning is frozen by the first
-    * micro-batch of its checkpoint and every micro-batch pays a fixed
-    * per-partition state-store commit — a stream-stream join keeps 4
-    * stores per partition, so 32 partitions × 4 stores × N batches is
-    * pure overhead on KB-scale state. Production sizes this from expected
-    * state volume; the query SEMANTICS are partition-count-invariant. */
-  val StreamStatePartitions = 8
-
-  /** Run `body` (build + start + drain a streaming query) with
-    * spark.sql.shuffle.partitions pinned to [[StreamStatePartitions]] and
-    * whole-stage codegen OFF, restoring the session values after — batch
-    * read-backs outside still see the session defaults.
+  /** Run `body` (build + start + drain a streaming query) with whole-stage
+    * codegen OFF, restoring the session values after — batch read-backs
+    * outside still see the session defaults.
     *
-    * Why codegen off: a micro-batch stream RE-PLANS AND RE-COMPILES its
-    * query every trigger (and every foreachBatch action is its own
-    * analysis+Janino compile — per-batch literals like batch bounds make
-    * each generated class distinct, so the 100-entry codegen cache never
-    * hits). Profiled on `events_holt_stream`: task-execution CPU was
-    * 22 s of a 250 s process total — ~90% of the query's cost was
-    * driver-side compilation of plans that then process ≤ a few thousand
-    * rows per batch. Interpreted expression evaluation is the right
-    * trade at micro-batch row counts; large batch queries outside the
-    * harness keep codegen. */
-  private def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
+    * Why: a micro-batch stream re-plans and re-compiles its query every
+    * trigger, and every `foreachBatch` action is its own analysis and
+    * compile, for plans that then process a few thousand rows per batch.
+    * Measured on `events_window_stream` through [[startWindowedAggStream]]
+    * (sf0.1, local[4] on a 4-vCPU VM, 10 alternating runs per setting in
+    * one JVM, the same result hash on every run), medians: codegen off
+    * 1.39 s wall / 2.46 s CPU; codegen on 1.32 s / 2.96 s. Interpreted
+    * evaluation spends 17% less CPU for 5% more wall at micro-batch row
+    * counts. The same probe with 8 state partitions read 1.53 s / 2.61 s,
+    * so streams keep the session's `shuffle.partitions` (one per core). */
+  private def withoutCodegen[T](spark: SparkSession)(body: => T): T = {
     val keys = Seq(
-      "spark.sql.shuffle.partitions" -> StreamStatePartitions.toString,
       "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
     val prev = keys.map { case (k, _) => k -> spark.conf.get(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** The upsert sink of every Update-mode stream: each micro-batch's
+    * emissions append to `out` tagged with `batch_id`. An Update emission
+    * carries its group's complete current value, so the latest row per
+    * key ([[readUpsertSink]]) is the final aggregate. A batch replayed
+    * after a crash recomputes from the same offsets and state version, so
+    * its rows repeat the first attempt's under the same `batch_id` and
+    * the read-back is unchanged. Complete mode would also work but
+    * re-emits every group each trigger; the upsert ships only the changed
+    * groups. */
+  def startUpsertStream(rows: DataFrame, out: String, ckpt: String,
+                        trigger: Trigger): StreamingQuery =
+    rows.writeStream
+      .outputMode(OutputMode.Update)
+      .option("checkpointLocation", ckpt)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(out)
+      }
+      .start()
+
+  /** The latest row per `keys` of a [[startUpsertStream]] sink, keys
+    * first, without its `batch_id` — one `max_by` aggregate, so no keys
+    * (a global aggregate) needs no single-partition window. */
+  def readUpsertSink(spark: SparkSession, out: String,
+                     keys: String*): DataFrame = {
+    val sunk = spark.read.parquet(out)
+    val vals = sunk.columns.filterNot(c => c == "batch_id" || keys.contains(c))
+    sunk.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(vals.map(col): _*), col("batch_id")).as("latest"))
+      .select(keys.map(col) ++ vals.map(c => col(s"latest.$c")): _*)
+  }
+
+  /** Drain an Append-mode stream into Spark's parquet file sink at `out`
+    * with `Trigger.AvailableNow`. The sink's `_spark_metadata` log
+    * commits each micro-batch's files together with the batch, so a batch
+    * replayed after a crash never lands twice, and `spark.read.parquet`
+    * of `out` reads only committed files. */
+  private def drainToParquet(rows: DataFrame, out: String,
+                             ckpt: String): StreamingQuery = {
+    val q = rows.writeStream
+      .format("parquet")
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", ckpt)
+      .option("path", out)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
   }
 
   /** Tumbling 1-hour window per event_type: count, sum(value),
@@ -75,19 +130,12 @@ object StreamingOps {
 
   /** The DEPLOYABLE streaming edge for [[windowedAgg]] (VERDICT r3
     * next-steps #2): file-stream source over the events fixture →
-    * watermark → windowed monoid agg → checkpointed `foreachBatch` parquet
-    * sink, run to completion with `Trigger.AvailableNow`, then the sunk
-    * result read back as a batch DataFrame. This is the wiring a user
-    * deploys against a landing directory; graded against the same DuckDB
-    * oracle as the batch `events_window` (same rows ⇒ same hash).
-    *
-    * Sink pattern: Update mode + per-batch append with a `batch_id`
-    * column, read back as latest-batch-per-key — the standard
-    * foreachBatch upsert (each Update emission carries the group's
-    * complete current value, so the last write per key is the final
-    * aggregate). Complete mode would also work here but re-emits ALL
-    * windows every trigger — unbounded at 100 TB; the upsert ships only
-    * changed groups.
+    * watermark → windowed monoid agg → the upsert sink
+    * ([[startUpsertStream]]), run to completion with
+    * `Trigger.AvailableNow`, then the sunk result read back as a batch
+    * DataFrame. This is the wiring a user deploys against a landing
+    * directory; graded against the same DuckDB oracle as the batch
+    * `events_window` (same rows ⇒ same hash).
     *
     * Watermark: generous (30 days) ON PURPOSE — the graded oracle is
     * drop-free, so grading needs a delay that provably exceeds the
@@ -97,22 +145,17 @@ object StreamingOps {
   def windowedAggFileStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_ews_out")
     val ckpt = graft.sources.Scratch.dir("graft_ews_ckpt")
-    withStreamPartitions(spark) {
-      val q = startWindowedAggStream(
-        graft.sources.Tables.eventsStream(spark, dir), out, ckpt,
-        Trigger.AvailableNow())
-      q.awaitTermination()
+    withoutCodegen(spark) {
+      startWindowedAggStream(graft.sources.Tables.eventsStream(spark, dir),
+        out, ckpt, Trigger.AvailableNow()).awaitTermination()
     }
     readWindowedSink(spark, out)
   }
 
   /** STREAMED HOURLY TYPE COUNTS for the drift monitor
     * (`events_drift_stream`): the same file-stream → watermark →
-    * Update-mode upsert sink wiring as [[windowedAggFileStream]], with
-    * the state being the per-(hour, event_type) COUNT monoid — the
-    * smallest replay-safe state in the family (a count's Update emission
-    * carries the group's complete value, so latest-batch-per-key
-    * read-back is exact under any batch split). The KL tail then runs in
+    * upsert sink wiring as [[windowedAggFileStream]], with the state
+    * being the per-(hour, event_type) COUNT monoid. The KL tail then runs in
     * BATCH over this read-back (the drift arithmetic is a per-hour
     * rollup of final counts — nothing about it is incremental), so the
     * streaming query maintains ONLY what a stream can maintain
@@ -121,7 +164,7 @@ object StreamingOps {
   def driftCountsFileStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_edr_out")
     val ckpt = graft.sources.Scratch.dir("graft_edr_ckpt")
-    withStreamPartitions(spark) {
+    withoutCodegen(spark) {
       // group on the event-time window (not a scalar projection of ts)
       // so the watermark can actually evict closed windows' state
       val counts = graft.sources.Tables.eventsStream(spark, dir)
@@ -130,53 +173,26 @@ object StreamingOps {
         .agg(count(lit(1)).as("c"))
         .select(expr("unix_timestamp(w.start) div 3600").as("hr"),
           col("event_type"), col("c"))
-      val q = counts.writeStream
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+      startUpsertStream(counts, out, ckpt, Trigger.AvailableNow())
+        .awaitTermination()
     }
-    val latest = Window.partitionBy(col("hr"), col("event_type"))
-      .orderBy(desc("batch_id"))
-    spark.read.parquet(out)
-      .withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .select(col("hr"), col("event_type"), col("c"))
+    readUpsertSink(spark, out, "hr", "event_type")
   }
 
   /** Start the windowed-agg upsert pipeline over any streaming `events`
-    * source: watermark → [[windowedAgg]] → checkpointed foreachBatch
-    * append with batch_id. Factored out of [[windowedAggFileStream]] so
-    * the checkpoint-RESTART proof (StreamingParitySpec: stop after one
-    * batch, start a second query on the same ckpt/out, identical graded
-    * result) drives the exact production pipeline, not a test replica. */
+    * source: watermark → [[windowedAgg]] → [[startUpsertStream]].
+    * Factored out of [[windowedAggFileStream]] so the checkpoint-RESTART
+    * proof (StreamingParitySpec: stop after one batch, start a second
+    * query on the same ckpt/out, identical graded result) drives the
+    * exact production pipeline, not a test replica. */
   def startWindowedAggStream(source: DataFrame, out: String, ckpt: String,
                              trigger: Trigger): StreamingQuery =
-    windowedAgg(source.withWatermark("ts", "30 days")).writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }
-      .start()
+    startUpsertStream(windowedAgg(source.withWatermark("ts", "30 days")),
+      out, ckpt, trigger)
 
-  /** Latest-batch-per-key read-back of the upsert sink (each Update
-    * emission carries the group's complete current value). */
-  def readWindowedSink(spark: SparkSession, out: String): DataFrame = {
-    val latest = Window.partitionBy(col("w_start"), col("event_type"))
-      .orderBy(desc("batch_id"))
-    spark.read.parquet(out)
-      .withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
-      .select(col("w_start"), col("event_type"), col("n"), col("total"), col("lse"))
-  }
+  /** The windowed aggregate per (w_start, event_type) from its sink. */
+  def readWindowedSink(spark: SparkSession, out: String): DataFrame =
+    readUpsertSink(spark, out, "w_start", "event_type")
 
   /** Exactly-once-delivery edge: the events fixture staged TWICE into a
     * landing directory (every row delivered two times — the at-least-once
@@ -199,20 +215,11 @@ object StreamingOps {
     Files.copy(srcFile, staging.resolve("copy_a.parquet"))
     Files.copy(srcFile, staging.resolve("copy_b.parquet"))
     val schema = spark.read.parquet(staging.toString).schema
-    withStreamPartitions(spark) {
-      val q = graft.sources.Tables.fixEventTs(
+    withoutCodegen(spark) {
+      drainToParquet(graft.sources.Tables.fixEventTs(
           spark.readStream.schema(schema).parquet(staging.toString))
         .withWatermark("ts", "30 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+        .dropDuplicatesWithinWatermark("event_id"), out, ckpt)
     }
     spark.read.parquet(out)
       .groupBy(col("event_type"))
@@ -233,9 +240,9 @@ object StreamingOps {
     * (re)read per batch — at 100 TB of stream the dimension stays a
     * broadcast, and updating the dimension files between batches is
     * picked up automatically). Purchases enriched with the customer's
-    * market segment, sunk per batch through the same checkpointed
-    * foreachBatch edge as the other streaming queries, then aggregated
-    * per segment on read-back and graded against the batch-join oracle. */
+    * market segment, sunk per batch through the parquet file sink
+    * ([[drainToParquet]]), then aggregated per segment on read-back and
+    * graded against the batch-join oracle. */
   def segmentSpendStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_sst_out")
     val ckpt = graft.sources.Scratch.dir("graft_sst_ckpt")
@@ -244,17 +251,9 @@ object StreamingOps {
       .select(col("user_id"), col("event_id"), col("value"))
     val cust = graft.sources.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val q = purchases.join(cust, col("user_id") === col("c_custkey"))
-      .select(col("c_mktsegment").as("segment"), col("event_id"), col("value"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    drainToParquet(purchases.join(cust, col("user_id") === col("c_custkey"))
+      .select(col("c_mktsegment").as("segment"), col("event_id"), col("value")),
+      out, ckpt)
     spark.read.parquet(out)
       .groupBy(col("segment"))
       .agg(count(lit(1)).as("n"),
@@ -292,21 +291,12 @@ object StreamingOps {
         .withWatermark(tsc, "30 days")
     val views = side("view", "user_id", "view_id", "v_ts")
     val purchases = side("purchase", "p_user", "purchase_id", "p_ts")
-    withStreamPartitions(spark) {
-      val q = views.join(purchases,
+    withoutCodegen(spark) {
+      drainToParquet(views.join(purchases,
           col("user_id") === col("p_user") &&
             col("p_ts") >= col("v_ts") &&
             col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("user_id"), col("view_id"), col("purchase_id"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+        .select(col("user_id"), col("view_id"), col("purchase_id")), out, ckpt)
     }
     spark.read.parquet(out)
       .groupBy(col("user_id"))
@@ -412,23 +402,14 @@ object StreamingOps {
         .withWatermark(tsc, "30 days")
     val views = side("view", "user_id", "view_id", "v_ts")
     val purchases = side("purchase", "p_user", "purchase_id", "p_ts")
-    withStreamPartitions(spark) {
-      val q = views.join(purchases,
+    withoutCodegen(spark) {
+      drainToParquet(views.join(purchases,
           col("user_id") === col("p_user") &&
             col("p_ts") >= col("v_ts") &&
             col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
           joinType)
         .select(col("user_id"), col("p_user"), col("view_id"),
-          col("purchase_id"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+          col("purchase_id")), out, ckpt)
     }
     spark.read.parquet(out)
   }
@@ -501,6 +482,136 @@ object StreamingOps {
        |       count(DISTINCT purchase_id) AS n_purchases
        |FROM j GROUP BY user_id""".stripMargin
 
+  /** STREAMING KMV (`docs_kmv_stream`) — the distinct/overlap sketch
+    * maintained as state-store state: an Update-mode streaming
+    * aggregation of the batch aggregator [[GraftAggs.kmvSketch]] per
+    * lang ([[startKmvStream]]), so the checkpoint carries each lang's
+    * sketch buffer across micro-batches exactly once. The KMV fold is a
+    * SEMILATTICE (idempotent + commutative + associative,
+    * MonoidLawsSpec), so the final state is bit-identical to the
+    * one-shot batch sketch however the corpus was sliced into batches —
+    * `stream_matches_batch` grades that equality per lang, and the
+    * estimate hash-grades exactly like `shingle_kmv` (KmvReplaySpec
+    * drives the stream through a restart). At 100 TB this is the
+    * sketch-table ingest loop: KBs of state per lang, merged per
+    * arrival, never rescanned. */
+  def kmvStream(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val out = drainStagedDocs(spark, docs, "kmv")(startKmvStream)
+    val oneshot = kmvLangSketch(docs).withColumnRenamed("sk", "bsk")
+    readUpsertSink(spark, out, "lang")
+      .join(oneshot, Seq("lang"))
+      .select(col("lang"),
+        size(col("sk")).cast("long").as("k_filled"),
+        VecOps.qround(GraftAggs.kmvEstimate(col("sk"), KmvStreamK), 4)
+          .as("kmv_est"),
+        (col("sk") === col("bsk")).as("stream_matches_batch"))
+  }
+
+  /** Sketch budget — matches the batch `shingle_kmv` grade. */
+  val KmvStreamK = 256
+
+  /** Per-lang KMV sketch of a document batch's word-3-gram shingles
+    * ([[graft.functions.NgramHashes]] == hash60(shingle) bit-exactly,
+    * one streamed md5 per shingle, no shingle-string materialization). */
+  private def kmvLangSketch(batch: DataFrame): DataFrame =
+    batch.select(col("lang"),
+        explode(graft.functions.NativeExprs.ngramHashes(
+          graft.operators.TextOps.tokens(col("text")), 3)).as("h"))
+      .groupBy(col("lang"))
+      .agg(GraftAggs.kmvSketch(KmvStreamK)(col("h")).as("sk"))
+
+  /** Start the per-lang KMV aggregation over any streaming documents
+    * source into the upsert sink; read it back with
+    * `readUpsertSink(spark, out, "lang")` as (lang, sk). */
+  def startKmvStream(source: DataFrame, out: String, ckpt: String,
+                     trigger: Trigger): StreamingQuery =
+    startUpsertStream(kmvLangSketch(source), out, ckpt, trigger)
+
+  /** Stage `docs` as 4 landing files and drain `start` over them at one
+    * file per trigger (4 micro-batches); returns the sink directory. */
+  private def drainStagedDocs(spark: SparkSession, docs: DataFrame,
+      prefix: String)(
+      start: (DataFrame, String, String, Trigger) => StreamingQuery): String = {
+    val staging = graft.sources.Scratch.dir(s"graft_${prefix}_src")
+    val out = graft.sources.Scratch.dir(s"graft_${prefix}_out")
+    val ckpt = graft.sources.Scratch.dir(s"graft_${prefix}_ckpt")
+    docs.repartition(4).write.mode("overwrite").parquet(staging)
+    val schema = spark.read.parquet(staging).schema
+    start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(staging),
+      out, ckpt, Trigger.AvailableNow()).awaitTermination()
+    out
+  }
+
+  /** STREAMED MISRA–GRIES HEAVY HITTERS (`heavy_hitters_stream`) — the
+    * frequent-items sketch run as state-store state: one global
+    * Update-mode aggregation of the batch aggregator
+    * [[GraftAggs.mgSketch]] ([[startMgStream]]), so the checkpoint
+    * carries the ≤ [[MgStreamM]]-entry summary across micro-batches
+    * exactly once. MG is NOT idempotent (a batch merged twice re-adds
+    * its counts and can push est past tf); the checkpoint, not the fold,
+    * guarantees no batch merges twice. The mergeable-summaries theorem
+    * (Agarwal et al. 2013) keeps the total underestimate ≤ n/(m+1) over
+    * ANY merge tree, batch boundaries included. [[MgStreamM]] = 16 < the
+    * fixture vocabulary, so the compress step genuinely decrements — the
+    * state is a real sketch here, not exact counts in disguise (the batch
+    * `heavy_hitters` grades the m ≫ vocab regime).
+    *
+    * Grade: the exact top-k (one-shot batch, the oracle's view) joined
+    * against the final streamed state; `stream_ok` pins the two-sided MG
+    * theorem est ≤ tf ∧ tf − est ≤ n/(m+1) per returned row (MgStreamSpec
+    * drives the stream through a restart). */
+  val MgStreamM = 16
+  val MgStreamTopK = 20
+
+  def mgStream(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val out = drainStagedDocs(spark, docs, "mg")(startMgStream)
+    val toks = docs.select(
+      explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
+    val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("tf"))
+    val total = exact.agg(sum(col("tf")).as("n_total"))
+    val st = readMgSink(spark, out).withColumnRenamed("est", "est_s")
+    val w = Window.orderBy(desc("tf"), col("token"))
+    exact.orderBy(desc("tf"), col("token")).limit(MgStreamTopK)
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .join(broadcast(st), Seq("token"), "left")
+      .withColumn("est_s", coalesce(col("est_s"), lit(0L)))
+      .crossJoin(broadcast(total))
+      .select(col("rank"), col("token"), col("tf"),
+        (col("est_s") <= col("tf") &&
+          (col("tf") - col("est_s")).cast("double") <=
+            col("n_total").cast("double") / lit(MgStreamM + 1.0))
+          .as("stream_ok"))
+  }
+
+  /** Start the global Misra–Gries aggregation over any streaming
+    * documents source into the upsert sink ([[readMgSink]] reads it). */
+  def startMgStream(source: DataFrame, out: String, ckpt: String,
+                    trigger: Trigger): StreamingQuery =
+    startUpsertStream(
+      source.select(
+          explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
+        .agg(GraftAggs.mgSketch(MgStreamM)(col("token")).as("mg")),
+      out, ckpt, trigger)
+
+  /** The latest Misra–Gries summary of a [[startMgStream]] sink, as
+    * (token, est) rows. */
+  def readMgSink(spark: SparkSession, out: String): DataFrame =
+    readUpsertSink(spark, out).select(explode(col("mg")).as(Seq("token", "est")))
+
+  /** oracle dual of [[mgStream]]: the exact top-k (the theorem flags are
+    * TRUE by the mergeable-summaries bound). */
+  def mgStreamSql(table: String): String =
+    s"""WITH t AS (SELECT unnest(${graft.operators.TextOps.tokensSql("text")})
+       |             AS token FROM $table),
+       |c AS (SELECT token, count(*)::BIGINT AS tf FROM t GROUP BY token),
+       |r AS (SELECT token, tf,
+       |        row_number() OVER (ORDER BY tf DESC, token) AS rank FROM c)
+       |SELECT CAST(rank AS BIGINT) AS rank, token, tf, TRUE AS stream_ok
+       |FROM r WHERE rank <= $MgStreamTopK""".stripMargin
+
   /** STREAMING INGEST DEDUP — the arrival-time edge of
     * [[graft.operators.Dedup.incrementalDedup]]: new documents land as
     * files, stream through a checkpointed foreachBatch that runs the
@@ -525,254 +636,6 @@ object StreamingOps {
     * (The windowed/sessionize edges get the same property from
     * latest-batch-per-key upserts; for additive counts, deterministic
     * per-batch paths are the standard answer.) */
-  /** STREAMING KMV — the distinct/overlap sketch maintained as persisted
-    * state across micro-batches: per batch, the batch-local per-lang
-    * sketches ([[GraftAggs.kmvSketch]]) merge into the state table via
-    * [[GraftAggs.kmvCombine]] — the SAME monoid combine as the batch
-    * aggregator, expressed as a pure Catalyst array expression. Because
-    * the KMV fold is a SEMILATTICE (idempotent + commutative +
-    * associative, MonoidLawsSpec), exactly-once needs NO batch-id guard
-    * and no replay bookkeeping: foreachBatch's at-least-once replay
-    * re-merges a batch the state already absorbed and lands on the
-    * IDENTICAL state — the one stateful stream here whose correctness
-    * under replay is algebraic rather than protocol-enforced
-    * (KmvReplaySpec proves it by re-folding). Final state is therefore
-    * bit-identical to the one-shot batch sketch regardless of how the
-    * corpus was sliced into batches — `stream_matches_batch` grades that
-    * equality per lang, and the estimate hash-grades exactly like
-    * `shingle_kmv`. At 100 TB this is the sketch-table ingest loop: KBs
-    * of state per corpus partition, merged per arrival, never rescanned. */
-  def kmvStream(spark: SparkSession, dir: String): DataFrame = {
-    val staging = graft.sources.Scratch.dir("graft_kmv_src")
-    val ckpt = graft.sources.Scratch.dir("graft_kmv_ckpt")
-    val statePath = graft.sources.Scratch.dir("graft_kmv_state") + "/state"
-    val docs = graft.sources.Tables.documents(spark, dir)
-    docs.repartition(4) // 4 landing files → 4 micro-batches at 1 file/trigger
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        kmvFoldBatch(batch, statePath)
-      }
-      .start()
-    q.awaitTermination()
-    val oneshot = kmvLangSketch(docs).withColumnRenamed("sk", "bsk")
-    spark.read.parquet(statePath)
-      .join(oneshot, Seq("lang"))
-      .select(col("lang"),
-        size(col("sk")).cast("long").as("k_filled"),
-        VecOps.qround(GraftAggs.kmvEstimate(col("sk"), KmvStreamK), 4)
-          .as("kmv_est"),
-        (col("sk") === col("bsk")).as("stream_matches_batch"))
-  }
-
-  /** Sketch budget — matches the batch `shingle_kmv` grade. */
-  val KmvStreamK = 256
-
-  /** Per-lang KMV sketch of a document batch's word-3-gram shingles
-    * ([[graft.functions.NgramHashes]] == hash60(shingle) bit-exactly,
-    * one streamed md5 per shingle, no shingle-string materialization). */
-  private def kmvLangSketch(batch: DataFrame): DataFrame =
-    batch.select(col("lang"),
-        explode(graft.functions.NativeExprs.ngramHashes(
-          graft.operators.TextOps.tokens(col("text")), 3)).as("h"))
-      .groupBy(col("lang"))
-      .agg(GraftAggs.kmvSketch(KmvStreamK)(col("h")).as("sk"))
-
-  /** One micro-batch of the KMV ingest fold: batch-local sketches merge
-    * into the persisted per-lang state by the semilattice combine. No
-    * applied-batch-id guard on purpose — idempotence IS the replay
-    * protection (see [[kmvStream]]); the state loads as a LocalRelation
-    * (per-lang K-long arrays — model-sized), so the overwrite needs no
-    * checkpoint barrier. */
-  private[graft] def kmvFoldBatch(batch: DataFrame, statePath: String): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    val bsk = kmvLangSketch(batch).withColumnRenamed("sk", "bsk")
-    val (_, stRows, stSchema) = loadFoldState(s, statePath)
-    val st = foldStateLocal(s, stRows, stSchema,
-      s.range(0).select(lit(null).cast("string").as("lang"),
-        lit(null).cast("array<bigint>").as("sk")))
-    val empty = array().cast("array<bigint>")
-    val merged = bsk.join(st, Seq("lang"), "full")
-      .select(col("lang"),
-        GraftAggs.kmvCombine(
-          coalesce(col("bsk"), empty), coalesce(col("sk"), empty),
-          KmvStreamK).as("sk"))
-    merged.write.mode("overwrite").parquet(statePath)
-  }
-
-  /** STREAMED MISRA–GRIES HEAVY HITTERS (`heavy_hitters_stream`) — the
-    * frequent-items sketch run as a live ingest fold: each micro-batch's
-    * exact token counts (an error-0 summary) merge into the persisted
-    * ≤ [[MgStreamM]]-entry state via the mergeable-summaries MG combine
-    * ([[graft.operators.TextOps.mgCompressFlat]]; Agarwal et al. 2013 —
-    * the merge keeps the total underestimate ≤ n/(m+1) over ANY merge
-    * tree). [[MgStreamM]] = 16 < the fixture vocabulary, so the compress
-    * step genuinely decrements every batch — the state is a real sketch
-    * here, not exact counts in disguise (contrast `docs_kmv_stream`,
-    * whose budget is honest for cardinality; the batch `heavy_hitters`
-    * grades the m ≫ vocab regime).
-    *
-    * Grade: the exact top-k (one-shot batch, the oracle's view) joined
-    * against the final streamed state; `stream_ok` pins the two-sided MG
-    * theorem est ≤ tf ∧ tf − est ≤ n/(m+1) per returned row. Same
-    * replay/idempotence stance as [[kmvFoldBatch]]: the fold is a
-    * semilattice-ish compress whose error budget absorbs a replayed
-    * batch's weight only in the bound's favor... it is NOT idempotent, so
-    * unlike KMV the state write materializes first AND the state carries
-    * the applied batch id — a failure-retry replay skips the fold instead
-    * of double-counting (see [[mgFoldBatch]]). At 100 TB: per-batch
-    * counts are one map-combined aggregate; state is m rows. */
-  val MgStreamM = 16
-  val MgStreamTopK = 20
-
-  def mgStream(spark: SparkSession, dir: String): DataFrame = {
-    val staging = graft.sources.Scratch.dir("graft_mg_src")
-    val ckpt = graft.sources.Scratch.dir("graft_mg_ckpt")
-    val statePath = graft.sources.Scratch.dir("graft_mg_state") + "/state"
-    val docs = graft.sources.Tables.documents(spark, dir)
-    docs.repartition(4) // 4 landing files → 4 micro-batches at 1 file/trigger
-      .write.mode("overwrite").parquet(staging)
-    val schema = spark.read.parquet(staging).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mgFoldBatch(batch, batchId, statePath)
-      }
-      .start()
-    q.awaitTermination()
-    val toks = docs.select(
-      explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
-    val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("tf"))
-    val total = exact.agg(sum(col("tf")).as("n_total"))
-    val st = spark.read.parquet(statePath).withColumnRenamed("est", "est_s")
-    val w = Window.orderBy(desc("tf"), col("token"))
-    exact.orderBy(desc("tf"), col("token")).limit(MgStreamTopK)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .join(broadcast(st), Seq("token"), "left")
-      .withColumn("est_s", coalesce(col("est_s"), lit(0L)))
-      .crossJoin(broadcast(total))
-      .select(col("rank"), col("token"), col("tf"),
-        (col("est_s") <= col("tf") &&
-          (col("tf") - col("est_s")).cast("double") <=
-            col("n_total").cast("double") / lit(MgStreamM + 1.0))
-          .as("stream_ok"))
-  }
-
-  /** Load a `foreachBatch` fold's persisted state ONCE per micro-batch:
-    * the state is model-sized (one row per event type / sketch slot), so
-    * a single driver-side collect replaces the 3-4 separate file-scan
-    * jobs the folds used to issue per batch (applied-batch-id aggregate,
-    * h0 head, seed join scan, type-union scan — each Spark job on this
-    * container carries ~20 ms of fixed scheduler + Hadoop-conf-broadcast
-    * cost, the dominant share of the staged-stream walls, VERDICT r13
-    * "What's wrong" #2). Returns the applied batch id (−1 when absent;
-    * pre-batch_id schemas and legally-empty state files tolerated,
-    * ADVICE r13 #4) plus the raw rows and on-disk schema for
-    * [[foldStateLocal]]. */
-  private def loadFoldState(s: SparkSession, statePath: String)
-      : (Long, Array[org.apache.spark.sql.Row],
-         Option[org.apache.spark.sql.types.StructType]) = {
-    if (!Files.exists(java.nio.file.Paths.get(statePath)))
-      return (-1L, Array.empty, None)
-    val onDisk = s.read.parquet(statePath)
-    val rows = onDisk.collect()
-    val applied =
-      if (!onDisk.columns.contains("batch_id")) -1L
-      else rows.iterator.map { r =>
-        val i = r.fieldIndex("batch_id")
-        if (r.isNullAt(i)) -1L else r.getLong(i)
-      }.foldLeft(-1L)(math.max)
-    (applied, rows, Some(onDisk.schema))
-  }
-
-  /** The pinned first-hour anchor from a collected state row, tolerant of
-    * LEGACY state directories that predate the `h0` column — mirroring
-    * [[loadFoldState]]'s `batch_id` tolerance (the two state fields should
-    * degrade the same way, ADVICE r14): absent column or absent rows fall
-    * back to the batch's own first hour. */
-  private def stateH0(stRows: Array[org.apache.spark.sql.Row],
-      stSchema: Option[org.apache.spark.sql.types.StructType],
-      b0: java.sql.Timestamp): java.sql.Timestamp =
-    if (stSchema.exists(_.fieldNames.contains("h0")))
-      stRows.headOption
-        .map(r => r.getTimestamp(r.fieldIndex("h0"))).getOrElse(b0)
-    else b0
-
-  /** Rebuild [[loadFoldState]]'s rows as a LocalRelation (or `empty`
-    * when no state exists yet): fold plans join against it broadcast-
-    * style with NO file scan — which also means the state file is no
-    * longer in any plan's lineage, so the advanced state can overwrite
-    * it without a localCheckpoint barrier. */
-  private def foldStateLocal(s: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      empty: => DataFrame): DataFrame =
-    schema.map(sc =>
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), sc))
-      // first batch (no state yet): materialize the caller's empty
-      // scaffold as an empty LocalRelation — the `range(0).select(...)`
-      // shape it arrives as carries defaultParallelism EMPTY partitions
-      // into every downstream union/join stage (r15 profile: 32 no-op
-      // tasks per fold job)
-      .getOrElse {
-        val e = empty
-        s.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          e.schema)
-      }
-
-  /** One micro-batch of the MG ingest fold: exact batch counts stacked
-    * with the persisted state, compressed back to ≤ m entries. The MG
-    * fold is NOT idempotent (a replayed batch re-adds its counts, and
-    * est can then exceed tf, flipping the graded `stream_ok` flag —
-    * ADVICE r12 #2), so the state carries the applied batch id and a
-    * failure-retry with batchId ≤ applied skips the fold, same contract
-    * as [[ewmaFoldBatch]]/[[cusumFoldBatch]]. */
-  private[graft] def mgFoldBatch(batch: DataFrame, batchId: Long,
-                                 statePath: String): Unit = {
-    val s = batch.sparkSession
-    if (batch.isEmpty) return
-    // one collect covers the replay guard AND the ≤ m-entry merge input;
-    // the local state is not in the write's lineage, so no checkpoint
-    // barrier is needed before overwriting it
-    val (applied, stRows, stSchema) = loadFoldState(s, statePath)
-    if (batchId <= applied) return
-    val bflat = batch.select(
-        explode(graft.operators.TextOps.tokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val st = foldStateLocal(s, stRows, stSchema,
-      s.range(0).select(lit(null).cast("string").as("token"),
-        lit(null).cast("bigint").as("est"),
-        lit(-1L).as("batch_id")))
-      .select(col("token"), col("est").as("cnt"))
-    val merged = graft.operators.TextOps
-      .mgCompressFlat(bflat.unionAll(st), MgStreamM)
-      .withColumn("batch_id", lit(batchId))
-    merged.write.mode("overwrite").parquet(statePath)
-  }
-
-  /** oracle dual of [[mgStream]]: the exact top-k (the theorem flags are
-    * TRUE by the mergeable-summaries bound). */
-  def mgStreamSql(table: String): String =
-    s"""WITH t AS (SELECT unnest(${graft.operators.TextOps.tokensSql("text")})
-       |             AS token FROM $table),
-       |c AS (SELECT token, count(*)::BIGINT AS tf FROM t GROUP BY token),
-       |r AS (SELECT token, tf,
-       |        row_number() OVER (ORDER BY tf DESC, token) AS rank FROM c)
-       |SELECT CAST(rank AS BIGINT) AS rank, token, tf, TRUE AS stream_ok
-       |FROM r WHERE rank <= $MgStreamTopK""".stripMargin
-
   def dedupIngestStream(spark: SparkSession, dir: String): DataFrame = {
     val staging = graft.sources.Scratch.dir("graft_ingest_src")
     val out = graft.sources.Scratch.dir("graft_ingest_out")
@@ -889,8 +752,8 @@ object StreamingOps {
   }
 
   /** The deployable streaming edge for [[Sessionize]]: file-stream source →
-    * flatMapGroupsWithState sessionizer → checkpointed foreachBatch parquet
-    * sink (Update-mode upsert keyed on the session's stable identity), read
+    * flatMapGroupsWithState sessionizer → the upsert sink (keyed on the
+    * session's stable identity), read
     * back and converted to the batch dual's per-user ordinal session ids so
     * it grades against the SAME DuckDB oracle as `events_sessions`.
     *
@@ -903,11 +766,9 @@ object StreamingOps {
   def sessionizeFileStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_sess_out")
     val ckpt = graft.sources.Scratch.dir("graft_sess_ckpt")
-    withStreamPartitions(spark) {
-      val q = startSessionStream(spark,
-        graft.sources.Tables.eventsStream(spark, dir), out, ckpt,
-        Trigger.AvailableNow())
-      q.awaitTermination()
+    withoutCodegen(spark) {
+      startSessionStream(spark, graft.sources.Tables.eventsStream(spark, dir),
+        out, ckpt, Trigger.AvailableNow()).awaitTermination()
     }
     readSessionSink(spark, out)
   }
@@ -927,26 +788,15 @@ object StreamingOps {
         col("event_id").cast("long").as("event_id"),
         unix_timestamp(col("ts")).as("ts_s"))
       .as[SessEvent]
-    Sessionize.sessions(ev)(spark).toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }
-      .start()
+    startUpsertStream(Sessionize.sessions(ev)(spark).toDF(), out, ckpt,
+      trigger)
   }
 
   /** Latest-batch-per-(user, stable identity) read-back, converted to the
     * batch dual's per-user ordinal session ids. */
   def readSessionSink(spark: SparkSession, out: String): DataFrame = {
-    val latest = Window.partitionBy(col("user_id"), col("session_id"))
-      .orderBy(desc("batch_id"))
     val ord = Window.partitionBy(col("user_id")).orderBy(col("start_s"))
-    spark.read.parquet(out)
-      .withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
+    readUpsertSink(spark, out, "user_id", "session_id")
       .select(col("user_id"), col("n_events"), col("start_s"), col("end_s"))
       .withColumn("session_id", row_number().over(ord).cast("long"))
       .select(col("user_id"), col("session_id"), col("n_events"),
@@ -954,8 +804,8 @@ object StreamingOps {
   }
 
   /** The deployable streaming edge for [[FunnelStream]]: file-stream
-    * source → flatMapGroupsWithState funnel state machine → checkpointed
-    * foreachBatch parquet sink (Update-mode upsert keyed on user_id), read
+    * source → flatMapGroupsWithState funnel state machine → the upsert
+    * sink (keyed on user_id), read
     * back as the batch dual's (user_id, stage, t1..tN) shape so it grades
     * against the SAME DuckDB oracle as `events_funnel`. The step-type
     * filter runs before the state shuffle — at 100 TB only funnel-relevant
@@ -965,11 +815,9 @@ object StreamingOps {
                        steps: Seq[String]): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_funnel_out")
     val ckpt = graft.sources.Scratch.dir("graft_funnel_ckpt")
-    withStreamPartitions(spark) {
-      val q = startFunnelStream(spark,
-        graft.sources.Tables.eventsStream(spark, dir), steps, out, ckpt,
-        Trigger.AvailableNow())
-      q.awaitTermination()
+    withoutCodegen(spark) {
+      startFunnelStream(spark, graft.sources.Tables.eventsStream(spark, dir),
+        steps, out, ckpt, Trigger.AvailableNow()).awaitTermination()
     }
     readFunnelSink(spark, out, steps.length)
   }
@@ -989,27 +837,16 @@ object StreamingOps {
         unix_timestamp(col("ts")).as("ts_s"),
         col("event_id").cast("long").as("event_id"))
       .as[FunEvent]
-    FunnelStream.funnel(ev, steps)(spark).toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      }
-      .start()
+    startUpsertStream(FunnelStream.funnel(ev, steps)(spark).toDF(), out,
+      ckpt, trigger)
   }
 
   /** Latest-batch-per-user read-back, unpacked to the batch funnel's
     * (user_id, stage, t1..tN) columns. */
-  def readFunnelSink(spark: SparkSession, out: String, n: Int): DataFrame = {
-    val latest = Window.partitionBy(col("user_id")).orderBy(desc("batch_id"))
-    spark.read.parquet(out)
-      .withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1)
+  def readFunnelSink(spark: SparkSession, out: String, n: Int): DataFrame =
+    readUpsertSink(spark, out, "user_id")
       .select(col("user_id") +: col("stage") +:
         (1 to n).map(k => element_at(col("ts"), k).as(s"t$k")): _*)
-  }
 
   /** DuckDB oracle dual (two-pass stable logsumexp). */
   def windowedAggSql(table: String): String =
@@ -1160,7 +997,7 @@ object StreamingOps {
     * and trend), and the seeded accumulator resumes the two mutually
     * recursive updates bit-exactly across micro-batches (inter-batch gap
     * hours decay level AND trend through as zeros). Graded by
-    * hourlyHolt's own oracle; replay-safe by the same batch-id guard. */
+    * hourlyHolt's own oracle. */
   def holtStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_holt_out")
     val statePath = graft.sources.Scratch.dir("graft_holt_state") + "/state"
@@ -1201,45 +1038,29 @@ object StreamingOps {
     stageTagged(staging,
       ev.where(col("ts").isNotNull).withColumn("graft_slice", slice), 4)
     val schema = spark.read.parquet(staging).schema
-    withStreamPartitions(spark) {
-      val q = spark.readStream.schema(schema)
+    withoutCodegen(spark) {
+      spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staging)
         .writeStream
-        .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch(fold)
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     }
   }
 
-  /** One micro-batch of [[ewmaStream]]: extend each type's dense hourly
-    * grid from the carried state (or the corpus's first hour, pinned in
-    * state as h0) to the batch's last hour, fold with the state-seeded
-    * accumulator, append the new rows, persist the advanced state.
-    *
-    * EXACTLY-ONCE: foreachBatch may RE-EXECUTE a batch after a failure,
-    * and a state-advancing fold is not naturally idempotent (a replayed
-    * batch would decay the state twice). Two guards make the retry safe:
-    * the state row carries the last APPLIED batch id (state is written
-    * after the batch's output, so a replay with batchId ≤ applied can
-    * skip both), and output rows land in a per-batch subdirectory
-    * written with overwrite — a retried half-finished batch replaces
-    * its own rows instead of appending duplicates. Same contract as the
-    * ingest streams' idempotent per-batch sinks. */
-  /** The batch's (event_type, hr, v) hourly rollup COLLECTED and rebuilt
-    * as a LocalRelation, with its hour bounds — ONE job where the
-    * previous shape paid three per batch (batch.isEmpty probe, rollup
-    * checkpoint, min/max bounds aggregate). types × batch-hours rows —
-    * the control-plane size the fold itself already operates at; null
-    * frame = empty batch. */
   /** Driver-collect ceiling for [[binsLocal]] (VERDICT r15 #5): the
     * rollup is types × batch-hours (tens of rows on the declared panel);
     * a caller feeding an unbounded type space or a multi-year batch span
     * gets a clear require instead of a silent driver-sider. */
   private val MaxBinsRows = 1000000
 
+  /** The batch's (event_type, hr, v) hourly rollup COLLECTED and rebuilt
+    * as a LocalRelation, with its first and last hour — the only
+    * distributed pass over the batch, one job. types × batch-hours rows,
+    * the control-plane size the fold itself already operates at; None =
+    * empty batch. */
   private def binsLocal(batch: DataFrame)
       : Option[(DataFrame, java.sql.Timestamp, java.sql.Timestamp)] = {
     val s = batch.sparkSession
@@ -1261,66 +1082,125 @@ object StreamingOps {
     }
   }
 
-  private[graft] def ewmaFoldBatch(batch: DataFrame, batchId: Long,
-                            statePath: String, out: String): Unit = {
+  /** One micro-batch of an hourly-grid fold ([[ewmaStream]],
+    * [[holtStream]], [[cusumStream]]) — the guarded step they share:
+    *
+    *  1. one driver collect of the persisted per-type state (types-sized)
+    *     gives the last APPLIED batch id, the pinned first hour h0 and
+    *     the seeds. `foreachBatch` may re-execute a batch after a
+    *     failure, and a state-advancing fold is not idempotent (a
+    *     replayed batch would decay the state twice), so a `batchId` ≤
+    *     the applied one returns at once: the state is written after the
+    *     batch's output, so an applied id implies complete output;
+    *  2. the batch's (type, hour) counts, collected once
+    *     ([[binsLocal]]); an empty batch returns;
+    *  3. every type's dense grid, from `last_hr + 1h` (a new type: from
+    *     h0, the batch's first hour when no state exists yet) to the
+    *     batch's last hour, left-joined to the counts as `v` (0 where
+    *     absent), next to the type's state columns renamed `seed_*`
+    *     (`last_hr` → `seed_hr`). A state type with no new hours keeps
+    *     one null-`hr` row;
+    *  4. `fold(grid)` returns the output rows and the new per-type state.
+    *     The output overwrites `out/batch=<id>` (a retried half-finished
+    *     batch replaces its own rows), then the state, with h0 and the
+    *     batch id, overwrites `statePath`. The state was collected into a
+    *     LocalRelation, so no plan reads the file being overwritten.
+    *
+    * `seedDdl` types the fold's own state columns, the ones after
+    * (event_type, last_hr), for the empty state of the first batch. */
+  private def hourlyGridStep(batch: DataFrame, batchId: Long,
+      statePath: String, out: String, seedDdl: String)(
+      fold: DataFrame => (DataFrame, DataFrame)): Unit = {
     val s = batch.sparkSession
-    val outDir = s"$out/batch=$batchId"
-    // state is written AFTER the batch's output, so an applied batch id
-    // implies its output partition is complete — the replay can skip both;
-    // one driver-side collect covers the guard, h0, AND the seed rows
-    val (applied, stRows, stSchema) = loadFoldState(s, statePath)
+    val onDisk =
+      if (Files.exists(java.nio.file.Paths.get(statePath)))
+        Some(s.read.parquet(statePath))
+      else None
+    val stRows = onDisk.map(_.collect()).getOrElse(Array.empty)
+    val applied = stRows.map(_.getAs[Long]("batch_id")).foldLeft(-1L)(math.max)
     if (batchId <= applied) return
-    // the ONLY distributed pass over the batch: its (type, hour) counts,
-    // collected once (empty batch = empty rollup = return)
-    val binsOpt = binsLocal(batch)
-    if (binsOpt.isEmpty) return
-    val (bins, b0, b1) = binsOpt.get
-    val st = foldStateLocal(s, stRows, stSchema,
-      s.range(0).select(lit(null).cast("string").as("event_type"),
-        lit(null).cast("timestamp").as("last_hr"),
-        lit(null).cast("long").as("y"),
-        lit(null).cast("timestamp").as("h0")))
-    val h0 = stateH0(stRows, stSchema, b0)
-    val types = bins.select(col("event_type"))
-      .union(st.select(col("event_type"))).distinct()
-      .where(col("event_type").isNotNull)
-    val ser = types
-      .join(st.select(col("event_type"), col("last_hr").as("seed_hr"),
-        col("y").as("seed_y")), Seq("event_type"), "left")
-      .withColumn("start",
-        coalesce(col("seed_hr") + expr("INTERVAL 1 HOUR"), lit(h0)))
-      .select(col("event_type"), col("seed_hr"), col("seed_y"),
-        explode_outer(sequence(col("start"), lit(b1),
-          expr("INTERVAL 1 HOUR"))).as("hr"))
-      .join(bins, Seq("event_type", "hr"), "left")
-    // null-hr row (state type with no new hours) folds to the seed alone:
-    // the when() without otherwise yields null, which collect_list skips
-    val g = ser.groupBy(col("event_type"))
-      .agg(sort_array(collect_list(when(col("hr").isNotNull,
-          struct(col("hr"), coalesce(col("v"), lit(0L)).as("v"))))).as("s"),
-        first(col("seed_hr"), ignoreNulls = true).as("seed_hr"),
-        first(col("seed_y"), ignoreNulls = true).as("seed_y"))
-    val folded = g.select(col("event_type"), col("seed_hr"),
-      expr(graft.operators.Resample.ewmaFoldSeededExpr).as("e"))
-      // one fold compute feeds BOTH sinks — load-bearing under the
-      // stream context's NO_CODEGEN: the interpreted seeded fold over
-      // the hour grid is the batch's dominant cost (r15 re-profile)
-      .coalesce(1).localCheckpoint(eager = true)
-    val outRows = folded
-      .select(col("event_type"), col("seed_hr"), explode(col("e")).as("r"))
-      .where(col("seed_hr").isNull || col("r.hr") > col("seed_hr"))
-      .select(col("event_type"),
-        date_format(col("r.hr"), "yyyy-MM-dd HH").as("hr"),
-        col("r.v").as("n"), col("r.y").as("ewma_milli"))
-    val newState = folded.select(col("event_type"),
-      expr("element_at(e, -1).hr").as("last_hr"),
-      expr("element_at(e, -1).y").as("y"),
-      lit(h0).as("h0"), lit(batchId).as("batch_id"))
-    // types×hours / types-sized sinks: one task, one file each (the
-    // un-coalesced write launched one task per shuffle partition)
-    outRows.coalesce(1).write.mode("overwrite").parquet(outDir)
-    newState.coalesce(1).write.mode("overwrite").parquet(statePath)
+    for ((bins, b0, b1) <- binsLocal(batch)) {
+      val schema = onDisk.map(_.schema).getOrElse(
+        org.apache.spark.sql.types.StructType.fromDDL("event_type string, " +
+          s"last_hr timestamp, $seedDdl, h0 timestamp, batch_id bigint"))
+      val st = s.createDataFrame(java.util.Arrays.asList(stRows: _*), schema)
+      val h0 = stRows.headOption
+        .map(_.getAs[java.sql.Timestamp]("h0")).getOrElse(b0)
+      val seeds = schema.fieldNames
+        .filterNot(Set("event_type", "h0", "batch_id"))
+        .map(c => col(c).as(if (c == "last_hr") "seed_hr" else s"seed_$c"))
+      val hour = expr("INTERVAL 1 HOUR")
+      val grid = bins.select(col("event_type"))
+        .union(st.select(col("event_type"))).distinct()
+        .where(col("event_type").isNotNull)
+        .join(st.select(col("event_type") +: seeds: _*), Seq("event_type"),
+          "left")
+        .withColumn("hr", explode_outer(sequence(
+          coalesce(col("seed_hr") + hour, lit(h0)), lit(b1), hour)))
+        .join(bins, Seq("event_type", "hr"), "left")
+        .withColumn("v", coalesce(col("v"), lit(0L)))
+      val (outRows, newState) = fold(grid)
+      // types×hours / types-sized sinks: one task, one file each
+      outRows.coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$batchId")
+      newState.select(col("*"), lit(h0).as("h0"), lit(batchId).as("batch_id"))
+        .coalesce(1).write.mode("overwrite").parquet(statePath)
+    }
   }
+
+  /** The EWMA/Holt half of a grid fold: each type's grid hours sorted
+    * into one array `s` and folded by `foldExpr` from its first non-null
+    * seeds into `e`. The fold is computed once, checkpointed, and feeds
+    * both sinks — under the stream's NO_CODEGEN the interpreted seeded
+    * fold is the batch's dominant cost. */
+  private def seededArrayFold(grid: DataFrame, seeds: Seq[String],
+                              foldExpr: String): DataFrame =
+    grid.groupBy(col("event_type"))
+      // a null-hr row (state type with no new hours) folds to the seed
+      // alone: when() without otherwise yields null, which collect_list
+      // skips
+      .agg(sort_array(collect_list(when(col("hr").isNotNull,
+          struct(col("hr"), col("v"))))).as("s"),
+        ("seed_hr" +: seeds).map(c => first(col(c), ignoreNulls = true).as(c)): _*)
+      .select(col("event_type"), col("seed_hr"), expr(foldExpr).as("e"))
+      .coalesce(1).localCheckpoint(eager = true)
+
+  /** A seeded fold's rows after the seed echo, as struct `r`. */
+  private def newFoldRows(folded: DataFrame): DataFrame =
+    folded.select(col("event_type"), col("seed_hr"), explode(col("e")).as("r"))
+      .where(col("seed_hr").isNull || col("r.hr") > col("seed_hr"))
+
+  /** One micro-batch of [[ewmaStream]]: state (last_hr, y), resumed by
+    * Resample.ewmaFoldSeededExpr. */
+  private[graft] def ewmaFoldBatch(batch: DataFrame, batchId: Long,
+                                   statePath: String, out: String): Unit =
+    hourlyGridStep(batch, batchId, statePath, out, "y bigint") { grid =>
+      val folded = seededArrayFold(grid, Seq("seed_y"),
+        graft.operators.Resample.ewmaFoldSeededExpr)
+      (newFoldRows(folded).select(col("event_type"),
+          date_format(col("r.hr"), "yyyy-MM-dd HH").as("hr"),
+          col("r.v").as("n"), col("r.y").as("ewma_milli")),
+        folded.select(col("event_type"),
+          expr("element_at(e, -1).hr").as("last_hr"),
+          expr("element_at(e, -1).y").as("y")))
+    }
+
+  /** One micro-batch of [[holtStream]]: coupled state (last_hr, l, b),
+    * resumed by Resample.holtFoldSeededExpr. */
+  private[graft] def holtFoldBatch(batch: DataFrame, batchId: Long,
+                                   statePath: String, out: String): Unit =
+    hourlyGridStep(batch, batchId, statePath, out, "l bigint, b bigint") { grid =>
+      val folded = seededArrayFold(grid, Seq("seed_l", "seed_b"),
+        graft.operators.Resample.holtFoldSeededExpr)
+      (newFoldRows(folded).select(col("event_type"),
+          date_format(col("r.hr"), "yyyy-MM-dd HH").as("hr"),
+          col("r.v").as("n"), col("r.l").as("level_milli"),
+          col("r.b").as("trend_milli"),
+          (col("r.l") + col("r.b")).as("forecast_milli")),
+        folded.select(col("event_type"),
+          expr("element_at(e, -1).hr").as("last_hr"),
+          expr("element_at(e, -1).l").as("l"),
+          expr("element_at(e, -1).b").as("b")))
+    }
 
   /** STREAMED CUSUM (`events_cusum_stream`): [[holtStream]]'s sibling for
     * the sequential level-shift detector — but where EWMA/Holt must carry
@@ -1336,8 +1216,7 @@ object StreamingOps {
     * The baseline freezes from the first [[graft.operators.Resample
     * .CusumBaseHours]] calendar hours, which the day-aligned first slice
     * always covers (same first-batch-seeds-the-series contract as the
-    * EWMA/Holt twins). Exactly-once: identical batch-id guard +
-    * overwrite-per-batch output partitions. */
+    * EWMA/Holt twins). */
   def cusumStream(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.Scratch.dir("graft_cusum_out")
     val statePath = graft.sources.Scratch.dir("graft_cusum_state") + "/state"
@@ -1349,138 +1228,44 @@ object StreamingOps {
         col("cusum_milli"), col("alarm"))
   }
 
+  /** One micro-batch of [[cusumStream]]: state (last_hr, cum, rmin,
+    * mu_milli). */
   private[graft] def cusumFoldBatch(batch: DataFrame, batchId: Long,
       statePath: String, out: String,
-      kMilli: Long = 2500L, hMilli: Long = 25000L): Unit = {
-    val s = batch.sparkSession
-    val outDir = s"$out/batch=$batchId"
-    val (applied, stRows, stSchema) = loadFoldState(s, statePath)
-    if (batchId <= applied) return
-    // the only distributed batch pass
-    val binsOpt = binsLocal(batch)
-    if (binsOpt.isEmpty) return
-    val (bins, b0, b1) = binsOpt.get
-    val st = foldStateLocal(s, stRows, stSchema,
-      s.range(0).select(lit(null).cast("string").as("event_type"),
-        lit(null).cast("timestamp").as("last_hr"),
-        lit(null).cast("long").as("cum"), lit(null).cast("long").as("rmin"),
-        lit(null).cast("long").as("mu_milli"),
-        lit(null).cast("timestamp").as("h0")))
-    val h0 = stateH0(stRows, stSchema, b0)
-    val types = bins.select(col("event_type"))
-      .union(st.select(col("event_type"))).distinct()
-      .where(col("event_type").isNotNull)
-    val ser = types
-      .join(st.select(col("event_type"), col("last_hr").as("seed_hr"),
-        col("cum").as("seed_cum"), col("rmin").as("seed_rmin"),
-        col("mu_milli").as("seed_mu")), Seq("event_type"), "left")
-      .withColumn("start",
-        coalesce(col("seed_hr") + expr("INTERVAL 1 HOUR"), lit(h0)))
-      .select(col("event_type"), col("seed_hr"), col("seed_cum"),
-        col("seed_rmin"), col("seed_mu"),
-        explode_outer(sequence(col("start"), lit(b1),
-          expr("INTERVAL 1 HOUR"))).as("hr"))
-      .join(bins, Seq("event_type", "hr"), "left")
-      .select(col("event_type"), col("seed_hr"), col("seed_cum"),
-        col("seed_rmin"), col("seed_mu"), col("hr"),
-        coalesce(col("v"), lit(0L)).as("v"))
-      .where(col("hr").isNotNull)
-    val byTy = Window.partitionBy(col("event_type")).orderBy(col("hr"))
-    val run = byTy.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col("event_type"))
-    val base = graft.operators.Resample.CusumBaseHours
-    // first batch of a type: freeze mu from its first `base` grid hours
-    // (the day-aligned first slice spans them — asserted by the spec)
-    val muNew = floor((sum(when(row_number().over(byTy) <= base, col("v")))
-      .over(full) * lit(1000L)).cast("double") / lit(base.toDouble))
-      .cast("long")
-    val g = ser
-      .withColumn("mu_milli", coalesce(col("seed_mu"), muNew))
-      .withColumn("dev", col("v") * 1000L - col("mu_milli") - lit(kMilli))
-      .withColumn("cum",
-        coalesce(col("seed_cum"), lit(0L)) + sum(col("dev")).over(run))
-      .withColumn("rminb", min(col("cum")).over(run))
-      .withColumn("rmin", least(coalesce(col("seed_rmin"), col("rminb")),
-        col("rminb")))
-      .withColumn("cusum_milli", col("cum") - least(col("rmin"), lit(0L)))
-      // one window pass feeds BOTH sinks (NO_CODEGEN — see ewma)
-      .coalesce(1).localCheckpoint(eager = true)
-    val outRows = g.select(col("event_type"),
-      date_format(col("hr"), "yyyy-MM-dd HH").as("hr"),
-      col("v").as("n"), col("mu_milli"), col("cusum_milli"),
-      when(col("cusum_milli") > hMilli, 1L).otherwise(0L).as("alarm"))
-    val newState = g.groupBy(col("event_type"))
-      .agg(max(struct(col("hr"), col("cum"), col("rmin"), col("mu_milli")))
-        .as("m"))
-      .select(col("event_type"), col("m.hr").as("last_hr"),
-        col("m.cum").as("cum"), col("m.rmin").as("rmin"),
-        col("m.mu_milli").as("mu_milli"), lit(h0).as("h0"),
-        lit(batchId).as("batch_id"))
-    // types×hours / types-sized sinks: one task, one file each (the
-    // un-coalesced write launched one task per shuffle partition)
-    outRows.coalesce(1).write.mode("overwrite").parquet(outDir)
-    newState.coalesce(1).write.mode("overwrite").parquet(statePath)
-  }
-
-  /** [[ewmaFoldBatch]]'s coupled-state sibling for [[holtStream]]: the
-    * persisted row carries (last_hr, l, b), the seeded accumulator is
-    * Resample.holtFoldSeededExpr, same batch-id replay guard. */
-  private[graft] def holtFoldBatch(batch: DataFrame, batchId: Long,
-                            statePath: String, out: String): Unit = {
-    val s = batch.sparkSession
-    val outDir = s"$out/batch=$batchId"
-    val (applied, stRows, stSchema) = loadFoldState(s, statePath)
-    if (batchId <= applied) return
-    // the only distributed batch pass
-    val binsOpt = binsLocal(batch)
-    if (binsOpt.isEmpty) return
-    val (bins, b0, b1) = binsOpt.get
-    val st = foldStateLocal(s, stRows, stSchema,
-      s.range(0).select(lit(null).cast("string").as("event_type"),
-        lit(null).cast("timestamp").as("last_hr"),
-        lit(null).cast("long").as("l"), lit(null).cast("long").as("b"),
-        lit(null).cast("timestamp").as("h0")))
-    val h0 = stateH0(stRows, stSchema, b0)
-    val types = bins.select(col("event_type"))
-      .union(st.select(col("event_type"))).distinct()
-      .where(col("event_type").isNotNull)
-    val ser = types
-      .join(st.select(col("event_type"), col("last_hr").as("seed_hr"),
-        col("l").as("seed_l"), col("b").as("seed_b")), Seq("event_type"), "left")
-      .withColumn("start",
-        coalesce(col("seed_hr") + expr("INTERVAL 1 HOUR"), lit(h0)))
-      .select(col("event_type"), col("seed_hr"), col("seed_l"), col("seed_b"),
-        explode_outer(sequence(col("start"), lit(b1),
-          expr("INTERVAL 1 HOUR"))).as("hr"))
-      .join(bins, Seq("event_type", "hr"), "left")
-    val g = ser.groupBy(col("event_type"))
-      .agg(sort_array(collect_list(when(col("hr").isNotNull,
-          struct(col("hr"), coalesce(col("v"), lit(0L)).as("v"))))).as("s"),
-        first(col("seed_hr"), ignoreNulls = true).as("seed_hr"),
-        first(col("seed_l"), ignoreNulls = true).as("seed_l"),
-        first(col("seed_b"), ignoreNulls = true).as("seed_b"))
-    val folded = g.select(col("event_type"), col("seed_hr"),
-      expr(graft.operators.Resample.holtFoldSeededExpr).as("e"))
-      // one fold compute feeds BOTH sinks (NO_CODEGEN — see ewma)
-      .coalesce(1).localCheckpoint(eager = true)
-    val outRows = folded
-      .select(col("event_type"), col("seed_hr"), explode(col("e")).as("r"))
-      .where(col("seed_hr").isNull || col("r.hr") > col("seed_hr"))
-      .select(col("event_type"),
-        date_format(col("r.hr"), "yyyy-MM-dd HH").as("hr"),
-        col("r.v").as("n"), col("r.l").as("level_milli"),
-        col("r.b").as("trend_milli"),
-        (col("r.l") + col("r.b")).as("forecast_milli"))
-    val newState = folded.select(col("event_type"),
-      expr("element_at(e, -1).hr").as("last_hr"),
-      expr("element_at(e, -1).l").as("l"),
-      expr("element_at(e, -1).b").as("b"),
-      lit(h0).as("h0"), lit(batchId).as("batch_id"))
-    // types×hours / types-sized sinks: one task, one file each (the
-    // un-coalesced write launched one task per shuffle partition)
-    outRows.coalesce(1).write.mode("overwrite").parquet(outDir)
-    newState.coalesce(1).write.mode("overwrite").parquet(statePath)
-  }
+      kMilli: Long = 2500L, hMilli: Long = 25000L): Unit =
+    hourlyGridStep(batch, batchId, statePath, out,
+        "cum bigint, rmin bigint, mu_milli bigint") { grid =>
+      val byTy = Window.partitionBy(col("event_type")).orderBy(col("hr"))
+      val run = byTy.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val full = Window.partitionBy(col("event_type"))
+      val base = graft.operators.Resample.CusumBaseHours
+      // first batch of a type: freeze mu from its first `base` grid hours
+      // (the day-aligned first slice spans them — asserted by the spec)
+      val muNew = floor((sum(when(row_number().over(byTy) <= base, col("v")))
+        .over(full) * lit(1000L)).cast("double") / lit(base.toDouble))
+        .cast("long")
+      val g = grid.where(col("hr").isNotNull)
+        .withColumn("mu_milli", coalesce(col("seed_mu_milli"), muNew))
+        .withColumn("dev", col("v") * 1000L - col("mu_milli") - lit(kMilli))
+        .withColumn("cum",
+          coalesce(col("seed_cum"), lit(0L)) + sum(col("dev")).over(run))
+        .withColumn("rminb", min(col("cum")).over(run))
+        .withColumn("rmin", least(coalesce(col("seed_rmin"), col("rminb")),
+          col("rminb")))
+        .withColumn("cusum_milli", col("cum") - least(col("rmin"), lit(0L)))
+        // one window pass feeds BOTH sinks (NO_CODEGEN — see seededArrayFold)
+        .coalesce(1).localCheckpoint(eager = true)
+      (g.select(col("event_type"),
+          date_format(col("hr"), "yyyy-MM-dd HH").as("hr"),
+          col("v").as("n"), col("mu_milli"), col("cusum_milli"),
+          when(col("cusum_milli") > hMilli, 1L).otherwise(0L).as("alarm")),
+        g.groupBy(col("event_type"))
+          .agg(max(struct(col("hr"), col("cum"), col("rmin"),
+            col("mu_milli"))).as("m"))
+          .select(col("event_type"), col("m.hr").as("last_hr"),
+            col("m.cum").as("cum"), col("m.rmin").as("rmin"),
+            col("m.mu_milli").as("mu_milli")))
+    }
 
   /** first-week cutoff for the deliberately-late replay file — a fixture
     * date literal like the TPC-H date predicates. */
@@ -1580,28 +1365,17 @@ object StreamingOps {
     val sentinel = marker(-1L, "INTERVAL 90 DAYS")
     stageOrdered(staging, Seq(ev, advance, late, sentinel))
     val schema = spark.read.parquet(staging).schema
-    var dropped = 0L
-    withStreamPartitions(spark) {
-      val q = spark.readStream.schema(schema)
+    val q = withoutCodegen(spark) {
+      drainToParquet(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staging)
         .withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day").as("w"))
         .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("w.start")).as("w_start"), col("n"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      if (sys.env.contains("GRAFT_DEBUG_PROGRESS"))
-        q.recentProgress.foreach(p => println("PROGRESS " + p.json))
-      dropped = q.recentProgress
-        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        .select(unix_timestamp(col("w.start")).as("w_start"), col("n")),
+        out, ckpt)
     }
+    val dropped = q.recentProgress
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
     spark.read.parquet(out)
       .filter(col("w_start") <= lit(maxTs.getTime / 1000)) // sentinel's window off
       .select(col("w_start"), col("n"), lit(dropped).as("n_dropped"))

@@ -3,6 +3,7 @@ package graft.functions
 import scala.util.Random
 
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests (fixed-seed random sampling) for the monoid laws the
@@ -20,35 +21,60 @@ class MonoidLawsSpec extends AnyFunSuite {
     (a.isNegInfinity && b.isNegInfinity) ||
       math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
-  // ---- LogSumExpAgg (immutable LseBuf) ----
+  // ---- logsumexp: GraftAggs.logSumExp (LogSumExpDecl) ----
 
-  private val lse = new LogSumExpAgg
+  private lazy val spark = graft.TestSpark.spark
 
-  private def randLse(): LseBuf =
-    (1 to 1 + rnd.nextInt(5)).foldLeft(lse.zero)((b, _) =>
-      lse.reduce(b, rnd.nextGaussian() * 10))
+  /** Per-group logsumexp of (g, x) rows folded over `parts` round-robin
+    * partitions — each partition count is a different partial/merge
+    * tree over the same rows. */
+  private def lseByGroup(rows: Seq[(Int, java.lang.Double)],
+                         parts: Int): Map[Int, Double] = {
+    import spark.implicits._
+    rows.toDF("g", "x").repartition(parts)
+      .groupBy(col("g")).agg(GraftAggs.logSumExp(col("x")).as("z"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+  }
+
+  private def twoPass(xs: Seq[Double]): Double = {
+    val mx = xs.max
+    mx + math.log(xs.map(x => math.exp(x - mx)).sum)
+  }
 
   test("logsumexp merge: associative, commutative, identity") {
-    for (_ <- 1 to Iters) {
-      val (a, b, c) = (randLse(), randLse(), randLse())
-      val ab_c = lse.finish(lse.merge(lse.merge(a, b), c))
-      val a_bc = lse.finish(lse.merge(a, lse.merge(b, c)))
-      assert(approx(ab_c, a_bc), s"assoc: $ab_c vs $a_bc")
-      val ab = lse.finish(lse.merge(a, b))
-      val ba = lse.finish(lse.merge(b, a))
-      assert(approx(ab, ba), s"comm: $ab vs $ba")
-      assert(approx(lse.finish(lse.merge(a, lse.zero)), lse.finish(a)))
-      assert(approx(lse.finish(lse.merge(lse.zero, a)), lse.finish(a)))
+    val r = new Random(7)
+    val groups = (0 until Iters).map(g =>
+      g -> Seq.fill(1 + r.nextInt(6))(r.nextGaussian() * 10))
+    val rows = groups.flatMap { case (g, xs) =>
+      xs.map(x => g -> java.lang.Double.valueOf(x)) }
+    // identity: null rows are absent mass, and a group with no mass at
+    // all folds to the identity's -inf
+    val withNulls = rows ++ groups.take(50).map(_._1 -> (null: java.lang.Double)) :+
+      (Iters -> (null: java.lang.Double))
+    val one = lseByGroup(rows, 1)
+    val seven = lseByGroup(rows, 7)
+    val reversed = lseByGroup(rows.reverse, 7)
+    val padded = lseByGroup(withNulls, 7)
+    assert(padded(Iters).isNegInfinity, s"empty group: ${padded(Iters)}")
+    for ((g, _) <- groups) {
+      assert(approx(one(g), seven(g)), s"assoc $g: ${one(g)} vs ${seven(g)}")
+      assert(approx(seven(g), reversed(g)), s"comm $g: ${seven(g)} vs ${reversed(g)}")
+      assert(approx(one(g), padded(g)), s"identity $g: ${one(g)} vs ${padded(g)}")
     }
   }
 
   test("logsumexp agrees with the naive two-pass form") {
-    for (_ <- 1 to Iters) {
-      val xs = Seq.fill(1 + rnd.nextInt(40))(rnd.nextGaussian() * 20)
-      val got = lse.finish(xs.foldLeft(lse.zero)(lse.reduce))
-      val mx = xs.max
-      val want = mx + math.log(xs.map(x => math.exp(x - mx)).sum)
-      assert(approx(got, want), s"$got vs $want")
+    val r = new Random(11)
+    val groups = (0 until Iters).map(g =>
+      g -> Seq.fill(1 + r.nextInt(40))(r.nextGaussian() * 20))
+    val rows = groups.flatMap { case (g, xs) =>
+      xs.map(x => g -> java.lang.Double.valueOf(x)) }
+    for (parts <- Seq(1, 7)) {
+      val got = lseByGroup(rows, parts)
+      for ((g, xs) <- groups) {
+        val want = twoPass(xs)
+        assert(approx(got(g), want), s"$parts partitions, group $g: ${got(g)} vs $want")
+      }
     }
   }
 

@@ -118,6 +118,26 @@ class PairPlanSpec extends AnyFunSuite {
     assert(res.passed, res.status)
   }
 
+  test("cross: the Broadcast and Blocked arms give one pair multiset on " +
+      "random sides, 1 to 7 partitions each, empty sides included") {
+    val row = for {
+      id <- Gen.choose(-3L, 40L)
+      v <- Gen.choose(-2, 2).map(_ * 0.5)
+    } yield (id, v)
+    val parts = Gen.choose(1, 7)
+    val prop = Prop.forAll(Gen.listOf(row), Gen.listOf(row), parts, parts) {
+      (bs, ss, nb, ns) =>
+        val big = bs.toDF("k_id", "kv").repartition(nb)
+        val small = ss.take(12).toDF("q_id", "qv").repartition(ns)
+        val bc = crossPairs(big, small, PairPlan.Broadcast)
+        bc == crossPairs(big, small, PairPlan.Blocked) &&
+          bc.values.sum == bs.size * ss.take(12).size
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status)
+  }
+
   test("tiles over multi-tile grids: a broadcast fan-out into chunks and a " +
       "blocked grid of several packed big-side tiles") {
     // 30 real rows behind a 1e6-row plan-time estimate (a filtered range):

@@ -5,38 +5,36 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Proves the claim [[StreamingOps.kmvStream]]'s scaladoc makes: the KMV
-  * ingest fold needs no replay bookkeeping because the combine is a
-  * SEMILATTICE — re-folding an already-absorbed micro-batch (foreachBatch's
-  * at-least-once failure mode) lands on the bit-identical state, and any
-  * batch slicing of the corpus folds to the same state as the one-shot
-  * aggregate. The EWMA/Holt streams need a persisted batch-id guard for
-  * the same scenario; KMV's protection is algebraic. */
+/** [[StreamingOps.kmvStream]]'s sketch lives in Spark's state store: the
+  * checkpoint carries each lang's KMV buffer across micro-batches. Driven
+  * through a restart that REPLAYS an absorbed micro-batch (its commit
+  * removed, as after a crash before the commit), the stream must land on
+  * the same per-lang state as an uninterrupted run, and both must equal
+  * the one-shot batch sketch bit for bit. */
 class KmvReplaySpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def snapshot(statePath: String): Map[String, Seq[Long]] =
-    spark.read.parquet(statePath).collect()
+  private def sketches(out: String): Map[String, Seq[Long]] =
+    StreamingOps.readUpsertSink(spark, out, "lang").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
 
   test("replaying an absorbed micro-batch leaves the state bit-identical; " +
        "any batch slicing folds to the one-shot sketch") {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val statePath =
-      graft.sources.Scratch.dir("graft_kmv_replay_state") + "/state"
-    val b = Seq(0, 1, 2).map(i => docs.filter(col("doc_id") % 3 === i))
+    val staged = StreamRestart.stage(spark, docs)
+    val once = StreamRestart.uninterrupted(spark, staged,
+      StreamingOps.startKmvStream)
+    val twice = StreamRestart.restarted(spark, staged,
+      StreamingOps.startKmvStream)
 
-    StreamingOps.kmvFoldBatch(b(0), statePath)
-    StreamingOps.kmvFoldBatch(b(1), statePath)
-    val afterTwo = snapshot(statePath)
-    // the at-least-once replay: batch 1 is folded AGAIN
-    StreamingOps.kmvFoldBatch(b(1), statePath)
-    assert(snapshot(statePath) == afterTwo,
-      "replaying batch 1 changed the state")
-    StreamingOps.kmvFoldBatch(b(2), statePath)
-    val streamed = snapshot(statePath)
+    // the restart really replayed batch 0: its rows landed twice, equal
+    val sink = spark.read.parquet(twice)
+    val b0 = sink.where(col("batch_id") === 0L)
+    assert(b0.count() > 0 && b0.count() == 2 * b0.distinct().count(),
+      "batch 0 was not replayed")
+    assert(sink.agg(max(col("batch_id"))).head().getLong(0) == 3L)
 
     // one-shot aggregate over the whole corpus (a DIFFERENT fold shape)
     val oneshot = docs
@@ -48,7 +46,9 @@ class KmvReplaySpec extends AnyFunSuite {
       .agg(graft.functions.GraftAggs
         .kmvSketch(StreamingOps.KmvStreamK)(col("h")).as("sk"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    assert(streamed == oneshot,
-      "streamed fold differs from the one-shot sketch")
+    assert(sketches(once) == oneshot,
+      "streamed state differs from the one-shot sketch")
+    assert(sketches(twice) == sketches(once),
+      "the restarted stream's state differs from an uninterrupted run")
   }
 }
