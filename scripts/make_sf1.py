@@ -5,7 +5,7 @@
 Driver-side dev tooling only (pyarrow) -- library code never depends on it.
 
 Protocol: 10 disjoint replicas of every fact table with every key column
-offset into its own id range (the ScaleSmoke disjoint-replica protocol --
+offset into its own id range (the disjoint-replica protocol --
 graph keys, doc ids, order/part/supp/cust keys all remapped per replica, so
 joins stay referentially intact and entity counts grow linearly instead of
 multiplying pair cardinalities). Dimension tables (region, nation) keep
@@ -20,6 +20,10 @@ scale-shaped rather than pathological:
    says nothing about scale;
  - embeddings: replica i > 0 gets a deterministic per-(replica, dim)
    offset, so ANN neighborhoods are real instead of 10-way exact ties.
+
+Scale curve: the same `graft.Bench` query subset run with
+SPARK_GRAFT_SF_DIR at SRC and then at DST gives each query's sf0.1 -> sf1
+wall, job and phase growth from the bench line alone.
 
 Usage: make_sf1.py [SRC=/root/testdata/sf0.1] [DST=/tmp/sf1] [R=10]
 """

@@ -73,7 +73,18 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *    on scheduler noise, and a legitimate regression still shows as
   *    both walls high.)
   *
-  * After the per-query loop, a full run also measures the reference's
+  *  - each row's wall is split by phase, from the median-wall run so the
+  *    parts add up: `build_s` (the `fn(spark, sf)` call), `plan_s` (the
+  *    sink's `queryExecution.executedPlan`) — each net of any Spark job
+  *    running inside it — and `job_s` (time at least one job ran, the
+  *    union of job intervals). wall − build_s − plan_s − job_s is the
+  *    driver gap of execution. `slow_job` names the run's slowest job by
+  *    call site and wall, next to `n_jobs` and `task_s` (medians). This
+  *    is the per-job profile: a subset run (`runMain graft.Bench q1 q2`)
+  *    profiles any registered query, and the same subset at sf0.1 and
+  *    sf1 is its scale curve.
+  *
+  * Before the per-query loop, a full run also measures the reference's
   * RELATIVE-SPEED report (core.py:133-147 `check`: the blocked-vs-regular
   * time ratio, the reference README's only performance claim): each pair
   * kernel at the graded M=256 shape through [[graft.operators.PairPlan]]'s
@@ -111,39 +122,98 @@ object Bench {
     * ADVICE r13 #3); `jobs`/`taskS` = Spark jobs launched / total task
     * time, the channel that separates executor work from driver-side
     * scheduling latency (a wall inflation with flat taskS is session
-    * scatter, not a plan change — VERDICT r13 #1 streaming band). */
+    * scatter, not a plan change — VERDICT r13 #1 streaming band).
+    * `build`/`plan`/`jobS`/`slowJob` split the wall (see [[JobStats]]);
+    * they come from the median-wall run, not per-field medians, so they
+    * add up within one run. */
   private final case class Q(wall: Double, cpu: Double, busy: Double,
       io: Double, jit: Double, gc: Double, memoB: Double = 0.0,
       memoH: Double = 0.0, jobs: Double = 0.0, taskS: Double = 0.0,
-      firstWall: Double = -1.0)
+      build: Double = -1.0, plan: Double = -1.0, jobS: Double = -1.0,
+      slowJob: String = "", firstWall: Double = -1.0)
 
-  /** Session-wide job/task accounting for the per-run channel above.
+  /** Session-wide job/task accounting for the per-run channels above:
+    * jobs launched, task time, and each job's interval and call site (its
+    * SQL execution's, e.g. `parquet at StreamingOps.scala:1144` — AQE
+    * submits stage jobs from a pool thread whose own call site names no
+    * graft line — else its result stage's name).
     * Listener events post asynchronously; by the time a run's collect()
     * returns all its tasks have ended, so any bus lag only shifts a few
-    * events across run boundaries — noise the median absorbs. */
+    * task events across run boundaries — noise the median absorbs — and
+    * [[split]] waits briefly for the run's job-end events. */
   private object JobStats extends org.apache.spark.scheduler.SparkListener {
-    private val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    private final case class Job(start: Long, site: String, end: Long = -1L)
+    private val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     private val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
+    /** SQL execution id → call site. */
+    private val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+      e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execSites.put(x.executionId.toString, x.description.linesIterator
+            .map(_.trim).find(_.nonEmpty).getOrElse("")); ()
+        case _ => ()
+      }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(execSites.get(id)))
+      val site = exec.getOrElse(
+        if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
+      jobs.put(e.jobId, Job(e.time, site)); ()
     }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      jobs.computeIfPresent(e.jobId, (_, j) => j.copy(end = e.time)); ()
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       ()
     }
-    def reset(): Unit = { jobs.set(0L); taskMs.set(0L) }
-    def snapshot(): (Long, Double) = (jobs.get, taskMs.get / 1e3)
+    def reset(): Unit = { jobs.clear(); execSites.clear(); taskMs.set(0L) }
+    def snapshot(): (Long, Double) = (jobs.size.toLong, taskMs.get / 1e3)
+
+    /** Split one run's wall, given its phase boundaries in epoch ms — the
+      * clock listener events carry — [t0, t1) build (`fn(spark, sf)`),
+      * [t1, t2) planning (the sink's `executedPlan`), [t2, t3) execution:
+      * (build_s, plan_s, job_s, slow job). `job_s` is the time at least
+      * one job ran (the union of job intervals, so AQE's concurrent stage
+      * jobs count once), and `build_s`/`plan_s` are their phases' time
+      * outside any job, so wall − build_s − plan_s − job_s is the
+      * execution phase's driver gap. A job still open at t3 counts to t3. */
+    def split(t0: Long, t1: Long, t2: Long, t3: Long): (Double, Double, Double, String) = {
+      import scala.jdk.CollectionConverters._
+      val deadline = System.currentTimeMillis() + 500L
+      while (jobs.values.asScala.exists(_.end < 0) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(5L)
+      val js = jobs.values.asScala.toSeq
+        .map(j => j.copy(start = math.max(j.start, t0),
+          end = math.min(if (j.end < 0) t3 else j.end, t3)))
+        .filter(j => j.end > j.start)
+      // merged job intervals, then their overlap with [a, b)
+      val merged = js.map(j => (j.start, j.end)).sorted
+        .foldLeft(List.empty[(Long, Long)]) {
+          case ((s0, e0) :: rest, (s, e)) if s <= e0 => (s0, math.max(e0, e)) :: rest
+          case (acc, iv) => iv :: acc
+        }
+      def covered(a: Long, b: Long): Long =
+        merged.map { case (s, e) => math.max(0L, math.min(e, b) - math.max(s, a)) }.sum
+      val slow = js.maxByOption(j => j.end - j.start)
+        .fold("")(j => s"${j.site} ${r3((j.end - j.start) / 1e3)}s")
+      (((t1 - t0) - covered(t0, t1)) / 1e3, ((t2 - t1) - covered(t1, t2)) / 1e3,
+        covered(t0, t3) / 1e3, slow)
+    }
   }
 
-  private def force(df: DataFrame): Unit = {
+  /** The hash-sum sink over ALL output columns (header doc). */
+  private def sink(df: DataFrame): DataFrame =
     // cast to double before summing: ANSI mode (Spark 4 default) would throw
     // on long overflow of summed hashes
-    val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-    df.select(h.cast("double").as("h")).agg(sum(col("h"))).collect()
-    ()
-  }
+    df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("double").as("h"))
+      .agg(sum(col("h")))
+
+  private def force(df: DataFrame): Unit = { sink(df).collect(); () }
 
   /** (busy, total) jiffies from /proc/stat line 1; busy = total − idle −
     * iowait. Two samples bracket the bench → machine-wide busy fraction. */
@@ -176,14 +246,14 @@ object Bench {
 
   /** Cumulative JIT compilation milliseconds (CompilationMXBean); -1 if the
     * JVM does not support compilation-time monitoring. */
-  private[graft] def jitMs(): Long = {
+  private def jitMs(): Long = {
     val b = java.lang.management.ManagementFactory.getCompilationMXBean
     if (b != null && b.isCompilationTimeMonitoringSupported)
       b.getTotalCompilationTime else -1L
   }
 
   /** Cumulative GC milliseconds summed over all collectors. */
-  private[graft] def gcMs(): Long = {
+  private def gcMs(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(b => math.max(b.getCollectionTime, 0L)).sum
@@ -194,7 +264,7 @@ object Bench {
     * code cache silently disables compilation mid-suite — the leading
     * candidate for the r11 artifact's 5-7× CPU inflation — so the artifact
     * records occupancy at suite end. */
-  private[graft] def codeCache(): (Long, Long) = {
+  private def codeCache(): (Long, Long) = {
     import scala.jdk.CollectionConverters._
     val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
       .asScala.filter(p =>
@@ -204,40 +274,44 @@ object Bench {
     (used, max)
   }
 
-  /** Per-query committed walls from the repo's bench_latest.json (the quiet
-    * record this run's medians are sanity-checked against for the one-shot
-    * re-measure) — empty when the record ran at another `local[N]` width
-    * than `cpus`, whose walls are no reference. The file is our own
-    * controlled format — the `"queries"` object is flat `"name":number`
-    * pairs — so a regex parse is exact. */
-  private def committedWalls(cpus: Int): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_latest.json")), "UTF-8")
-      val start = txt.indexOf("\"queries\":{")
-      if (start < 0 || !txt.contains(s"\"cores\":$cpus,")) Map.empty
-      else {
-        val body = txt.substring(start + 11, txt.indexOf('}', start))
-        raw""""([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+  /** The repo's committed bench_latest.json record ("" if absent): the
+    * quiet reference this run is sanity-checked against. */
+  private def committedRecord(): String =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench_latest.json")), "UTF-8")
+    catch { case _: Throwable => "" }
 
-  /** Per-kernel COMMITTED quiet wall ratios from bench_latest.json — the
+  /** Per-query walls of a committed `record` (the quiet walls this run's
+    * medians are checked against for the one-shot re-measure) — empty
+    * when the record ran at another `local[N]` width than `cpus`, whose
+    * walls are no reference. The record is our own controlled format —
+    * the `"queries"` object is flat `"name":number` pairs and comes
+    * first — so a regex parse is exact. */
+  private[graft] def committedWalls(record: String, cpus: Int): Map[String, Double] = {
+    val start = record.indexOf("\"queries\":{")
+    if (start < 0 || !record.contains(s"\"cores\":$cpus,")) Map.empty
+    else {
+      val body = record.substring(start + 11, record.indexOf('}', start))
+      raw""""([^"]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }
+  }
+
+  /** Per-kernel COMMITTED quiet wall ratios of a committed `record` — the
     * in-artifact quiet reference VERDICT r15 #6 asks for: the live
     * kernel_ratio is measured under whatever contention the driver's
     * window carries (three rounds running it has exceeded the quiet band
-    * under busy ≈ 0.2), so the artifact now carries the committed quiet
-    * ratio NEXT TO the live one and self-explains the discrepancy. Same
-    * controlled-format regex stance as [[committedWalls]]. */
-  private def committedKernelRatios(): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_latest.json")), "UTF-8")
+    * under busy ≈ 0.2), so the artifact carries the committed quiet ratio
+    * NEXT TO the live one and self-explains the discrepancy. Empty at
+    * another `cores`, and the same controlled-format regex stance as
+    * [[committedWalls]]. */
+  private[graft] def committedKernelRatios(record: String,
+                                           cpus: Int): Map[String, Double] =
+    if (!record.contains(s"\"cores\":$cpus,")) Map.empty
+    else
       raw""""(\w+)":\{"blocked":[-0-9.]+,"broadcast":[-0-9.]+,"ratio":([-0-9.]+)""".r
-        .findAllMatchIn(txt)
+        .findAllMatchIn(record)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -268,22 +342,23 @@ object Bench {
     val ratios = scala.collection.mutable
       .LinkedHashMap[String, (Double, Double, Double, Double, Int)]()
     val stat0 = procStat()
-    val committed = committedWalls(cpus)
+    val record = committedRecord()
+    val committed = committedWalls(record, cpus)
 
-    /** 1 warmup + [[Runs]] timed runs of `f`; per-run (wall, cpu,
-      * machine-busy fraction, io-stall fraction, JIT-ms delta, GC-time
-      * fraction — each over exactly that run's window), median each —
-      * unavailable-sample sentinels (-1) dropped BEFORE the
-      * busy/io/jit/gc medians (a lone sentinel among real fractions must
-      * not drag the median to a meaningless negative). */
-    def sample(f: () => Unit): Q = {
+    /** 1 warmup + [[Runs]] timed runs of `build` forced through the sink;
+      * per-run (wall, cpu, machine-busy fraction, io-stall fraction,
+      * JIT-ms delta, GC-time fraction — each over exactly that run's
+      * window), median each — unavailable-sample sentinels (-1) dropped
+      * BEFORE the busy/io/jit/gc medians (a lone sentinel among real
+      * fractions must not drag the median to a meaningless negative). */
+    def sample(build: () => DataFrame): Q = {
       // memo honesty (see Caching.sessionMemo): runs may REUSE artifacts
       // earlier queries memoized, but each timed run must recompute this
       // query's OWN memo contributions — restore to the pre-sample key set
       // before every run so a hit on self-produced state can't masquerade
       // as the query's wall.
       val memoSnap = graft.operators.Caching.memoKeys()
-      f() // warmup (codegen + JIT + file listing)
+      force(build()) // warmup (codegen + JIT + file listing)
       spark.catalog.clearCache()
       val runs = (1 to Runs).map { _ =>
         graft.operators.Caching.memoDropNewerThan(memoSnap)
@@ -295,14 +370,19 @@ object Bench {
         val g0 = gcMs()
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
-        f()
+        val e0 = System.currentTimeMillis()
+        val sunk = sink(build())
+        val e1 = System.currentTimeMillis()
+        sunk.queryExecution.executedPlan
+        val e2 = System.currentTimeMillis()
+        sunk.collect()
         val wall = (System.nanoTime() - t0) / 1e9
+        val e3 = System.currentTimeMillis()
         val cpu = (osBean.getProcessCpuTime - c0) / 1e9
         val s1 = procStat()
         val io1 = ioStallUs()
         val (nJobs, taskS) = JobStats.snapshot()
-        val memoB = graft.operators.Caching.memoWindowBuildS
-        val memoH = graft.operators.Caching.memoWindowHits.toDouble
+        val (buildS, planS, jobS, slowJob) = JobStats.split(e0, e1, e2, e3)
         val busy = if (s1._2 > s0._2)
           (s1._1 - s0._1).toDouble / (s1._2 - s0._2) else -1.0
         val io = if (io0 >= 0 && io1 >= io0 && wall > 0)
@@ -310,13 +390,17 @@ object Bench {
         val jit = if (j0 >= 0) (jitMs() - j0).toDouble else -1.0
         val gc = if (wall > 0) (gcMs() - g0) / (wall * 1e3) else -1.0
         spark.catalog.clearCache() // next run repopulates its own caches
-        (wall, cpu, busy, io, jit, gc, memoB, memoH, nJobs.toDouble, taskS)
+        Q(wall, cpu, busy, io, jit, gc,
+          graft.operators.Caching.memoWindowBuildS,
+          graft.operators.Caching.memoWindowHits.toDouble, nJobs.toDouble,
+          taskS, buildS, planS, jobS, slowJob)
       }
-      Q(median(runs.map(_._1)), median(runs.map(_._2)),
-        medianValid(runs.map(_._3)), medianValid(runs.map(_._4)),
-        medianValid(runs.map(_._5)), medianValid(runs.map(_._6)),
-        median(runs.map(_._7)), median(runs.map(_._8)),
-        median(runs.map(_._9)), median(runs.map(_._10)))
+      val mid = runs.sortBy(_.wall).apply(runs.size / 2)
+      mid.copy(cpu = median(runs.map(_.cpu)),
+        busy = medianValid(runs.map(_.busy)), io = medianValid(runs.map(_.io)),
+        jit = medianValid(runs.map(_.jit)), gc = medianValid(runs.map(_.gc)),
+        memoB = median(runs.map(_.memoB)), memoH = median(runs.map(_.memoH)),
+        jobs = median(runs.map(_.jobs)), taskS = median(runs.map(_.taskS)))
     }
 
     // the reference's relative-speed report (full runs only): blocked
@@ -430,7 +514,7 @@ object Bench {
         results(name) =
           try {
             val preQuery = graft.operators.Caching.memoKeys()
-            val first = sample(() => force(fn(spark, sfDir)))
+            val first = sample(() => fn(spark, sfDir))
             // one-shot flagged re-measure (VERDICT r11 "Next" #2): a median
             // wall >2× the committed quiet record — and above a 0.75 s
             // floor so sub-second queries can't trip on scheduler noise —
@@ -444,8 +528,7 @@ object Bench {
               // the first sample left this query's memo entries behind —
               // drop them so the re-measure is not a self-hit
               graft.operators.Caching.memoDropNewerThan(preQuery)
-              sample(() => force(fn(spark, sfDir)))
-                .copy(firstWall = first.wall)
+              sample(() => fn(spark, sfDir)).copy(firstWall = first.wall)
             } else first
           } catch {
             case e: Throwable =>
@@ -478,6 +561,16 @@ object Bench {
         s"\"$k\":${math.rint(q.jobs).toLong}" }.mkString("{", ",", "}")
       val ts = results.map { case (k, q) => s"\"$k\":${r3(q.taskS)}" }
         .mkString("{", ",", "}")
+      val bd = results.map { case (k, q) => s"\"$k\":${r3(q.build)}" }
+        .mkString("{", ",", "}")
+      val pl = results.map { case (k, q) => s"\"$k\":${r3(q.plan)}" }
+        .mkString("{", ",", "}")
+      val jw = results.map { case (k, q) => s"\"$k\":${r3(q.jobS)}" }
+        .mkString("{", ",", "}")
+      // rows that launched no job have no slowest job
+      val sj = results.collect { case (k, q) if q.slowJob.nonEmpty =>
+        s"\"$k\":\"${q.slowJob.replace("\\", "\\\\").replace("\"", "\\\"")}\"" }
+        .mkString("{", ",", "}")
       // only the rows that tripped the 3× trigger, with their FIRST wall
       // (the official "queries" value is the re-measured one)
       val rm = results.collect { case (k, q) if q.firstWall >= 0 =>
@@ -487,9 +580,9 @@ object Bench {
         s""""$k":{"blocked":${r3(bl)},"broadcast":${r3(br)},"ratio":${
           r3(wr)},"cpu_ratio":${r3(cr)},"n_clean_pairs":$nc}"""
       }.mkString("{", ",", "}")
-      // committed quiet reference next to the live ratios (read BEFORE
-      // this run's bench_latest.json write below overwrites the record)
-      val krQuietMap = committedKernelRatios()
+      // committed quiet reference next to the live ratios (the record as
+      // read at start, before this run's write below overwrites it)
+      val krQuietMap = committedKernelRatios(record, cpus)
       val krq = ratios.keys.flatMap(k => krQuietMap.get(k).map(v =>
         s""""$k":${r3(v)}""")).mkString("{", ",", "}")
       val ok = results.values.map(_.wall).filter(_ >= 0)
@@ -505,7 +598,7 @@ object Bench {
       // bench_latest.json so the next driver run reads n_unguarded: 0
       val nUnguarded = results.keys.count(k => !committed.contains(k))
       val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":$cpus,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"build_s":$bd,"plan_s":$pl,"job_s":$jw,"slow_job":$sj,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":$cpus,"sf":"$sfDir"}"""
       println(line)
       Console.out.flush()
       System.err.println(line) // second channel in case stdout tail is clipped

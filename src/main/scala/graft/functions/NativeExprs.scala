@@ -656,7 +656,7 @@ case class DotProductFloat(left: Expression, right: Expression)
 
 /** JVM-static kernel for word n-gram 60-bit hashes over a token array —
   * the decontamination shingle step gets the same native treatment as the
-  * minhash/simhash kernels (VERDICT r5 #7: `curate` was the one ScaleSmoke
+  * minhash/simhash kernels (VERDICT r5 #7: `curate` was the one 10×-replica
   * stage whose 10× ratio tracked data, because its md5 shingling ran
   * through the interpreted `transform` HOF while every other
   * corpus-linear kernel is codegen'd).

@@ -32,7 +32,14 @@ object Attention {
   /** q: (q_id, qvec); kv: (k_id, kvec, vvec). Returns (q_id, z, out) where
     * z = logsumexp of scores and out = softmax-weighted mean of vvec.
     * Distribution via [[PairPlan]] — Auto picks broadcast vs the blocked
-    * 2-D grid from the query side's size estimate. */
+    * 2-D grid from the query side's size estimate. [[PairPlan.Blocked]] is
+    * the path for LARGE M, where the query side cannot be broadcast: its
+    * tile-keyed `SHUFFLE_HASH` equi-join builds the (q-tile × kv-tile)
+    * task grid that IS the reference's 2-D chunk loop
+    * (gemm_map_reduce_attention.cpp:97-124), and partial aggregation
+    * reduces the (q row, kv-tile) folds to per-q monoid buffers before the
+    * only remaining shuffle (O(M × kv-tiles) buffers, never the M×N score
+    * matrix). */
   def attention(q: DataFrame, kv: DataFrame, scale: Boolean = false,
                 mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
     fold(q, kv, scale, causal = false, mode)
@@ -109,18 +116,6 @@ object Attention {
   def attentionCausal(q: DataFrame, kv: DataFrame, scale: Boolean = false,
                       mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
     fold(q, kv, scale, causal = true, mode)
-
-  /** Blocked 2-D path for LARGE M, where broadcasting the query side is
-    * impossible (the round-1 gap: every plan assumed q fits a broadcast).
-    * [[PairPlan.Blocked]]'s tile-keyed `SHUFFLE_HASH` equi-join builds the
-    * (q-tile × kv-tile) task grid that IS the reference's 2-D chunk loop
-    * (gemm_map_reduce_attention.cpp:97-124) — each task streams one
-    * q-block against one packed kv-tile inside whole-stage codegen, folds
-    * each (q row, kv-tile) to one monoid value, and partial aggregation
-    * reduces those to per-q monoid buffers before the only remaining
-    * shuffle (O(M × kv-tiles) buffers, never the M×N score matrix). */
-  def attentionBlocked(q: DataFrame, kv: DataFrame, scale: Boolean = false): DataFrame =
-    attention(q, kv, scale, PairPlan.Blocked)
 
   /** BATCHED attention (reference custom_attention.cpp:9-24: the C++ SDPA
     * accepts ≥2-D inputs and iterates the leading batch dims; each batch

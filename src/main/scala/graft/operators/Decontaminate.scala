@@ -36,7 +36,7 @@ object Decontaminate {
   /** 60-bit hashes of the doc's word-level N-gram shingles; documents
     * shorter than N tokens contribute their single full-text shingle.
     * Codegen'd native kernel (VERDICT r5 #7: the interpreted
-    * `transform`+hash60 HOF made `curate` the one ScaleSmoke stage whose
+    * `transform`+hash60 HOF made `curate` the one 10×-replica stage whose
     * cost tracked data — same interpreter-overhead profile the minhash and
     * simhash kernels already shed). Bit-identical to the previous
     * `transform(sequence(1, greatest(n-${N - 1}, 1)),
@@ -52,7 +52,7 @@ object Decontaminate {
     // few-splits guard as every other corpus-linear kernel (Dedup.fanOut):
     // no-op on a many-split cluster, keeps the per-byte work off 1-2 cores
     // on compacted/fixture inputs (VERDICT r5 #7: `curate` was the one
-    // ScaleSmoke stage without it, and the one superlinear ratio)
+    // 10×-replica stage without it, and the one superlinear ratio)
     flagFromToks(
       PairPlan.fanOut(docs)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks")),

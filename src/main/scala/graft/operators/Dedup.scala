@@ -242,17 +242,7 @@ object Dedup {
     * stays constant. This is the standard scalable CC formulation
     * (label propagation; large-star/small-star is the same idea with
     * per-iteration re-wiring). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsWithRounds(edges, maxIter)._1
-
-  /** [[connectedComponents]] plus the number of jump+propagate rounds the
-    * loop actually ran before the label-sum fixpoint — the observable the
-    * graph ScaleSmoke probe grades: with pointer jumping, rounds grow as
-    * O(log diameter), so a replicated corpus should converge in the SAME
-    * few rounds; round growth with corpus size flags a diameter-shaped
-    * scale risk no wall-clock ratio would attribute. */
-  private[graft] def connectedComponentsWithRounds(
-      edges: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // materialize the edge list ONCE, then derive both union directions
     // from the cached copy — a lazy cache on the union would recompute the
     // whole upstream pairs pipeline per branch (two scans race before
@@ -315,7 +305,7 @@ object Dedup {
       i += 1
     }
     e.unpersist()
-    (labels, i)
+    labels
   }
 
   /** Duplicate CLUSTERS (the step exact-dedup users actually want from

@@ -72,7 +72,7 @@ object Pq {
     * encode/LUT expressions UNROLL over literal centroids: codegen'd
     * native dots instead of interpreted higher-order-function lambdas —
     * the "hoist if assignment CPU dominates" note on
-    * [[Similarity.nearestList]], applied (ScaleSmoke: the HOF form spent
+    * [[Similarity.nearestList]], applied (at 10× replicas the HOF form spent
     * 4.5 s encoding 80k vectors; the driver-side fold in PqSpec already
     * proved Scala and engine dots produce identical doubles). */
   private def collectCb(cb: DataFrame): IndexedSeq[IndexedSeq[(Long, Array[Double])]] = {

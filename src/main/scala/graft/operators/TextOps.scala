@@ -351,7 +351,7 @@ object TextOps {
     // t >= CdcN guard keeps element_at in range under ANSI. Computed
     // ARRAY-side so chunk assembly is pure map work — a token-level
     // explode + per-doc window + collect_list did the same thing with a
-    // full token-row sort per document (ScaleSmoke measured it the worst
+    // full token-row sort per document (a 10× replica run measured it the worst
     // ratio of the corpus-linear stages; this form removes every
     // pre-aggregation shuffle).
     val bpos = filter(sequence(lit(0), n - 1),

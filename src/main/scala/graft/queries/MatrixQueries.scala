@@ -243,9 +243,9 @@ object MatrixQueries {
   /** Full-M self-attention through the non-broadcast blocked (2-D tiled)
     * path — proves the plan works with the query-side cap lifted. */
   private def attentionBigQuery(s: SparkSession, dir: String): DataFrame =
-    Attention.attentionBlocked(
+    Attention.attention(
       emb(s, dir).select(col("vec_id").as("q_id"), col("vec").as("qvec")),
-      kvSide(s, dir))
+      kvSide(s, dir), mode = PairPlan.Blocked)
       .select(col("q_id"), posexplode(col("out")))
       .select(col("q_id"), col("pos").cast("long").as("d"),
         VecOps.qround(col("col"), 4).as("v"))

@@ -1008,13 +1008,9 @@ object RelationalQueries {
     * AGGREGATE, not the fact table; at 100 TB the cuts come from the GK
     * sketch family (`quality_logreg_apply_gk` grades that swap) and the
     * scores become broadcast range lookups. */
-  private def customerRfm(s: SparkSession, dir: String): DataFrame =
-    customerRfmFrom(Tables.orders(s, dir))
-
-  /** [[customerRfm]] over an explicit orders frame (ScaleSmoke probe). */
-  private[graft] def customerRfmFrom(orders: DataFrame): DataFrame = {
+  private def customerRfm(s: SparkSession, dir: String): DataFrame = {
     val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long")
-    val per = orders.groupBy(col("o_custkey"))
+    val per = Tables.orders(s, dir).groupBy(col("o_custkey"))
       .agg(max(unix_timestamp(col("o_orderdate"))).as("last_s"),
         count(lit(1)).as("freq"), sum(cents).as("money_cents"))
     val scored = per
@@ -1153,26 +1149,19 @@ object RelationalQueries {
     * division. Shape: one map-combined fact aggregate to |suppliers|
     * rows, three broadcast dim joins, one keyed window + final aggregate
     * — the fact table is scanned once. */
-  private def supplierHhi(s: SparkSession, dir: String): DataFrame =
-    supplierHhiFrom(Tables.lineitem(s, dir), Tables.supplier(s, dir),
-      Tables.nation(s, dir), Tables.region(s, dir))
-
-  /** [[supplierHhi]] over explicit frames (ScaleSmoke probe). */
-  private[graft] def supplierHhiFrom(lineitem: DataFrame, supplier: DataFrame,
-                                     nation: DataFrame,
-                                     region: DataFrame): DataFrame = {
+  private def supplierHhi(s: SparkSession, dir: String): DataFrame = {
     val revMicro = floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       * lit(10000.0) + lit(0.5)).cast("long")
-    val perSup = lineitem
+    val perSup = Tables.lineitem(s, dir)
       .select(col("l_suppkey"), revMicro.as("rv"))
       .groupBy(col("l_suppkey")).agg(sum(col("rv")).as("rev"))
-      .join(broadcast(supplier
+      .join(broadcast(Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_nationkey"))),
         col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(nation
+      .join(broadcast(Tables.nation(s, dir)
         .select(col("n_nationkey"), col("n_regionkey"))),
         col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(region
+      .join(broadcast(Tables.region(s, dir)
         .select(col("r_regionkey"), col("r_name"))),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("r_name").as("region"), col("rev"))
@@ -1224,12 +1213,8 @@ object RelationalQueries {
     * Shape: one map-combined (customer, month) distinct, one |customers|
     * aggregate for the cohort, one broadcast-scale join back, one final
     * aggregate — the fact table is scanned once. */
-  private def ordersCohort(s: SparkSession, dir: String): DataFrame =
-    ordersCohortFrom(Tables.orders(s, dir))
-
-  /** [[ordersCohort]] over an explicit orders frame (ScaleSmoke probe). */
-  private[graft] def ordersCohortFrom(orders: DataFrame): DataFrame = {
-    val o = orders
+  private def ordersCohort(s: SparkSession, dir: String): DataFrame = {
+    val o = Tables.orders(s, dir)
       .select(col("o_custkey"), date_trunc("MONTH", col("o_orderdate")).as("m"))
       .distinct()
     val first = o.groupBy(col("o_custkey")).agg(min(col("m")).as("cohort"))

@@ -450,21 +450,11 @@ object SimilarityQueries {
     * graded, one token-explode shuffle joined against the |docs|-row
     * assignment (broadcastable here, bucketed at 100 TB), one windowed
     * top-k per cluster over the (topic, token) aggregate. */
-  private def docsTopics(s: SparkSession, dir: String): DataFrame =
-    docsTopicsFrom(Tables.documents(s, dir), emb(s, dir),
-      Some(trainedCentsMemo(s, dir)))
-
-  /** [[docsTopics]] over explicit documents/embeddings frames — the
-    * ScaleSmoke probe entry (docs and vectors replicate in lockstep,
-    * vec_id tracking doc_id, like the hybrid_rrf probe; the probe trains
-    * its own quantizer so the measured chain includes training). The
-    * registry entry passes the session-memoized trained centroids. */
-  private[graft] def docsTopicsFrom(docs: DataFrame, e: DataFrame,
-                                    centsOpt: Option[DataFrame] = None): DataFrame = {
+  private def docsTopics(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val kv = e.select(col("vec_id").as("k_id"), col("vec").as("kvec"))
-    val cents = centsOpt.getOrElse(Similarity.kmeansTrainedCentroids(kv,
-      Similarity.ivfCentroids(e), KmIters))
+    val docs = Tables.documents(s, dir)
+    val kv = emb(s, dir).select(col("vec_id").as("k_id"), col("vec").as("kvec"))
+    val cents = trainedCentsMemo(s, dir)
     val asn = Similarity.ivfAssign(kv, cents)
       .select(col("k_id").as("doc_id"), col("list_id").as("topic"))
     val toks = docs.select(col("doc_id"),

@@ -33,7 +33,10 @@ import graft.functions.{GraftAggs, VecOps}
   *     keys present in the batch.
   *
   * The stateless append-only streams write through Spark's parquet file
-  * sink, whose `_spark_metadata` log makes them exactly-once as well.
+  * sink, whose `_spark_metadata` log makes them exactly-once as well. The
+  * stateless streams that need a batch action per trigger (ingest dedup,
+  * IVF ingest and serve, grep) overwrite their own `batch=<id>` path from
+  * `foreachBatch`, so a replayed batch rewrites identical output.
   */
 object StreamingOps {
 
@@ -870,7 +873,10 @@ object StreamingOps {
     * deployment shape: queries arrive continuously, the index is a
     * static asset, and each trigger's search scan is pruned to the
     * probed lists. Stateless stream — no watermark, no state store; the
-    * only state is the checkpoint's file offset (restart-safe). */
+    * only state is the checkpoint's file offset. Each batch OVERWRITES
+    * its own `batch=<id>` path (as [[dedupIngestStream]] does), so a batch
+    * replayed after a crash rewrites its answers instead of appending
+    * them twice. */
   def ivfServeStream(spark: SparkSession, dir: String, queries: DataFrame,
                      k: Int): DataFrame = {
     import graft.operators.Similarity
@@ -893,19 +899,19 @@ object StreamingOps {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         Similarity.ivfSearchIndex(inv, batch, cents, k)
-          .write.mode("append").parquet(out)
+          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
       }
       .start()
     q.awaitTermination()
-    spark.read.parquet(out)
+    spark.read.parquet(out).drop("batch")
   }
 
   /** STREAMING PHRASE ALERTING — the text twin of [[ivfServeStream]]:
     * documents arrive as micro-batches and each batch is grepped for the
     * (static, broadcast) phrase list in foreachBatch; per-doc matches are
-    * independent across documents, so the appended match sets union to
+    * independent across documents, so the per-batch match sets union to
     * exactly the batch [[graft.operators.PhraseIndex.matches]] over the
     * full corpus and the rollup grades against grep_phrase's own oracle.
     * The ingest-pipeline deployment shape: "page me when a contaminated /
@@ -913,34 +919,48 @@ object StreamingOps {
     * state store. */
   def grepStream(spark: SparkSession, dir: String,
                  phrases: DataFrame): DataFrame = {
-    import graft.operators.PhraseIndex
     val staging = graft.sources.Scratch.dir("graft_grepstream_src")
     val out = graft.sources.Scratch.dir("graft_grepstream_out")
     val ckpt = graft.sources.Scratch.dir("graft_grepstream_ckpt")
     graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .repartition(4).write.mode("overwrite").parquet(staging)
     val schema = spark.read.parquet(staging).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(staging)
-      .writeStream
+    startGrepStream(phrases)(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "2").parquet(staging),
+      out, ckpt, Trigger.AvailableNow()).awaitTermination()
+    graft.operators.PhraseIndex.phraseStats(readGrepSink(spark, out), phrases)
+  }
+
+  /** Start the phrase grep over any streaming (doc_id, text) source. Each
+    * batch OVERWRITES its own `out/batch=<id>` path (as
+    * [[dedupIngestStream]] does), so a batch replayed after a crash
+    * rewrites its matches instead of appending them twice. */
+  def startGrepStream(phrases: DataFrame)(rows: DataFrame, out: String,
+      ckpt: String, trigger: Trigger): StreamingQuery =
+    rows.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        PhraseIndex.matches(batch, phrases).write.mode("append").parquet(out)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.operators.PhraseIndex.matches(batch, phrases)
+          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
       }
       .start()
-    q.awaitTermination()
-    PhraseIndex.phraseStats(spark.read.parquet(out), phrases)
-  }
+
+  /** The matches a [[startGrepStream]] sink holds, without the
+    * discovered `batch` partition column. */
+  def readGrepSink(spark: SparkSession, out: String): DataFrame =
+    spark.read.parquet(out).drop("batch")
 
   /** STREAMING MEDIA INGEST — the multimodal twin of [[grepStream]]:
     * media items arrive as micro-batches and each batch's binary payloads
     * are DECODED AT ARRIVAL by the same real RIFF/WAVE byte parser the
-    * batch path uses ([[graft.operators.Multimodal.wavFeatures]] inside
-    * foreachBatch). Per-item decode is independent, so the appended
-    * feature rows union to exactly the batch decode over the full corpus
-    * and the stream grades against `media_audio`'s own oracle. This is
+    * batch path uses ([[graft.operators.Multimodal.wavFeatures]], a
+    * per-partition map, so it runs on the stream itself and drains
+    * through [[drainToParquet]]'s exactly-once file sink). Per-item
+    * decode is independent, so the feature rows union to exactly the
+    * batch decode over the full corpus and the stream grades against
+    * `media_audio`'s own oracle. This is
     * the crawl-ingest deployment shape for media: featurize/validate
     * each arriving blob once, on arrival, instead of re-scanning the
     * archive — stateless, no watermark, file-offset checkpoint only. */
@@ -951,18 +971,10 @@ object StreamingOps {
     graft.sources.Tables.documents(spark, dir).select(col("doc_id"))
       .repartition(4).write.mode("overwrite").parquet(staging)
     val schema = spark.read.parquet(staging).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(staging)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Multimodal.wavFeatures(batch)
-          .write.mode("append").parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    drainToParquet(graft.operators.Multimodal.wavFeatures(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "2").parquet(staging)),
+      out, ckpt)
     spark.read.parquet(out)
   }
 

@@ -96,7 +96,7 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // since r13 the tile grid is a SHUFFLE_HASH equi-join on the tile key
     // (codegen-friendly, unlike CartesianProductExec — VERDICT r12 #4);
     // it must never silently degrade to a broadcast join
-    val plan = physicalPlan(Attention.attentionBlocked(q, kv))
+    val plan = physicalPlan(Attention.attention(q, kv, mode = PairPlan.Blocked))
     assert(plan.contains("ShuffledHashJoin"),
       s"expected ShuffledHashJoin tile grid in:\n$plan")
     assert(!plan.contains("BroadcastExchange"),

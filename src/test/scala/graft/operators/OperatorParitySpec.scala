@@ -74,7 +74,8 @@ class OperatorParitySpec extends AnyFunSuite {
 
   test("blocked (2-D tiled) attention equals the broadcast plan") {
     val a = collectAttention(Attention.attention(qSide, kvSide))
-    val b = collectAttention(Attention.attentionBlocked(qSide, kvSide))
+    val b = collectAttention(
+      Attention.attention(qSide, kvSide, mode = PairPlan.Blocked))
     assert(a.keySet == b.keySet)
     for ((k, (v, z)) <- a) {
       assert(approx(v, b(k)._1, 1e-8))

@@ -22,6 +22,12 @@ class PairPlanSpec extends AnyFunSuite {
     .map(i => (i, Array.fill(4)(1.0 / (i + 1)), Array.fill(2)(i * 1.0)))
     .toDF("k_id", "kvec", "vvec")
 
+  /** A random (id, value) row; ids repeat, so sides carry duplicates. */
+  private val row = for {
+    id <- Gen.choose(-3L, 40L)
+    v <- Gen.choose(-2, 2).map(_ * 0.5)
+  } yield (id, v)
+
   private def planOf(mode: PairPlan.Mode): String =
     Attention.attention(q, kv, scale = false, mode)
       .queryExecution.executedPlan.toString
@@ -97,10 +103,6 @@ class PairPlanSpec extends AnyFunSuite {
   test("tiles holds cross's pair multiset under all three modes, on random " +
       "sides with duplicates and empty sides, at 1 and 7 partitions; a tile " +
       "id never names two tiles within a task") {
-    val row = for {
-      id <- Gen.choose(-3L, 40L)
-      v <- Gen.choose(-2, 2).map(_ * 0.5)
-    } yield (id, v)
     val prop = Prop.forAll(Gen.listOf(row), Gen.listOf(row)) { (bs, ss) =>
       val small = ss.take(12).toDF("q_id", "qv")
       (Seq(1, 7).forall { n =>
@@ -120,10 +122,6 @@ class PairPlanSpec extends AnyFunSuite {
 
   test("cross: the Broadcast and Blocked arms give one pair multiset on " +
       "random sides, 1 to 7 partitions each, empty sides included") {
-    val row = for {
-      id <- Gen.choose(-3L, 40L)
-      v <- Gen.choose(-2, 2).map(_ * 0.5)
-    } yield (id, v)
     val parts = Gen.choose(1, 7)
     val prop = Prop.forAll(Gen.listOf(row), Gen.listOf(row), parts, parts) {
       (bs, ss, nb, ns) =>
@@ -135,6 +133,24 @@ class PairPlanSpec extends AnyFunSuite {
     }
     val res = org.scalacheck.Test.check(
       org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("fanOut keeps the row multiset; fewer input partitions than the " +
+      "target fan out to at least the target, otherwise the input is returned") {
+    def multiset(df: DataFrame): Map[(Long, Double), Int] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    val prop = Prop.forAll(Gen.listOf(row), Gen.choose(1, 7), Gen.choose(1, 8)) {
+      (rs, n, t) =>
+        val df = rs.toDF("k_id", "kv").repartition(n)
+        val in = df.rdd.getNumPartitions
+        val out = PairPlan.fanOut(df, t)
+        multiset(out) == multiset(df) &&
+          (if (in < t) out.rdd.getNumPartitions >= t else out eq df)
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status)
   }
 
