@@ -71,13 +71,14 @@ case class DotProduct(left: Expression, right: Expression)
 
 /** One packed tile of `PairPlan.tiles` (`__tile: array<struct>`) decoded
   * into flat primitive arrays: per row an optional id, a dot-product
-  * vector (ragged widths allowed, as in [[DotProduct]]) and a value vector
-  * (one width per tile). A fold decodes a tile when its id differs from
-  * the last one and scores every query row against the flat arrays: the
-  * Broadcast arm streams each chunk's rows consecutively, and a Blocked
-  * task holds one tile whenever the grid fits the shuffle partitions
-  * (beyond that a task's tiles interleave and a tile is decoded again
-  * when its id comes back).
+  * vector (ragged widths allowed, as in [[DotProduct]]) and an optional
+  * value vector (one width per tile); a negative id or value ordinal
+  * reads no such field, and its ids or values count as null. A fold
+  * decodes a tile when its id differs from the last one and scores every
+  * query row against the flat arrays: the Broadcast arm streams each
+  * chunk's rows consecutively, and a Blocked task holds one tile whenever
+  * the grid fits the shuffle partitions (beyond that a task's tiles
+  * interleave and a tile is decoded again when its id comes back).
   *
   * The cache is keyed on the tile id `__tid`, never on the identity of the
   * `ArrayData` or its buffer: the projections that produce the tile rows
@@ -126,7 +127,8 @@ final class TileCache {
       var i = 0
       while (i < len) { dot(off + i) = a.getDouble(i); i += 1 }
       dotOff(j + 1) = off + len
-      val v = if (row == null || row.isNullAt(valOrd)) null else row.getArray(valOrd)
+      val v = if (valOrd < 0 || row == null || row.isNullAt(valOrd)) null
+        else row.getArray(valOrd)
       valNull(j) = v == null
       if (v != null) {
         val w = v.numElements()
@@ -165,12 +167,38 @@ final class TileCache {
   }
 }
 
-/** The plumbing the two tile folds share. Children: the query row's
+/** A running logsumexp, the step the scalar tile folds share: `m` is the
+  * largest score so far and `l` the sum of e^(s−m). [[add]] folds one
+  * score and leaves in `r` the factor that rescales what was accumulated
+  * before it and in `w` the score's own weight, so a fold that also
+  * accumulates a weighted value does `acc = acc * r + w * x`. A −∞ score
+  * carries no mass: [[add]] returns false and changes nothing. */
+final class RunningLse {
+  var m = Double.NegativeInfinity
+  var l = 0.0
+  var r = 1.0
+  var w = 0.0
+
+  def add(s: Double): Boolean =
+    if (s == Double.NegativeInfinity) false
+    else {
+      if (s > m) { r = math.exp(m - s); w = 1.0; l = l * r + 1.0; m = s }
+      else { r = 1.0; w = math.exp(s - m); l += w }
+      true
+    }
+
+  /** ln Σ e^s over the added scores: −∞ when none had mass. */
+  def z: Double = if (l == 0.0) Double.NegativeInfinity else m + math.log(l)
+}
+
+/** The plumbing the tile folds share. Children: the query row's
   * vector, the packed tile (`array<struct>` of the big side's columns),
-  * the tile id, then any further query-row inputs. `fold` turns one
-  * (query row, tile) into one monoid value, or null for a tile without
-  * pairs. Generated code calls `fold` on this expression object with a
-  * per-task [[TileCache]], so the fold runs inside whole-stage codegen. */
+  * the bigint tile id, then any further bigint query-row inputs. `fold`
+  * turns one (query row, tile) into one monoid value, or null for a tile
+  * without pairs. Generated code calls `fold` on this expression object
+  * with a per-task [[TileCache]] and the arguments (query vector or null,
+  * tile, tid, then isNull and value of each further input), so the fold
+  * runs inside whole-stage codegen. */
 abstract class TileFold extends Expression {
   def tile: Expression
   override def nullable: Boolean = true
@@ -188,17 +216,24 @@ abstract class TileFold extends Expression {
     (children.head.dataType, tile.dataType) match {
       case (ArrayType(DoubleType, _), ArrayType(st: StructType, _))
           if vecs.forall(has(st, _, doubles)) &&
-            ids.forall(has(st, _, _ == LongType)) =>
+            ids.forall(has(st, _, _ == LongType)) &&
+            children.drop(2).forall(_.dataType == LongType) =>
         TypeCheckResult.TypeCheckSuccess
       case (q, t) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<double> query vector and a tile " +
+        s"$prettyName requires an array<double> query vector, a tile " +
           s"array<struct> with array<double> ${vecs.mkString(", ")} and " +
-          s"bigint ${ids.mkString(", ")}, got ($q, $t)")
+          s"bigint ${ids.mkString(", ")}, and bigint further inputs, got " +
+          s"($q, $t, ${children.drop(2).map(_.dataType).mkString(", ")})")
     }
   }
 
-  /** Java argument list for `fold` after the cache, from the children's code. */
-  protected def foldArgs(cs: Seq[ExprCode]): Seq[String]
+  private def foldArgs(cs: Seq[ExprCode]): Seq[String] =
+    Seq(s"${cs(0).isNull} ? null : ${cs(0).value}", s"${cs(1).value}",
+      s"${cs(2).value}") ++ cs.drop(3).flatMap(c => Seq(s"${c.isNull}", s"${c.value}"))
+
+  /** The further input `i` as `fold` takes it: 0 when null. */
+  protected def key(in: Seq[Any], i: Int): Long =
+    if (in(i) == null) 0L else in(i).asInstanceOf[Long]
 
   override def eval(input: InternalRow): Any = {
     val in = children.map(_.eval(input))
@@ -243,22 +278,15 @@ case class AttentionTileFold(qvec: Expression, tile: Expression,
     StructField("z", DoubleType, nullable = false),
     StructField("v", ArrayType(DoubleType, containsNull = false))))
   override def checkInputDataTypes(): TypeCheckResult =
-    if (tid.dataType != LongType || qId.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires bigint tid and q_id")
-    else checkTile(Seq("kvec", "vvec"), if (causal) Seq("k_id") else Nil)
+    checkTile(Seq("kvec", "vvec"), if (causal) Seq("k_id") else Nil)
 
   private lazy val idOrd = if (causal) fields.fieldIndex("k_id") else -1
   private lazy val kOrd = fields.fieldIndex("kvec")
   private lazy val vOrd = fields.fieldIndex("vvec")
 
-  override protected def foldArgs(cs: Seq[ExprCode]): Seq[String] = Seq(
-    s"${cs(0).isNull} ? null : ${cs(0).value}", s"${cs(1).value}",
-    s"${cs(2).value}", s"${cs(3).isNull}", s"${cs(3).value}")
-
   override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
     fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
-      in(2).asInstanceOf[Long], in(3) == null,
-      if (in(3) == null) 0L else in(3).asInstanceOf[Long])
+      in(2).asInstanceOf[Long], in(3) == null, key(in, 3))
 
   def fold(c: TileCache, q: ArrayData, t: ArrayData, tid: Long,
            qIdNull: Boolean, qId: Long): InternalRow = {
@@ -331,16 +359,10 @@ case class MlpTileFold(xvec: Expression, tile: Expression, tid: Expression)
   override def prettyName: String = "graft_mlp_tile"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult =
-    if (tid.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires a bigint tid")
-    else checkTile(Seq("pvec", "qvec"), Nil)
+    checkTile(Seq("pvec", "qvec"), Nil)
 
   private lazy val pOrd = fields.fieldIndex("pvec")
   private lazy val qOrd = fields.fieldIndex("qvec")
-
-  override protected def foldArgs(cs: Seq[ExprCode]): Seq[String] = Seq(
-    s"${cs(0).isNull} ? null : ${cs(0).value}", s"${cs(1).value}",
-    s"${cs(2).value}")
 
   override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
     fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
@@ -370,6 +392,184 @@ case class MlpTileFold(xvec: Expression, tile: Expression, tid: Expression)
   override protected def withNewChildrenInternal(
       c: IndexedSeq[Expression]): MlpTileFold =
     copy(xvec = c(0), tile = c(1), tid = c(2))
+}
+
+/** `graft_entropy_tile(mvec, tile, tid)`: one query row against one tile
+  * (field `kvec`) as the entropy monoid value struct(z, v) of
+  * [[LogSumExpDecl]] with the score as its value: z = logsumexp of the
+  * tile's scores, v = their softmax-weighted mean. A partial of mass e^z
+  * and mean v merges exactly like one pair of score z and value v, so
+  * `logSumExpMean(p.z, p.v)` merges the partials. The running update is
+  * the aggregate's (null and −∞ scores skipped); a tile without such a
+  * score gives null, which the merge skips too. */
+case class EntropyTileFold(mvec: Expression, tile: Expression, tid: Expression)
+    extends TileFold {
+
+  override def children: Seq[Expression] = Seq(mvec, tile, tid)
+  override def prettyName: String = "graft_entropy_tile"
+  override def dataType: DataType = StructType(Seq(
+    StructField("z", DoubleType, nullable = false),
+    StructField("v", DoubleType, nullable = false)))
+  override def checkInputDataTypes(): TypeCheckResult = checkTile(Seq("kvec"), Nil)
+
+  private lazy val kOrd = fields.fieldIndex("kvec")
+
+  override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
+    fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      in(2).asInstanceOf[Long])
+
+  def fold(c: TileCache, q: ArrayData, t: ArrayData, tid: Long): InternalRow = {
+    c.load(t, tid, fields.length, -1, kOrd, -1)
+    if (q == null) return null
+    val qn = q.numElements()
+    val qv = c.query(q)
+    val lse = new RunningLse
+    var acc = 0.0
+    var j = 0
+    while (j < c.n) {
+      if (!c.dotNull(j)) {
+        val s = c.score(qv, qn, j)
+        if (lse.add(s)) acc = acc * lse.r + lse.w * s
+      }
+      j += 1
+    }
+    if (lse.l == 0.0) null else InternalRow(lse.z, acc / lse.l)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): EntropyTileFold =
+    copy(mvec = c(0), tile = c(1), tid = c(2))
+}
+
+/** `graft_xentropy_tile(mvec, tile, tid, label)`: one query row against one
+  * tile (fields `k_id`, `kvec`) as struct(z, n): z = logsumexp of the
+  * tile's scores (−∞ when none has mass; the merge's logsumexp skips it),
+  * n = Σ of the scores whose k_id equals the label. n is
+  * `sum(when(k_id = label, sc).otherwise(0.0))` over the tile: 0.0 when
+  * the label's row is not in the tile or the label is null, and null only
+  * when every pair is a label match with a null score, so `sum(p.n)`
+  * merges the partials to the pair sum. */
+case class XEntropyTileFold(mvec: Expression, tile: Expression,
+    tid: Expression, label: Expression) extends TileFold {
+
+  override def children: Seq[Expression] = Seq(mvec, tile, tid, label)
+  override def prettyName: String = "graft_xentropy_tile"
+  override def dataType: DataType = StructType(Seq(
+    StructField("z", DoubleType, nullable = false),
+    StructField("n", DoubleType)))
+  override def checkInputDataTypes(): TypeCheckResult =
+    checkTile(Seq("kvec"), Seq("k_id"))
+
+  private lazy val idOrd = fields.fieldIndex("k_id")
+  private lazy val kOrd = fields.fieldIndex("kvec")
+
+  override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
+    fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      in(2).asInstanceOf[Long], in(3) == null, key(in, 3))
+
+  def fold(c: TileCache, q: ArrayData, t: ArrayData, tid: Long,
+           labelNull: Boolean, label: Long): InternalRow = {
+    c.load(t, tid, fields.length, idOrd, kOrd, -1)
+    val qn = if (q == null) 0 else q.numElements()
+    val qv = c.query(q)
+    val lse = new RunningLse
+    var n = 0.0
+    var nSet = false
+    var j = 0
+    while (j < c.n) {
+      val hit = !labelNull && !c.idNull(j) && c.ids(j) == label
+      if (q == null || c.dotNull(j)) {
+        if (!hit) nSet = true
+      } else {
+        val s = c.score(qv, qn, j)
+        if (hit) n += s
+        nSet = true
+        lse.add(s)
+      }
+      j += 1
+    }
+    InternalRow(lse.z, if (nSet) n else null)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): XEntropyTileFold =
+    copy(mvec = c(0), tile = c(1), tid = c(2), label = c(3))
+}
+
+/** `graft_sampler_tile(mvec, tile, tid, m_id)`: one query row against one
+  * tile (fields `k_id`, `kvec`) as struct(pert, sc, k_id, z): the tile's
+  * Gumbel-max winner under [[ArgMaxPertAgg]]'s order and z = logsumexp of
+  * its scores (−∞ when none has mass). The noise is
+  * [[graft.functions.VecOps.pairGumbel]] bit for bit: the same
+  * [[Mix60Kernel]] hash, u = (h + 0.5) / 2^60 and −ln(−ln u) through
+  * `StrictMath.log` (what Catalyst's `Log` generates, and null where it is
+  * null), so pert and with it the sampled k_id equal the pair plan's. The
+  * order is the struct order: null lowest, then
+  * `SQLOrderingUtil.compareDoubles` (NaN largest, ±0.0 equal); pert, then
+  * sc, then k_id decide. The partials merge through `argMaxPert` and
+  * `logSumExp`. */
+case class SamplerTileFold(mvec: Expression, tile: Expression,
+    tid: Expression, mId: Expression, seed: Long) extends TileFold {
+
+  override def children: Seq[Expression] = Seq(mvec, tile, tid, mId)
+  override def prettyName: String = "graft_sampler_tile"
+  override def dataType: DataType = StructType(Seq(
+    StructField("pert", DoubleType), StructField("sc", DoubleType),
+    StructField("k_id", LongType), StructField("z", DoubleType, nullable = false)))
+  override def checkInputDataTypes(): TypeCheckResult =
+    checkTile(Seq("kvec"), Seq("k_id"))
+
+  private lazy val idOrd = fields.fieldIndex("k_id")
+  private lazy val kOrd = fields.fieldIndex("kvec")
+
+  override protected def foldEval(c: TileCache, in: Seq[Any]): Any =
+    fold(c, in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData],
+      in(2).asInstanceOf[Long], in(3) == null, key(in, 3))
+
+  /** One field of the struct order: null lowest, then Catalyst's doubles. */
+  private def cmp(aNull: Boolean, a: Double, bNull: Boolean, b: Double): Int =
+    if (aNull) { if (bNull) 0 else -1 }
+    else if (bNull) 1
+    else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)
+
+  def fold(c: TileCache, q: ArrayData, t: ArrayData, tid: Long,
+           mIdNull: Boolean, mId: Long): InternalRow = {
+    c.load(t, tid, fields.length, idOrd, kOrd, -1)
+    val qn = if (q == null) 0 else q.numElements()
+    val qv = c.query(q)
+    val lse = new RunningLse
+    var bp, bs = 0.0
+    var bk = 0L
+    var bpNull, bsNull, bkNull = true
+    var j = 0
+    while (j < c.n) {
+      val sNull = q == null || c.dotNull(j)
+      val s = if (sNull) 0.0 else c.score(qv, qn, j)
+      val kNull = c.idNull(j)
+      val k = c.ids(j)
+      var pNull = sNull || kNull || mIdNull
+      var p = 0.0
+      if (!pNull) {
+        val e = -StrictMath.log(
+          (Mix60Kernel.mix60(seed, mId, k).toDouble + 0.5) / VecOps.Pow260)
+        if (e <= 0.0) pNull = true else p = s + -StrictMath.log(e)
+      }
+      val c1 = cmp(pNull, p, bpNull, bp)
+      val c2 = if (c1 != 0) c1 else cmp(sNull, s, bsNull, bs)
+      if (j == 0 || c2 > 0 || (c2 == 0 && !kNull && (bkNull || k > bk))) {
+        bp = p; bpNull = pNull; bs = s; bsNull = sNull; bk = k; bkNull = kNull
+      }
+      if (!sNull) lse.add(s)
+      j += 1
+    }
+    if (c.n == 0) null
+    else InternalRow(if (bpNull) null else bp, if (bsNull) null else bs,
+      if (bkNull) null else bk, lse.z)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): SamplerTileFold =
+    copy(mvec = c(0), tile = c(1), tid = c(2), mId = c(3))
 }
 
 /** JVM-static kernel for the 256-bit sign sketch: the hyperplane matrix is
@@ -955,6 +1155,19 @@ object NativeExprs {
   /** [[MlpTileFold]]: one (input row, hidden-unit tile) as Σ h·qvec. */
   def mlpTile(xvec: Column, tile: Column, tid: Column): Column =
     toCol(MlpTileFold(toExpr(xvec), toExpr(tile), toExpr(tid)))
+
+  /** [[EntropyTileFold]]: one (query row, tile) as struct(z, v). */
+  def entropyTile(mvec: Column, tile: Column, tid: Column): Column =
+    toCol(EntropyTileFold(toExpr(mvec), toExpr(tile), toExpr(tid)))
+
+  /** [[XEntropyTileFold]]: one (query row, tile) as struct(z, n). */
+  def xentropyTile(mvec: Column, tile: Column, tid: Column, label: Column): Column =
+    toCol(XEntropyTileFold(toExpr(mvec), toExpr(tile), toExpr(tid), toExpr(label)))
+
+  /** [[SamplerTileFold]]: one (query row, tile) as struct(pert, sc, k_id, z). */
+  def samplerTile(mvec: Column, tile: Column, tid: Column, mId: Column,
+                  seed: Long): Column =
+    toCol(SamplerTileFold(toExpr(mvec), toExpr(tile), toExpr(tid), toExpr(mId), seed))
 
   /** float32 `dot(a, b)` over two array<float> columns, codegen'd. */
   def dotF32(a: Column, b: Column): Column =

@@ -72,7 +72,7 @@ object VecOps {
   val DhM1 = 288230376151711744L // 2^58
   val DhM2 = 18014398509481984L // 2^54
 
-  private val Pow260 = 1152921504606846976.0 // 2^60
+  private[functions] val Pow260 = 1152921504606846976.0 // 2^60
 
   /** Uniform in (0,1): (h + 0.5) / 2^60 — never 0 or 1, safe for log(). */
   def u01(c: Column): Column =

@@ -254,8 +254,8 @@ object EmbedStats {
     * protocol, as plain arrays: element t of each Seq is round t+1's
     * quantized direction (round 0 is the closed-form v0). Chain 1 trains
     * on the quantized matrix, chain 2 on the vq1-deflated matrix — the
-    * exact sequences [[powerTrain]] / [[powerDeflate]] / [[projectTop2]]
-    * each re-derived inline (2·iters corpus passes per query). The
+    * exact sequences [[powerTrain]] / [[powerDeflate]] and the projection
+    * loop each re-derived inline (2·iters corpus passes per query). The
     * query layer memoizes this result per session (model-sized: 2·iters·D
     * longs) so the trainer family pays the chains once; each consumer
     * then reproduces its graded output in ONE corpus pass via the
@@ -327,10 +327,18 @@ object EmbedStats {
       lit(ortho).as("ortho"))
   }
 
-  /** [[projectTop2]]'s output resumed from the memoized chains: both
-    * projection dots are over the ORIGINAL quantized rows (the deflated
-    * matrix only ever trained vq2), so the apply step is ONE map-only
-    * corpus pass — no caches, no checkpoint. */
+  /** PCA PROJECTION (`embed_project`): every embedding's coordinates on
+    * the top-2 spectral directions — the dimensionality-reduction apply
+    * step the trainer family promises. The two directions are the chains'
+    * last rounds ([[trainChains]]: [[powerTrain]]'s v₁, then
+    * [[powerDeflate]]'s v₂ over the integer-deflated matrix); the output
+    * coordinates are the EXACT BIGINT dots `c1 = Σ xq·vq₁`,
+    * `c2 = Σ xq·vq₂` on the quantized grid (|c| ≤ D·Q² ≈ 6.4·10⁹ —
+    * Long-safe), an unnormalized positive-scalar multiple of the PCA
+    * coordinates, so zero float crosses the engine boundary. Both dots
+    * are over the ORIGINAL quantized rows (the deflated matrix only ever
+    * trained vq2), so the apply step is ONE map-only corpus pass — no
+    * caches, no checkpoint. */
   def projectTop2From(vecs: DataFrame, vq1: Array[Long],
                       vq2: Array[Long]): DataFrame = {
     import org.apache.spark.sql.functions.{typedLit => tl}
@@ -341,46 +349,7 @@ object EmbedStats {
       .select(col("vec_id"), dot(vq1).as("c1"), dot(vq2).as("c2"))
   }
 
-  /** PCA PROJECTION (`embed_project`): every embedding's coordinates on
-    * the top-2 spectral directions — the dimensionality-reduction apply
-    * step the trainer family promises (visual maps, coarse indexes,
-    * whitening all start here). The two directions come from the exact
-    * chains this family already grades ([[powerTrain]]'s v₁, then
-    * [[powerDeflate]]'s v₂ over the integer-deflated matrix); the output
-    * coordinates are the EXACT BIGINT dots `c1 = Σ xq·vq₁`,
-    * `c2 = Σ xq·vq₂` on the quantized grid (|c| ≤ D·Q² ≈ 6.4·10⁹ —
-    * Long-safe), an unnormalized positive-scalar multiple of the PCA
-    * coordinates, so zero float crosses the engine boundary. Each chain
-    * round is one corpus pass (collect-requantize: D longs to the
-    * driver); the projection itself is one map-only scan. */
-  def projectTop2(vecs: DataFrame, iters: Int,
-                  dim: Int = Similarity.Dim): DataFrame = {
-    import org.apache.spark.sql.functions.{typedLit => tl}
-    val xqId = Caching.eager(
-      PairPlan.fanOut(vecs).select(col("vec_id"), qvec(col("vec")).as("xq")))
-    var vq1 = v0Collected(vecs, dim)
-    for (_ <- 0 until iters) vq1 = powerRoundQ(xqId, vq1)._2
-    val d00 = vq1.map(v => v * v).sum
-    val v1lit = tl(vq1.toSeq)
-    val proj1 = aggregate(zip_with(col("xq"), v1lit, (a, b) => a * b),
-      lit(0L), (acc, x) => acc + x)
-    val xq2 = Caching.eager(xqId.select(col("xq"), proj1.as("proj"))
-      .select(transform(col("xq"), (x, i) =>
-        x - floor(col("proj").cast("double") *
-          element_at(v1lit, i + 1).cast("double") / lit(d00.toDouble) +
-          lit(0.5)).cast("long")).as("xq")))
-    var vq2 = v0Collected(vecs, dim)
-    for (_ <- 0 until iters) vq2 = powerRoundQ(xq2, vq2)._2
-    val v2lit = tl(vq2.toSeq)
-    val proj2 = aggregate(zip_with(col("xq"), v2lit, (a, b) => a * b),
-      lit(0L), (acc, x) => acc + x)
-    val res = xqId.select(col("vec_id"), proj1.as("c1"), proj2.as("c2"))
-      .localCheckpoint(eager = true)
-    xqId.unpersist(false); xq2.unpersist(false)
-    res
-  }
-
-  /** Dual of [[projectTop2]]: the deflate oracle's two chains, then the
+  /** Dual of [[projectTop2From]]: the deflate oracle's two chains, then the
     * two exact-BIGINT projection dots per vec_id. */
   def projectTop2OracleSql(iters: Int): String = {
     def chain(pfx: String, src: String, v0: String): String =
@@ -420,7 +389,7 @@ object EmbedStats {
   }
 
   /** round-0 direction: the closed-form v0, collected (D longs). */
-  private def v0Collected(vecs: DataFrame, dim: Int): Array[Long] = {
+  private[operators] def v0Collected(vecs: DataFrame, dim: Int): Array[Long] = {
     val spark = vecs.sparkSession
     spark.range(dim).select(v0q(col("id")).as("v"))
       .collect().map(_.getLong(0))
@@ -462,7 +431,7 @@ object EmbedStats {
     * already-quantized row table (`xq: array<long>`): the current
     * quantized direction rides as a literal; returns the round's graded
     * output and the next quantized direction (D longs collected). */
-  private def powerRoundQ(rowsQ: DataFrame,
+  private[operators] def powerRoundQ(rowsQ: DataFrame,
                           vqIn: Array[Long]): (DataFrame, Array[Long]) = {
     val joined = roundJoined(rowsQ, vqIn)
     val out = roundOutCols(joined)

@@ -3,30 +3,28 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftAggs, VecOps}
+import graft.functions.{GraftAggs, NativeExprs, VecOps}
 
 /** Shannon entropy of each row of `softmax(pred·trgᵀ)` (reference
   * entropy.py:5-12,18-41): `H_m = logsumexp_n(logit) − E_softmax[logit]`.
   *
   * The reference's monoid `(p = logsumexp, n = mass-weighted mean logit)`
-  * (entropy.py:18-23) is the scalar (D=1) case of the attention monoid.
-  * It folds as [[graft.functions.LogSumExpDecl]] with the logit itself as
-  * the value: three primitive buffer slots, so the fold plans as a
-  * `HashAggregateExec` inside the pair stream's codegen stage instead of
-  * copying every pair row into an `ObjectHashAggregateExec`.
+  * (entropy.py:18-23) is the scalar (D=1) case of the attention monoid,
+  * and it folds the same way: the target side is packed into tiles
+  * ([[PairPlan.tiles]]), one codegen'd fold per (pred row, tile)
+  * ([[graft.functions.EntropyTileFold]]) maps the tile's pairs to one
+  * value (z, v), and [[graft.functions.LogSumExpDecl]] with a value merges
+  * those M × tiles partials exactly as it would merge single pairs. Its
+  * buffer slots are primitive, so the merge plans as a `HashAggregateExec`;
+  * the M×N pair stream never exists as rows.
   */
 object Entropy {
 
   /** pred: (m_id, mvec); trg: (k_id, kvec). Returns (m_id, h). */
   def entropy(pred: DataFrame, trg: DataFrame,
-              mode: PairPlan.Mode = PairPlan.Auto): DataFrame = {
-    val sc = VecOps.dot(col("mvec"), col("kvec"))
-    PairPlan.cross(trg, pred, mode)
-      .select(col("m_id"), sc.as("sc"))
-      .groupBy("m_id")
-      .agg(GraftAggs.logSumExpMean(col("sc"), col("sc")).as("lw"))
-      .select(col("m_id"), (col("lw.z") - col("lw.v")).as("h"))
-  }
+              mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
+    forward(pred, trg, mode)
+      .select(col("m_id"), (col("z") - col("sbar")).as("h"))
 
   /** BACKWARD dPred of entropy — the adjoint the reference STUBS
     * (entropy.py:14-16 raises NotImplementedError; this completes the
@@ -37,25 +35,31 @@ object Entropy {
     *   ∂H_m/∂s_mn = w_mn·(s̄_m − s_mn)
     *   dPred_m    = g_m · Σ_n w_mn·(s̄_m − s_mn)·k_n
     * — itself a commutative weighted-vector-sum fold over n, so the plan
-    * is the gradient family's standard TWO pair passes with only the
-    * M-sized (z, s̄) aggregate crossing between them (size-guarded
-    * join-back hint, never the M×N weight matrix).
+    * is the gradient family's standard TWO pair passes: the forward tile
+    * fold, then the adjoint pair pass with only the M-sized (z, s̄)
+    * aggregate crossing between them (size-guarded join-back hint, never
+    * the M×N weight matrix).
     *
     * g: (m_id, gm) scalar upstream gradient. Returns (m_id, dm). */
   def entropyGrad(pred: DataFrame, trg: DataFrame, g: DataFrame,
                   mode: PairPlan.Mode = PairPlan.Auto): DataFrame = {
     val sc = VecOps.dot(col("mvec"), col("kvec"))
-    val fwd = PairPlan.cross(trg, pred, mode)
-      .select(col("m_id"), sc.as("sc"))
-      .groupBy("m_id")
-      .agg(GraftAggs.logSumExpMean(col("sc"), col("sc")).as("lw"))
-      .select(col("m_id"), col("lw.z").as("z"), col("lw.v").as("sbar"))
     val wt = col("gm") * exp(sc - col("z")) * (col("sbar") - sc)
     PairPlan.cross(trg, pred, mode)
-      .join(PairPlan.hintBoundedLike(fwd, pred, mode), "m_id")
+      .join(PairPlan.hintBoundedLike(forward(pred, trg, mode), pred, mode), "m_id")
       .join(PairPlan.hintBoundedLike(g, pred, mode), "m_id")
       .select(col("m_id"), wt.as("wt"), col("kvec"))
       .groupBy(col("m_id"))
       .agg(GraftAggs.vecWeightedSum(col("wt"), col("kvec")).as("dm"))
   }
+
+  /** (m_id, z = logsumexp of the row's scores, sbar = their softmax mean). */
+  private def forward(pred: DataFrame, trg: DataFrame,
+                      mode: PairPlan.Mode): DataFrame =
+    PairPlan.tiles(trg, pred, mode)
+      .select(col("m_id"),
+        NativeExprs.entropyTile(col("mvec"), col("__tile"), col("__tid")).as("p"))
+      .groupBy("m_id")
+      .agg(GraftAggs.logSumExpMean(col("p.z"), col("p.v")).as("lw"))
+      .select(col("m_id"), col("lw.z").as("z"), col("lw.v").as("sbar"))
 }

@@ -24,18 +24,23 @@ import org.apache.spark.sql.functions.{broadcast, col, collect_list, element_at,
   *    content-hashed into its axis's tile id and replicated across the
   *    other axis, so each task streams one tile pair inside whole-stage
   *    codegen and partial aggregation reduces it before the only
-  *    remaining shuffle (inside the same codegen stage only for folds
-  *    with primitive buffers: xentropy, entropy, sampler). The large-M
-  *    path.
+  *    remaining shuffle. The large-M path.
   *  - [[Auto]] (default): picks at plan time from Catalyst's size estimate
   *    of the query side vs `spark.sql.autoBroadcastJoinThreshold` — the
   *    same signal AQE uses for join strategy, so a dims-sized side
   *    broadcasts and a table-sized side tiles without the caller choosing.
   *
-  * [[cross]] emits the pairs as rows; [[tiles]] emits them packed, one
-  * big-side chunk per row, for the folds whose monoid value is a vector
-  * (attention, mlp): an object-buffer aggregate then reads one row per
-  * (query row, tile) instead of one per pair.
+  * Two output forms share these arms:
+  *  - [[tiles]] emits the pairs packed, one big-side chunk per row. Every
+  *    forward fold reads it: attention, mlp, entropy, xentropy and the
+  *    sampler each turn one (query row, tile) into one monoid value in a
+  *    codegen'd `TileFold`, so their merges read M × tiles partials, never
+  *    one row per pair.
+  *  - [[cross]] emits every pair as a row. It stays for the kernels that
+  *    fold per pair with per-pair inputs the tile folds do not carry (the
+  *    gradient adjoints, which join the M-sized forward aggregate back
+  *    onto the pair stream; the top-k rankers; top-p sampling) and for
+  *    outputs that are the pair matrix itself (relu_matmul).
   */
 object PairPlan {
 
@@ -62,8 +67,8 @@ object PairPlan {
     * chunk's id (`__tid: long`); every (small row, big row) pair lies in
     * exactly one output row. A fold over the tile then turns one
     * (small row, tile) into one monoid value, so the M×N pair stream never
-    * exists as rows: attention and mlp merge M × tiles partial values
-    * instead of copying M×N pair rows into an `ObjectHashAggregateExec`.
+    * exists as rows: the forward folds merge M × tiles partial values
+    * instead of one row per pair.
     *
     *  - [[Broadcast]]: the big side (after [[cross]]'s pair-budget
     *    fan-out) is chunked inside its own partitions, with no exchange,
@@ -169,8 +174,8 @@ object PairPlan {
     * r12 #4; blocked 0.91 s vs broadcast 0.54 s on identical inputs at
     * sf0.1). The tile-keyed ShuffledHashJoin keeps join + kernel in ONE
     * codegen stage, and the partial aggregation too when its buffers are
-    * primitive (xentropy, entropy, sampler; attention and mlp fold whole
-    * tiles through [[tiles]] instead). Replication I/O equals the
+    * primitive (the forward folds read whole tiles through [[tiles]]
+    * instead). Replication I/O equals the
     * cartesian grid's tile re-fetch volume (the stream side is written
     * n_build times instead of fetched n_build times).
     *

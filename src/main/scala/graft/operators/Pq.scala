@@ -196,12 +196,6 @@ object Pq {
     pqStep(kv, cb)
   }
 
-  /** Trained codebook after `iters` [[pqTrain]] iterations, in the
-    * (m, j, cvec) shape [[adcTopK]] consumes — search through it grades
-    * the full train→encode→search composition. */
-  def pqTrainedCodebook(kv: DataFrame, seed: DataFrame, iters: Int): DataFrame =
-    codebookFromStep(pqTrain(kv, seed, iters))
-
   /** the persisted-index shape: (k_id, codes[M]) — M small ints per vector. */
   def codes(kv: DataFrame, cb: DataFrame): DataFrame =
     codesWith(kv, collectCb(cb))

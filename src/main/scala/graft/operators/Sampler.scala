@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftAggs, VecOps}
+import graft.functions.{GraftAggs, NativeExprs, VecOps}
 
 /** Exact categorical sampling from `softmax(pred·trgᵀ)` per row without
   * materializing the logit matrix (reference sampling.py:5-61).
@@ -20,10 +20,16 @@ import graft.functions.{GraftAggs, VecOps}
   * rather than the reference's `torch.rand` (sampling.py:5,14) —
   * reproducible across retries AND bit-identically computable by the
   * DuckDB oracle, so this normally "nondeterministic" operator gets a
-  * full hash-equality check. The stream is the codegen'd integer
-  * [[graft.functions.Mix60Kernel]] ([[VecOps.pairGumbel]]): noise is
-  * evaluated once per (m, k) PAIR, and the md5-string stream it replaced
-  * was ~90% of sampler_big's CPU (VERDICT r6 plan audit).
+  * full hash-equality check. The stream is the integer
+  * [[graft.functions.Mix60Kernel]] ([[VecOps.pairGumbel]]), evaluated once
+  * per (m, k) PAIR.
+  *
+  * The target side is packed into tiles ([[PairPlan.tiles]]) and one
+  * codegen'd fold per (pred row, tile) ([[graft.functions.SamplerTileFold]])
+  * gives the tile's Gumbel-max winner and its logsumexp. The winner is the
+  * pair plan's own, noise and order bit for bit, so the sampled index is
+  * unchanged; the argmax and logsumexp aggregates merge the M × tiles
+  * partials in a `HashAggregateExec`.
   *
   * Output matches gemmmr_sampler (sampling.py:59-61): the chosen global
   * index `c` and its softmax probability `weight = e^{z − logsumexp}`.
@@ -32,27 +38,19 @@ object Sampler {
 
   /** pred: (m_id, mvec); trg: (k_id, kvec). Returns (m_id, c, weight). */
   def sampler(pred: DataFrame, trg: DataFrame, seed: String,
-              mode: PairPlan.Mode = PairPlan.Auto): DataFrame = {
-    val sc = VecOps.dot(col("mvec"), col("kvec"))
-    val noise = VecOps.pairGumbel(VecOps.seed60(seed), col("m_id"), col("k_id"))
-    PairPlan.cross(trg, pred, mode)
-      .select(col("m_id"), col("k_id"), sc.as("sc"))
-      .select(col("m_id"), col("k_id"), col("sc"),
-        (col("sc") + noise).as("pert"))
+              mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
+    PairPlan.tiles(trg, pred, mode)
+      .select(col("m_id"), NativeExprs.samplerTile(col("mvec"), col("__tile"),
+        col("__tid"), col("m_id"), VecOps.seed60(seed)).as("p"))
       .groupBy("m_id")
       // the argmax is the declarative lexicographic-max aggregate, not
-      // max(struct): a struct buffer disqualifies HashAggregate and
-      // dragged the whole aggregation (logsumexp included) down to
-      // SortAggregate — sorting the full M×N pair stream (r13 plan
-      // read). Both folds have primitive buffer slots, so the pair
-      // stream folds in one codegen'd HashAggregate: M buffers, no
-      // sort, no per-row copy out of the join's codegen stage.
+      // max(struct): a struct buffer disqualifies HashAggregate and drags
+      // the whole aggregation down to SortAggregate (r13 plan read)
       .agg(
-        GraftAggs.argMaxPert(col("pert"), col("sc"), col("k_id")).as("top"),
-        GraftAggs.logSumExp(col("sc")).as("tz"))
+        GraftAggs.argMaxPert(col("p.pert"), col("p.sc"), col("p.k_id")).as("top"),
+        GraftAggs.logSumExp(col("p.z")).as("tz"))
       .select(col("m_id"), col("top.k_id").as("c"),
         exp(col("top.sc") - col("tz")).as("weight"))
-  }
 
   /** TOP-P (NUCLEUS) sampling — the decoding-time truncation every LLM
     * serving stack runs on top of the categorical sampler: per row, keep

@@ -3,36 +3,31 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftAggs, VecOps}
+import graft.functions.{GraftAggs, NativeExprs, VecOps}
 
 /** Per-row cross-entropy of logits `pred·trgᵀ` against an integer label
   * (reference xentropy.py:5-13,39-64): `loss_m = logsumexp_n(logit_mn) −
   * logit_m[label_m]`.
   *
   * The reference's monoid state `(p = logsumexp partial, n = Σ logit ·
-  * 1[label == tix])` (xentropy.py:10-13) maps to two aggregates over the
-  * same pair stream: the running-max logsumexp
-  * ([[graft.functions.GraftAggs.logSumExp]]) and a
-  * built-in `sum(when(...))` — the indicator-mask-multiply pattern of
-  * xentropy.py:12 expressed as a conditional sum. Both are commutative
-  * monoids, so Catalyst's partial/final split reproduces the reference's
-  * chunked fold exactly.
+  * 1[label == tix])` (xentropy.py:10-13) is folded one target tile at a
+  * time: [[PairPlan.tiles]] packs the target side, one codegen'd fold per
+  * (pred row, tile) ([[graft.functions.XEntropyTileFold]]) gives the
+  * tile's logsumexp and its label logit (0 when the label's row is not in
+  * the tile), and the running-max logsumexp
+  * ([[graft.functions.GraftAggs.logSumExp]]) and a built-in `sum` merge
+  * those M × tiles partials — both commutative monoids with primitive
+  * buffers, so the merge is a `HashAggregateExec` and the M×N pair stream
+  * never exists as rows.
   */
 object XEntropy {
 
   /** pred: (m_id, mvec, label); trg: (k_id, kvec) where k_id is the global
     * class index (reference tixs, xentropy.py:75). Returns (m_id, loss). */
   def xentropy(pred: DataFrame, trg: DataFrame,
-               mode: PairPlan.Mode = PairPlan.Auto): DataFrame = {
-    val sc = VecOps.dot(col("mvec"), col("kvec"))
-    PairPlan.cross(trg, pred, mode)
-      .select(col("m_id"), col("label"), col("k_id"), sc.as("sc"))
-      .groupBy("m_id")
-      .agg(
-        GraftAggs.logSumExp(col("sc")).as("p"),
-        sum(when(col("k_id") === col("label"), col("sc")).otherwise(0.0)).as("n"))
+               mode: PairPlan.Mode = PairPlan.Auto): DataFrame =
+    forward(pred, trg, mode)
       .select(col("m_id"), (col("p") - col("n")).as("loss"))
-  }
 
   /** BACKWARD of the cross-entropy (reference xentropy.py:15-37
     * `proj_fold_bwd`): with scalar upstream grad g_m on the loss
@@ -61,7 +56,7 @@ object XEntropy {
   private def gradPairs(pred: DataFrame, trg: DataFrame, g: DataFrame,
                         mode: PairPlan.Mode): DataFrame = {
     val sc = VecOps.dot(col("mvec"), col("kvec"))
-    val fwd = xentropyLse(pred, trg, mode)
+    val fwd = forward(pred, trg, mode).select(col("m_id"), col("p"))
     val gh = col("gm") * exp(sc - col("p")) -
       when(col("k_id") === col("label"), col("gm")).otherwise(0.0)
     PairPlan.cross(trg, pred, mode)
@@ -71,14 +66,12 @@ object XEntropy {
         col("mvec"), col("kvec"))
   }
 
-  /** The forward logsumexp aggregate alone — the `a_p` the backward
-    * joins back (M rows). */
-  private def xentropyLse(pred: DataFrame, trg: DataFrame,
-                          mode: PairPlan.Mode): DataFrame = {
-    val sc = VecOps.dot(col("mvec"), col("kvec"))
-    PairPlan.cross(trg, pred, mode)
-      .select(col("m_id"), sc.as("sc"))
+  /** (m_id, p = logsumexp of the row's logits, n = its label logit). */
+  private def forward(pred: DataFrame, trg: DataFrame,
+                      mode: PairPlan.Mode): DataFrame =
+    PairPlan.tiles(trg, pred, mode)
+      .select(col("m_id"), NativeExprs.xentropyTile(col("mvec"), col("__tile"),
+        col("__tid"), col("label").cast("long")).as("t"))
       .groupBy("m_id")
-      .agg(GraftAggs.logSumExp(col("sc")).as("p"))
-  }
+      .agg(GraftAggs.logSumExp(col("t.z")).as("p"), sum(col("t.n")).as("n"))
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TileFold
-import graft.operators.{Assoc, Attention, Mlp, PairPlan, Sampler, Triangles}
+import graft.operators.{Assoc, Attention, Entropy, Mlp, PairPlan, Sampler, Triangles, XEntropy}
 
 /** SQL registration of the native functions + physical-plan-shape
   * regression tests (the plan properties the 100 TB design depends on). */
@@ -103,18 +103,46 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"blocked plan must not broadcast:\n$plan")
   }
 
-  /** Attention and mlp over a KV side of `kvParts` range partitions (no
-    * exchange of its own), executed under `mode`; the final plans. */
-  private def tileFoldPlans(mode: PairPlan.Mode, kvParts: Int): Seq[SparkPlan] = {
+  /** The tile-fold kernels over a KV side of `kvParts` range partitions
+    * (no exchange of its own), executed under `mode`; the final plans. */
+  private def tileFoldPlans(mode: PairPlan.Mode, kvParts: Int,
+      kernels: Seq[String] = Seq("attention", "mlp")): Seq[SparkPlan] = {
     val kv = spark.range(0L, 64L, 1L, kvParts).select(col("id").as("k_id"),
       array_repeat(col("id") * 0.1, 8).as("kvec"),
       array_repeat(col("id") * 0.2, 4).as("vvec"))
     val q = (0 until 16).map(i => (i.toLong, Array.fill(8)(i * 0.1)))
       .toDF("q_id", "qvec")
-    val dfs = Seq(Attention.attention(q, kv, scale = true, mode),
-      Mlp.mlp(q.select(col("q_id").as("b_id"), col("qvec").as("xvec")),
-        kv.select(col("k_id"), col("kvec").as("pvec"), col("vvec").as("qvec")), mode))
+    val pred = q.select(col("q_id").as("m_id"), col("qvec").as("mvec"),
+      (col("q_id") * 3).as("label"))
+    val trg = kv.select(col("k_id"), col("kvec"))
+    val dfs = kernels.map {
+      case "attention" => Attention.attention(q, kv, scale = true, mode)
+      case "mlp" => Mlp.mlp(q.select(col("q_id").as("b_id"), col("qvec").as("xvec")),
+        kv.select(col("k_id"), col("kvec").as("pvec"), col("vvec").as("qvec")), mode)
+      case "entropy" => Entropy.entropy(pred.drop("label"), trg, mode)
+      case "xentropy" => XEntropy.xentropy(pred, trg, mode)
+      case "sampler" => Sampler.sampler(pred.drop("label"), trg, "spec", mode)
+    }
     dfs.map { df => df.collect(); df.queryExecution.executedPlan }
+  }
+
+  /** The plan nodes that evaluate a tile fold: exactly one Project each. */
+  private def foldSites(plan: SparkPlan): Seq[SparkPlan] =
+    collect(plan) {
+      case n if n.expressions.exists(_.find(_.isInstanceOf[TileFold]).isDefined) => n
+    }
+
+  /** The node below `a`, past codegen wrappers (and filters when `filters`). */
+  private def feeder(a: SparkPlan, filters: Boolean): SparkPlan = {
+    var c = a.children.head
+    while (c.isInstanceOf[InputAdapter] || c.isInstanceOf[WholeStageCodegenExec] ||
+        (filters && c.isInstanceOf[FilterExec])) c = c.children.head
+    c
+  }
+
+  private def callsFold(p: SparkPlan): Boolean = p match {
+    case p: ProjectExec => p.projectList.exists(_.find(_.isInstanceOf[TileFold]).isDefined)
+    case _ => false
   }
 
   test("attention and mlp plan shape: no Generate, and the only " +
@@ -135,14 +163,31 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       merges.foreach(m => assert(collect(m) { case g: GenerateExec => g }.isEmpty,
         s"$mode: Generate below the fold merge in\n$plan"))
       merges.filter(_.aggregateExpressions.exists(_.mode == Partial)).foreach { a =>
-        var c = a.child
-        while (c.isInstanceOf[InputAdapter] || c.isInstanceOf[WholeStageCodegenExec] ||
-            c.isInstanceOf[FilterExec]) c = c.children.head
-        assert(c match {
-          case p: ProjectExec => p.projectList.exists(_.find(_.isInstanceOf[TileFold]).isDefined)
-          case _ => false
-        }, s"$mode: partial merge not fed by the tile fold:\n$plan")
+        assert(callsFold(feeder(a, filters = true)),
+          s"$mode: partial merge not fed by the tile fold:\n$plan")
       }
+      assert(foldSites(plan).length == 1, s"$mode: the fold runs in " +
+        s"${foldSites(plan).map(_.nodeName)}:\n$plan")
+    }
+  }
+
+  test("entropy, xentropy and sampler plan shape: no Generate below the " +
+       "merge, which reads the one Project that calls the tile fold") {
+    for (mode <- Seq(PairPlan.Broadcast, PairPlan.Blocked);
+         plan <- tileFoldPlans(mode, 1, Seq("entropy", "xentropy", "sampler"))) {
+      val merges = collect(plan) {
+        case a: BaseAggregateExec
+            if a.groupingExpressions.exists(_.references.exists(_.name == "m_id")) => a
+      }
+      assert(merges.nonEmpty && merges.forall(_.isInstanceOf[HashAggregateExec]),
+        s"$mode: merge is not a HashAggregate in\n$plan")
+      merges.foreach(m => assert(collect(m) { case g: GenerateExec => g }.isEmpty,
+        s"$mode: Generate below the merge in\n$plan"))
+      val partials = merges.filter(_.aggregateExpressions.exists(_.mode == Partial))
+      assert(partials.nonEmpty && partials.forall(a => callsFold(feeder(a, filters = false))),
+        s"$mode: partial merge not fed by the tile fold:\n$plan")
+      assert(foldSites(plan).length == 1, s"$mode: the fold runs in " +
+        s"${foldSites(plan).map(_.nodeName)}:\n$plan")
     }
   }
 

@@ -118,6 +118,34 @@ class EmbedStatsSpec extends AnyFunSuite {
     assert(rows.map(_._3).distinct.length === 1)
   }
 
+  /** The projection as one loop: both chains re-derived inline, each
+    * round over a cached quantized corpus, then the two exact dots — the
+    * reference [[EmbedStats.projectTop2From]] resumes from the chains. */
+  private def projectTop2(vecs: org.apache.spark.sql.DataFrame,
+                          iters: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{typedLit => tl}
+    val xqId = Caching.eager(
+      vecs.select(col("vec_id"), EmbedStats.qvec(col("vec")).as("xq")))
+    def dot(v: Array[Long]) =
+      aggregate(zip_with(col("xq"), tl(v.toSeq), (a, b) => a * b),
+        lit(0L), (acc, x) => acc + x)
+    var vq1 = EmbedStats.v0Collected(vecs, dim)
+    for (_ <- 0 until iters) vq1 = EmbedStats.powerRoundQ(xqId, vq1)._2
+    val d00 = vq1.map(v => v * v).sum
+    val v1lit = tl(vq1.toSeq)
+    val xq2 = Caching.eager(xqId.select(col("xq"), dot(vq1).as("proj"))
+      .select(transform(col("xq"), (x, i) =>
+        x - floor(col("proj").cast("double") *
+          element_at(v1lit, i + 1).cast("double") / lit(d00.toDouble) +
+          lit(0.5)).cast("long")).as("xq")))
+    var vq2 = EmbedStats.v0Collected(vecs, dim)
+    for (_ <- 0 until iters) vq2 = EmbedStats.powerRoundQ(xq2, vq2)._2
+    val res = xqId.select(col("vec_id"), dot(vq1).as("c1"), dot(vq2).as("c2"))
+      .localCheckpoint(eager = true)
+    xqId.unpersist(false); xq2.unpersist(false)
+    res
+  }
+
   test("chain-resumed forms reproduce the loop forms bit-for-bit (r16)") {
     val iters = 3
     def same(a: org.apache.spark.sql.DataFrame,
@@ -136,6 +164,6 @@ class EmbedStatsSpec extends AnyFunSuite {
     val dfId = vecs.zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "vec")
     same(EmbedStats.projectTop2From(dfId, c1(iters - 1), c2(iters - 1)),
-      EmbedStats.projectTop2(dfId, iters, dim))
+      projectTop2(dfId, iters))
   }
 }

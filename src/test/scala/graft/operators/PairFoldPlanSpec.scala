@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.queries.MatrixQueries
 
-/** Entropy's and the sampler's pair folds have primitive buffers only, so
-  * they must plan as `HashAggregateExec` inside the pair stream's codegen
-  * stage. A `TypedImperativeAggregate` added to the same `.agg(...)` would
-  * silently turn the whole fold into an `ObjectHashAggregateExec` that
-  * copies every pair row; this guard catches it under both `PairPlan`
-  * arms, and checks that the arms return identical rows. */
+/** The merges of entropy's, xentropy's and the sampler's tile partials
+  * have primitive buffers only, so they must plan as `HashAggregateExec`.
+  * A `TypedImperativeAggregate` added to the same `.agg(...)` would
+  * silently turn the whole merge into an `ObjectHashAggregateExec` (or a
+  * struct buffer into a `SortAggregate`); this guard catches it under
+  * both `PairPlan` arms, and checks that the arms return identical rows. */
 class PairFoldPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val spark = TestSpark.spark
@@ -27,7 +27,7 @@ class PairFoldPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           if a.groupingExpressions.exists(_.references.exists(_.name == "m_id")) => a
     }
 
-  for (kernel <- Seq("entropy", "sampler")) {
+  for (kernel <- Seq("entropy", "xentropy", "sampler")) {
     test(s"$kernel folds the pair stream in HashAggregate under both arms, " +
         "with identical rows") {
       val rows = arms.map { mode =>

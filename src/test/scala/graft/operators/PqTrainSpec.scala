@@ -25,6 +25,12 @@ class PqTrainSpec extends AnyFunSuite {
   private def kv = emb.select(col("vec_id").as("k_id"), col("vec").as("kvec"))
   private def seed = Pq.codebook(emb)
 
+  /** The codebook after `iters` training iterations, in the (m, j, cvec)
+    * shape `Pq.encode` and `Pq.adcTopK` consume. */
+  private def trainedCodebook(kv: org.apache.spark.sql.DataFrame,
+                              seed: org.apache.spark.sql.DataFrame, iters: Int) =
+    Pq.codebookFromStep(Pq.pqTrain(kv, seed, iters))
+
   test("pqTrain(iters=1) == pqStep (the loop composes the graded step)") {
     val one = Pq.pqTrain(kv, seed, 1)
     val step = Pq.pqStep(kv, seed)
@@ -50,15 +56,15 @@ class PqTrainSpec extends AnyFunSuite {
     def err2(cb: org.apache.spark.sql.DataFrame): Double =
       Pq.encode(kv, cb).agg(sum(col("err2"))).head().getDouble(0)
     val e0 = err2(seed)
-    val e1 = err2(Pq.pqTrainedCodebook(kv, seed, 1))
-    val e3 = err2(Pq.pqTrainedCodebook(kv, seed, 3))
+    val e1 = err2(trainedCodebook(kv, seed, 1))
+    val e3 = err2(trainedCodebook(kv, seed, 3))
     val grid = 1e-2 // 1e-4 cell quantization can shift sums below this
     assert(e1 <= e0 + grid, s"iteration 1 raised the objective: $e0 -> $e1")
     assert(e3 <= e1 + grid, s"iterations 2-3 raised the objective: $e1 -> $e3")
   }
 
   test("trained codebook keeps the (m, j, cvec) contract encode consumes") {
-    val cb = Pq.pqTrainedCodebook(kv, seed, 2)
+    val cb = trainedCodebook(kv, seed, 2)
     val dims = cb.select(size(col("cvec"))).distinct().collect().map(_.getInt(0))
     assert(dims.sameElements(Array(Pq.S)), s"cell dims ${dims.mkString(",")}")
     assert(cb.select(col("m")).distinct().count() == Pq.M)

@@ -9,12 +9,13 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{AttentionTileFold, GraftAggs, LWVBuf, LogWeightedVecAgg, MlpTileFold, TileCache, VecOps}
+import graft.functions.{AttentionTileFold, EntropyTileFold, GraftAggs, LWVBuf, LogWeightedVecAgg, Mix60Kernel, MlpTileFold, SamplerTileFold, TileCache, VecOps, XEntropyTileFold}
 
-/** The tile folds behind attention and mlp against the pair-row plan they
-  * replace: `PairPlan.cross` + the per-pair aggregates, written here as
-  * the reference. Every arm, partition count and a task holding several
-  * broadcast chunks must agree with it to 1e-12 relative. */
+/** The tile folds behind attention, mlp, entropy, xentropy and the sampler
+  * against the pair-row plan they replace: `PairPlan.cross` + the per-pair
+  * aggregates, written here as the reference. Every arm, partition count
+  * and a task holding several broadcast chunks must agree with it to 1e-12
+  * relative; the sampler's sampled index must be the reference's exactly. */
 class TileFoldSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
@@ -135,6 +136,159 @@ class TileFoldSpec extends AnyFunSuite {
     } finally spark.conf.set(key, old)
   }
 
+  // ---- entropy, xentropy and the sampler: scalar scores per pair ----
+
+  private val seed = "tile-spec"
+
+  private def refEntropy(pred: DataFrame, trg: DataFrame, mode: PairPlan.Mode) =
+    PairPlan.cross(trg, pred, mode)
+      .select(col("m_id"), VecOps.dot(col("mvec"), col("kvec")).as("sc"))
+      .groupBy("m_id")
+      .agg(GraftAggs.logSumExpMean(col("sc"), col("sc")).as("lw"))
+      .select(col("m_id"), (col("lw.z") - col("lw.v")).as("h"))
+
+  private def refXEntropy(pred: DataFrame, trg: DataFrame, mode: PairPlan.Mode) =
+    PairPlan.cross(trg, pred, mode)
+      .select(col("m_id"), col("label"), col("k_id"),
+        VecOps.dot(col("mvec"), col("kvec")).as("sc"))
+      .groupBy("m_id")
+      .agg(GraftAggs.logSumExp(col("sc")).as("p"),
+        sum(when(col("k_id") === col("label"), col("sc")).otherwise(0.0)).as("n"))
+      .select(col("m_id"), (col("p") - col("n")).as("loss"))
+
+  private def refSampler(pred: DataFrame, trg: DataFrame, mode: PairPlan.Mode) = {
+    val noise = VecOps.pairGumbel(VecOps.seed60(seed), col("m_id"), col("k_id"))
+    PairPlan.cross(trg, pred, mode)
+      .select(col("m_id"), col("k_id"), VecOps.dot(col("mvec"), col("kvec")).as("sc"))
+      .select(col("m_id"), col("k_id"), col("sc"), (col("sc") + noise).as("pert"))
+      .groupBy("m_id")
+      .agg(GraftAggs.argMaxPert(col("pert"), col("sc"), col("k_id")).as("top"),
+        GraftAggs.logSumExp(col("sc")).as("tz"))
+      .select(col("m_id"), col("top.k_id").as("c"),
+        exp(col("top.sc") - col("tz")).as("weight"))
+  }
+
+  /** m_id -> the row's other columns. */
+  private def byId(df: DataFrame): Map[Long, Seq[Any]] =
+    df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+
+  private def assertScalar(got: DataFrame, want: DataFrame, ctx: String): Unit = {
+    val (g, w) = (byId(got), byId(want))
+    assert(g.nonEmpty && g.keySet == w.keySet, s"$ctx: ${g.keySet} vs ${w.keySet}")
+    for ((k, vs) <- g; (a, b) <- vs.zip(w(k))) {
+      val same = (a, b) match {
+        case (x: Double, y: Double) => close(x, y)
+        case (x, y) => x == y
+      }
+      assert(same, s"$ctx m_id $k: $vs vs ${w(k)}")
+    }
+  }
+
+  /** The three kernels and their references on one (pred, trg); pred has
+    * (m_id, mvec, label), trg (k_id, kvec). */
+  private def assertScalarKernels(pred: DataFrame, trg: DataFrame,
+                                  mode: PairPlan.Mode, ctx: String): Unit = {
+    val noLabel = pred.drop("label")
+    assertScalar(Entropy.entropy(noLabel, trg, mode), refEntropy(noLabel, trg, mode),
+      s"entropy $ctx")
+    assertScalar(XEntropy.xentropy(pred, trg, mode), refXEntropy(pred, trg, mode),
+      s"xentropy $ctx")
+    assertScalar(Sampler.sampler(noLabel, trg, seed, mode),
+      refSampler(noLabel, trg, mode), s"sampler $ctx")
+  }
+
+  private def predSide(m: Int, f: Int, seed: Int, labels: Int): DataFrame = {
+    val r = new scala.util.Random(seed)
+    (0 until m).map(i => (i.toLong, vec(r, f, -1, 1), r.nextInt(labels).toLong))
+      .toDF("m_id", "mvec", "label")
+  }
+
+  private def trgSide(n: Int, f: Int, seed: Int): DataFrame =
+    kvSide(n, f, 1, seed).select(col("k_id"), col("kvec"))
+
+  for (mode <- Seq(PairPlan.Broadcast, PairPlan.Blocked); n <- Seq(1, 7)) {
+    test(s"entropy, xentropy and the sampler match the pair-row plan: " +
+        s"$mode, targets in $n partition(s)") {
+      assertScalarKernels(predSide(12, 16, 21, 300), parts(trgSide(300, 16, 22), n),
+        mode, s"$mode/$n")
+    }
+  }
+
+  test("entropy, xentropy and the sampler over a 5000-row target side in " +
+      "one partition: several chunks a task, with and without whole-stage codegen") {
+    val pred = predSide(8, 16, 23, 5000)
+    val trg = trgSide(5000, 16, 24).coalesce(1)
+    val chunks = PairPlan.tiles(trg, pred, PairPlan.Broadcast)
+      .select(spark_partition_id().as("p"), col("__tid")).distinct().collect()
+    assert(chunks.map(_.getInt(0)).distinct.length == 1 && chunks.length >= 3,
+      s"expected one task holding >= 3 chunks, got ${chunks.toSeq}")
+    val key = "spark.sql.codegen.wholeStage"
+    val old = spark.conf.get(key)
+    try for (wholeStage <- Seq("true", "false")) {
+      spark.conf.set(key, wholeStage)
+      assertScalarKernels(pred, trg, PairPlan.Broadcast, s"wholeStage=$wholeStage")
+    } finally spark.conf.set(key, old)
+  }
+
+  /** pairGumbel(seed, m_id, k_id) as the plan computes it. */
+  private def gumbel(mId: Long, kId: Long): Double = {
+    val u = (Mix60Kernel.mix60(VecOps.seed60(seed), mId, kId).toDouble + 0.5) /
+      1152921504606846976.0
+    -StrictMath.log(-StrictMath.log(u))
+  }
+
+  test("the sampler's tile winner is the pair plan's: tied perts break on " +
+      "sc then k_id; NaN, +-0.0 and null scores; null ids") {
+    // at 2^55 a double steps by 8, so sc + noise rounds onto the grid:
+    // a pair with noise in (4, 12) ties in pert with the pair one step up
+    // whose noise is in (-4, 4), and two equal scores with noise in
+    // (-4, 4) tie in pert and sc
+    val big = math.pow(2, 55)
+    val ka = (1000L until 4000L).filter(k => gumbel(0L, k) > 4 && gumbel(0L, k) < 12).max
+    val small = (1000L until ka).filter(k => math.abs(gumbel(0L, k)) < 4)
+    val (kb, kc, kd) = (small(0), small(1), small(2))
+    assert(big + gumbel(0L, ka) == (big + 8) + gumbel(0L, kb))
+    assert((big + 8) + gumbel(0L, kc) == (big + 8) + gumbel(0L, kd))
+    // ka ties kb..kd in pert and has the largest k_id, but the lower sc
+    val ties = Seq((ka, Array(big)), (kb, Array(big + 8)), (kc, Array(big + 8)),
+      (kd, Array(big + 8))).toDF("k_id", "kvec")
+    val odd = Seq[(Option[Long], Array[Double])](
+      (Some(1L), Array(Double.NaN)), (Some(2L), Array(Double.NaN)),
+      (Some(3L), Array(0.0)), (Some(3L), Array(-0.0)), (Some(4L), null),
+      (None, Array(1.0)), (Some(5L), Array(0.5)), (Some(6L), Array(-2.0)))
+      .toDF("k_id", "kvec")
+    val pred = Seq[(Long, Array[Double], Option[Long])](
+      (0L, Array(1.0), Some(3L)), (1L, Array(-1.0), Some(4L)),
+      (2L, Array(0.0), Some(1L)), (3L, null, None), (5L, Array(1e-3), Some(99L)))
+      .toDF("m_id", "mvec", "label")
+    val noLabel = pred.drop("label")
+    for (mode <- Seq(PairPlan.Broadcast, PairPlan.Blocked); n <- Seq(1, 3)) {
+      val c = Sampler.sampler(noLabel, parts(ties, n), seed, mode)
+        .filter(col("m_id") === 0L).select("c").head().getLong(0)
+      assert(c == kd, s"$mode/$n: tie winner $c, want $kd")
+      for (t <- Seq(ties.union(odd), odd, odd.filter(!isnan(element_at(col("kvec"), 1)))
+          .union(odd.filter(col("kvec").isNull))))
+        assertScalar(Sampler.sampler(noLabel, parts(t, n), seed, mode),
+          refSampler(noLabel, parts(t, n), mode), s"edge sampler $mode/$n")
+      // entropy and xentropy on the same odd rows (NaN scores give NaN)
+      assertScalarKernels(pred, parts(odd, n), mode, s"edge $mode/$n")
+    }
+  }
+
+  test("xentropy: a label absent from a tile or from the targets, a null " +
+      "label and a duplicated k_id") {
+    val trg = trgSide(600, 8, 25).union(trgSide(600, 8, 26).filter(col("k_id") === 7L))
+    val pred = predSide(6, 8, 27, 10)
+      .union(Seq[(Long, Array[Double], Option[Long])](
+        (100L, Array.fill(8)(0.25), Some(7L)), (101L, Array.fill(8)(0.5), None),
+        (102L, Array.fill(8)(-0.5), Some(5000L))).toDF("m_id", "mvec", "label"))
+    for (mode <- Seq(PairPlan.Broadcast, PairPlan.Blocked); n <- Seq(1, 7)) {
+      val t = parts(trg, n)
+      assertScalar(XEntropy.xentropy(pred, t, mode), refXEntropy(pred, t, mode),
+        s"xentropy labels $mode/$n")
+    }
+  }
+
   // ---- the folds as functions of one (query row, tile) ----
 
   private val kvType = StructType(Seq(StructField("k_id", LongType),
@@ -235,6 +389,34 @@ class TileFoldSpec extends AnyFunSuite {
       tile(t).array.copyToArray(backing)
       assert(e.fold(cache, x, reused, tid.toLong).toDoubleArray() sameElements
         e.fold(new TileCache, x, tile(t), 0L).toDoubleArray(), s"tile $tid")
+    }
+  }
+
+  test("the scalar folds cache on the tile id too: one reused buffer " +
+      "holding two tiles folds each") {
+    val kType = StructType(Seq(StructField("k_id", LongType),
+      StructField("kvec", ArrayType(DoubleType))))
+    val (q, t, id, key) = (BoundReference(0, ArrayType(DoubleType), true),
+      BoundReference(1, ArrayType(kType), true), BoundReference(2, LongType, false),
+      BoundReference(3, LongType, true))
+    val (ent, xe, smp) = (EntropyTileFold(q, t, id), XEntropyTileFold(q, t, id, key),
+      SamplerTileFold(q, t, id, key, 7L))
+    def ktile(rs: Seq[(Long, Array[Double], Array[Double])]) =
+      new GenericArrayData(rs.map { case (i, a, _) => InternalRow(i, arr(a)): Any }.toArray)
+    val x = arr(Array.fill(6)(0.5))
+    val caches = Seq.fill(3)(new TileCache)
+    val backing = new Array[Any](7)
+    val reused = new GenericArrayData(backing)
+    // label 9 lies in the second tile only
+    for ((rs, tid) <- Seq(rows(7, 15), rows(7, 16, idFrom = 7)).zipWithIndex) {
+      ktile(rs).array.copyToArray(backing)
+      val fresh = ktile(rs)
+      assert(ent.fold(caches(0), x, reused, tid.toLong) ==
+        ent.fold(new TileCache, x, fresh, 0L), s"entropy tile $tid")
+      assert(xe.fold(caches(1), x, reused, tid.toLong, labelNull = false, 9L) ==
+        xe.fold(new TileCache, x, fresh, 0L, labelNull = false, 9L), s"xentropy tile $tid")
+      assert(smp.fold(caches(2), x, reused, tid.toLong, mIdNull = false, 3L) ==
+        smp.fold(new TileCache, x, fresh, 0L, mIdNull = false, 3L), s"sampler tile $tid")
     }
   }
 
