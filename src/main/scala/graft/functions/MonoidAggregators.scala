@@ -1,9 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
-import org.apache.spark.sql.functions.{element_at, lit, size, udaf, when}
+import org.apache.spark.sql.functions.{col, element_at, isnan, lit, posexplode,
+  size, struct, transform, udaf, when}
+import org.apache.spark.sql.types.NumericType
 
 /** The commutative monoids at the heart of the reference
   * (reference core.py:15-64): `zero` = `init`, `reduce` = `proj_fold`,
@@ -11,7 +14,10 @@ import org.apache.spark.sql.functions.{element_at, lit, size, udaf, when}
   * partial-aggregate -> exchange -> final-aggregate automatically
   * (ObjectHashAggregateExec), which IS the reference's chunked fold — the
   * chunk loop maps to the task-per-partition boundary, `binary_reduce` to
-  * both intra-partition `reduce` and post-shuffle `merge`.
+  * both intra-partition `reduce` and post-shuffle `merge`. The sketch
+  * monoids below are typed `Aggregator`s over a [[Monoid]]; per-key top-k
+  * is Catalyst's own bounded `collect_top_k` ([[GraftAggs.topK]],
+  * [[GraftAggs.topKRows]]).
   *
   * Numerical stability is the spec, not an accident (SURVEY.md §2.4.1):
   * every softmax-family state renormalizes by the running max — never a raw
@@ -25,75 +31,6 @@ trait Monoid[B] extends Serializable {
   def combine(a: B, b: B): B
 }
 
-/** Generic factory mirroring `mk_GeMMMapReduce` (reference core.py:15-64):
-  * monoid + per-row lift (↔ `proj_fold`) + output projection → a Spark
-  * `Aggregator`, which Catalyst plans as partial → exchange → final — the
-  * execution the reference hand-rolls as its chunk loop. New monoids
-  * (sketches, top-k, ...) get partial/merge/spill handling for free.
-  *
-  * Extensibility path; the hot-path monoids remain native
-  * aggregates ([[LogWeightedVecAgg]], [[VecWeightedSumAgg]],
-  * [[LogSumExpDecl]], [[ArgMaxPertAgg]]) to skip the per-row encoder. */
-object FoldAggregator {
-  def apply[IN, B, OUT](m: Monoid[B], lift: IN => B, project: B => OUT)(
-      implicit be: Encoder[B], oe: Encoder[OUT]): Aggregator[IN, B, OUT] =
-    new Aggregator[IN, B, OUT] {
-      def zero: B = m.zero
-      def reduce(b: B, in: IN): B = m.combine(b, lift(in))
-      def merge(a: B, b: B): B = m.combine(a, b)
-      def finish(b: B): OUT = project(b)
-      def bufferEncoder: Encoder[B] = be
-      def outputEncoder: Encoder[OUT] = oe
-    }
-}
-
-/** One ranked item of the top-k monoid state. */
-case class TopKItem(value: Double, id: Long)
-
-/** Bounded top-k buffer: items sorted (value desc, id asc), length ≤ k. */
-case class TopKBuf(items: Seq[TopKItem])
-
-/** The bounded top-k monoid — the canonical "new monoid via the factory"
-  * the reference's `mk_GeMMMapReduce` contract promises (its sampler is
-  * the k=1 case, sampling.py:14 argmax): state is the k best (value, id)
-  * pairs, combine is an O(k) sorted-merge-truncate. Exactly associative
-  * and commutative (pure comparisons, no float arithmetic — the laws hold
-  * bit-exactly, unlike the softmax family's to-tolerance). The id
-  * tie-break makes the fold order-independent even on duplicate values,
-  * which is what lets the driver hash-grade the result. */
-class TopKMonoid(k: Int) extends Monoid[TopKBuf] {
-  def zero: TopKBuf = TopKBuf(Vector.empty)
-  private def beats(x: TopKItem, y: TopKItem): Boolean =
-    x.value > y.value || (x.value == y.value && x.id < y.id)
-  def combine(a: TopKBuf, b: TopKBuf): TopKBuf = {
-    val out = Vector.newBuilder[TopKItem]
-    var (i, j, n) = (0, 0, 0)
-    while (n < k && (i < a.items.length || j < b.items.length)) {
-      val takeA = j >= b.items.length ||
-        (i < a.items.length && beats(a.items(i), b.items(j)))
-      if (takeA) { out += a.items(i); i += 1 }
-      else { out += b.items(j); j += 1 }
-      n += 1
-    }
-    TopKBuf(out.result())
-  }
-}
-
-/** Top-k per group through the [[FoldAggregator]] factory: each (value, id)
-  * row lifts to a singleton state; Catalyst's partial→exchange→final IS the
-  * blocked fold, so only k items per group ever cross the shuffle. */
-class TopKAgg(k: Int) extends Aggregator[TopKItem, TopKBuf, Seq[TopKItem]] {
-  private val inner = FoldAggregator[TopKItem, TopKBuf, Seq[TopKItem]](
-    new TopKMonoid(k), it => TopKBuf(Vector(it)), _.items)(
-    Encoders.product[TopKBuf], ExpressionEncoder[Seq[TopKItem]]())
-  def zero: TopKBuf = inner.zero
-  def reduce(b: TopKBuf, in: TopKItem): TopKBuf = inner.reduce(b, in)
-  def merge(a: TopKBuf, b: TopKBuf): TopKBuf = inner.merge(a, b)
-  def finish(b: TopKBuf): Seq[TopKItem] = inner.finish(b)
-  def bufferEncoder: Encoder[TopKBuf] = inner.bufferEncoder
-  def outputEncoder: Encoder[Seq[TopKItem]] = inner.outputEncoder
-}
-
 /** KMV (k-minimum-values) distinct-count buffer: the k smallest DISTINCT
   * hash values seen so far, sorted ascending, length ≤ k. */
 case class KmvBuf(hs: Seq[Long])
@@ -101,8 +38,8 @@ case class KmvBuf(hs: Seq[Long])
 /** The KMV distinct-count sketch monoid (Bar-Yossef et al. 2002;
   * Beyer et al. 2007 for the set-operation estimators): state is the k
   * smallest distinct hash values, combine is an O(k) dedup-sorted-merge-
-  * truncate. Like [[TopKMonoid]] (its mirror image — k smallest, with
-  * dedup) the laws hold BIT-exactly: pure integer comparisons, no float
+  * truncate. Like the top-k monoid (its mirror image — k smallest,
+  * with dedup) the laws hold BIT-exactly: pure integer comparisons, no float
   * arithmetic, and dedup makes the fold IDEMPOTENT, so re-processed rows
   * cannot drift the state. That exactness is what distinguishes KMV from
   * the repo's other distinct sketch: an HLL register set is deterministic
@@ -130,21 +67,20 @@ class KmvMonoid(k: Int) extends Monoid[KmvBuf] {
   }
 }
 
-/** KMV per group through the [[FoldAggregator]] factory: each hash lifts
-  * to a singleton state; only ≤ k longs per group cross the shuffle.
+/** KMV per group: each hash folds into the state, states merge through
+  * [[KmvMonoid]]; only ≤ k longs per group cross the shuffle.
   *
   * `reduce` short-circuits the monoid's singleton combine: once the
   * sketch is full, a hash at or above the k-th minimum cannot enter the
   * state, so the overwhelmingly common case is an O(1) compare instead of
   * an O(k) merge-allocate (the expected number of real inserts over N
   * distinct rows is only k·ln(N/k) — for k=256 over a few million
-  * shingles, a few thousand). Bit-identical to `combine(b, lift(h))` by
-  * the semilattice laws; KmvReduceSpec cross-checks the two paths. */
+  * shingles, a few thousand). Bit-identical to the singleton combine
+  * `combine(b, KmvBuf(Vector(h)))` by the semilattice laws;
+  * MonoidLawsSpec cross-checks the two paths. */
 class KmvAgg(k: Int) extends Aggregator[Long, KmvBuf, Seq[Long]] {
-  private val inner = FoldAggregator[Long, KmvBuf, Seq[Long]](
-    new KmvMonoid(k), h => KmvBuf(Vector(h)), _.hs)(
-    Encoders.product[KmvBuf], ExpressionEncoder[Seq[Long]]())
-  def zero: KmvBuf = inner.zero
+  private val m = new KmvMonoid(k)
+  def zero: KmvBuf = m.zero
   def reduce(b: KmvBuf, h: Long): KmvBuf = {
     val hs = b.hs
     val n = hs.length
@@ -163,10 +99,10 @@ class KmvAgg(k: Int) extends Aggregator[Long, KmvBuf, Seq[Long]] {
       }
     }
   }
-  def merge(a: KmvBuf, b: KmvBuf): KmvBuf = inner.merge(a, b)
-  def finish(b: KmvBuf): Seq[Long] = inner.finish(b)
-  def bufferEncoder: Encoder[KmvBuf] = inner.bufferEncoder
-  def outputEncoder: Encoder[Seq[Long]] = inner.outputEncoder
+  def merge(a: KmvBuf, b: KmvBuf): KmvBuf = m.combine(a, b)
+  def finish(b: KmvBuf): Seq[Long] = b.hs
+  def bufferEncoder: Encoder[KmvBuf] = Encoders.product[KmvBuf]
+  def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
 }
 
 /** Misra–Gries heavy-hitters buffer: at most m (token, count) entries. */
@@ -199,19 +135,18 @@ class MgMonoid(m: Int) extends Monoid[MgBuf] {
   }
 }
 
-/** Heavy hitters per group through the [[FoldAggregator]] factory: each
-  * token lifts to a singleton count map. Only ≤ m entries per partition
-  * ever cross the shuffle. */
+/** Heavy hitters per group through [[MgMonoid]]: each token lifts to a
+  * singleton count map. Only ≤ m entries per partition ever cross the
+  * shuffle. */
 class MgAgg(m: Int) extends Aggregator[String, MgBuf, Map[String, Long]] {
-  private val inner = FoldAggregator[String, MgBuf, Map[String, Long]](
-    new MgMonoid(m), t => MgBuf(Map(t -> 1L)), _.counts)(
-    Encoders.product[MgBuf], ExpressionEncoder[Map[String, Long]]())
-  def zero: MgBuf = inner.zero
-  def reduce(b: MgBuf, t: String): MgBuf = inner.reduce(b, t)
-  def merge(a: MgBuf, b: MgBuf): MgBuf = inner.merge(a, b)
-  def finish(b: MgBuf): Map[String, Long] = inner.finish(b)
-  def bufferEncoder: Encoder[MgBuf] = inner.bufferEncoder
-  def outputEncoder: Encoder[Map[String, Long]] = inner.outputEncoder
+  private val mg = new MgMonoid(m)
+  def zero: MgBuf = mg.zero
+  def reduce(b: MgBuf, t: String): MgBuf = mg.combine(b, MgBuf(Map(t -> 1L)))
+  def merge(a: MgBuf, b: MgBuf): MgBuf = mg.combine(a, b)
+  def finish(b: MgBuf): Map[String, Long] = b.counts
+  def bufferEncoder: Encoder[MgBuf] = Encoders.product[MgBuf]
+  def outputEncoder: Encoder[Map[String, Long]] =
+    ExpressionEncoder[Map[String, Long]]()
 }
 
 /** DataFrame-callable registrations. The scalar monoids (logsumexp, its
@@ -239,10 +174,61 @@ object GraftAggs {
       LogSumExpDecl(NativeExprs.toExpr(score), Some(NativeExprs.toExpr(value)))
         .toAggregateExpression())
 
-  /** topK(k)(valueCol, idCol) -> array<struct<value,id>>, largest first
-    * (id-tie-broken) — the bounded top-k monoid via [[FoldAggregator]]. */
-  def topK(k: Int): UserDefinedFunction =
-    udaf(new TopKAgg(k), ExpressionEncoder[TopKItem]())
+  /** Catalyst's bounded top-k aggregate, built here and nowhere else: the
+    * k largest `ord` values per group, largest first (with `smallest`, the
+    * k smallest, smallest first). A `TypedImperativeAggregate` over a
+    * bounded priority queue, so the partial aggregate ships at most k
+    * values per group per task — the top-k monoid (the top-k of a union is
+    * the top-k of the parts' top-ks; the reference sampler is its k = 1
+    * case, sampling.py:14). */
+  private def collectTopK(ord: Column, k: Int, smallest: Boolean): Column =
+    NativeExprs.toCol(new CollectTopK(NativeExprs.toExpr(ord), k, smallest, 0, 0)
+      .toAggregateExpression())
+
+  /** The fields of a struct whose order (with the returned `smallest`
+    * flag) is SQL's `ORDER BY score ASC, id` (nulls first) or `ORDER BY
+    * score DESC, id` (nulls last), NaN above every number and -0.0 equal
+    * to 0.0. Struct comparison stops at the first unequal field, so the
+    * numeric forms keep two fields; a non-numeric id cannot be negated, so
+    * its descending form keeps the k smallest of a key that leads with
+    * the null and NaN flags. A numeric id must not be null. */
+  private def rankKey(score: Column, ascending: Boolean, id: Column,
+                      numericId: Boolean): (Seq[Column], Boolean) =
+    if (ascending) (Seq(score, id), true)
+    else if (numericId) (Seq(score, -id), false)
+    else (Seq(score.isNull, !isnan(score), -score, id), true)
+
+  /** topK(k)(valueCol, idCol) -> array<struct<value: double, id: long>>,
+    * largest value first, ties on the smaller id. NaN ranks highest, a
+    * null value lowest. */
+  def topK(k: Int)(value: Column, id: Column): Column =
+    transform(collectTopK(struct(value.cast("double").as("value"),
+        (-id.cast("long")).as("nid")), k, smallest = false),
+      s => struct(s("value").as("value"), (-s("nid")).as("id")))
+
+  /** Each `key`'s k best rows of `df`, with `rank` = 1..k (a long): row
+    * for row what `row_number() over (partitionBy key orderBy score
+    * [desc], id)` filtered to rank <= k gives, for any score (nulls, NaN,
+    * ±0.0) and a numeric or string `id`. One bounded aggregate per key
+    * replaces the window's sort of every row. */
+  def topKRows(df: DataFrame, key: String, k: Int, score: String,
+               ascending: Boolean, id: String): DataFrame = {
+    val (ord, smallest) = rankKey(col(score), ascending, col(id),
+      df.schema(id).dataType.isInstanceOf[NumericType])
+    // one flat struct, the order's fields first and then the row's own
+    // columns: nesting the row in a struct field cost the aggregate about
+    // twice the time per row (local[4], 256k rows). The key is read back
+    // from the grouping column, so the output stays hash-partitioned on it
+    val rest = df.columns.filter(_ != key)
+    val fields = ord.zipWithIndex.map { case (c, i) => c.as(s"_o$i") } ++
+      rest.map(col)
+    df.groupBy(col(key))
+      .agg(collectTopK(struct(fields: _*), k, smallest).as("top"))
+      .select(col(key), posexplode(col("top")))
+      .select(df.columns.map(c =>
+        if (c == key) col(c) else col("col").getField(c).as(c)) :+
+        (col("pos") + 1).cast("long").as("rank"): _*)
+  }
 
   /** mgSketch(m)(tokenCol) -> map<string,long>: Misra–Gries heavy-hitter
     * estimates with order-independent error ≤ N/(m+1). */

@@ -1,10 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecOps
+import graft.functions.{GraftAggs, VecOps}
 
 /** PRODUCT QUANTIZATION (PQ) over the embedding column — the vector
   * compression step between the int8 path (`embed_quantize`, 4×) and a
@@ -244,12 +243,11 @@ object Pq {
   def adcTopK(q: DataFrame, kv: DataFrame, cb: DataFrame, k: Int,
               rerankC: Int = RerankC): DataFrame = {
     val cbl = collectCb(cb)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("k_id"))
-    val cand = PairPlan.cross(codesWith(kv, cbl), qlutWith(q, cbl), PairPlan.Auto)
+    val cand = GraftAggs.topKRows(
+      PairPlan.cross(codesWith(kv, cbl), qlutWith(q, cbl), PairPlan.Auto)
       .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
+      "q_id", rerankC, "acos", ascending = false, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
   }
@@ -270,13 +268,11 @@ object Pq {
     val cbl = collectCb(cb)
     val kcodes = codesWith(kv, cbl).join(Similarity.ivfAssign(kv, cents), "k_id")
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("k_id"))
-    val cand = kcodes.join(broadcast(probes), "list_id")
+    val cand = GraftAggs.topKRows(kcodes.join(broadcast(probes), "list_id")
       .join(broadcast(qlutWith(q, cbl)), "q_id")
       .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
+      "q_id", rerankC, "acos", ascending = false, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
   }
@@ -347,13 +343,11 @@ object Pq {
       lut.as("lut"), rn2.as("rn2"))
     val aip = (0 until M).map(cell("lut", _)).reduce(_ + _)
     val an2 = (0 until M).map(cell("rn2", _)).reduce(_ + _)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("ad2"), col("k_id"))
-    val cand = kcodes.join(broadcast(ql), "list_id")
+    val cand = GraftAggs.topKRows(kcodes.join(broadcast(ql), "list_id")
       .filter(col("k_id") =!= col("q_id"))
       .select(col("q_id"), col("k_id"),
-        (col("qn2") - lit(2.0) * aip + an2).as("ad2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+        (col("qn2") - lit(2.0) * aip + an2).as("ad2")),
+      "q_id", rerankC, "ad2", ascending = true, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
     }
@@ -389,13 +383,11 @@ object Pq {
       .write.mode("append").partitionBy("list_id").parquet(path)
     val inv = spark.read.parquet(path)
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("k_id"))
-    val cand = inv.join(broadcast(probes), "list_id")
+    val cand = GraftAggs.topKRows(inv.join(broadcast(probes), "list_id")
       .join(broadcast(qlutWith(q, cbl)), "q_id")
       .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
+      "q_id", rerankC, "acos", ascending = false, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, existing.union(batch), k, PairPlan.Auto)
   }
@@ -419,13 +411,11 @@ object Pq {
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
     val inv = spark.read.parquet(path)
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("k_id"))
-    val cand = inv.join(broadcast(probes), "list_id")
+    val cand = GraftAggs.topKRows(inv.join(broadcast(probes), "list_id")
       .join(broadcast(qlutWith(q, cbl)), "q_id")
       .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
+      "q_id", rerankC, "acos", ascending = false, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
   }
@@ -518,13 +508,11 @@ object Pq {
         col("m") === col("lm") && col("code") === col("j"))
       .groupBy(col("q_id"), col("k_id"))
       .agg(pivotFold("ip").as("aip"), pivotFold("nn").as("an2"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("k_id"))
-    val cand = sc2.join(broadcast(qn), "q_id")
+    val cand = GraftAggs.topKRows(sc2.join(broadcast(qn), "q_id")
       .filter(col("k_id") =!= col("q_id"))
       .select(col("q_id"), col("k_id"),
-        (col("aip") / (col("qn") * sqrt(col("an2")))).as("acos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= rerankC)
+        (col("aip") / (col("qn") * sqrt(col("an2")))).as("acos")),
+      "q_id", rerankC, "acos", ascending = false, "k_id")
       .select(col("q_id"), col("k_id"))
     Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
   }

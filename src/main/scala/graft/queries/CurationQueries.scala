@@ -255,18 +255,15 @@ object CurationQueries {
   }
 
   /** Top-k documents by length per language — the per-stratum selection
-    * shape (best-of-group). The rank window is PARTITIONED (by lang), so
-    * at 100 TB each language sorts independently across the cluster; no
-    * single-partition window anywhere. */
+    * shape (best-of-group). The bounded top-k aggregate is keyed by lang,
+    * so at 100 TB each task ships at most k rows per language; no sort of
+    * a language's documents anywhere. */
   private val TopK = 5
 
-  private def topKPerLang(d: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(desc("n_chars"), col("doc_id"))
-    d.select(col("lang"), col("doc_id"), col("n_chars"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-  }
+  private def topKPerLang(d: DataFrame): DataFrame =
+    graft.functions.GraftAggs.topKRows(
+      d.select(col("lang"), col("doc_id"), col("n_chars")),
+      "lang", TopK, "n_chars", ascending = false, "doc_id")
 
   private val topKOracle =
     s"""SELECT lang, doc_id, n_chars, CAST(rank AS BIGINT) AS rank
@@ -281,7 +278,7 @@ object CurationQueries {
     * deterministic md5 u01 stream and w = n_chars — longer docs are
     * proportionally likelier, yet the draw is reproducible and
     * oracle-checkable. Runs through the bounded top-k MONOID
-    * ([[graft.functions.TopKMonoid]], fed −e so max-of-k = min-e): only k
+    * ([[graft.functions.GraftAggs.topK]], fed −e so max-of-k = min-e): only k
     * candidates per partition cross the shuffle — the 100 TB weighted
     * sample without a global sort (the window-rank oracle dual is the
     * sort it avoids). Cross-engine rank safety: both engines take ln of

@@ -448,10 +448,9 @@ object SimilarityQueries {
     * (bit-identical centroids cross-engine); term counts are exact; the
     * top-3 cut orders by (tf, token) — deterministic. Shape: trainer as
     * graded, one token-explode shuffle joined against the |docs|-row
-    * assignment (broadcastable here, bucketed at 100 TB), one windowed
-    * top-k per cluster over the (topic, token) aggregate. */
+    * assignment (broadcastable here, bucketed at 100 TB), one bounded
+    * top-k aggregate per cluster over the (topic, token) aggregate. */
   private def docsTopics(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     val kv = emb(s, dir).select(col("vec_id").as("k_id"), col("vec").as("kvec"))
     val cents = trainedCentsMemo(s, dir)
@@ -462,9 +461,8 @@ object SimilarityQueries {
     val cnt = toks.join(asn, "doc_id")
       .groupBy(col("topic"), col("token")).agg(count(lit(1)).as("tf"))
     val nd = asn.groupBy(col("topic")).agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy(col("topic")).orderBy(desc("tf"), col("token"))
-    cnt.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
+    graft.functions.GraftAggs.topKRows(
+      cnt, "topic", 3, "tf", ascending = false, "token")
       .join(broadcast(nd), "topic")
       .select(col("topic"), col("n_docs"), col("rank"), col("token"),
         col("tf"))

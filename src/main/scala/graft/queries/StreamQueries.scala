@@ -125,7 +125,7 @@ object StreamQueries {
   }
 
   /** Top-3 events per type through the BOUNDED TOP-K MONOID
-    * ([[graft.functions.TopKMonoid]] via the FoldAggregator factory — the
+    * ([[graft.functions.GraftAggs.topK]], Catalyst's `collect_top_k` — the
     * reference's extension contract exercised end-to-end): only k items
     * per group cross the shuffle, vs a window-rank's full sort of every
     * group member. The graded dual IS that window rank. */

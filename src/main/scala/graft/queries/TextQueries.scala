@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecOps
+import graft.functions.{GraftAggs, VecOps}
 import graft.operators.{Caching, PhraseIndex, TextOps}
 import graft.sources.Tables
 
@@ -151,7 +151,7 @@ object TextQueries {
     * under-filled and the estimator untested; shingles give tens of
     * thousands of distinct values per lang, so the k-th-minimum path is
     * actually exercised and graded. Scale shape: ≤ k longs per lang cross
-    * the shuffle via the [[graft.functions.FoldAggregator]] partial→final
+    * the shuffle via the [[graft.functions.KmvAgg]] partial→final
     * fold; the exact `countDistinct` is the sf-scale anchor only. */
   private val KmvK = 256
   private val KmvTolRel = 0.30
@@ -688,11 +688,9 @@ object TextQueries {
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
     val nd = d.agg(count(lit(1)).cast("double").as("n_docs"))
     val idf = VecOps.qround(log(col("n_docs") / col("df")), 6)
-    val w = Window.partitionBy(col("doc_id")).orderBy(desc("tfidf"), col("token"))
-    tf.join(dfd, "token").crossJoin(broadcast(nd))
-      .withColumn("tfidf", col("tf") * idf)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    GraftAggs.topKRows(tf.join(dfd, "token").crossJoin(broadcast(nd))
+      .select(col("doc_id"), col("token"), (col("tf") * idf).as("tfidf")),
+      "doc_id", k, "tfidf", ascending = false, "token")
       .select(col("doc_id"), col("rank"), col("token"),
         VecOps.qround(col("tfidf"), 4).as("tfidf"))
   }
@@ -892,7 +890,7 @@ object TextQueries {
     * [[Bm25QTerms]] rows) and the 1-row corpus stats BROADCAST into the tf
     * join, so scoring touches only postings of query terms; the final
     * top-[[Bm25TopDocs]] per query rides the bounded [[graft.functions
-    * .TopKMonoid]] — k items per group cross the shuffle, no global sort
+    * .GraftAggs.topK]] — k items per group cross the shuffle, no global sort
     * anywhere. The graded dual is DuckDB's window-rank formulation. */
   private val Bm25QTerms = 2
   private val Bm25TopDocs = 5
@@ -907,12 +905,10 @@ object TextQueries {
     val clt = toks.groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("c_lt"))
     val ct = toks.groupBy(col("token")).agg(count(lit(1)).as("c_t"))
-    val wq = org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
-      .orderBy(desc("spec_micro"), col("token"))
-    val qterms = clt.join(ct, "token")
-      .withColumn("spec_micro", expr("c_lt * 1000000 div c_t"))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= Bm25QTerms)
+    val qterms = GraftAggs.topKRows(clt.join(ct, "token")
+      .select(col("lang"), col("token"),
+        expr("c_lt * 1000000 div c_t").as("spec_micro")),
+      "lang", Bm25QTerms, "spec_micro", ascending = false, "token")
       .select(col("lang").as("q_lang"), col("token"))
     // inverted-index statistics: one token-keyed shuffle each
     val tf = toks.groupBy(col("doc_id"), col("token"))
@@ -943,8 +939,8 @@ object TextQueries {
   private[graft] def searchBm25(d: DataFrame): DataFrame =
     bm25Scores(d)
       .groupBy(col("q_lang"))
-      .agg(graft.functions.GraftAggs.topK(Bm25TopDocs)(
-        col("score_micro").cast("double"), col("doc_id")).as("top"))
+      .agg(GraftAggs.topK(Bm25TopDocs)(col("score_micro"), col("doc_id"))
+        .as("top"))
       .select(col("q_lang"), posexplode(col("top")))
       .select(col("q_lang").as("lang"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("doc_id"), col("col.value").cast("long").as("score_micro"))
@@ -1007,7 +1003,7 @@ object TextQueries {
     *    then top-[[RrfTop]] per lang by `(rrf_micro DESC, doc_id)`.
     *
     * Everything that crosses an engine boundary is an integer; ties break
-    * on doc_id in both engines ([[graft.functions.TopKMonoid]] / the
+    * on doc_id in both engines ([[graft.functions.GraftAggs.topK]] / the
     * oracle's window ORDER BY).
     *
     * Scale shape: the lexical arm is the BM25 inverted-index build (two
@@ -1030,13 +1026,11 @@ object TextQueries {
     * [[searchHybridOverlap]] (the arm-agreement audit). */
   private[graft] def hybridPools(d: DataFrame,
                                  e: DataFrame): (DataFrame, DataFrame) = {
-    import graft.functions.GraftAggs
     // bounded per-lang pool: (lang, doc_id, rank) with rank 1..k by
     // (score DESC, doc_id) — only k items per lang cross the shuffle
     def pool(scored: DataFrame, score: String, rank: String): DataFrame =
       scored.groupBy(col("lang"))
-        .agg(GraftAggs.topK(RrfPoolK)(
-          col(score).cast("double"), col("doc_id")).as("top"))
+        .agg(GraftAggs.topK(RrfPoolK)(col(score), col("doc_id")).as("top"))
         .select(col("lang"), posexplode(col("top")))
         .select(col("lang"), col("col.id").as("doc_id"),
           (col("pos") + 1).cast("long").as(rank))
@@ -1066,7 +1060,6 @@ object TextQueries {
   }
 
   private[graft] def searchHybridRrf(d: DataFrame, e: DataFrame): DataFrame = {
-    import graft.functions.GraftAggs
     val (lexPool, densePool) = hybridPools(d, e)
     lexPool.join(densePool, Seq("lang", "doc_id"), "full_outer")
       .select(col("lang"), col("doc_id"),
@@ -1074,8 +1067,7 @@ object TextQueries {
           coalesce(expr(s"1000000L div (${RrfC}L + rank_dense)"), lit(0L)))
           .as("rrf_micro"))
       .groupBy(col("lang"))
-      .agg(GraftAggs.topK(RrfTop)(
-        col("rrf_micro").cast("double"), col("doc_id")).as("top"))
+      .agg(GraftAggs.topK(RrfTop)(col("rrf_micro"), col("doc_id")).as("top"))
       .select(col("lang"), posexplode(col("top")))
       .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("doc_id"), col("col.value").cast("long").as("rrf_micro"))

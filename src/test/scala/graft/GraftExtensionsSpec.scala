@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectTopK, Final, Partial}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -279,6 +279,45 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }.isEmpty, s"shuffled join in the pair build:\n$plan")
       assert(collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty,
         s"ObjectHashAggregate in the pair build:\n$plan")
+    }
+  }
+
+  test("per-key top-k plan shape: no Window; each collect_top_k is a " +
+       "partial and a final ObjectHashAggregate around at most one " +
+       "exchange (similar_topk, similar_ivf, similar_pq, tfidf_top)") {
+    def topK(a: ObjectHashAggregateExec, mode: Any) =
+      a.aggregateExpressions.exists(e =>
+        e.mode == mode && e.aggregateFunction.isInstanceOf[CollectTopK])
+    def below(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => p.children
+    }
+    // the rankers each query reaches: cosineTopK; ivfProbes + rerankExact;
+    // adcTopK + rerankExact; tfidf_top's per-document pick
+    for ((name, sites) <- Seq("similar_topk" -> 1, "similar_ivf" -> 2,
+        "similar_pq" -> 2, "tfidf_top" -> 1)) {
+      val df = graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      df.collect() // the final adaptive plan
+      val plan = df.queryExecution.executedPlan
+      assert(collect(plan) { case w: WindowExec => w }.isEmpty,
+        s"$name: Window in\n$plan")
+      val finals = collect(plan) { case a: ObjectHashAggregateExec if topK(a, Final) => a }
+      assert(finals.length == sites, s"$name: ${finals.length} final top-k in\n$plan")
+      finals.foreach { f =>
+        // down the single-child chain from the final to the partial
+        var c: SparkPlan = f.child
+        var exchanges = 0
+        while (!c.isInstanceOf[ObjectHashAggregateExec]) {
+          if (c.isInstanceOf[Exchange]) exchanges += 1
+          val next = below(c)
+          assert(next.length == 1, s"$name: ${c.nodeName} between the top-k merges")
+          c = next.head
+        }
+        // none where the input is already hash-partitioned on the key:
+        // the rerank's candidates come from the pick keyed on q_id
+        assert(topK(c.asInstanceOf[ObjectHashAggregateExec], Partial) &&
+          exchanges <= 1, s"$name: $exchanges exchanges to ${c.nodeName} in\n$plan")
+      }
     }
   }
 

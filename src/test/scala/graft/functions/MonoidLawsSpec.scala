@@ -166,29 +166,44 @@ class MonoidLawsSpec extends AnyFunSuite {
     }
   }
 
-  // ---- TopKMonoid (pure comparisons — laws hold bit-exactly) ----
+  // ---- top-k: GraftAggs.topK (Catalyst's collect_top_k; pure
+  //      comparisons, so every fold tree gives the same answer EXACTLY) ----
 
-  test("top-k monoid: associative, commutative, identity — EXACTLY; fold == sort") {
+  test("top-k: any partial/merge tree == sort-then-take, ties on the id; " +
+       "NaN ranks highest, a null value lowest") {
+    import spark.implicits._
     val k = 3
-    val m = new TopKMonoid(k)
-    def randBuf(): TopKBuf =
-      (1 to rnd.nextInt(6)).foldLeft(m.zero)((b, _) =>
-        m.combine(b, TopKBuf(Vector(
-          TopKItem(rnd.nextInt(4).toDouble, rnd.nextInt(100).toLong)))))
-    for (_ <- 1 to Iters) {
-      val (a, b, c) = (randBuf(), randBuf(), randBuf())
-      assert(m.combine(m.combine(a, b), c) == m.combine(a, m.combine(b, c)))
-      assert(m.combine(a, b) == m.combine(b, a)) // needs the id tie-break:
-      // duplicate values are common here (values drawn from 4 levels)
-      assert(m.combine(a, m.zero) == a && m.combine(m.zero, a) == a)
+    val r = new Random(11)
+    // values from 4 levels (duplicates common), plus NaN and null
+    val rows = (0 until Iters).flatMap { g =>
+      Seq.fill(1 + r.nextInt(8)) {
+        val v: java.lang.Double = r.nextInt(10) match {
+          case 0 => null
+          case 1 => Double.NaN
+          case x => (x % 4).toDouble
+        }
+        (g, v, r.nextInt(100).toLong)
+      }
     }
-    for (_ <- 1 to Iters) {
-      val items = Seq.fill(1 + rnd.nextInt(20))(
-        TopKItem(rnd.nextInt(4).toDouble, rnd.nextInt(1000).toLong))
-      val folded = items.foldLeft(m.zero)((b, it) => m.combine(b, TopKBuf(Vector(it))))
-      val want = items.sortBy(it => (-it.value, it.id)).take(k)
-      assert(folded.items == want, s"fold ${folded.items} vs sort $want")
+    def key(v: java.lang.Double, id: Long) =
+      (v == null, !(v != null && v.isNaN),
+        if (v == null || v.isNaN) 0 else -v.intValue, id)
+    val want = rows.groupBy(_._1).map { case (g, rs) =>
+      g -> rs.map(x => (x._2, x._3)).sortBy { case (v, id) => key(v, id) }
+        .take(k).map { case (v, id) => (Option(v).map(_.doubleValue), id) }
     }
+    def topK(in: Seq[(Int, java.lang.Double, Long)], parts: Int) =
+      in.toDF("g", "v", "id").repartition(parts)
+        .groupBy(col("g")).agg(GraftAggs.topK(k)(col("v"), col("id")).as("t"))
+        .select(col("g"), col("t.value"), col("t.id")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[java.lang.Double](1)
+          .map(v => Option(v).map(_.doubleValue)).zip(r.getSeq[Long](2)))
+        .toMap
+    // Option[Double] equality: NaN never equals itself, so compare printed
+    def shown(m: Map[Int, Seq[(Option[Double], Long)]]) = m.map { case (g, s) =>
+      g -> s.map { case (v, id) => (v.toString, id) } }
+    for (parts <- Seq(1, 7); in <- Seq(rows, rows.reverse))
+      assert(shown(topK(in, parts)) == shown(want), s"$parts partitions")
   }
 
   // ---- KmvMonoid (pure integer comparisons + dedup — bit-exact AND

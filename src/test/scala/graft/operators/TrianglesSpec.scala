@@ -147,6 +147,31 @@ class TrianglesSpec extends AnyFunSuite {
     } finally spark.conf.set(thr, saved)
   }
 
+  // K5 plus a tail 4-5-6-7: the tail peels off every core and pulls
+  // label propagation's rounds across the clique's border
+  private val k5Tail = ((for { i <- 0 until 5; j <- i + 1 until 5 }
+    yield (i.toLong, j.toLong)) ++ Seq((4L, 5L), (5L, 6L), (6L, 7L)))
+
+  test("kCore: the broadcast and the SHUFFLE_HASH arm give the same core") {
+    val edges = k5Tail.toDF("a", "b")
+    val bc = Triangles.kCore(edges, 3, 10).collect().toSeq
+    val sh = Triangles.kCore(edges, 3, 10, broadcastMaxEdges = 1L).collect().toSeq
+    assert(bc == sh)
+    // the 3-core is K5: 5 nodes, 10 edges, reached in two peels
+    assert(bc.map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))) ==
+      Seq((5L, 10L, 2L, true)), bc.toString)
+  }
+
+  test("labelPropagation: the broadcast and the SHUFFLE_HASH arm give the " +
+       "same labels") {
+    val edges = k5Tail.toDF("a", "b")
+    def labels(maxEdges: Long) =
+      Triangles.labelPropagation(edges, 3, maxEdges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val bc = labels(Triangles.BroadcastMaxEdges)
+    assert(bc.size == 8 && bc == labels(1L), bc.toString)
+  }
+
   test("labelPropagation separates bridge-joined communities CC would merge") {
     // two triangles joined by ONE bridge edge: connected components says
     // one component; 3 synchronous LPA rounds with the (count DESC, label

@@ -120,15 +120,14 @@ class StreamingParitySpec extends AnyFunSuite {
   }
 
   test("bounded top-k monoid is incrementally maintainable: streaming == batch") {
-    // the FoldAggregator contract cashed in for the NEWEST monoid: the same
+    // the monoid contract for Catalyst's bounded collect_top_k: the same
     // top-k aggregate over the same rows, as a batch plan and as a
     // streaming query whose state store must merge partial top-k buffers
-    // across micro-batches
+    // (serialized bounded queues) across micro-batches
     import graft.functions.GraftAggs
-    val topk = GraftAggs.topK(3)
     def agg(df: org.apache.spark.sql.DataFrame) =
       df.groupBy(col("event_type"))
-        .agg(topk(col("value"), col("event_id")).as("top"))
+        .agg(GraftAggs.topK(3)(col("value"), col("event_id")).as("top"))
     val batch = agg(events.toDF()).collect()
       .map(r => r.getString(0) -> r.getSeq[Any](1)).toMap
 
