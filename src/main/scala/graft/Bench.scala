@@ -83,6 +83,9 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
   *    is the per-job profile: a subset run (`runMain graft.Bench q1 q2`)
   *    profiles any registered query, and the same subset at sf0.1 and
   *    sf1 is its scale curve.
+  *  - `heap_mb` is each row's peak heap after GC over its timed runs, from
+  *    the collectors' GC notifications (0 if no collection ran), so a
+  *    memory regression localizes to its row from the artifact alone.
   *
   * Before the per-query loop, a full run also measures the reference's
   * RELATIVE-SPEED report (core.py:133-147 `check`: the blocked-vs-regular
@@ -130,7 +133,35 @@ object Bench {
       io: Double, jit: Double, gc: Double, memoB: Double = 0.0,
       memoH: Double = 0.0, jobs: Double = 0.0, taskS: Double = 0.0,
       build: Double = -1.0, plan: Double = -1.0, jobS: Double = -1.0,
-      slowJob: String = "", firstWall: Double = -1.0)
+      slowJob: String = "", firstWall: Double = -1.0, heapMb: Double = -1.0)
+
+  /** The peak heap after GC since the last [[reset]], from the
+    * collectors' GC notifications: the heap a row's live data and buffers
+    * kept, which a heap-in-use sample would mix with garbage not yet
+    * collected. */
+  private object HeapAfterGc {
+    import scala.jdk.CollectionConverters._
+    import java.lang.management.{ManagementFactory, MemoryType}
+    import com.sun.management.GarbageCollectionNotificationInfo
+    private val peak = new java.util.concurrent.atomic.AtomicLong(0L)
+    private lazy val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    def install(): Unit =
+      ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+        case e: javax.management.NotificationEmitter =>
+          e.addNotificationListener((n: javax.management.Notification, _: AnyRef) =>
+            if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+              val info = GarbageCollectionNotificationInfo.from(
+                n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
+              val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+                .collect { case (k, u) if heapPools(k) => u.getUsed }.sum
+              peak.accumulateAndGet(used, math.max)
+            }, null, null)
+        case _ => ()
+      }
+    def reset(): Unit = peak.set(0L)
+    def peakMb: Double = peak.get / 1048576.0
+  }
 
   /** Session-wide job/task accounting for the per-run channels above:
     * jobs launched, task time, and each job's interval and call site (its
@@ -319,6 +350,7 @@ object Bench {
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(JobStats)
+    HeapAfterGc.install()
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
@@ -360,6 +392,7 @@ object Bench {
       val memoSnap = graft.operators.Caching.memoKeys()
       force(build()) // warmup (codegen + JIT + file listing)
       spark.catalog.clearCache()
+      HeapAfterGc.reset()
       val runs = (1 to Runs).map { _ =>
         graft.operators.Caching.memoDropNewerThan(memoSnap)
         graft.operators.Caching.memoWindowReset()
@@ -400,7 +433,8 @@ object Bench {
         busy = medianValid(runs.map(_.busy)), io = medianValid(runs.map(_.io)),
         jit = medianValid(runs.map(_.jit)), gc = medianValid(runs.map(_.gc)),
         memoB = median(runs.map(_.memoB)), memoH = median(runs.map(_.memoH)),
-        jobs = median(runs.map(_.jobs)), taskS = median(runs.map(_.taskS)))
+        jobs = median(runs.map(_.jobs)), taskS = median(runs.map(_.taskS)),
+        heapMb = HeapAfterGc.peakMb)
     }
 
     // the reference's relative-speed report (full runs only): blocked
@@ -549,6 +583,8 @@ object Bench {
         .mkString("{", ",", "}")
       val gs = results.map { case (k, q) => s"\"$k\":${r3(q.gc)}" }
         .mkString("{", ",", "}")
+      val hs = results.map { case (k, q) => s"\"$k\":${math.rint(q.heapMb).toLong}" }
+        .mkString("{", ",", "}")
       // memo attribution (VERDICT r13 #3 / ADVICE r13 #3): memo_build_s
       // only for rows that actually built something, memo_hits only for
       // rows that read pre-existing entries — sparse dicts keep the line
@@ -598,7 +634,7 @@ object Bench {
       // bench_latest.json so the next driver run reads n_unguarded: 0
       val nUnguarded = results.keys.count(k => !committed.contains(k))
       val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"build_s":$bd,"plan_s":$pl,"job_s":$jw,"slow_job":$sj,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":$cpus,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cs,"busy_frac":$bs,"io_busy":$is,"jit_ms":$js,"gc_frac":$gs,"heap_mb":$hs,"memo_build_s":$mb,"memo_hits":$mh,"n_jobs":$njobs,"task_s":$ts,"build_s":$bd,"plan_s":$pl,"job_s":$jw,"slow_job":$sj,"remeasured":$rm,"n_unguarded":$nUnguarded,"code_cache":{"used_mb":${ccUsed / (1 << 20)},"max_mb":${ccMax / (1 << 20)}},"kernel_ratio":$kr,"kernel_ratio_quiet":$krq,"runs":$Runs,"stat":"median","loadavg":"${loadAvg()}","machine_busy":$busy,"cores":$cpus,"sf":"$sfDir"}"""
       println(line)
       Console.out.flush()
       System.err.println(line) // second channel in case stdout tail is clipped

@@ -12,8 +12,8 @@ object Session {
   /** `local[N]` width from `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** A `local[cpus]` session with `cpus` shuffle partitions on the tmpfs
-    * scratch and fork-free local FS of [[graft.sources.Scratch.tuneLocalFs]]. */
+  /** A `local[cpus]` session with `cpus` shuffle partitions on the shared
+    * tuning of [[graft.sources.Scratch.tuneLocalFs]]. */
   def local(cpus: Int): SparkSession =
     graft.sources.Scratch.tuneLocalFs(SparkSession.builder())
       .master(s"local[$cpus]")

@@ -88,15 +88,52 @@ object Scratch {
     * the shutdown hook and [[sweepStale]] cover crashes. */
   lazy val sparkLocalDir: String = dir("graft_spark_local")
 
-  /** The local-filesystem session tuning every entry point shares:
-    * shuffle scratch on the tmpfs [[root]], the fork-free
-    * [[FastLocalFileSystem]] for `file://`, and the FileSystem-API
-    * checkpoint manager so streaming checkpoints use it too (the
-    * FileContext default resolves its own local FS and keeps forking
-    * `readlink` per rename). */
+  /** The running JVM's G1 heap region in bytes; 0 when G1 is not the
+    * collector (the option then reads 0) or the option is unreadable. */
+  private def g1RegionBytes: Long =
+    try java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+      .getVMOption("G1HeapRegionSize").getValue.toLong
+    catch { case _: Exception => 0L }
+
+  /** The Spark confs whose buffers [[tuneLocalFs]] sizes from the G1
+    * region: Tungsten pages, TorrentBroadcast chunks and the shuffle spill
+    * write buffer. */
+  private[graft] val RegionSizedBuffers: Seq[String] = Seq("spark.buffer.pageSize",
+    "spark.broadcast.blockSize", "spark.shuffle.spill.diskWriteBufferSize")
+
+  /** The session tuning every entry point shares: [[graft.Session.local]]
+    * (so Bench, Verify, Explain and the test suite) and the benchmark
+    * harness's session builder call it, so a setting placed here reaches
+    * every measured session. It sets:
+    *  - shuffle scratch on the tmpfs [[root]], the fork-free
+    *    [[FastLocalFileSystem]] for `file://`, and the FileSystem-API
+    *    checkpoint manager so streaming checkpoints use it too (the
+    *    FileContext default resolves its own local FS and keeps forking
+    *    `readlink` per rename);
+    *  - each [[RegionSizedBuffers]] conf at a quarter of the G1 region.
+    *    G1 allocates an array of half a region or more as a humongous
+    *    object, outside the young generation in whole regions, and such
+    *    allocations start concurrent marking cycles. At -Xmx4g (2 MB
+    *    regions) Spark's defaults, 32 MB pages at local[4], 4 MB broadcast
+    *    chunks and 1 MB spill buffers, are all humongous, so nearly every
+    *    task and broadcast allocated humongous scratch: `graftbench`
+    *    driver_mix `heap_peak_mb` read 370 MB with them and 146 MB at a
+    *    quarter region (medians of 10 pairs). A quarter region is the
+    *    largest power of two under half a region once the array header
+    *    counts: 256 KB at -Xmx2g, 512 KB at 4g, 1 MB at 8g. The 8192-page
+    *    task page table still addresses 2048 regions, G1's target count,
+    *    so about the whole heap. Under another collector (region 0)
+    *    Spark's defaults stay. Spark hard-codes other 1 MB buffers (task
+    *    result chunks, the unsafe shuffle writer's serialization buffer,
+    *    `LongToUnsafeRowMap`); those stay humongous at 4 GB. */
   def tuneLocalFs(
-      b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
-    b.config("spark.local.dir", sparkLocalDir)
+      b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = {
+    val region = g1RegionBytes
+    val sized =
+      if (region <= 0) b
+      else RegionSizedBuffers.foldLeft(b)(_.config(_, s"${region / 4 / 1024}k"))
+    sized.config("spark.local.dir", sparkLocalDir)
       .config("spark.hadoop.fs.file.impl",
         classOf[FastLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
@@ -126,4 +163,5 @@ object Scratch {
       // non-null id or hash), so plans stay correct with it off; the
       // full 304-query oracle gate re-verified green under this flag.
       .config("spark.sql.constraintPropagation.enabled", "false")
+  }
 }

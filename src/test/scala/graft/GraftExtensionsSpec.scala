@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, P
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, HashJoin, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -282,6 +282,24 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** tfidf_top's token join builds on the df side, and the join and the
+    * per-doc top-k run in every doc-keyed partition: had AQE broadcast the
+    * tf side, the join would stream the few df rows in one task. */
+  private def tfidfJoinShape(plan: SparkPlan): Unit = {
+    val joins = collect(plan) { case j: HashJoin => j }
+    assert(joins.length == 1, s"token joins in\n$plan")
+    val j = joins.head
+    val build = if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildLeft) j.left
+      else j.right
+    assert(build.output.map(_.name) == Seq("token", "df"),
+      s"the tf side builds the join in\n$plan")
+    val finals = collect(plan) {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    assert(finals.map(_.outputPartitioning.numPartitions) ==
+      Seq(spark.sparkContext.defaultParallelism), s"top-k partitions in\n$plan")
+  }
+
   test("per-key top-k plan shape: no Window; each collect_top_k is a " +
        "partial and a final ObjectHashAggregate around at most one " +
        "exchange (similar_topk, similar_ivf, similar_pq, tfidf_top)") {
@@ -318,6 +336,7 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(topK(c.asInstanceOf[ObjectHashAggregateExec], Partial) &&
           exchanges <= 1, s"$name: $exchanges exchanges to ${c.nodeName} in\n$plan")
       }
+      if (name == "tfidf_top") tfidfJoinShape(plan)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.FastLocalFileSystem
+import graft.sources.{FastLocalFileSystem, Scratch}
 
 /** The session [[Session.local]] builds carries every graded setting.
   * Dropping one changes plans without failing a result check (a missing
@@ -41,5 +41,23 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
       classOf[FastLocalFileSystem].getName)
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  test("pages, broadcast chunks and spill buffers stay below half a G1 region") {
+    val region = java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+      .getVMOption("G1HeapRegionSize").getValue.toLong
+    val env = org.apache.spark.SparkEnv.get
+    if (region == 0) Scratch.RegionSizedBuffers.foreach(k => assert(!env.conf.contains(k), k))
+    else {
+      // read each the way Spark does: the broadcast block size in KiB
+      val sizes = Seq(
+        "pageSizeBytes" -> env.memoryManager.pageSizeBytes,
+        "spark.buffer.pageSize" -> env.conf.getSizeAsBytes("spark.buffer.pageSize"),
+        "spark.broadcast.blockSize" -> env.conf.getSizeAsKb("spark.broadcast.blockSize") * 1024,
+        "spark.shuffle.spill.diskWriteBufferSize" ->
+          env.conf.getSizeAsBytes("spark.shuffle.spill.diskWriteBufferSize"))
+      sizes.foreach { case (k, v) => assert(v > 0 && v < region / 2, s"$k = $v, region $region") }
+    }
   }
 }
