@@ -1,178 +1,217 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
-import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import java.nio.ByteBuffer
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, CollectTopK,
+  TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions.{col, element_at, isnan, lit, posexplode,
-  size, struct, transform, udaf, when}
-import org.apache.spark.sql.types.NumericType
+  size, struct, transform, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  NumericType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.NativeExprs.{toCol, toExpr}
 
 /** The commutative monoids at the heart of the reference
-  * (reference core.py:15-64): `zero` = `init`, `reduce` = `proj_fold`,
+  * (reference core.py:15-64): `zero` = `init`, `update` = `proj_fold`,
   * `merge` = `binary_reduce`. Catalyst plans these as
   * partial-aggregate -> exchange -> final-aggregate automatically
   * (ObjectHashAggregateExec), which IS the reference's chunked fold — the
   * chunk loop maps to the task-per-partition boundary, `binary_reduce` to
-  * both intra-partition `reduce` and post-shuffle `merge`. The sketch
-  * monoids below are typed `Aggregator`s over a [[Monoid]]; per-key top-k
-  * is Catalyst's own bounded `collect_top_k` ([[GraftAggs.topK]],
-  * [[GraftAggs.topKRows]]).
+  * the post-shuffle `merge`. The sketch monoids below are native
+  * `TypedImperativeAggregate`s over a mutable bounded buffer, in the
+  * [[NativeAggs]] style; per-key top-k is Catalyst's own bounded
+  * `collect_top_k` ([[GraftAggs.topK]], [[GraftAggs.topKRows]]).
   *
   * Numerical stability is the spec, not an accident (SURVEY.md §2.4.1):
   * every softmax-family state renormalizes by the running max — never a raw
   * `sum(exp(x))`.
   */
 
-/** Typeclass mirror of the reference's monoid contract: `zero` ↔ `init`,
-  * `combine` ↔ `binary_reduce` (reference core.py:15-23). */
-trait Monoid[B] extends Serializable {
-  def zero: B
-  def combine(a: B, b: B): B
-}
+/** The KMV distinct-count sketch (Bar-Yossef et al. 2002; Beyer et al. 2007
+  * for the set-operation estimators): state is the k smallest distinct
+  * hash values, merge is a dedup-merge-truncate. Like the top-k monoid
+  * (its mirror image — k smallest, with dedup) the laws hold BIT-exactly:
+  * pure integer comparisons, no float arithmetic, and dedup makes the fold
+  * IDEMPOTENT, so re-processed rows cannot drift the state. That exactness
+  * is what distinguishes KMV from the repo's other distinct sketch: an HLL
+  * register set is deterministic but opaque, while the KMV state is a plain
+  * sorted array both engines can derive independently — the ESTIMATES
+  * (distinct count (k−1)·H/h_k, and intersection/Jaccard via the k-min
+  * union trick) are therefore hash-gradeable EXACTLY, not just
+  * theorem-bounded. At 100 TB: ≤ k longs per group cross the shuffle, and
+  * persisted per-partition sketches union-merge losslessly (the lakehouse
+  * sketch-table pattern), including across corpora for overlap estimation
+  * — which HLL union alone cannot grade exactly. Null hashes are skipped;
+  * output is `array<bigint>`, ascending, no null elements. */
+case class KmvSketchAgg(child: Expression, k: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Array[Long]] with ImplicitCastInputTypes {
 
-/** KMV (k-minimum-values) distinct-count buffer: the k smallest DISTINCT
-  * hash values seen so far, sorted ascending, length ≤ k. */
-case class KmvBuf(hs: Seq[Long])
+  override def children: Seq[Expression] = Seq(child)
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_kmv_sketch"
 
-/** The KMV distinct-count sketch monoid (Bar-Yossef et al. 2002;
-  * Beyer et al. 2007 for the set-operation estimators): state is the k
-  * smallest distinct hash values, combine is an O(k) dedup-sorted-merge-
-  * truncate. Like the top-k monoid (its mirror image — k smallest,
-  * with dedup) the laws hold BIT-exactly: pure integer comparisons, no float
-  * arithmetic, and dedup makes the fold IDEMPOTENT, so re-processed rows
-  * cannot drift the state. That exactness is what distinguishes KMV from
-  * the repo's other distinct sketch: an HLL register set is deterministic
-  * but opaque, while the KMV state is a plain sorted array both engines
-  * can derive independently — the ESTIMATES (distinct count (k−1)·H/h_k,
-  * and intersection/Jaccard via the k-min union trick) are therefore
-  * hash-gradeable EXACTLY, not just theorem-bounded. At 100 TB: ≤ k longs
-  * per group cross the shuffle, and persisted per-partition sketches
-  * union-merge losslessly (the lakehouse sketch-table pattern), including
-  * across corpora for overlap estimation — which HLL union alone cannot
-  * grade exactly. */
-class KmvMonoid(k: Int) extends Monoid[KmvBuf] {
-  def zero: KmvBuf = KmvBuf(Vector.empty)
-  def combine(a: KmvBuf, b: KmvBuf): KmvBuf = {
-    val out = Vector.newBuilder[Long]
-    var (i, j, n) = (0, 0, 0)
-    var last = Long.MinValue // hashes are non-negative 60-bit; safe sentinel
-    while (n < k && (i < a.hs.length || j < b.hs.length)) {
-      val takeA = j >= b.hs.length || (i < a.hs.length && a.hs(i) <= b.hs(j))
-      val v = if (takeA) { val v = a.hs(i); i += 1; v }
-              else { val v = b.hs(j); j += 1; v }
-      if (v != last) { out += v; last = v; n += 1 }
-    }
-    KmvBuf(out.result())
+  /** The buffer is the sketch itself: its k smallest distinct hashes,
+    * ascending, at most k long. */
+  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
+
+  override def update(hs: Array[Long], input: InternalRow): Array[Long] = {
+    val h = child.eval(input)
+    if (h == null) hs else insert(hs, h.asInstanceOf[Long])
   }
-}
 
-/** KMV per group: each hash folds into the state, states merge through
-  * [[KmvMonoid]]; only ≤ k longs per group cross the shuffle.
-  *
-  * `reduce` short-circuits the monoid's singleton combine: once the
-  * sketch is full, a hash at or above the k-th minimum cannot enter the
-  * state, so the overwhelmingly common case is an O(1) compare instead of
-  * an O(k) merge-allocate (the expected number of real inserts over N
-  * distinct rows is only k·ln(N/k) — for k=256 over a few million
-  * shingles, a few thousand). Bit-identical to the singleton combine
-  * `combine(b, KmvBuf(Vector(h)))` by the semilattice laws;
-  * MonoidLawsSpec cross-checks the two paths. */
-class KmvAgg(k: Int) extends Aggregator[Long, KmvBuf, Seq[Long]] {
-  private val m = new KmvMonoid(k)
-  def zero: KmvBuf = m.zero
-  def reduce(b: KmvBuf, h: Long): KmvBuf = {
-    val hs = b.hs
+  /** Fold one hash in. A full sketch at or above its k-th minimum cannot
+    * change — the overwhelmingly common case is this O(1) compare (the
+    * expected number of real inserts over N distinct rows is only
+    * k·ln(N/k): for k=256 over a few million shingles, a few thousand).
+    * A hash already present is a no-op (idempotence). A full sketch
+    * shifts in place and drops its k-th minimum. */
+  private def insert(hs: Array[Long], h: Long): Array[Long] = {
     val n = hs.length
-    if (n == k && h >= hs(n - 1)) b // full sketch, above the k-th min
-    else {
-      var lo = 0
-      var hi = n
-      while (lo < hi) { // insert point in the ascending state
-        val m = (lo + hi) >>> 1
-        if (hs(m) < h) lo = m + 1 else hi = m
-      }
-      if (lo < n && hs(lo) == h) b // already present (idempotence)
-      else {
-        val grown = (hs.take(lo) :+ h) ++ hs.drop(lo)
-        KmvBuf(if (grown.length > k) grown.take(k) else grown)
-      }
-    }
+    if (n == k && h >= hs(n - 1)) return hs
+    val at = java.util.Arrays.binarySearch(hs, h)
+    if (at >= 0) return hs
+    val out = if (n < k) java.util.Arrays.copyOf(hs, n + 1) else hs
+    System.arraycopy(hs, -at - 1, out, -at, out.length + at)
+    out(-at - 1) = h
+    out
   }
-  def merge(a: KmvBuf, b: KmvBuf): KmvBuf = m.combine(a, b)
-  def finish(b: KmvBuf): Seq[Long] = b.hs
-  def bufferEncoder: Encoder[KmvBuf] = Encoders.product[KmvBuf]
-  def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
+
+  override def merge(a: Array[Long], o: Array[Long]): Array[Long] =
+    o.foldLeft(a)(insert)
+
+  override def eval(hs: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(hs)
+
+  override def serialize(hs: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(hs.length * 8)
+    bb.asLongBuffer().put(hs)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val hs = new Array[Long](bytes.length / 8)
+    ByteBuffer.wrap(bytes).asLongBuffer().get(hs)
+    hs
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KmvSketchAgg =
+    copy(child = newChildren(0))
 }
 
-/** Misra–Gries heavy-hitters buffer: at most m (token, count) entries. */
-case class MgBuf(counts: Map[String, Long])
+/** The Misra–Gries frequent-items sketch (mergeable-summaries form): state
+  * is a token → count map of at most m entries; when a merge overflows m
+  * entries, the (m+1)-th largest count is subtracted from every entry and
+  * non-positive entries drop. Estimates never overcount, and the total
+  * undercount along ANY fold order is ≤ N/(m+1) — the bound is
+  * order-independent even though the buffer contents are not, so (like
+  * the HLL and quantile sketches) the graded output is the guarantee
+  * itself, not the buffer. At 100 TB this is the top-k-by-frequency plan:
+  * a KB-sized mergeable state per partition instead of a full token-keyed
+  * shuffle. Null tokens are skipped; output is `map<string,bigint>`, in no
+  * particular entry order. */
+case class MgSketchAgg(child: Expression, m: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]]
+  with ImplicitCastInputTypes {
 
-/** The Misra–Gries frequent-items monoid (mergeable-summaries form): state
-  * is a bounded count map; when a combine overflows m entries, the
-  * (m+1)-th largest count is subtracted from every entry and non-positive
-  * entries drop. Estimates never overcount, and the total undercount along
-  * ANY fold order is ≤ N/(m+1) — the bound is order-independent even
-  * though the buffer contents are not, so (like the HLL and quantile
-  * sketches) the graded output is the guarantee itself, not the buffer.
-  * At 100 TB this is the top-k-by-frequency plan: a KB-sized mergeable
-  * state per partition instead of a full token-keyed shuffle. */
-class MgMonoid(m: Int) extends Monoid[MgBuf] {
-  def zero: MgBuf = MgBuf(Map.empty)
-  def combine(a: MgBuf, b: MgBuf): MgBuf = {
-    val (big, small) =
-      if (a.counts.size >= b.counts.size) (a.counts, b.counts)
-      else (b.counts, a.counts)
-    val merged = small.foldLeft(big) { case (acc, (t, c)) =>
-      acc.updated(t, acc.getOrElse(t, 0L) + c)
-    }
-    if (merged.size <= m) MgBuf(merged)
+  private type Counts = mutable.HashMap[UTF8String, Long]
+
+  override def children: Seq[Expression] = Seq(child)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def nullable: Boolean = false
+  override def dataType: DataType = MapType(StringType, LongType, valueContainsNull = false)
+  override def prettyName: String = "graft_mg_sketch"
+
+  override def createAggregationBuffer(): Counts = mutable.HashMap.empty
+
+  /** The merge with the singleton map {t: 1}: a full map's (m+1)-th largest
+    * count is the new token's 1, so every count drops by one and t stays
+    * out. The input row's bytes are reused, so a new key is copied (an
+    * existing key keeps its own bytes when its count is updated). */
+  override def update(b: Counts, input: InternalRow): Counts = {
+    val t = child.eval(input).asInstanceOf[UTF8String]
+    if (t == null) b
+    else if (b.contains(t)) { b(t) += 1L; b }
+    else if (b.size < m) { b(InternalRow.copyValue(t).asInstanceOf[UTF8String]) = 1L; b }
+    else subtract(b, 1L)
+  }
+
+  override def merge(a: Counts, o: Counts): Counts = {
+    o.foreachEntry((t, c) => a(t) = a.getOrElse(t, 0L) + c)
+    if (a.size <= m) a
     else {
-      val d = merged.valuesIterator.toIndexedSeq
-        .sorted(Ordering[Long].reverse)(m)
-      MgBuf(merged.collect { case (t, c) if c > d => t -> (c - d) })
+      val cs = a.valuesIterator.toArray
+      java.util.Arrays.sort(cs)
+      subtract(a, cs(cs.length - 1 - m))
     }
   }
-}
 
-/** Heavy hitters per group through [[MgMonoid]]: each token lifts to a
-  * singleton count map. Only ≤ m entries per partition ever cross the
-  * shuffle. */
-class MgAgg(m: Int) extends Aggregator[String, MgBuf, Map[String, Long]] {
-  private val mg = new MgMonoid(m)
-  def zero: MgBuf = mg.zero
-  def reduce(b: MgBuf, t: String): MgBuf = mg.combine(b, MgBuf(Map(t -> 1L)))
-  def merge(a: MgBuf, b: MgBuf): MgBuf = mg.combine(a, b)
-  def finish(b: MgBuf): Map[String, Long] = b.counts
-  def bufferEncoder: Encoder[MgBuf] = Encoders.product[MgBuf]
-  def outputEncoder: Encoder[Map[String, Long]] =
-    ExpressionEncoder[Map[String, Long]]()
+  private def subtract(b: Counts, d: Long): Counts =
+    b.mapValuesInPlace((_, c) => c - d).filterInPlace((_, c) => c > 0L)
+
+  override def eval(b: Counts): Any = ArrayBasedMapData(b)
+
+  override def serialize(b: Counts): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + b.keysIterator.map(12 + _.numBytes).sum)
+    bb.putInt(b.size)
+    b.foreachEntry((t, c) => bb.putInt(t.numBytes).put(t.getBytes).putLong(c))
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Counts = {
+    val bb = ByteBuffer.wrap(bytes)
+    val b = createAggregationBuffer()
+    for (_ <- 0 until bb.getInt) {
+      val t = new Array[Byte](bb.getInt)
+      bb.get(t)
+      b(UTF8String.fromBytes(t)) = bb.getLong
+    }
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): MgSketchAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): MgSketchAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): MgSketchAgg =
+    copy(child = newChildren(0))
 }
 
 /** DataFrame-callable registrations. The scalar monoids (logsumexp, its
   * softmax-mean form, the sampler's argmax) are `DeclarativeAggregate`s
   * with primitive buffer slots, so a pair fold that uses only them plans
   * as `HashAggregateExec` inside the pair stream's codegen stage. The
-  * vector-valued monoids are native `TypedImperativeAggregate`s in
-  * [[NativeAggs]] — the round-1 Aggregator form paid a ~35× per-row
-  * encoder round-trip on the value array (VERDICT.md round 1, "What's
-  * wrong" #2). */
+  * vector-valued and sketch monoids are native `TypedImperativeAggregate`s
+  * ([[NativeAggs]], [[KmvSketchAgg]], [[MgSketchAgg]]) — the round-1
+  * Aggregator form paid a ~35× per-row encoder round-trip on the value
+  * array (VERDICT.md round 1, "What's wrong" #2). */
 object GraftAggs {
-  import org.apache.spark.sql.Column
+  private def agg(f: AggregateFunction): Column = toCol(f.toAggregateExpression())
 
   /** logsumexp(scoreCol): fully-codegen [[LogSumExpDecl]] — two primitive
     * buffer slots, no object buffer or encoder. */
-  def logSumExp(score: Column): Column =
-    NativeExprs.toCol(
-      LogSumExpDecl(NativeExprs.toExpr(score)).toAggregateExpression())
+  def logSumExp(score: Column): Column = agg(LogSumExpDecl(toExpr(score)))
 
   /** logSumExpMean(scoreCol, valueCol) -> struct(z, v): z = logsumexp of
     * the scores, v = the softmax-weighted mean of a scalar value — the
     * entropy monoid, one [[LogSumExpDecl]] with a third buffer slot. */
   def logSumExpMean(score: Column, value: Column): Column =
-    NativeExprs.toCol(
-      LogSumExpDecl(NativeExprs.toExpr(score), Some(NativeExprs.toExpr(value)))
-        .toAggregateExpression())
+    agg(LogSumExpDecl(toExpr(score), Some(toExpr(value))))
 
   /** Catalyst's bounded top-k aggregate, built here and nowhere else: the
     * k largest `ord` values per group, largest first (with `smallest`, the
@@ -182,8 +221,7 @@ object GraftAggs {
     * the top-k of the parts' top-ks; the reference sampler is its k = 1
     * case, sampling.py:14). */
   private def collectTopK(ord: Column, k: Int, smallest: Boolean): Column =
-    NativeExprs.toCol(new CollectTopK(NativeExprs.toExpr(ord), k, smallest, 0, 0)
-      .toAggregateExpression())
+    agg(new CollectTopK(toExpr(ord), k, smallest, 0, 0))
 
   /** The fields of a struct whose order (with the returned `smallest`
     * flag) is SQL's `ORDER BY score ASC, id` (nulls first) or `ORDER BY
@@ -231,14 +269,13 @@ object GraftAggs {
   }
 
   /** mgSketch(m)(tokenCol) -> map<string,long>: Misra–Gries heavy-hitter
-    * estimates with order-independent error ≤ N/(m+1). */
-  def mgSketch(m: Int): UserDefinedFunction =
-    udaf(new MgAgg(m), ExpressionEncoder[String]())
+    * estimates with order-independent error ≤ N/(m+1) ([[MgSketchAgg]]). */
+  def mgSketch(m: Int)(token: Column): Column = agg(MgSketchAgg(toExpr(token), m))
 
   /** kmvSketch(k)(hashCol) -> array<long>: the k smallest distinct hashes,
-    * ascending — a fully DETERMINISTIC distinct/overlap sketch state. */
-  def kmvSketch(k: Int): UserDefinedFunction =
-    udaf(new KmvAgg(k), ExpressionEncoder[Long]())
+    * ascending — a fully DETERMINISTIC distinct/overlap sketch state
+    * ([[KmvSketchAgg]]). */
+  def kmvSketch(k: Int)(hash: Column): Column = agg(KmvSketchAgg(toExpr(hash), k))
 
   /** The KMV distinct estimate from a sketch array: exact size while the
     * sketch is under-filled, else (k−1)·2⁶⁰/h_k (hash60's range). */
@@ -250,23 +287,17 @@ object GraftAggs {
   /** logWeightedVec(scoreCol, valueArrayCol) -> struct(z, v): the
     * attention/entropy monoid (reference attention.py:31-44). */
   def logWeightedVec(score: Column, value: Column): Column =
-    NativeExprs.toCol(
-      LogWeightedVecAgg(NativeExprs.toExpr(score), NativeExprs.toExpr(value))
-        .toAggregateExpression())
+    agg(LogWeightedVecAgg(toExpr(score), toExpr(value)))
 
   /** vecWeightedSum(wCol, vecCol) -> array<double>: Σ w·vec, the MLP
     * hidden-dim fold (reference mlp.py:18-21). */
   def vecWeightedSum(w: Column, v: Column): Column =
-    NativeExprs.toCol(
-      VecWeightedSumAgg(NativeExprs.toExpr(w), NativeExprs.toExpr(v))
-        .toAggregateExpression())
+    agg(VecWeightedSumAgg(toExpr(w), toExpr(v)))
 
   /** argMaxPert(pert, sc, kId) -> struct<pert,sc,k_id>: the Gumbel-max
     * sampler monoid — bit-identical to `max(struct(pert, sc, k_id))`, but
     * with primitive buffer slots, so it keeps the sampler's fold in
     * `HashAggregateExec` (see [[ArgMaxPertAgg]]). */
   def argMaxPert(pert: Column, sc: Column, kId: Column): Column =
-    NativeExprs.toCol(
-      ArgMaxPertAgg(NativeExprs.toExpr(pert), NativeExprs.toExpr(sc),
-        NativeExprs.toExpr(kId)).toAggregateExpression())
+    agg(ArgMaxPertAgg(toExpr(pert), toExpr(sc), toExpr(kId)))
 }

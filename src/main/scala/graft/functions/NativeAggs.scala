@@ -27,7 +27,7 @@ private[functions] object NativeAggChecks {
 
 /** Native `TypedImperativeAggregate` forms of the vector-valued reference
   * monoids (reference core.py:15-64: `zero`=`init`, `update`=`proj_fold`,
-  * `merge`=`binary_reduce`). These replace the round-1 `udaf(Aggregator)`
+  * `merge`=`binary_reduce`). These replace the round-1 typed-`Aggregator` udaf
   * wrappers, whose per-row `ExpressionEncoder` round-trip of the
   * `(score, Seq[Double])` input was ~35× of the attention runtime: here the
   * child expressions are evaluated directly against the input row and the

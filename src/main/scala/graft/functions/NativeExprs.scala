@@ -6,7 +6,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -721,12 +721,9 @@ object MinhashKernel {
 
 /** `graft_minhash(tokens)`: K=16 minhash signature of an array<string>
   * token column as array<long>. One tight-loop pass — see [[MinhashKernel]]. */
-case class MinhashSig(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $t")
-  }
+case class MinhashSig(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash"
 
@@ -783,12 +780,9 @@ object SimhashKernel {
 
 /** `graft_simhash(tokens)`: 32-bit SimHash of an array<string> token column
   * as long. One tight-loop pass — see [[SimhashKernel]]. */
-case class SimhashSig(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $t")
-  }
+case class SimhashSig(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash"
 
@@ -1015,12 +1009,9 @@ case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression 
 
 /** `graft_ngram_hashes(tokens)`: 60-bit hashes of the token array's word
   * n-grams as array<long>. One tight-loop pass — see [[NgramHashKernel]]. */
-case class NgramHashes(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $t")
-  }
+case class NgramHashes(child: Expression, n: Int) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_ngram_hashes"
 

@@ -96,11 +96,19 @@ object Caching {
     * reusing artifacts earlier queries left behind (the session cost an
     * operator actually has in a shared pipeline). */
   def sessionMemo(spark: SparkSession, key: String)
-                 (build: => DataFrame): DataFrame = {
+                 (build: => DataFrame): DataFrame =
+    memoized(spark, memo, key)(build.localCheckpoint(eager = true))
+
+  /** The bookkeeping [[sessionMemo]] and [[sessionMemoPath]] share: look
+    * `key` up in `entries` for this application, counting a hit, else
+    * build it once, timed into the current measurement window. */
+  private def memoized[V <: AnyRef](spark: SparkSession,
+      entries: java.util.concurrent.ConcurrentHashMap[String, V], key: String)
+      (build: => V): V = {
     val app = spark.sparkContext.applicationId
     // entries of previous (stopped) sessions pin their whole object
     // graph via the plan reference — drop them on first touch
-    memo.keySet().removeIf(k => !k.startsWith(app + "/"))
+    entries.keySet().removeIf(k => !k.startsWith(app + "/"))
     val full = app + "/" + key
     // NOT computeIfAbsent: memo builders nest (a scored table's build
     // reads the margins memo, which reads the weights memo), and
@@ -111,7 +119,7 @@ object Caching {
     // build (parallel test suites) wastes one computation and the first
     // insert wins — correctness is unaffected, both are checkpoints of
     // the same deterministic plan.
-    val existing = memo.get(full)
+    val existing = entries.get(full)
     if (existing != null) { windowHits.incrementAndGet(); existing }
     else {
       // attribute the build's wall to the current measurement window at
@@ -121,8 +129,8 @@ object Caching {
       buildDepth.set(d0 + 1)
       val t0 = System.nanoTime()
       try {
-        val built = build.localCheckpoint(eager = true)
-        val prev = memo.putIfAbsent(full, built)
+        val built = build
+        val prev = entries.putIfAbsent(full, built)
         if (prev != null) prev else built
       } finally {
         buildDepth.set(d0)
@@ -173,27 +181,12 @@ object Caching {
     * and the row carries `memo_hits` > 0, so the artifact says "this
     * wall reads pre-built state" instead of hiding it. */
   def sessionMemoPath(spark: SparkSession, key: String)
-                     (build: String => Unit): String = {
-    val app = spark.sparkContext.applicationId
-    memoPaths.keySet().removeIf(k => !k.startsWith(app + "/"))
-    val full = app + "/" + key
-    val existing = memoPaths.get(full)
-    if (existing != null) { windowHits.incrementAndGet(); existing }
-    else {
-      val d0 = buildDepth.get()
-      buildDepth.set(d0 + 1)
-      val t0 = System.nanoTime()
-      try {
-        val p = graft.sources.Scratch.dir("graft_memo_state")
-        build(p)
-        val prev = memoPaths.putIfAbsent(full, p)
-        if (prev != null) prev else p
-      } finally {
-        buildDepth.set(d0)
-        if (d0 == 0) windowBuildNs.addAndGet(System.nanoTime() - t0)
-      }
+                     (build: String => Unit): String =
+    memoized(spark, memoPaths, key) {
+      val p = graft.sources.Scratch.dir("graft_memo_state")
+      build(p)
+      p
     }
-  }
 
   private val memoPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

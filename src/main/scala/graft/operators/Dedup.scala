@@ -165,6 +165,13 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
+    withEstJaccard(cand, sig)
+  }
+
+  /** `cand`'s (doc_a, doc_b) pairs with `est_jaccard`, their signatures'
+    * matching-minhash fraction (qround 4, the exact integer-count
+    * arithmetic both engines share). */
+  private def withEstJaccard(cand: DataFrame, sig: DataFrame): DataFrame = {
     val est = aggregate(
       zip_with(col("sig_a"), col("sig_b"),
         (x, y) => when(x === y, 1.0).otherwise(0.0)),
@@ -214,15 +221,7 @@ object Dedup {
     * built (and cached — it feeds three plan references below). Lets
     * composed pipelines derive signatures from a shared tokenize. */
   def minhashPairsCappedFromSig(sig: DataFrame, cap: Int = BucketCap): DataFrame = {
-    val cand = cappedBandPairs(minhashBands(sig), cap)
-    val est = aggregate(
-      zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => when(x === y, 1.0).otherwise(0.0)),
-      lit(0.0), (acc, v) => acc + v) / lit(K.toDouble)
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), VecOps.qround(est, 4).as("est_jaccard"))
+    withEstJaccard(cappedBandPairs(minhashBands(sig), cap), sig)
   }
 
   /** default hot-bucket threshold: pairs per bucket stay ≤ cap²/2. */
@@ -760,17 +759,9 @@ object Dedup {
     * edges: est jaccard = matching-minhash fraction (qround 4, the exact
     * integer-count arithmetic both engines share) ≥ minEst. */
   private def sigEdges(cand: DataFrame, sig: DataFrame,
-                       minEst: Double): DataFrame = {
-    val est = aggregate(
-      zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => when(x === y, 1.0).otherwise(0.0)),
-      lit(0.0), (acc, v) => acc + v) / lit(K.toDouble)
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .filter(VecOps.qround(est, 4) >= minEst)
+                       minEst: Double): DataFrame =
+    withEstJaccard(cand, sig).filter(col("est_jaccard") >= minEst)
       .select(col("doc_a"), col("doc_b"))
-  }
 
   /** every RetractMod-th doc is the graded takedown batch. */
   val RetractMod = 10

@@ -243,8 +243,16 @@ object Pq {
   def adcTopK(q: DataFrame, kv: DataFrame, cb: DataFrame, k: Int,
               rerankC: Int = RerankC): DataFrame = {
     val cbl = collectCb(cb)
-    val cand = GraftAggs.topKRows(
-      PairPlan.cross(codesWith(kv, cbl), qlutWith(q, cbl), PairPlan.Auto)
+    adcRerank(PairPlan.cross(codesWith(kv, cbl), qlutWith(q, cbl), PairPlan.Auto),
+      q, kv, k, rerankC)
+  }
+
+  /** The ADC rank of (code row, query lut) pairs, self-pairs out: the
+    * top-`rerankC` per query (acos desc, k_id tie-break), then the
+    * exact-cosine rerank of only those rows against `kv`. */
+  private def adcRerank(pairs: DataFrame, q: DataFrame, kv: DataFrame,
+                        k: Int, rerankC: Int): DataFrame = {
+    val cand = GraftAggs.topKRows(pairs
       .filter(col("k_id") =!= col("q_id"))
       .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
       "q_id", rerankC, "acos", ascending = false, "k_id")
@@ -268,13 +276,8 @@ object Pq {
     val cbl = collectCb(cb)
     val kcodes = codesWith(kv, cbl).join(Similarity.ivfAssign(kv, cents), "k_id")
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val cand = GraftAggs.topKRows(kcodes.join(broadcast(probes), "list_id")
-      .join(broadcast(qlutWith(q, cbl)), "q_id")
-      .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
-      "q_id", rerankC, "acos", ascending = false, "k_id")
-      .select(col("q_id"), col("k_id"))
-    Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
+    adcRerank(kcodes.join(broadcast(probes), "list_id")
+      .join(broadcast(qlutWith(q, cbl)), "q_id"), q, kv, k, rerankC)
   }
 
   /** Measured IVF×PQ recall against the exact top-k on the same queries. */
@@ -383,13 +386,8 @@ object Pq {
       .write.mode("append").partitionBy("list_id").parquet(path)
     val inv = spark.read.parquet(path)
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val cand = GraftAggs.topKRows(inv.join(broadcast(probes), "list_id")
-      .join(broadcast(qlutWith(q, cbl)), "q_id")
-      .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
-      "q_id", rerankC, "acos", ascending = false, "k_id")
-      .select(col("q_id"), col("k_id"))
-    Similarity.rerankExact(cand, q, existing.union(batch), k, PairPlan.Auto)
+    adcRerank(inv.join(broadcast(probes), "list_id")
+      .join(broadcast(qlutWith(q, cbl)), "q_id"), q, existing.union(batch), k, rerankC)
   }
 
   /** [[ivfAdcTopK]] through the PERSISTED index layout — what a 100 TB
@@ -411,13 +409,8 @@ object Pq {
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
     val inv = spark.read.parquet(path)
     val probes = Similarity.ivfProbes(q, cents, nprobe)
-    val cand = GraftAggs.topKRows(inv.join(broadcast(probes), "list_id")
-      .join(broadcast(qlutWith(q, cbl)), "q_id")
-      .filter(col("k_id") =!= col("q_id"))
-      .select(col("q_id"), col("k_id"), acosExpr.as("acos")),
-      "q_id", rerankC, "acos", ascending = false, "k_id")
-      .select(col("q_id"), col("k_id"))
-    Similarity.rerankExact(cand, q, kv, k, PairPlan.Auto)
+    adcRerank(inv.join(broadcast(probes), "list_id")
+      .join(broadcast(qlutWith(q, cbl)), "q_id"), q, kv, k, rerankC)
   }
 
   /** Measured ADC recall against the exact top-k on the same query set. */

@@ -137,7 +137,7 @@ object TextQueries {
        |FROM t GROUP BY lang""".stripMargin
 
   /** GRADED SKETCH AGGREGATE #4: KMV (k-minimum-values) distinct count
-    * ([[graft.functions.KmvMonoid]], k = [[KmvK]]). Unlike the HLL / GK /
+    * ([[graft.functions.KmvSketchAgg]], k = [[KmvK]]). Unlike the HLL / GK /
     * MG grades — where sketch internals are opaque or fold-order-sensitive
     * and only the GUARANTEE boolean is gradeable — the KMV state is a
     * deterministic pure function of the input SET (the k smallest distinct
@@ -151,7 +151,7 @@ object TextQueries {
     * under-filled and the estimator untested; shingles give tens of
     * thousands of distinct values per lang, so the k-th-minimum path is
     * actually exercised and graded. Scale shape: ≤ k longs per lang cross
-    * the shuffle via the [[graft.functions.KmvAgg]] partial→final
+    * the shuffle via the [[graft.functions.KmvSketchAgg]] partial→final
     * fold; the exact `countDistinct` is the sf-scale anchor only. */
   private val KmvK = 256
   private val KmvTolRel = 0.30
@@ -284,7 +284,7 @@ object TextQueries {
        |FROM p LEFT JOIN it ON it.l1 = p.l1 AND it.l2 = p.l2""".stripMargin
 
   /** GRADED SKETCH AGGREGATE #3: heavy hitters via the Misra–Gries monoid
-    * ([[graft.functions.MgMonoid]], m=256). The exact top-k anchors the
+    * ([[graft.functions.MgSketchAgg]], m=256). The exact top-k anchors the
     * row; `mg_ok` grades the sketch against its theorem — estimates never
     * overcount and undercount by at most N/(m+1) along ANY fold order —
     * so the boolean is deterministically TRUE however Spark orders the

@@ -13,7 +13,7 @@ import graft.functions.{GraftAggs, VecOps}
   *
   * Every STATEFUL stream here follows one of two protocols:
   *
-  *  1. Monoid state lives in Spark's state store. The windowed, drift,
+  *  1. The monoid state lives in Spark's state store. The windowed, drift,
   *     session and funnel streams and the KMV and Misra–Gries sketch
   *     streams are Update-mode streaming aggregations (or
   *     flatMapGroupsWithState): the checkpoint carries each group's

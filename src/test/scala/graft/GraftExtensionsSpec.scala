@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectTopK, Final, Partial}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec, ScalaAggregator}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, HashJoin, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TileFold
+import graft.functions.{GraftAggs, KmvSketchAgg, MgSketchAgg, TileFold}
 import graft.operators.{Assoc, Attention, Entropy, Mlp, PairPlan, Sampler, Triangles, XEntropy}
 
 /** SQL registration of the native functions + physical-plan-shape
@@ -218,6 +218,25 @@ class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"expected HashAggregate in:\n$plan")
     assert(!plan.contains("SortAggregate"),
       s"sampler aggregation fell back to SortAggregate:\n$plan")
+  }
+
+  test("KMV and MG sketch plan shape: a native ObjectHashAggregate, no " +
+       "ScalaAggregator (per-lang kmvSketch, global mgSketch)") {
+    // the sketches fold their input rows straight into a mutable buffer:
+    // a udaf(Aggregator) would show up as a ScalaAggregator, converting
+    // every row through its encoder
+    val kmv = Seq(("en", 1L), ("de", 2L), ("en", 3L)).toDF("lang", "h")
+      .groupBy(col("lang")).agg(GraftAggs.kmvSketch(4)(col("h")))
+    val mg = Seq("a", "b", "a").toDF("token").agg(GraftAggs.mgSketch(4)(col("token")))
+    for ((df, fn) <- Seq(kmv -> classOf[KmvSketchAgg], mg -> classOf[MgSketchAgg])) {
+      df.collect() // the final adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val fns = collect(plan) { case a: BaseAggregateExec =>
+        a.aggregateExpressions.map(_.aggregateFunction) }.flatten
+      assert(collect(plan) { case a: ObjectHashAggregateExec => a }.nonEmpty &&
+        fns.nonEmpty && fns.forall(fn.isInstance), s"${fn.getSimpleName} in\n$plan")
+      assert(!fns.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"ScalaAggregator in\n$plan")
+    }
   }
 
   test("docs_profile plan shape: ONE documents scan feeds all five countDistincts") {

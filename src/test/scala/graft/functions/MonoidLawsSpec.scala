@@ -239,25 +239,6 @@ class MonoidLawsSpec extends AnyFunSuite {
     }
   }
 
-  test("KMV reduce fast path == the monoid's singleton combine, bit-exactly") {
-    // KmvAgg.reduce short-circuits full-sketch/duplicate rows (the O(1)
-    // common case); it must stay BIT-identical to combine(b, lift(h)) on
-    // every shape: under-filled, full-above-max, full-insert, duplicate.
-    val k = 4
-    val m = new KmvMonoid(k)
-    val agg = new graft.functions.KmvAgg(k)
-    for (_ <- 1 to Iters) {
-      var viaReduce = agg.zero
-      var viaCombine = m.zero
-      for (h <- Seq.fill(1 + rnd.nextInt(30))(rnd.nextInt(12).toLong)) {
-        viaReduce = agg.reduce(viaReduce, h)
-        viaCombine = m.combine(viaCombine, KmvBuf(Vector(h)))
-        assert(viaReduce == viaCombine,
-          s"reduce $viaReduce diverged from combine $viaCombine at h=$h")
-      }
-    }
-  }
-
   // ---- MgMonoid (contents fold-order-sensitive; the GUARANTEE is not) ----
 
   test("Misra–Gries monoid: never overcounts, undercount ≤ N/(m+1) for every fold shape") {

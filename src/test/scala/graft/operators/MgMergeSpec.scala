@@ -5,7 +5,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.MgAgg
+import graft.functions.MgMonoid
 
 /** [[TextOps.mgMergeFlat]] — the flat K-way Misra–Gries merge. The PODS'12
   * mergeable-summaries theorem says the merged summary keeps the one-shot
@@ -17,10 +17,8 @@ class MgMergeSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def mgSummary(stream: Seq[String], m: Int): Map[String, Long] = {
-    val agg = new MgAgg(m)
-    agg.finish(stream.foldLeft(agg.zero)(agg.reduce))
-  }
+  private def mgSummary(stream: Seq[String], m: Int): Map[String, Long] =
+    new MgMonoid(m).fold(stream).counts
 
   private def mergeDf(shards: Seq[Map[String, Long]], m: Int): Map[String, Long] = {
     val s = spark
