@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions.{broadcast, col, collect_list, element_at,
   *    many splits never repartitions). Only valid while the query side
   *    fits an executor.
   *  - [[Blocked]]: a tile-keyed `SHUFFLE_HASH` equi-join — each side is
-  *    content-hashed into its axis's tile id and replicated across the
-  *    other axis, so each task streams one tile pair inside whole-stage
-  *    codegen and partial aggregation reduces it before the only
-  *    remaining shuffle. The large-M path.
+  *    content-hashed into its axis's tile id, replicated across the other
+  *    axis and moved by ONE pinned exchange on the tile key, so each task
+  *    streams one tile pair inside whole-stage codegen and partial
+  *    aggregation reduces it before the only remaining shuffle. The
+  *    large-M path.
   *  - [[Auto]] (default): picks at plan time from Catalyst's size estimate
   *    of the query side vs `spark.sql.autoBroadcastJoinThreshold` — the
   *    same signal AQE uses for join strategy, so a dims-sized side
@@ -249,12 +250,13 @@ object PairPlan {
       if (lut != null) element_at(lit(lut), (idx + lit(1)).cast("int"))
       else idx
     }
-    // Same single-split guard as the Broadcast arm (r14): a one-file
-    // local input would run the explode-replication + tile hash +
-    // n_build x shuffle write of the WHOLE stream side in one task,
-    // serializing a map stage the grid then waits on (profiled: the
-    // stage's 576 ms straggler under an otherwise even grid). No-op on
-    // any multi-split cluster read.
+    // One exchange per side: the stream side goes from its scan straight
+    // into its pinned __tk repartition, as the build side does. A
+    // round-robin fan-out before it cost each kernel a one-task stage, an
+    // AQE job and a build-time `df.rdd` probe, and bought nothing: the pair
+    // work runs in the join stage, which the LUT keys spread one tile per
+    // task (graftbench pair_fold, 4 vCPU: 6 -> 5 jobs per kernel, pass_s
+    // 2.57 -> 2.27 s).
     // The tile exchanges are EXPLICIT repartitions (REPARTITION_BY_NUM)
     // rather than the join's ENSURE_REQUIREMENTS exchanges (r14): AQE
     // coalesces requirement-exchanges by BYTE size, and a pair grid is
@@ -263,8 +265,7 @@ object PairPlan {
     // user repartition pins the partition count, the LUT keys land one
     // tile per partition, and the join reuses the exchanges (both sides
     // already hash-cluster on __tk).
-    val streamSrc = fanOut(stream, cores)
-    val streamT = streamSrc.withColumn("__tb", tileId(streamSrc, nStream))
+    val streamT = stream.withColumn("__tb", tileId(stream, nStream))
       .withColumn("__ts", rep(nBuild))
       .withColumn("__tk", tk(col("__tb"), col("__ts")))
       .drop("__tb", "__ts")
@@ -289,10 +290,9 @@ object PairPlan {
   }
 
   /** Fan a small scan out to at least `target` partitions before a
-    * CPU-bound kernel: local fixtures are single parquet splits, so
-    * without this a per-row-expensive map (or a blocked tile grid) runs
-    * in one task. No-op whenever the input already has enough splits —
-    * i.e. on any real cluster read. */
+    * kernel that runs in the input's own partitions — a per-row map, or
+    * the Broadcast arm's pair loop ([[broadcastFanOut]]): local fixtures
+    * are single parquet splits. No-op on inputs with enough splits. */
   def fanOut(df: DataFrame, target: Int): DataFrame =
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
 

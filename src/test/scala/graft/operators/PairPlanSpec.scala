@@ -1,6 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +17,7 @@ import graft.TestSpark
   * the blocked 2-D grid when broadcasting is off/oversized — and both
   * plans compute identical results (VERDICT r2 next-steps #6).
   */
-class PairPlanSpec extends AnyFunSuite {
+class PairPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -154,14 +160,17 @@ class PairPlanSpec extends AnyFunSuite {
     assert(res.passed, res.status)
   }
 
+  // 30 real rows behind a 1e6-row plan-time estimate (a filtered range):
+  // the pair budget fans the broadcast arm out and splits the blocked
+  // arm's big side into one tile per core
+  private def multiTileBig = spark.range(0L, 3000000L, 1L, 1)
+    .filter(col("id") % 100000 === 0)
+    .select(col("id").as("k_id"), (col("id") / 1e5).as("kv"))
+  private def multiTileSmall = (0L until 20L).map(i => (i, i * 0.25)).toDF("q_id", "qv")
+
   test("tiles over multi-tile grids: a broadcast fan-out into chunks and a " +
       "blocked grid of several packed big-side tiles") {
-    // 30 real rows behind a 1e6-row plan-time estimate (a filtered range):
-    // the pair budget fans the broadcast arm out and splits the blocked
-    // arm's big side into one tile per core
-    val big = spark.range(0L, 3000000L, 1L, 1).filter(col("id") % 100000 === 0)
-      .select(col("id").as("k_id"), (col("id") / 1e5).as("kv"))
-    val small = (0L until 20L).map(i => (i, i * 0.25)).toDF("q_id", "qv")
+    val (big, small) = (multiTileBig, multiTileSmall)
     val want = crossPairs(big, small, PairPlan.Blocked)
     assert(want.values.sum == 600)
     for (m <- modes) {
@@ -171,5 +180,46 @@ class PairPlanSpec extends AnyFunSuite {
       val ids = PairPlan.tiles(big, small, m).select("__tid").distinct().count()
       assert(ids > 1, s"$m: expected several tiles, got $ids")
     }
+  }
+
+  test("blocked arms over a single-split stream side: each join side reaches " +
+      "the grid through one pinned __tk exchange, with no round-robin, and " +
+      "every join partition still holds one tile") {
+    val parts = spark.sessionState.conf.numShufflePartitions
+    // one split on each side: each arm's stream side is one task's input
+    val (big, small) = (multiTileBig.coalesce(1), multiTileSmall.coalesce(1))
+    def pinned(e: ShuffleExchangeExec) =
+      e.shuffleOrigin == REPARTITION_BY_NUM && (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), n) => a.name == "__tk" && n == parts
+        case _ => false
+      })
+    def checkPlan(plan: SparkPlan, what: String): Unit = {
+      val roundRobin = collect(plan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }
+      assert(roundRobin.isEmpty, s"$what: round-robin exchange in\n$plan")
+      val joins = collect(plan) { case j: ShuffledHashJoinExec => j }
+      assert(joins.size == 1, s"$what: expected one tile join in\n$plan")
+      for (side <- joins.head.children) {
+        val shuffles = collect(side) { case e: ShuffleExchangeExec => e }
+        assert(shuffles.size == 1 && shuffles.forall(pinned),
+          s"$what: a join side without exactly one hashpartitioning(__tk, " +
+            s"$parts) REPARTITION_BY_NUM exchange:\n$side")
+      }
+    }
+
+    val t = PairPlan.tiles(big, small, PairPlan.Blocked)
+      .select(spark_partition_id(), col("__tid"))
+    val rows = t.collect()
+    checkPlan(t.queryExecution.executedPlan, "tiles")
+    val perPartition = rows.groupBy(_.getInt(0)).values.map(_.map(_.getLong(1)).distinct.toSeq)
+    assert(perPartition.size > 1, s"tiles: expected several tiles, got $perPartition")
+    assert(perPartition.forall(_.length == 1),
+      s"tiles: a join partition holds several tiles: $perPartition")
+
+    val c = PairPlan.cross(big, small, PairPlan.Blocked)
+    assert(c.collect().length == 600)
+    checkPlan(c.queryExecution.executedPlan, "cross")
   }
 }
